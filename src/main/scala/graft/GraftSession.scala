@@ -20,7 +20,12 @@ import org.apache.spark.sql.SparkSession
   *  - runtime bloom-filter join on: the reference's explicit Bloom
   *    existence filters (URLFPBloomFilter) fall out of the optimizer;
   *  - GraftExtensions: native codegen expressions registered as SQL
-  *    functions.
+  *    functions;
+  *  - finished-job history capped at 100 jobs, stages and SQL executions
+  *    (Spark keeps 1000 of each): with the UI off nothing reads it, and a
+  *    long-lived query server would otherwise hold the plans and metrics
+  *    of its last thousand pages on the heap. Running jobs are never
+  *    evicted, so status-tracker progress is unaffected.
   */
 object GraftSession {
 
@@ -34,6 +39,9 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.sql.ui.retainedExecutions", "100")
       .withExtensions(new graft.functions.GraftExtensions)
 
   /** Local session for tests/benchmarks on an n-core box. */

@@ -54,20 +54,26 @@ final class QueryServer(
     ResultCache.inputFingerprint(spark, sfDir)
 
   /** The materialized positional index for (query, sort, direction):
-    * result rows + `pos` (1-based rank). Cached; repeat requests in any
-    * page range reuse it (Query.getCanonicalId semantics). */
-  def index(name: String, req: PageRequest): DataFrame = {
-    val base = Registry.queries(name)(spark, sfDir)
-    columnsCache.putIfAbsent(name, base.columns)
-    // validate the client-supplied sort field up front: spliced into
-    // col() and the cache key below, a typo would otherwise only surface
-    // as an AnalysisException deep inside the cache-build closure
-    require(base.columns.contains(req.sortBy),
-      s"unknown sort column '${req.sortBy}' for query '$name'; " +
-        s"expected one of ${base.columns.mkString(", ")}")
+    * result rows + `pos` (1-based rank). A cache hit reads the published
+    * entry only, so any page range of a built index costs a parquet read
+    * (Query.getCanonicalId / cachedResultsAvailable semantics,
+    * MasterServer.java:308); only a miss runs the query's builder. The
+    * sort column is part of the cache key, so a hit proves it was valid
+    * when the entry was built, and an unknown sort column or query name
+    * always misses and fails inside the build, before anything is
+    * written. */
+  def index(name: String, req: PageRequest): DataFrame =
     ResultCache.getOrCompute(spark, cacheDir, name,
       Map("sort" -> req.sortBy, "dir" -> (if (req.ascending) "asc" else "desc"),
         "sf" -> sfDir, "data" -> dataFingerprint)) {
+      val base = Registry.queries(name)(spark, sfDir)
+      columnsCache.putIfAbsent(name, base.columns)
+      // validate the client-supplied sort field before the build: spliced
+      // into col() below, a typo would otherwise only surface as an
+      // AnalysisException from the cache write
+      require(base.columns.contains(req.sortBy),
+        s"unknown sort column '${req.sortBy}' for query '$name'; " +
+          s"expected one of ${base.columns.mkString(", ")}")
       // tiebreak on every remaining column so the rank is total and the
       // page boundaries are deterministic under re-materialization
       val ties = base.columns.filter(_ != req.sortBy).sorted.map(col)
@@ -75,7 +81,6 @@ final class QueryServer(
         ties.map(c => if (req.ascending) c.asc else c.desc)
       QueryServer.withGlobalPos(base, order)
     }
-  }
 
   // column schemas discovered so far, one entry per query name (sfDir is
   // fixed per server instance, so the name alone keys it)
@@ -90,7 +95,8 @@ final class QueryServer(
     * builders) do NOT execute on the caller's thread; repeat validates
     * are a map lookup. Builders with their own build-time actions
     * (iterative convergence loops, staging writes) still pay that cost
-    * on first contact — same as any first page request. */
+    * on first contact, as a page request that misses the cache does; a
+    * cache hit never runs the builder. */
   def validate(name: String, req: PageRequest): Unit = {
     require(Registry.queries.contains(name), s"unknown query '$name'")
     val cols = columnsCache.computeIfAbsent(name,

@@ -34,7 +34,9 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
 
   private val http =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  // the HttpServer never shuts down an executor it is given; stop() does
+  private[graft] val handlers = java.util.concurrent.Executors.newFixedThreadPool(4)
+  http.setExecutor(handlers)
 
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
@@ -290,6 +292,7 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
 
   def stop(): Unit = {
     http.stop(0)
+    handlers.shutdownNow()
     workers.shutdownNow()
   }
 }

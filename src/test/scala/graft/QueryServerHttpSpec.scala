@@ -47,9 +47,12 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       assert(cBody == s"""{"count":$n}""")
 
       // client errors: unknown sort column and unknown query name
+      val entries = new java.io.File(cacheDir).list().toSet
       assert(get(port, s"/query/$name?sortBy=nope")._1 == 400)
       assert(get(port, s"/query/no_such_query?sortBy=x")._1 == 400)
       assert(get(port, s"/query/$name")._1 == 400) // missing sortBy
+      // ...refused before the build wrote an entry or a staging dir
+      assert(new java.io.File(cacheDir).list().toSet == entries)
 
       // unbounded paging is refused, not collected on the driver
       val (pCode, pBody) =
@@ -149,6 +152,19 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       // the cap bounds the ASYNC ledger only — synchronous pages still serve
       assert(get(port, s"/query/$name?sortBy=$sortBy&pageSize=2")._1 == 200)
     } finally fe.stop()
+  }
+
+  test("stop() ends the request handler threads") {
+    // they are non-daemon: left running, they keep the JVM alive
+    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_stop").toString
+    val fe = new QueryServerHttp(new QueryServer(spark, cacheDir, sfDir))
+    val port = fe.start()
+    try {
+      val name = "w3_dual_sort"
+      val sortBy = Registry.queries(name)(spark, sfDir).columns.head
+      assert(get(port, s"/query/$name?sortBy=$sortBy&pageSize=2")._1 == 200)
+    } finally fe.stop()
+    assert(fe.handlers.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
   }
 
   test("content fetch: seek an archive member offset, serve payload bytes") {

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -102,6 +105,58 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
     // per-sort-order index dirs)
     server.page(name, req.copy(ascending = false)).collect()
     assert(entries() == 2)
+  }
+
+  test("a rejected request fails before anything is written to the cache") {
+    // an unknown sort column or query name is never a cache hit, so it
+    // reaches the build, which must refuse it before the staging write
+    val (server, dir) = newServer()
+    val e = intercept[IllegalArgumentException](
+      server.page("w3_dual_sort", server.PageRequest("nope")))
+    assert(e.getMessage.contains("unknown sort column 'nope'"))
+    intercept[NoSuchElementException](
+      server.page("no_such_query", server.PageRequest("x")))
+    assert(new java.io.File(dir).list().isEmpty,
+      s"cache dir not empty: ${new java.io.File(dir).list().mkString(", ")}")
+  }
+
+  test("a cached page runs no builder: i20's bucketed table stays untouched") {
+    // i20's builder rewrites the bucketed i20_members table every time it
+    // runs; once the entry is built, pages must read it and nothing else
+    val (server, _) = newServer()
+    val name = "i20_cluster_members"
+    val req = server.PageRequest("probe_id", offset = 0, pageSize = 2)
+    server.page(name, req).collect()
+    def members(): Map[String, Long] = {
+      val loc = java.nio.file.Paths.get(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier("i20_members")).location)
+      val files = java.nio.file.Files.walk(loc)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis)
+        .toMap
+      finally files.close()
+    }
+    val built = members()
+    assert(built.nonEmpty)
+    val pages = Seq(0L, 1L, 2L).map(off =>
+      server.page(name, req.copy(offset = off)).collect().map(_.toString).toSeq)
+    assert(members() == built, "a cached page rewrote i20_members")
+    assert(pages.forall(_.size == 2)) // 5 probes at sf0.001, each a member
+
+    // concurrent cached pages used to race on the rewrite
+    // (TABLE_OR_VIEW_ALREADY_EXISTS / TASK_WRITE_FAILED)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val fs = (1 to 4).map(_ => scala.concurrent.Future {
+      server.page(name, req).collect().map(_.toString).toSeq
+    })
+    val results =
+      try fs.map(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration(120, "s")))
+      finally pool.shutdown()
+    assert(results.forall(_ == pages.head))
+    assert(members() == built)
   }
 
   test("page read prunes to the row groups containing the page") {

@@ -88,11 +88,10 @@ object Bpe {
     * (step, lhs, rhs, weight) ordered by step — weight is the pair's
     * frequency-weighted count at selection time. Stops early if the
     * vocabulary runs out of adjacent pairs. */
-  def learnMerges(docs: DataFrame, textCol: String, k: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def learnMerges(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val mat = Iterative.materializer(spark, checkpointDir)
+    val mat = Iterative.materializer(spark)
     val words = docs
       .select(explode(split(col(textCol), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)

@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
   * Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components
   * in MapReduce and Beyond", SoCC 2014): alternating large-star /
   * small-star rounds converge in O(log n) rounds on ANY graph,
-  * where the plain hash-min label propagation of
-  * [[Dedupe.connectedComponents]] needs O(diameter) rounds — the
-  * difference between 7 rounds and 100 on a 100-link redirect chain,
-  * and the published algorithm of record for web-scale component
-  * finding (link farms, redirect chains, dedupe families).
+  * where plain hash-min label propagation needs O(diameter) rounds —
+  * the difference between 7 rounds and 100 on a 100-link redirect
+  * chain, and the published algorithm of record for web-scale
+  * component finding (link farms, redirect chains, dedupe families).
+  * It is the engine's one connected-components operator: d5's shared
+  * near-dup clusters (reference G4, DeduperUtils.SetUnionFinder), d13,
+  * ss7, cu24 and g17 all label through it.
   *
   * Both phases are pure relational operators — a partial-agg'd
   * per-node min plus an equi join back onto the edge list — so each
@@ -21,8 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** (node, component-root) for every endpoint in `pairs`; root = the
-    * minimum node id of the component. Self loops ignored. */
+  /** (node, component) for every endpoint in `pairs`; component = the
+    * minimum node id of the component. Self loops are ignored, so a node
+    * that appears only in self pairs gets no row. Throws if the edge set
+    * has not reached its fixpoint within `maxIters` rounds: never a
+    * truncated labelling. */
   def starContract(
       pairs: DataFrame, a: String = "a", b: String = "b",
       maxIters: Int = 30): DataFrame =
@@ -33,8 +38,7 @@ object Components {
   def starContractWithRounds(
       pairs: DataFrame, a: String = "a", b: String = "b",
       maxIters: Int = 30): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val mat = Iterative.materializer(spark, None)
+    val mat = Iterative.materializer(pairs.sparkSession)
     var edges = mat(pairs
       .select(least(col(a), col(b)).as("lo"), greatest(col(a), col(b)).as("hi"))
       .filter(col("lo") =!= col("hi"))
@@ -85,7 +89,7 @@ object Components {
       // the full ls checkpoint write per round. Row identity with the
       // r5–r20 two-mat round is exact (same multiset before the final
       // distinct); measured at sf0.1 interleaved in one JVM
-      // (tools/StarScratch): jobs/run 126 → 86, warm wall
+      // (OPTIMIZATION_r21.md, g17): jobs/run 126 → 86, warm wall
       // 5.2–5.7 → 3.8–4.7 s, outputs set-identical, rounds unchanged.
       // Skew note: AQE cannot split a window partition the way it can
       // a skewed SMJ, so a mega-hub's small-star group is one task here
@@ -94,9 +98,9 @@ object Components {
       // neighbors at minima, and rounds shrink degrees fast). The
       // skew-splittable fallback — groupBy+join WITHOUT the ls
       // checkpoint, second consumption riding ReusedExchange — was
-      // measured too: 110 jobs / 4.4–4.7 s (tools/StarScratch variant
-      // D); switch to it if a production graph ever straggles on this
-      // window.
+      // measured too: 110 jobs / 4.4–4.7 s (variant D in
+      // OPTIMIZATION_r21.md); switch to it if a production graph ever
+      // straggles on this window.
       edges = mat(ls
         .withColumn("m", min(col("lo")).over(
           org.apache.spark.sql.expressions.Window.partitionBy("hi")))

@@ -90,7 +90,7 @@ object CrawlDb {
     * slice(array_sort(collect_set)) inside the fold, which forced the
     * WHOLE aggregate through ObjectHashAggregate — no codegen, and
     * every c1/c2 merge task fell back to sort-based aggregation
-    * (numTasksFallBacked=32). Measured warm at sf0.1 (CrawlDbScratch):
+    * (numTasksFallBacked=32). Measured warm at sf0.1 (OPTIMIZATION_r21.md V4):
     * collect_set fold 2.65 s, scalar fold alone 1.03 s (the floor),
     * rank-join-back 1.99 s, this fused form 1.24 s. At scale the trade
     * is one extra exchange of the link stream against codegen

@@ -414,7 +414,7 @@ object Dedupe {
     * 8-token string: ~10× narrower UNCOMPRESSED key (8 of ~88
     * bytes/row), which lands as a measured 3.05× compressed-shuffle cut
     * (3135.9 → 1029.5 MB at x100 — the token text compresses ~3:1 in
-    * shuffle; SCALING.md, tools/SpanShuffleProbe) on the kernel's
+    * shuffle; SCALING.md, round-19 d19 note) on the kernel's
     * heaviest stage — the difference that makes ExactSubstr runnable at
     * 100 TB. Collision direction is
     * SAFE for removal semantics: a hash collision can only make two
@@ -846,62 +846,5 @@ object Dedupe {
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b")
       .distinct()
-  }
-
-  /** Connected components over an undirected pair list by iterative
-    * min-label propagation (reference G4: DeduperUtils.SetUnionFinder,
-    * Stage2Reducer) — the distributed union-find for dedupe clusters.
-    * Converges in O(log n) rounds on dedupe-cluster-shaped graphs; each
-    * round is one shuffle, with lineage truncated per round (reliable
-    * checkpoints when `checkpointDir` is set — see [[Iterative]]). */
-  def connectedComponents(pairs: DataFrame, a: String = "doc_a", b: String = "doc_b",
-      maxIters: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val mat = Iterative.materializer(pairs.sparkSession, checkpointDir)
-    // undirected edge list, both directions — the loop invariant. Cached
-    // pre-partitioned on dst (the per-round join key) so rounds re-read
-    // the cache without re-shuffling the O(edges) side; persist (not
-    // checkpoint) because LogicalRDD drops outputPartitioning. Only the
-    // O(nodes) label state moves each round.
-    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
-      .union(pairs.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
-      .repartition(
-        pairs.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
-      .persist()
-    edges.count() // materialize once; iterations re-read, not re-derive
-    var labels = mat(edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("label", col("id")))
-    // labels are monotonically non-increasing, so sum(label) strictly
-    // decreases iff any label changed — convergence detection rides on the
-    // same single-row action that materializes the iteration, with no extra
-    // change-detection join.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).first().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // each node adopts the min label among itself and its neighbors
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nbr_label"))
-      val next = mat(labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      ) // truncate lineage every round
-      val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
-    }
-    // labels is materialized (mat per round), so the invariant cache can
-    // be released before returning — no dead entries in long sessions
-    edges.unpersist()
-    labels.withColumnRenamed("label", "cluster_id")
   }
 }

@@ -42,25 +42,18 @@ object Hits {
     * apart because crawl-graph source/target id namespaces may overlap
     * (customers vs suppliers in the test mapping). */
   def run(edges: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None,
       normalize: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(normalize || iters <= 3,
       s"unnormalized HITS is overflow-safe only to 3 iterations; pass normalize=true for iters=$iters")
-    val spark = edges.sparkSession
-    val mat = Iterative.materializer(spark, checkpointDir)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    def pinned(df: DataFrame, key: String): DataFrame = {
-      val p = df.repartition(nParts, col(key)).persist()
-      p.count() // materialize now so every iteration reads the cache
-      p
-    }
+    val mat = Iterative.materializer(edges.sparkSession)
     // the caller's edge plan can be an arbitrarily expensive multi-join
     // derivation: materialize it exactly ONCE (the src-partitioned pin),
     // and build the dst-partitioned copy FROM that cache — two pins of
     // the raw plan would run the whole derivation twice
-    val bySrc = pinned(edges.select("src_domain", "dst_domain", "n_links"), "src_domain")
-    val byDst = pinned(bySrc, "dst_domain")
+    val bySrc = Iterative.pinned(
+      edges.select("src_domain", "dst_domain", "n_links"), "src_domain")
+    val byDst = Iterative.pinned(bySrc, "dst_domain")
 
     def rescale(df: DataFrame, scoreCol: String): DataFrame =
       if (!normalize) df

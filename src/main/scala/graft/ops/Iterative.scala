@@ -1,11 +1,14 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Lineage-truncation policy for operators that must materialize
-  * intermediate state: iterative ops (PageRank, connected components)
-  * whose plans grow per round, and the dedupe/similarity pipelines whose
-  * shingle/vector tables feed multiple joins.
+/** Lineage-truncation and state-pinning policy for operators that must
+  * materialize intermediate state: iterative ops (PageRank, PPR, HITS,
+  * connected components, BPE) whose plans grow per round, and the
+  * dedupe/similarity pipelines whose shingle/vector tables feed multiple
+  * joins. Every loop pins its state through this object, so the policy
+  * lives in one place.
   *
   * `localCheckpoint` stores blocks on executors — cheap, but on a real
   * cluster an executor loss kills the lineage-truncated run mid-flight
@@ -14,9 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * checkpoint filesystem instead — the setting a 1000-executor run
   * should use; local test runs default to the executor-local path.
   *
-  * The dir comes from the session conf `spark.graft.checkpointDir` (set
-  * once at session setup; every graft op picks it up) or an explicit
-  * per-op override where the op exposes one.
+  * The dir comes from the session conf `spark.graft.checkpointDir`, the
+  * one checkpoint setting: set it once at session setup and every graft
+  * op picks it up. `setCheckpointDir` is SparkContext-global, so a
+  * per-op dir would interleave the checkpoint files of overlapping ops.
   */
 private[graft] object Iterative {
 
@@ -46,9 +50,13 @@ private[graft] object Iterative {
     try f finally planOnlyFlag.set(prev)
   }
 
+  /** The configured reliable checkpoint dir, if any. */
+  private def checkpointDir(spark: SparkSession): Option[String] =
+    spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty)
+
   /** Materialize one DataFrame under the session-configured policy. */
   def materialize(df: DataFrame): DataFrame =
-    if (planOnlyFlag.get) df else materializer(df.sparkSession, None)(df)
+    if (planOnlyFlag.get) df else materializer(df.sparkSession)(df)
 
   /** Materialize with SERIALIZED block storage (memory-and-disk-ser) —
     * for edge-scale frames in iterative loops, where the default
@@ -61,7 +69,7 @@ private[graft] object Iterative {
     * unchanged — it is already on-disk. */
   def materializeSer(df: DataFrame): DataFrame =
     if (planOnlyFlag.get) df
-    else df.sparkSession.conf.getOption(CheckpointDirKey) match {
+    else checkpointDir(df.sparkSession) match {
       case Some(dir) =>
         df.sparkSession.sparkContext.setCheckpointDir(dir)
         df.checkpoint(true)
@@ -70,23 +78,100 @@ private[graft] object Iterative {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
 
-  /** Returns the per-round materializer. An explicit `checkpointDir`
-    * wins; otherwise `spark.graft.checkpointDir` applies; otherwise
-    * executor-local checkpoints.
-    *
-    * NOTE: `setCheckpointDir` is SparkContext-GLOBAL — concurrent
-    * iterative ops in one session must share a checkpoint dir (pass the
-    * same value, or set it once at session setup via the conf key).
-    * Passing different dirs from overlapping ops would interleave their
-    * checkpoint files across both directories. */
-  def materializer(
-      spark: SparkSession,
-      checkpointDir: Option[String]): DataFrame => DataFrame =
-    checkpointDir.orElse(spark.conf.getOption(CheckpointDirKey)) match {
+  /** Returns the per-round materializer: reliable checkpoints under
+    * `spark.graft.checkpointDir`, executor-local checkpoints otherwise. */
+  def materializer(spark: SparkSession): DataFrame => DataFrame =
+    checkpointDir(spark) match {
       case Some(dir) =>
         spark.sparkContext.setCheckpointDir(dir)
         df => if (planOnlyFlag.get) df else df.checkpoint(true)
       case None =>
         df => if (planOnlyFlag.get) df else df.localCheckpoint(true)
     }
+
+  /** Invariant pin: caches a loop-invariant table hash-partitioned on its
+    * per-iteration join key `key`, and materializes it now so every
+    * iteration reads the cache. persist() (not checkpoint — Spark's
+    * LogicalRDD drops outputPartitioning) keeps the partitioning visible
+    * through InMemoryTableScan, so ENSURE_REQUIREMENTS adds no Exchange
+    * above the cached side; the partition count is pinned explicitly
+    * because an AQE-coalesced width would never match the loop's
+    * exchanges. Invariants need no checkpoint — their lineage is
+    * constant. The caller unpersists the result once its loop is done. */
+  def pinned(df: DataFrame, key: String): DataFrame = {
+    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
+    val p = df.repartition(nParts, col(key)).persist()
+    p.count()
+    p
+  }
+
+  /** Generation pin policy: with no reliable checkpoint dir, every
+    * `LineageCutEvery`-th generation goes through the materializer and
+    * the others are persisted. */
+  private val LineageCutEvery = 8
+
+  /** The pinned generations of one loop's state.
+    *
+    * A generation is PERSISTED, not localCheckpoint'ed: LogicalRDD drops
+    * outputPartitioning, so a checkpointed O(V) state re-shuffles into
+    * the next round's join against a key-pinned invariant, while a
+    * persisted one keeps its HashPartitioning visible through
+    * InMemoryTableScan and the join stays exchange-free (measured on g5
+    * at sf0.1: total shuffle 90.6 → 75.6 MB, wall neutral). The cached
+    * generation substitutes as an InMemoryRelation LEAF, so plans stay
+    * flat like a checkpoint scan — but the analyzed plan (and every
+    * SQL-event explain string) still nests one level per generation, and
+    * a 60-iteration chain OOM'd a test JVM building those strings. Every
+    * 8th generation therefore goes through the materializer (lineage cut;
+    * that one round's join pays the exchange). With
+    * `spark.graft.checkpointDir` set (a real cluster) every generation
+    * does: re-exchanging V rows per round is the price of surviving
+    * executor loss. The fault story is the same under either form: a
+    * lost block means re-running the query.
+    *
+    * A superseded generation stays pinned until [[release]], so a loop
+    * can still read the previous state after pinning the next one.
+    * [[finish]] hands the final state off through the materializer and
+    * releases every generation, so a finished loop leaves no cache entry
+    * behind in a long-lived session. */
+  final class Generations(spark: SparkSession) {
+    private val reliable = checkpointDir(spark).isDefined
+    private val cut = materializer(spark)
+    private var n = 0
+    private var live = List.empty[DataFrame]
+
+    /** Pin `df` as the next generation. */
+    def pin(df: DataFrame): DataFrame = {
+      n += 1
+      val p =
+        if (reliable || n % LineageCutEvery == 0) cut(df)
+        else { val q = df.persist(); q.count(); q }
+      live = p :: live
+      p
+    }
+
+    /** Release every generation but the newest (unpersist of a
+      * checkpointed generation is a CacheManager no-op). */
+    def release(): Unit = {
+      live.drop(1).foreach(_.unpersist(false))
+      live = live.take(1)
+    }
+
+    /** Pin `df` and release the generation it supersedes. */
+    def advance(df: DataFrame): DataFrame = {
+      val p = pin(df)
+      release()
+      p
+    }
+
+    /** Final hand-off: `df` goes through the lineage-cut materializer,
+      * then every persisted generation is released. Release the loop's
+      * invariants only after this: they feed the final materialization. */
+    def finish(df: DataFrame): DataFrame = {
+      val out = cut(df)
+      live.foreach(_.unpersist(false))
+      live = Nil
+      out
+    }
+  }
 }

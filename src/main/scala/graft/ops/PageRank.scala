@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the edge set (with out-degree and the source-super flag
   * pre-joined) is materialized once and reused every iteration; each
-  * iteration's ranks are checkpointed so lineage stays flat (reliable
-  * checkpoints when `checkpointDir` is set — see [[Iterative]]). Per iteration: one shuffle join (ranks by domain) + two
+  * iteration's ranks are pinned by [[Iterative.Generations]] so lineage
+  * stays flat. Per iteration: one shuffle join (ranks by domain) + two
   * aggregations + one left join — the same shape the reference's
   * distribute/calculate phases hand-implement over TCP.
   */
@@ -40,15 +40,6 @@ object PageRank {
 
   /** `edges`: src_domain, src_root, dst_domain, dst_root (distinct).
     * `superRoots`: one `root` column. Returns (domain, root, rank_u).
-    * `checkpointDir`: when set, per-iteration state goes through reliable
-    * `checkpoint()` instead of executor-local blocks (see [[Iterative]]) —
-    * required for fault tolerance on a real cluster.
-    * `checkpointInterval`: materialize ranks every N iterations (1 = every
-    * iteration, the safe default for long chains at scale). Iterations in
-    * between stay lazy — each rank state is consumed exactly once by the
-    * next iteration, so an unmaterialized stretch pipelines as one job
-    * with no recomputation; for short chains that removes N-1 eager
-    * materialization barriers.
     * `subdomainSampleCap`: when set, a non-super root's average for a
     * given target runs over at most this many of its subdomains, chosen
     * deterministically by (md5 of the source id, id) — the reference
@@ -66,37 +57,22 @@ object PageRank {
     * iteration, and forces per-iteration materialization.
     */
   def run(edges: DataFrame, superRoots: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None,
-      checkpointInterval: Int = 1,
       subdomainSampleCap: Option[Int] = None,
       tol: Option[Long] = None): DataFrame = {
-    val mat = Iterative.materializer(edges.sparkSession, checkpointDir)
     // Loop-invariant tables are CACHED pre-partitioned on their
-    // per-iteration join keys: the edge table — the O(data) side — never
-    // re-shuffles inside the loop; only the O(nodes) rank state moves
-    // each iteration. At 100 TB this is the difference between shuffling
-    // the crawl once and five times. persist() (not checkpoint — Spark's
-    // LogicalRDD drops outputPartitioning) keeps the partitioning
-    // visible through InMemoryTableScan, so ENSURE_REQUIREMENTS adds no
-    // Exchange above the cached side; the count is pinned explicitly
-    // because an AQE-coalesced width would never match the loop's
-    // exchanges. Invariants don't need checkpointing anyway — their
-    // lineage is constant; only the iterated state's lineage grows.
+    // per-iteration join keys (Iterative.pinned): the edge table — the
+    // O(data) side — never re-shuffles inside the loop; only the
+    // O(nodes) rank state moves each iteration. At 100 TB this is the
+    // difference between shuffling the crawl once and five times.
     val nParts = edges.sparkSession.sessionState.conf.numShufflePartitions
-    def pinned(df: DataFrame, key: String): DataFrame = {
-      val p = df.repartition(nParts, col(key)).persist()
-      p.count() // materialize now so every iteration reads the cache
-      p
-    }
     // The caller's edge plan can be arbitrarily expensive (a multi-join
     // derivation over the raw crawl); cache it ONCE, already partitioned
     // on src_domain. Everything keyed by src_domain downstream — the
     // out-degree aggregation, the degree join, and the final pinned `e` —
     // then rides that one partitioning with no further Exchange: the
     // O(edges) table is shuffled exactly once in the whole setup phase.
-    val edgesIn = edges.repartition(nParts, col("src_domain")).persist()
-    edgesIn.count()
-    val nodes = pinned(
+    val edgesIn = Iterative.pinned(edges, "src_domain")
+    val nodes = Iterative.pinned(
       edgesIn.select(col("src_domain").as("domain"), col("src_root").as("root"))
         .unionByName(edgesIn.select(col("dst_domain").as("domain"), col("dst_root").as("root")))
         .distinct(), "domain")
@@ -139,52 +115,9 @@ object PageRank {
     // rank exchanges saves more than its per-stage re-planning costs at
     // this scale. Left on.
     //
-    // r21 state pinning: per-iteration state is PERSISTED (cache), not
-    // localCheckpoint'ed, when no reliable checkpoint dir is configured.
-    // localCheckpoint's LogicalRDD drops outputPartitioning, so every
-    // iteration re-shuffled the O(V) rank state into the contribs join;
-    // a persisted frame keeps HashPartitioning(domain) visible through
-    // InMemoryTableScan and the join against the src_domain-pinned edge
-    // cache is exchange-free (the same reasoning the setup uses for the
-    // invariants). Fault story is unchanged: a lost block under EITHER
-    // form means re-running the query (localCheckpoint cannot recompute
-    // at all; the superseded cache generations here are unpersisted).
-    // With spark.graft.checkpointDir set (a real cluster) the loop keeps
-    // reliable checkpoints — re-exchanging V rows per round is the price
-    // of surviving executor loss there. Plans stay flat: the cached
-    // generation substitutes as an InMemoryRelation LEAF, exactly like a
-    // checkpoint scan. Measured at sf0.1 (OpProfile warm min): g5 wall
-    // NEUTRAL within box noise (6.92 vs 6.68 s) with total shuffle
-    // 90.6 → 75.6 MB (the per-iteration O(V) rank exchange is gone) —
-    // kept for the shuffle cut, which is V·iters rows at 100 TB.
-    val reliable = checkpointDir.orElse(
-      Option(edges.sparkSession.conf.get(Iterative.CheckpointDirKey, null))
-        .filter(_.nonEmpty)).isDefined
-    // persist() keeps the partitioning but NOT lineage flatness: the
-    // analyzed plan (and every SQL-event explain string) nests one level
-    // per generation, and a 60-iteration chain OOM'd the test JVM
-    // building those strings. Every 8th generation therefore goes
-    // through the materializer (lineage cut; that one round's join pays
-    // the rank exchange) — plan nesting is bounded at 8 and 7/8 of the
-    // per-round exchanges stay removed.
-    val LineageCutEvery = 8
-    var gen = 0
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) mat(df)
-      else {
-        gen += 1
-        if (gen % LineageCutEvery == 0) mat(df)
-        else { val p = df.persist(); p.count(); p }
-      }
-    def release(df: DataFrame): Unit = if (!reliable) df.unpersist(false)
-    // the previous pinned state generation; released only AFTER nothing
-    // reads it anymore (the tol path's delta join reads it post-pin)
-    var pinnedPrev: Option[DataFrame] = None
-    def swapPinned(p: DataFrame): DataFrame = {
-      pinnedPrev.foreach(release)
-      pinnedPrev = Some(p)
-      p
-    }
+    // per-iteration state: persisted generations, a lineage cut every
+    // 8th, released once superseded (see Iterative.Generations)
+    val gens = new Iterative.Generations(edges.sparkSession)
     // iteration 0 rides the nodes cache directly: a projection over the
     // domain-partitioned invariant needs no pin of its own
     var ranks = nodes.withColumn("rank_u", lit(Scale))
@@ -215,26 +148,24 @@ object PageRank {
           // drift with summation order. One extra (cheap, O(nodes))
           // aggregation per iteration. The delta join reads the PREVIOUS
           // state, so the old generation is released only afterwards.
-          val nextM = pin(next)
+          val nextM = gens.pin(next)
           val d = nextM
             .join(ranks.select(col("domain"), col("rank_u").as("prev_u")), "domain")
             .agg(max(abs(col("rank_u") - col("prev_u"))))
             .collect()(0)
           converged = d.isNullAt(0) || d.getLong(0) <= eps
-          ranks = swapPinned(nextM)
+          gens.release()
+          ranks = nextM
         case None =>
-          ranks =
-            if (iter % checkpointInterval == 0 && iter < iters)
-              swapPinned(pin(next))
-            else next
+          ranks = if (iter < iters) gens.advance(next) else next
       }
       iter += 1
     }
-    // materialize the final state BEFORE releasing the loop invariants:
-    // the cached tables feed the last (lazy) iteration, and a long-lived
+    // hand off the final state BEFORE releasing the loop invariants: the
+    // cached tables feed the last (lazy) iteration, and a long-lived
     // session (query server, repeated bench rounds) must not accumulate
-    // dead cache entries per run; the tol path has already materialized it
-    val out = if (tol.isDefined) ranks else swapPinned(pin(ranks))
+    // dead cache entries per run
+    val out = gens.finish(ranks)
     nodes.unpersist()
     e.unpersist()
     out

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * table — the O(data) side — is cached pre-partitioned on the
   * per-iteration join key and never re-shuffles inside the loop; only
   * the O(nodes) rank state moves per iteration; the seed set is O(seeds)
-  * and broadcast once into the node table. Per-iteration state goes
-  * through [[Iterative]]'s materializer (reliable `checkpoint()` when a
-  * dir is configured) so lineage stays flat over long walks.
+  * and broadcast once into the node table. Per-iteration state is pinned
+  * by [[Iterative.Generations]] so lineage stays flat over long walks.
   */
 object Ppr {
 
@@ -34,17 +33,12 @@ object Ppr {
     * fixed-point units; seeds start with full Scale mass, everything
     * else at 0, and each iteration re-injects the 0.15 restart mass at
     * the seeds only. */
-  def run(edges: DataFrame, seeds: DataFrame, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val mat = Iterative.materializer(spark, checkpointDir)
-    val nParts = spark.sessionState.conf.numShufflePartitions
+  def run(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     // one setup shuffle for the O(edges) side; everything keyed by
     // src_domain (out-degree agg, degree join, the loop's rank join)
     // rides this single partitioning with no further Exchange
-    val edgesIn = edges.select("src_domain", "dst_domain")
-      .repartition(nParts, col("src_domain")).persist()
-    edgesIn.count()
+    val edgesIn = Iterative.pinned(
+      edges.select("src_domain", "dst_domain"), "src_domain")
     val outdeg = edgesIn.groupBy("src_domain").agg(count(lit(1)).as("outdeg"))
     val e = edgesIn.join(outdeg, "src_domain").persist()
     e.count()
@@ -53,41 +47,16 @@ object Ppr {
       .distinct()
     // the seed set is a model-sized side input: broadcast it into the
     // node table once — the flag then travels with the O(nodes) state
-    val nodes = nodesAll
+    val nodes = Iterative.pinned(nodesAll
       .join(broadcast(seeds.select(col("domain").as("sd"), lit(1L).as("flag"))),
         col("domain") === col("sd"), "left")
-      .select(col("domain"), coalesce(col("flag"), lit(0L)).as("is_seed"))
-      .repartition(nParts, col("domain")).persist()
-    nodes.count()
+      .select(col("domain"), coalesce(col("flag"), lit(0L)).as("is_seed")),
+      "domain")
     edgesIn.unpersist() // e and nodes are pinned; the raw plan is done
 
-    // r21: same state pinning as PageRank.run — per-iteration state is
-    // PERSISTED (keeps HashPartitioning(domain, nParts) visible, so the
-    // e ⨝ ranks join is exchange-free) unless a reliable checkpoint dir
-    // is configured; see the PageRank.run comment for the measured
-    // trade and the fault story.
-    val reliable = checkpointDir.orElse(
-      Option(spark.conf.get(Iterative.CheckpointDirKey, null))
-        .filter(_.nonEmpty)).isDefined
-    // every 8th generation goes through the materializer to cut lineage
-    // (see the PageRank.run comment: persist keeps partitioning but
-    // nests the analyzed plan per generation; unbounded chains OOM the
-    // SQL-event explain strings)
-    val LineageCutEvery = 8
-    var gen = 0
-    var pinnedPrev: Option[DataFrame] = None
-    def pinState(df: DataFrame): DataFrame =
-      if (reliable) mat(df)
-      else {
-        gen += 1
-        val p =
-          if (gen % LineageCutEvery == 0) mat(df)
-          else { val q = df.persist(); q.count(); q }
-        // unpersist of a checkpoint generation is a CacheManager no-op
-        pinnedPrev.foreach(_.unpersist(false))
-        pinnedPrev = Some(p)
-        p
-      }
+    // per-iteration state: the same generation pinning as PageRank.run
+    // (persisted, so the e ⨝ ranks join is exchange-free)
+    val gens = new Iterative.Generations(edges.sparkSession)
     // iteration 0 rides the nodes cache directly (a projection over the
     // domain-partitioned invariant)
     var ranks = nodes.withColumn("rank_u",
@@ -105,10 +74,10 @@ object Ppr {
           (col("is_seed") * lit(150000000000L) +
             expr("(coalesce(acc, 0) div 1000) * 850 + ((coalesce(acc, 0) % 1000) * 850) div 1000"))
             .as("rank_u"))
-      ranks = if (iter < iters) pinState(next) else next
+      ranks = if (iter < iters) gens.advance(next) else next
       iter += 1
     }
-    val out = pinState(ranks)
+    val out = gens.finish(ranks)
     nodes.unpersist()
     e.unpersist()
     out

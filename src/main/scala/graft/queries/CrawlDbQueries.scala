@@ -126,7 +126,7 @@ object CrawlDbQueries {
     // (CrawlDBMergeJob.java:290-295). The oracle is the ONE-SHOT merge:
     // hash equality proves incremental == full re-merge.
     //
-    // Plan budget (profiled; tools/AqeScratch prints the post-AQE plan):
+    // Plan budget (profiled on the final post-AQE plan):
     // exactly 3 exchanges — one hash shuffle per half-merge aggregate, the
     // full-outer SMJ reusing both aggregates' partitioning exchange-free,
     // and the final orderBy range partition. Partial aggregation is

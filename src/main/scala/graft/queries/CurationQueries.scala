@@ -1305,8 +1305,8 @@ object CurationQueries {
         val pairs1 = pairsAll
           .join(b1Ids.withColumnRenamed("doc_id", "doc_a"), "doc_a")
           .join(b1Ids.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        val clus1 = graft.ops.Dedupe.connectedComponents(pairs1)
-          .select(col("id").as("doc_id"), col("cluster_id"))
+        val clus1 = graft.ops.Components.starContract(pairs1, "doc_a", "doc_b")
+          .select(col("node").as("doc_id"), col("component").as("cluster_id"))
         val assigned = b1Ids
           .join(clus1, Seq("doc_id"), "left")
           .select(col("doc_id"),

@@ -117,12 +117,15 @@ object DedupeQueries {
     * i20 (labels) — the c7 incremental-view discipline; each was paying
     * for the SAME banding + clustering independently, their dominant
     * cost. One build per (stage base, sf dir) persists the verified
-    * pair set as parquet and the complete (doc_id → cluster_id) label
+    * pair set as parquet, the complete (doc_id → cluster_id) label
     * table — singletons labeled by their own id — as a doc_id-bucketed
-    * table, so i20's first probe hop joins it shuffle-free and cu24's
-    * round-2 clustering is a read. Returns (pairs, labels). Correct in
-    * any run order: the first caller builds, later callers (and later
-    * RUNS in the same JVM) reuse; a dir or stage-base change rebuilds. */
+    * table, and the same labels as a (cluster_id → member_id) table
+    * bucketed by cluster_id ([[membersTable]]), so both of
+    * i20's probe hops join shuffle-free and cu24's round-2 clustering is
+    * a read. Returns (pairs, labels). Correct in any run order: the
+    * first caller builds, later callers (and later RUNS in the same JVM)
+    * reuse; a dir or stage-base change rebuilds. Every table is written
+    * here, under one lock, so concurrent readers never race a rewrite. */
   def sharedNearDup(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame) = d5SharedLock.synchronized {
@@ -139,19 +142,28 @@ object DedupeQueries {
       Dedupe.minhashNearDupPairs(docs, "doc_id", "text",
           threshold = 0.8, k = 72, bands = 6)
         .write.mode("overwrite").parquet(s"$base/pairs-$dig")
-      val clus =
-        Dedupe.connectedComponents(s.read.parquet(s"$base/pairs-$dig"))
-          .select(col("id").as("doc_id"), col("cluster_id"))
+      val clus = graft.ops.Components
+        .starContract(s.read.parquet(s"$base/pairs-$dig"), "doc_a", "doc_b")
+        .select(col("node").as("doc_id"), col("component").as("cluster_id"))
       val labels = docs.select(col("doc_id"))
         .join(clus, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       graft.sources.Sinks.writeBucketedAt(labels, labelsTable,
         "doc_id", 8, s"$base/labels-$dig")
+      graft.sources.Sinks.writeBucketedAt(
+        s.table(labelsTable)
+          .select(col("cluster_id"), col("doc_id").as("member_id")),
+        membersTable(dir), "cluster_id", 8, s"$base/members-$dig")
       d5SharedBuilt += ((base, dir))
     }
     (s.read.parquet(s"$base/pairs-$dig"), s.table(labelsTable))
   }
+
+  /** Name of the shared (cluster_id → member_id) table for `dir`,
+    * bucketed by cluster_id; [[sharedNearDup]] builds it. */
+  private[graft] def membersTable(dir: String): String =
+    s"d5_members_${Staging.dirKey(dir)}"
 
   /** d12 ground truth: probe(P) × corpus broadcast loop with the whole
     * pair test IN the join condition — length band first
@@ -171,14 +183,17 @@ object DedupeQueries {
     * loop shape is this audit query's documented scale contract
     * (linear per probe, the ss1 pattern) and the per-pair test is
     * ~0.3 µs after the length gate. D12TruthSpec pins row identity
-    * against the unfiltered gram-join replay. */
+    * against the unfiltered gram-join replay. A text under 3 codepoints
+    * has no shingles, and the kernel's Jaccard of two empty sets is NaN,
+    * which Spark orders above 0.8: the `size > 0` guard keeps such pairs
+    * out, as the oracle's 0/0 = NULL does. */
   private[graft] def d12TruthPairs(sh: org.apache.spark.sql.DataFrame,
       P: Int): org.apache.spark.sql.DataFrame = {
     val c = sh.select(col("doc_id"), array_sort(col("sh")).as("csh"))
     val p = sh.where(col("doc_id") < P)
       .select(col("doc_id").as("probe_id"), array_sort(col("sh")).as("psh"))
     c.join(broadcast(p),
-        col("doc_id") =!= col("probe_id") &&
+        col("doc_id") =!= col("probe_id") && size(col("psh")) > 0 &&
           size(col("csh")) * 5 >= size(col("psh")) * 4 &&
           size(col("psh")) * 5 >= size(col("csh")) * 4 &&
           graft.functions.NativeExpressions
@@ -671,10 +686,11 @@ object DedupeQueries {
             sum(col("id")).as("docid_sum"))
           .withColumn("node", shiftleft(col("h_hi"), 32).bitwiseOR(col("h_lo")))
         val edges = Dedupe.bandedHammingPairs(nodes, maxHamming = 2)
-        val labels = Dedupe.connectedComponents(edges)
+        val labels = graft.ops.Components.starContract(edges, "doc_a", "doc_b")
+          .withColumnRenamed("node", "id")
         nodes.join(labels, nodes("node") === labels("id"), "left")
           .select(col("min_doc"), col("n_docs"), col("docid_sum"),
-            coalesce(col("cluster_id"), col("node")).as("cl"))
+            coalesce(col("component"), col("node")).as("cl"))
           .groupBy("cl")
           .agg(min(col("min_doc")).as("canonical_doc"),
             sum(col("n_docs")).as("n_docs"),

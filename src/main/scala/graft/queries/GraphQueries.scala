@@ -298,8 +298,8 @@ object GraphQueries {
         val superRoots = Registry.table(s, dir, "nation")
           .filter(col("n_nationkey") < SuperMax)
           .select(col("n_nationkey").cast("long").as("root"))
-        // checkpointInterval = 1 (the default): measured on local[32] at
-        // sf0.1, materializing every round beats letting the 5-iteration chain
+        // every round is pinned: measured on local[32] at sf0.1,
+        // materializing every round beats letting the 5-iteration chain
         // pipeline as one job (13.0 s vs 18.9 s end-to-end) — the fused
         // plan is ~20 chained shuffles that Catalyst re-optimizes as one
         // giant DAG, and each rank state is re-derived through the whole
@@ -904,9 +904,9 @@ object GraphQueries {
     // the remaining one): repeatedly delete nodes of degree < k until
     // the maximal subgraph where every node keeps ≥ k neighbors
     // remains — the dense-community / spam-farm core detector. Spark
-    // iterates to the TRUE fixpoint (each round: one partial-agg'd
-    // degree count + two semi joins on the materialized edge set;
-    // convergence = edge count unchanged, capped defensively). k = 18
+    // iterates to the TRUE fixpoint with g27's bulk peel
+    // (Components.kCore: each round one partial-agg'd degree count +
+    // two anti joins against the victim set, until no victim). k = 18
     // drives a genuine 5-round cascade at sf0.01 (500 → 328 edges,
     // 42 → 28 nodes), not a one-shot filter. The oracle unrolls 8
     // peel rounds — at fixpoint further rounds are no-ops, so
@@ -914,28 +914,10 @@ object GraphQueries {
     // convergence-within-8 so the unroll depth stays honest.
     Q(
       "g15_kcore",
-      (s, dir) => {
-        val k = 18
-        def degOf(df: DataFrame): DataFrame =
-          df.select(col("sa").as("n")).unionByName(df.select(col("sb").as("n")))
-            .groupBy("n").agg(count(lit(1)).as("core_deg"))
-        var cur = cocitationTopEdges(s, dir)
-        var prev = -1L
-        var cnt = cur.count()
-        var rounds = 0
-        while (cnt != prev && rounds < 40) {
-          val keep = degOf(cur).filter(col("core_deg") >= k).select("n")
-          cur = graft.ops.Iterative.materialize(
-            cur.join(keep.withColumnRenamed("n", "sa"), Seq("sa"), "leftsemi")
-              .join(keep.withColumnRenamed("n", "sb"), Seq("sb"), "leftsemi"))
-          prev = cnt
-          cnt = cur.count()
-          rounds += 1
-        }
-        require(cnt == prev, s"k-core did not converge within $rounds rounds")
-        degOf(cur).select(col("n").as("node"), col("core_deg"))
-          .orderBy("node")
-      },
+      (s, dir) =>
+        graft.ops.Components.kCore(cocitationTopEdges(s, dir),
+            "sa", "sb", k = 18)
+          .orderBy("node"),
       Some(s"""
         WITH $EdgesCte,
         $TopEdgesCtes,

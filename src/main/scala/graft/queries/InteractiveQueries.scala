@@ -18,12 +18,6 @@ object InteractiveQueries {
 
   private val dec2 = (c: String) => col(c).cast("decimal(18,2)")
 
-  /** One i20 cluster-index staging dir per (JVM, stageDir base) (d9/cu24:
-    * saveAsTable(overwrite) to a stable external location, so reruns
-    * replace the index instead of accumulating copies). */
-  private val i20Stage = new Staging.Memo("i20")
-  private def i20StagePath: String = i20Stage.path
-
   /** One page-server cache dir per (JVM, stageDir base) — see i9 below. */
   private val i9Cache = new Staging.Memo("i9-cache")
   private def i9CachePath: String = i9Cache.path
@@ -792,10 +786,10 @@ object InteractiveQueries {
     // i20: near-dup cluster-member lookup — the interactive face of the
     // d5 clustering: "show me every copy of this document" (the dedupe
     // review / takedown-propagation / provenance-audit page). The
-    // cluster labels persist as TWO bucketed tables — the SHARED
-    // (doc_id → cluster_id) table bucketed by doc_id (built once with
-    // cu24, DedupeQueries.sharedNearDup) and (cluster_id → member_id)
-    // bucketed by cluster_id — so BOTH hops of a point query land on
+    // cluster labels persist as TWO bucketed tables, both built once
+    // with cu24 in DedupeQueries.sharedNearDup — (doc_id → cluster_id)
+    // bucketed by doc_id and (cluster_id → member_id) bucketed by
+    // cluster_id — so BOTH hops of a point query land on
     // pre-bucketed join keys: the corpus-sized index sides never
     // re-shuffle, only the O(probes) side moves (the d9/TFiles serving
     // discipline). Probes here are the fixed doc_id % 100 == 7 page;
@@ -804,18 +798,15 @@ object InteractiveQueries {
       "i20_cluster_members",
       (s, dir) => {
         val docs = Registry.table(s, dir, "documents")
-        // the doc_id-bucketed label table comes from the shared build —
-        // cu24 and i20 were independently paying for the same banding +
-        // clustering (their dominant cost); the shared table serves the
-        // first probe hop directly
+        // both label tables come from the shared build — cu24 and i20
+        // were independently paying for the same banding + clustering
+        // (their dominant cost), and the builder writes nothing itself,
+        // so concurrent builds of two sort orders cannot race
         val (_, labels) = DedupeQueries.sharedNearDup(s, dir)
-        graft.sources.Sinks.writeBucketedAt(
-          labels.select(col("cluster_id"), col("doc_id").as("member_id")),
-          "i20_members", "cluster_id", 8, s"$i20StagePath/by_cluster")
         docs.select(col("doc_id")).filter(col("doc_id") % 100 === 7)
           .join(labels, "doc_id")
           .select(col("doc_id").as("probe_id"), col("cluster_id"))
-          .join(s.table("i20_members"), "cluster_id")
+          .join(s.table(DedupeQueries.membersTable(dir)), "cluster_id")
           .select(col("probe_id"), col("cluster_id"), col("member_id"))
           .orderBy("probe_id", "member_id")
       },

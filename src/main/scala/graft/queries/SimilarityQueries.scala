@@ -397,8 +397,8 @@ object SimilarityQueries {
             "vec_id", "embedding", Dims,
             bands = NdBands, bitsPerBand = LshBits, threshold = 0.45)
           .select(col("vec_a"), col("vec_b"))
-        graft.ops.Dedupe.connectedComponents(pairs, "vec_a", "vec_b")
-          .select(col("id").as("vec_id"), col("cluster_id"))
+        graft.ops.Components.starContract(pairs, "vec_a", "vec_b")
+          .select(col("node").as("vec_id"), col("component").as("cluster_id"))
           .orderBy("vec_id")
       },
       Some(s"""

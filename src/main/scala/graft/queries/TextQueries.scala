@@ -902,7 +902,7 @@ object TextQueries {
           explode(array_distinct(
             filter(split(lower(col("text")), "[^a-z]+"),
               t => length(t) >= 5))).as("tok"))
-        val mat = graft.ops.Iterative.materializer(s, None)
+        val mat = graft.ops.Iterative.materializer(s)
         // the pair table feeds four consumers in the setup (both union
         // sides of `sym`, each appearing again under `deg`): checkpoint
         // the corpus-scale co-occurrence aggregation ONCE so the doc-
@@ -916,10 +916,8 @@ object TextQueries {
           .filter(col("cnt") >= 3))
         val sym = pairs.select(col("x").as("src"), col("y").as("dst"))
           .unionByName(pairs.select(col("y").as("src"), col("x").as("dst")))
-        val nParts = s.sessionState.conf.numShufflePartitions
         val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        val e = sym.join(deg, "src").repartition(nParts, col("src")).persist()
-        e.count()
+        val e = graft.ops.Iterative.pinned(sym.join(deg, "src"), "src")
         var r = e.select(col("src").as("word")).distinct()
           .select(col("word"), lit(1000000000L).as("rank_u"))
         for (_ <- 1 to iters) {

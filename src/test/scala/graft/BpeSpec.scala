@@ -61,12 +61,13 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("reliable checkpoint path matches default") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ck").toString
-    val docs = Seq("the fast query the fast scan").toDF("text")
-    val want = Bpe.learnMerges(docs, "text", 3).collect().toSeq.map(_.toString)
-    val got = Bpe.learnMerges(docs, "text", 3, checkpointDir = Some(dir))
-      .collect().toSeq.map(_.toString)
+    def merges(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      val docs = Seq("the fast query the fast scan").toDF("text")
+      Bpe.learnMerges(docs, "text", 3).collect().toSeq.map(_.toString)
+    }
+    val want = merges(spark)
+    val got = merges(checkpointedSession())
     assert(got == want)
   }
 }

@@ -51,7 +51,7 @@ class DedupeSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (3L, 4L))
       .toDF("doc_a", "doc_b")
-    val got = Dedupe.connectedComponents(pairs)
+    val got = graft.ops.Components.starContract(pairs, "doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))

@@ -9,8 +9,10 @@ import graft.ops.Hits
 class HitsSpec extends AnyFunSuite with SparkSuite {
 
   //  1 → 10 (x2), 1 → 11, 2 → 10   (weights = n_links)
-  private def edges = {
-    import spark.implicits._
+  private def edges = edgesIn(spark)
+
+  private def edgesIn(s: org.apache.spark.sql.SparkSession) = {
+    import s.implicits._
     Seq(
       (1L, 10L, 2L), (1L, 11L, 1L), (2L, 10L, 1L),
     ).toDF("src_domain", "dst_domain", "n_links")
@@ -71,8 +73,7 @@ class HitsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("reliable checkpoint path matches default") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ck").toString
-    assert(scores(Hits.run(edges, iters = 2, checkpointDir = Some(dir)))
+    assert(scores(Hits.run(edgesIn(checkpointedSession()), iters = 2))
       == scores(Hits.run(edges, iters = 2)))
   }
 }

@@ -2,42 +2,47 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedupe, PageRank}
+import org.apache.spark.sql.SparkSession
 
-/** The iterative ops' reliable-checkpoint path: with a checkpointDir set,
-  * per-round state goes through `df.checkpoint()` (cluster-fault-tolerant)
-  * instead of executor-local blocks, and the results are identical. */
+import graft.ops.{Components, Dedupe, PageRank}
+
+/** The iterative ops' reliable-checkpoint path: with
+  * `spark.graft.checkpointDir` set, per-round state goes through
+  * `df.checkpoint()` (cluster-fault-tolerant) instead of executor-local
+  * blocks, and the results are identical. */
 class IterativeSpec extends AnyFunSuite with SparkSuite {
 
   private def ckDir(): String =
     java.nio.file.Files.createTempDirectory("graft_ck").toString
 
   test("connected components: reliable checkpoint path matches default") {
-    import spark.implicits._
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L),
-    ).toDF("doc_a", "doc_b")
-    val want = Dedupe.connectedComponents(pairs)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val got = Dedupe.connectedComponents(pairs, checkpointDir = Some(ckDir()))
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def labels(s: SparkSession) = {
+      import s.implicits._
+      val pairs = Seq(
+        (1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L),
+      ).toDF("doc_a", "doc_b")
+      Components.starContract(pairs, "doc_a", "doc_b")
+        .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val want = labels(spark)
+    val got = labels(checkpointedSession())
     assert(got == want)
     assert(got.map(_._2).distinct.sorted == Seq(1L, 5L, 8L))
   }
 
   test("pagerank: reliable checkpoint path matches default") {
-    import spark.implicits._
-    val edges = Seq(
-      (1L, 100L, 2L, 200L), (2L, 200L, 3L, 300L), (3L, 300L, 1L, 100L),
-      (4L, 100L, 2L, 200L),
-    ).toDF("src_domain", "src_root", "dst_domain", "dst_root")
-    val supers = Seq(100L).toDF("root")
-    def tuples(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("domain").collect()
+    def tuples(s: SparkSession) = {
+      import s.implicits._
+      val edges = Seq(
+        (1L, 100L, 2L, 200L), (2L, 200L, 3L, 300L), (3L, 300L, 1L, 100L),
+        (4L, 100L, 2L, 200L),
+      ).toDF("src_domain", "src_root", "dst_domain", "dst_root")
+      val supers = Seq(100L).toDF("root")
+      PageRank.run(edges, supers, iters = 3).orderBy("domain").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val want = tuples(PageRank.run(edges, supers, iters = 3))
-    val got = tuples(PageRank.run(edges, supers, iters = 3,
-      checkpointDir = Some(ckDir())))
+    }
+    val want = tuples(spark)
+    val got = tuples(checkpointedSession())
     assert(got == want)
     assert(got.nonEmpty)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{QueryServer, Registry}
+import graft.queries.{DedupeQueries, QueryServer, Registry}
 
 /** §3.1 interactive serving: the positional-index page server must
   * return exactly the rows a direct orderBy/offset/limit would, serve
@@ -121,15 +121,16 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a cached page runs no builder: i20's bucketed table stays untouched") {
-    // i20's builder rewrites the bucketed i20_members table every time it
-    // runs; once the entry is built, pages must read it and nothing else
+    // i20 reads the shared (cluster_id → member_id) bucketed table; once
+    // the entry is built, pages must read it and nothing else
     val (server, _) = newServer()
     val name = "i20_cluster_members"
     val req = server.PageRequest("probe_id", offset = 0, pageSize = 2)
     server.page(name, req).collect()
     def members(): Map[String, Long] = {
       val loc = java.nio.file.Paths.get(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier("i20_members")).location)
+        .getTableMetadata(TableIdentifier(DedupeQueries.membersTable(sfDir)))
+        .location)
       val files = java.nio.file.Files.walk(loc)
       try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
         .map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis)
@@ -157,6 +158,34 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
       finally pool.shutdown()
     assert(results.forall(_ == pages.head))
     assert(members() == built)
+  }
+
+  test("concurrent cold builds of two i20 sort orders both succeed") {
+    // the two entries have different cache paths, so their builds run
+    // at once; neither may write a table the other reads
+    val (server, _) = newServer()
+    val name = "i20_cluster_members"
+    val reqs = Seq(
+      server.PageRequest("probe_id", ascending = true, offset = 0, pageSize = 3),
+      server.PageRequest("member_id", ascending = false, offset = 0, pageSize = 3))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val fs = reqs.map(req => scala.concurrent.Future {
+      server.page(name, req).drop("pos").collect().map(_.toString).toSeq
+    })
+    val results =
+      try fs.map(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration(300, "s")))
+      finally pool.shutdown()
+    val base = Registry.queries(name)(spark, sfDir)
+    reqs.zip(results).foreach { case (req, got) =>
+      val ties = base.columns.filter(_ != req.sortBy).sorted.map(col)
+      val order = (col(req.sortBy) +: ties)
+        .map(c => if (req.ascending) c.asc else c.desc)
+      val want = base.orderBy(order: _*).limit(3).collect().map(_.toString).toSeq
+      assert(got == want, s"${req.sortBy} page mismatch")
+    }
   }
 
   test("page read prunes to the row groups containing the page") {

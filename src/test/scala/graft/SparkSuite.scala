@@ -13,4 +13,14 @@ trait SparkSuite { self: AnyFunSuite =>
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A session on the shared context with `spark.graft.checkpointDir`
+    * set to a fresh temp dir: the ops run on frames built in it take the
+    * reliable-checkpoint path. */
+  def checkpointedSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set(graft.ops.Iterative.CheckpointDirKey,
+      java.nio.file.Files.createTempDirectory("graft_ck").toString)
+    s
+  }
 }

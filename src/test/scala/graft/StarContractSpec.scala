@@ -51,6 +51,14 @@ class StarContractSpec extends AnyFunSuite with SparkSuite {
     assert(got == unionFind(edges))
   }
 
+  test("too few rounds on a chain throws instead of returning labels") {
+    import spark.implicits._
+    val chain = (0L until 64L).map(k => (k, k + 1))
+    val e = intercept[IllegalArgumentException](
+      Components.starContract(chain.toDF("a", "b"), maxIters = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+  }
+
   test("colliding signatures must NOT read as convergence") {
     import spark.implicits._
     // two DIFFERENT canonical edge sets with identical (count, sum lo,

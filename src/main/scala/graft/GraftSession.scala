@@ -25,7 +25,10 @@ import org.apache.spark.sql.SparkSession
   *    (Spark keeps 1000 of each): with the UI off nothing reads it, and a
   *    long-lived query server would otherwise hold the plans and metrics
   *    of its last thousand pages on the heap. Running jobs are never
-  *    evicted, so status-tracker progress is unaffected.
+  *    evicted, so status-tracker progress is unaffected;
+  *  - cleanCheckpoints: the context cleaner deletes a reliable checkpoint
+  *    (`spark.graft.checkpointDir`) once its RDD is garbage-collected,
+  *    so the checkpoint filesystem does not grow with every query.
   */
 object GraftSession {
 
@@ -42,6 +45,7 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
       .config("spark.sql.ui.retainedExecutions", "100")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .withExtensions(new graft.functions.GraftExtensions)
 
   /** Local session for tests/benchmarks on an n-core box. */

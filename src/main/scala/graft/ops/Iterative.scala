@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -54,6 +55,18 @@ private[graft] object Iterative {
   private def checkpointDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty)
 
+  /** Points the SparkContext's reliable checkpoint dir under `dir`,
+    * unless it already is: every `setCheckpointDir` call creates a fresh
+    * UUID subdirectory, so calling it per materialization would scatter
+    * one query's checkpoints over as many directories. */
+  private def useCheckpointDir(spark: SparkSession, dir: String): Unit = {
+    val sc = spark.sparkContext
+    val root = new Path(dir)
+    val qualified = root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+    if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+      sc.setCheckpointDir(dir)
+  }
+
   /** Materialize one DataFrame under the session-configured policy. */
   def materialize(df: DataFrame): DataFrame =
     if (planOnlyFlag.get) df else materializer(df.sparkSession)(df)
@@ -71,7 +84,7 @@ private[graft] object Iterative {
     if (planOnlyFlag.get) df
     else checkpointDir(df.sparkSession) match {
       case Some(dir) =>
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
+        useCheckpointDir(df.sparkSession, dir)
         df.checkpoint(true)
       case None =>
         df.localCheckpoint(true,
@@ -83,7 +96,7 @@ private[graft] object Iterative {
   def materializer(spark: SparkSession): DataFrame => DataFrame =
     checkpointDir(spark) match {
       case Some(dir) =>
-        spark.sparkContext.setCheckpointDir(dir)
+        useCheckpointDir(spark, dir)
         df => if (planOnlyFlag.get) df else df.checkpoint(true)
       case None =>
         df => if (planOnlyFlag.get) df else df.localCheckpoint(true)

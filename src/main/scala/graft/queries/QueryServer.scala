@@ -15,9 +15,13 @@ import org.apache.spark.sql.functions._
   * (indexedByURL/indexedByPR dirs, DatabaseIndexV2.java:763-781). The
   * cached parquet carries an explicit `pos` column (the row's global
   * rank in the requested order), so a page read is a RANGE PREDICATE on
-  * `pos`: parquet row-group min/max stats prune the scan to the one or
-  * two row groups containing the page — the columnar equivalent of the
-  * reference's record-offset seek, O(page) not O(result).
+  * `pos`, pushed to the parquet reader — the columnar stand-in for the
+  * reference's record-offset seek. A cached page costs one Spark job
+  * with one task. What that task reads is bounded by the index layout,
+  * not by the page: the index is written as one file per range
+  * partition, each a single row group, so the `pos` min/max stats can
+  * only skip whole files, and the task reads the file (or the two
+  * files) whose `pos` range holds the page.
   *
   * The global rank at cache-build time is computed WITHOUT a global
   * sort: the result is range-partitioned by the requested order (so
@@ -28,8 +32,7 @@ import org.apache.spark.sql.functions._
   * place of md5 prefixes). An unaggregated result — a full per-domain
   * URL list at crawl scale — therefore never passes through one
   * partition; the reference pays the equivalent cost in its merged
-  * single indexed result file (§3.1 step 8). Page serving after that
-  * is distributed and index-pruned.
+  * single indexed result file (§3.1 step 8).
   */
 final class QueryServer(
     private[queries] val spark: SparkSession, cacheDir: String, sfDir: String) {
@@ -108,19 +111,23 @@ final class QueryServer(
         s"expected one of ${cols.mkString(", ")}")
   }
 
-  /** One page: a range predicate on `pos`, pruned to the row groups
-    * containing [offset+1, offset+pageSize] by parquet min/max stats. */
-  def page(name: String, req: PageRequest): DataFrame = {
-    val idx = index(name, req)
-    idx
+  /** One page: a range predicate on `pos` for [offset+1,
+    * offset+pageSize], sorted in one partition. At most `pageSize` rows
+    * pass the predicate, and a global `orderBy` would plan a
+    * range-partitioning exchange whose sampling job scans the index a
+    * second time. On a cache hit the page is one Spark job, one task. */
+  def page(name: String, req: PageRequest): DataFrame =
+    index(name, req)
       .filter(col("pos") > req.offset && col("pos") <= req.offset + req.pageSize)
-      .orderBy(col("pos"))
-  }
+      .coalesce(1)
+      .sortWithinPartitions(col("pos"))
 
-  /** Total result size, from the cached index (parquet count — row-group
-    * metadata, no data scan). */
+  /** Total result size, from the cached index: parquet counts rows from
+    * row-group metadata without decoding a column, and one partition
+    * needs no exchange before the final count, so a cache hit is one
+    * Spark job with one task. */
   def resultCount(name: String, req: PageRequest): Long =
-    index(name, req).count()
+    index(name, req).coalesce(1).count()
 }
 
 object QueryServer {

@@ -4,6 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Query-server result cache (SURVEY §3.1 steps 2-3): results are keyed
   * by a canonical query id — query name plus its parameters in sorted
@@ -54,6 +55,16 @@ object ResultCache {
   private def lockFor(path: String): Object =
     buildLocks(math.floorMod(path.hashCode, NStripes))
 
+  /** The schema of each published entry, by path, recorded on its first
+    * read. An entry is renamed into place and never overwritten, so its
+    * schema never changes; a hit read with it skips parquet schema
+    * inference, which runs a Spark job of its own on every read. The
+    * record is dropped whenever the `_SUCCESS` probe finds its entry
+    * missing, so a rebuilt entry is read afresh. One small entry per
+    * cache path, as the cache dir itself holds one directory per path. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   /** Serve from cache when present, else compute + materialize. The
     * _SUCCESS marker gates readiness, so a killed write never serves a
     * partial result. The probe goes through the Hadoop FileSystem for the
@@ -75,6 +86,7 @@ object ResultCache {
     def ready = fs.exists(new Path(p, "_SUCCESS"))
     lockFor(path).synchronized {
       if (!ready) {
+        schemas.remove(path)
         val tmp = new Path(s"$path.build-${java.util.UUID.randomUUID}")
         compute.write.mode("overwrite").parquet(tmp.toString)
         // Publish via FileContext.rename, whose no-OVERWRITE contract is
@@ -107,6 +119,12 @@ object ResultCache {
         }
       }
     }
-    spark.read.parquet(path)
+    Option(schemas.get(path)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(path, df.schema)
+        df
+    }
   }
 }

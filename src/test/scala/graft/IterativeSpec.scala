@@ -47,6 +47,19 @@ class IterativeSpec extends AnyFunSuite with SparkSuite {
     assert(got.nonEmpty)
   }
 
+  test("reliable checkpoints of one session share one checkpoint subdir") {
+    // SparkContext.setCheckpointDir makes a fresh UUID subdir per call;
+    // the configured root must get one, however many materializations
+    val s = checkpointedSession()
+    val root = new java.io.File(s.conf.get(graft.ops.Iterative.CheckpointDirKey))
+    import s.implicits._
+    val df = Seq(1L, 2L, 3L).toDF("x")
+    assert(graft.ops.Iterative.materialize(df).count() == 3)
+    assert(graft.ops.Iterative.materializeSer(df.filter($"x" > 1)).count() == 2)
+    val subdirs = root.listFiles().filter(_.isDirectory).map(_.getName).toSeq
+    assert(subdirs.size == 1, s"checkpoint subdirs under $root: $subdirs")
+  }
+
   test("pagerank subdomain sampling: cap averages over the md5-chosen sample") {
     import spark.implicits._
     // dst 9 hears from two subdomains of non-super root 100 with UNEQUAL

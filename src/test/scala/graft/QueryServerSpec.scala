@@ -2,6 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskStart}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +20,47 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
   private def newServer(): (QueryServer, String) = {
     val dir = java.nio.file.Files.createTempDirectory("qserver").toString
     (new QueryServer(spark, dir, sfDir), dir)
+  }
+
+  /** `f`'s result with the Spark jobs and tasks it ran on this thread,
+    * counted by a listener on a job group of its own. */
+  private def jobsOf[A](f: => A): (A, Int, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def ours(p: java.util.Properties) =
+      p != null && p.getProperty("spark.jobGroup.id") == group
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.add(e.stageInfo.stageId)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = f
+      ListenerDrain(sc)
+      (out, jobs.get, tasks.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The page a direct orderBy/offset/limit returns for `req`, under the
+    * index's total order (the sort field, then every other column). */
+  private def directPage(name: String, req: QueryServer#PageRequest): Seq[String] = {
+    val base = Registry.queries(name)(spark, sfDir)
+    val ties = base.columns.filter(_ != req.sortBy).sorted.map(col)
+    val order = (col(req.sortBy) +: ties)
+      .map(c => if (req.ascending) c.asc else c.desc)
+    base.orderBy(order: _*).offset(req.offset.toInt).limit(req.pageSize)
+      .collect().map(_.toString).toSeq
   }
 
   test("pages equal direct orderBy/offset/limit in both directions") {
@@ -186,6 +230,76 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
       val want = base.orderBy(order: _*).limit(3).collect().map(_.toString).toSeq
       assert(got == want, s"${req.sortBy} page mismatch")
     }
+  }
+
+  test("a cached page runs one Spark job with one task") {
+    // a global orderBy over the page planned a range-partitioning
+    // exchange (a sampling job, a shuffle map job, a result job), and
+    // every hit inferred the entry's parquet schema in a job of its own
+    val (server, _) = newServer()
+    for (name <- Seq("w3_dual_sort", "i5_url_detail")) {
+      val sortBy = Registry.queries(name)(spark, sfDir).columns.head
+      val req = server.PageRequest(sortBy, ascending = false, offset = 3, pageSize = 5)
+      val cold = server.page(name, req).collect().map(_.toString).toSeq
+      val (rows, jobs, tasks) = jobsOf(server.page(name, req).collect())
+      assert(rows.map(_.toString).toSeq == cold)
+      assert(jobs == 1, s"$name: a cached page ran $jobs jobs")
+      assert(tasks == 1, s"$name: a cached page ran $tasks tasks")
+      val (n, countJobs, _) = jobsOf(server.resultCount(name, req))
+      assert(n == Registry.queries(name)(spark, sfDir).count())
+      assert(countJobs <= 1, s"$name: a cached resultCount ran $countJobs jobs")
+    }
+  }
+
+  test("pages across a range-partition boundary, the last page and past the end") {
+    val (server, _) = newServer()
+    val name = "w2_pagination"
+    val sortBy = Registry.queries(name)(spark, sfDir).columns.head
+    for (asc <- Seq(true, false)) {
+      val req0 = server.PageRequest(sortBy, ascending = asc)
+      val n = server.resultCount(name, req0)
+      // the last pos of each index file but the final one: the index is
+      // written one file per range partition
+      val ends = server.index(name, req0)
+        .groupBy(input_file_name()).agg(max("pos")).collect()
+        .map(_.getLong(1)).sorted.dropRight(1)
+      assert(ends.nonEmpty, s"asc=$asc: the index is a single file, no boundary to cross")
+      val reqs = ends.toSeq.map(end => req0.copy(offset = math.max(0L, end - 2), pageSize = 5)) ++ Seq(
+        req0.copy(offset = n - 3, pageSize = 7), // the last, partial page
+        req0.copy(offset = n + 5, pageSize = 7)) // past the end: no rows
+      for (req <- reqs) {
+        val got = server.page(name, req).collect()
+        val want = directPage(name, req)
+        assert(got.map(r => r.getLong(r.fieldIndex("pos"))).toSeq ==
+          (req.offset + 1 to math.min(n, req.offset + req.pageSize)),
+          s"asc=$asc offset=${req.offset}: pos range")
+        assert(server.page(name, req).drop("pos").collect().map(_.toString).toSeq == want,
+          s"asc=$asc offset=${req.offset}: page mismatch")
+      }
+      assert(directPage(name, reqs.last).isEmpty)
+      assert(directPage(name, reqs(reqs.size - 2)).size == 3)
+    }
+  }
+
+  test("a deleted cache entry is rebuilt and read afresh") {
+    // the entry's recorded schema must not outlive its files
+    val (server, dir) = newServer()
+    val name = "w3_dual_sort"
+    val sortBy = Registry.queries(name)(spark, sfDir).columns.head
+    val req = server.PageRequest(sortBy, offset = 2, pageSize = 4)
+    val before = server.page(name, req).collect().map(_.toString).toSeq
+    assert(before.size == 4)
+    new java.io.File(dir).listFiles().foreach { f =>
+      val files = java.nio.file.Files.walk(f.toPath)
+      try files.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally files.close()
+    }
+    assert(new java.io.File(dir).list().isEmpty)
+    val after = server.page(name, req).collect().map(_.toString).toSeq
+    assert(after == before)
+    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 1,
+      "the entry was not rebuilt")
   }
 
   test("page read prunes to the row groups containing the page") {

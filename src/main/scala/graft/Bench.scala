@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   /** Resolve where the full-precision dump goes. An explicit override
     * always wins; otherwise default to `BENCH_FULL.json` in cwd UNLESS cwd
@@ -75,10 +78,7 @@ object Bench {
     // the engine's own session configuration (AQE+skew-join, runtime
     // bloom joins, 256m scan partitions, native-function extensions) —
     // the bench must measure the engine as deployed, not a plain session
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: whichever query runs first would otherwise absorb
     // JVM classloading + codegen-infra + parquet-footer startup (~7 s,
@@ -101,7 +101,7 @@ object Bench {
       // Catalyst drop final sorts/projections and undercount the work)
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
+        catch { case NonFatal(e) => System.err.println(s"[bench] $name failed: $e"); false }
       val sec = (System.nanoTime() - t0) / 1e9
       // release the query's localCheckpoint/persist blocks: queries are
       // independent, and accumulated blocks from earlier queries otherwise
@@ -204,7 +204,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { build(spark, sfDir); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: $e"); false }
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
@@ -287,7 +287,7 @@ object Bench {
     val outPath = Bench.fullDumpPath(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] full dump failed: $e") }
     // r21 contract restoration: the stdout line carries the COMPLETE
     // per-query map. The r5–r20 line folded the fastest queries into an
     // "omitted" counter to fit a presumed ~2000-char capture window, and
@@ -309,5 +309,6 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"queries":$qsStr$calibJson,"sf":$sfNum}""")
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

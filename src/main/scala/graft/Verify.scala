@@ -1,7 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Every query
+  * runs even when another fails; the exit status is 1 when any failed,
+  * after the failed names are printed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -13,17 +18,16 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // same session shape as Bench: the gate verifies the engine under
     // its deployed configuration (GraftSession), not a plain session
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // queries are independent — release this query's checkpoint blocks
       // (same block-manager hygiene as Bench)
@@ -45,5 +49,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val failedNames = failed.result()
+    if (failedNames.nonEmpty) {
+      System.err.println(s"[verify] ${failedNames.size} failed: ${failedNames.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

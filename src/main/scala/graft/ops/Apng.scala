@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 /** m46: APNG animation-control walk — the PNG sibling of m20's GIF
   * animation census (APNG, W3C PNG 3rd ed. §11.3.4.x / the original
   * Mozilla spec): `acTL` (declared frame count + play count), the
@@ -28,12 +30,7 @@ object Apng {
 
   private def apngMetaImpl(b: Array[Byte]): Meta = {
     if (b == null || b.length < 8 + 25) return null
-    def u8(i: Int) = b(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) |
-        u8(i + 3)) & 0xffffffffL
-    if (u8(0) != 0x89 || b(1) != 'P' || b(2) != 'N' || b(3) != 'G')
+    if (u8(b, 0) != 0x89 || b(1) != 'P' || b(2) != 'N' || b(3) != 'G')
       return null
     var p = 8
     var width = -1L; var height = -1L
@@ -51,35 +48,35 @@ object Apng {
     while (!done && p + 8 <= b.length) {
       chunks += 1
       if (chunks > MaxChunks) return null
-      val len = be32(p)
+      val len = u32be(b, p)
       if (len > b.length - p - 12) return null // budget: length vs file
-      val typ = new String(b, p + 4, 4, "US-ASCII")
+      val typ = fourCC(b, p + 4)
       val d = p + 8
       typ match {
         case "IHDR" =>
           if (len < 13) return null
-          width = be32(d); height = be32(d + 4)
+          width = u32be(b, d); height = u32be(b, d + 4)
         case "acTL" =>
           if (len < 8) return null
-          framesDeclared = be32(d); plays = be32(d + 4)
+          framesDeclared = u32be(b, d); plays = u32be(b, d + 4)
         case "fcTL" =>
           if (len < 26) return null
-          val seq = be32(d)
+          val seq = u32be(b, d)
           if (seq != nextSeq) seqOk = false
           nextSeq = seq + 1
           nFctl += 1
           if (!sawIdat) defaultIsFrame = true
-          val fw = be32(d + 4); val fh = be32(d + 8)
-          val fx = be32(d + 12); val fy = be32(d + 16)
+          val fw = u32be(b, d + 4); val fh = u32be(b, d + 8)
+          val fx = u32be(b, d + 12); val fy = u32be(b, d + 16)
           if (fx + fw > width || fy + fh > height) geomOk = false
-          val num = be16(d + 20)
-          val den0 = be16(d + 22)
+          val num = u16be(b, d + 20)
+          val den0 = u16be(b, d + 22)
           val den = if (den0 == 0) 100 else den0
           totalDelayMs += num.toLong * 1000L / den
-          if (firstDispose < 0) { firstDispose = u8(d + 24); firstBlend = u8(d + 25) }
+          if (firstDispose < 0) { firstDispose = u8(b, d + 24); firstBlend = u8(b, d + 25) }
         case "fdAT" =>
           if (len < 4) return null
-          val seq = be32(d)
+          val seq = u32be(b, d)
           if (seq != nextSeq) seqOk = false
           nextSeq = seq + 1
           nFdat += 1
@@ -101,14 +98,13 @@ object Apng {
 
   private def chunk(out: java.io.ByteArrayOutputStream, typ: String,
       data: Array[Byte]): Unit = {
-    out.write(java.nio.ByteBuffer.allocate(4).putInt(data.length).array(), 0, 4)
+    put32be(out, data.length)
     val tb = typ.getBytes("US-ASCII")
     val crc = new java.util.zip.CRC32()
     crc.update(tb); crc.update(data)
     out.write(tb, 0, 4)
     out.write(data, 0, data.length)
-    out.write(java.nio.ByteBuffer.allocate(4)
-      .putInt(crc.getValue.toInt).array(), 0, 4)
+    put32be(out, crc.getValue)
   }
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -45,110 +47,108 @@ object Avif {
   // walk
   // ------------------------------------------------------------------
 
+  /** The box type at i, or "" past the end of b. */
+  private def cc(b: Array[Byte], i: Int): String = if (i + 4 <= b.length) fourCC(b, i) else ""
+
+  private def beN(b: Array[Byte], i: Int, n: Int): Long = { // n in {0,4,8}
+    var v = 0L; var j = 0
+    while (j < n) { v = (v << 8) | u8(b, i + j); j += 1 }
+    v
+  }
+
+  /** Resolved extent of the box at i within [i, end): (headerLen,
+    * boxEnd) — size==0 extends to end of range, size==1 carries a
+    * 64-bit largesize (ISO/IEC 14496-12 §4.2); null on malformed. */
+  private def boxExtent(b: Array[Byte], i: Long, end: Long): (Long, Long) = {
+    val size = u32be(b, i.toInt)
+    if (size == 0) (8L, end)
+    else if (size == 1) {
+      if (i + 16 > end) null
+      else {
+        val large = beN(b, i.toInt + 8, 8)
+        if (large < 16 || large > end - i) null else (16L, i + large)
+      }
+    } else if (size < 8 || size > end - i) null
+    else (8L, i + size)
+  }
+
+  /** First child box named `id` inside [start, end) → body span. */
+  private def child(b: Array[Byte], start: Long, end: Long, id: String): Option[(Long, Long)] = {
+    var i = start
+    while (i + 8 <= end) {
+      val ex = boxExtent(b, i, end)
+      if (ex == null) return None
+      if (cc(b, i.toInt + 4) == id) return Some((i + ex._1, ex._2))
+      i = ex._2
+    }
+    None
+  }
+
+  /** All child boxes inside [start, end) as (type, bodyStart, bodyEnd). */
+  private def children(b: Array[Byte], start: Long, end: Long,
+                       cap: Int = MaxProps): Vector[(String, Long, Long)] = {
+    val out = Vector.newBuilder[(String, Long, Long)]
+    var i = start
+    var n = 0
+    while (i + 8 <= end && n < cap) {
+      val ex = boxExtent(b, i, end)
+      if (ex == null) return out.result()
+      out += ((cc(b, i.toInt + 4), i + ex._1, ex._2))
+      i = ex._2
+      n += 1
+    }
+    out.result()
+  }
+
   private[graft] def avifMeta(b: Array[Byte]): Meta =
     try avifMetaImpl(b)
     catch { case scala.util.control.NonFatal(_) => null }
 
   private def avifMetaImpl(b: Array[Byte]): Meta = {
     if (b == null || b.length < 16) return null
-    def u8(i: Int) = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) |
-        u8(i + 3)) & 0xffffffffL
-    def beN(i: Int, n: Int): Long = { // n in {0,4,8}; 8-byte reads clamped
-      var v = 0L; var j = 0
-      while (j < n) { v = (v << 8) | u8(i + j); j += 1 }
-      v
-    }
-    def cc(i: Int) =
-      if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-
-    if (cc(4) != "ftyp") return null
-    val brand = cc(8)
+    if (cc(b, 4) != "ftyp") return null
+    val brand = cc(b, 8)
     if (!Brands.contains(brand)) return null
 
-    // resolved extent of the box at i within [i, end): (headerLen,
-    // boxEnd) — size==0 extends to end of range, size==1 carries a
-    // 64-bit largesize (ISO/IEC 14496-12 §4.2); null on malformed
-    def boxExtent(i: Long, end: Long): (Long, Long) = {
-      val size = be32(i.toInt)
-      if (size == 0) (8L, end)
-      else if (size == 1) {
-        if (i + 16 > end) null
-        else {
-          val large = beN(i.toInt + 8, 8)
-          if (large < 16 || large > end - i) null else (16L, i + large)
-        }
-      } else if (size < 8 || size > end - i) null
-      else (8L, i + size)
-    }
-    // first child box named `id` inside [start, end) → body span
-    def child(start: Long, end: Long, id: String): Option[(Long, Long)] = {
-      var i = start
-      while (i + 8 <= end) {
-        val ex = boxExtent(i, end)
-        if (ex == null) return None
-        if (cc(i.toInt + 4) == id) return Some((i + ex._1, ex._2))
-        i = ex._2
-      }
-      None
-    }
-    // all child boxes inside [start, end) as (type, bodyStart, bodyEnd)
-    def children(start: Long, end: Long,
-                 cap: Int = MaxProps): Vector[(String, Long, Long)] = {
-      val out = Vector.newBuilder[(String, Long, Long)]
-      var i = start
-      var n = 0
-      while (i + 8 <= end && n < cap) {
-        val ex = boxExtent(i, end)
-        if (ex == null) return out.result()
-        out += ((cc(i.toInt + 4), i + ex._1, ex._2))
-        i = ex._2
-        n += 1
-      }
-      out.result()
-    }
-
-    val meta = child(0, b.length.toLong, "meta").getOrElse(return null)
+    val meta = child(b, 0, b.length.toLong, "meta").getOrElse(return null)
     val mBody = meta._1 + 4 // meta is a FullBox: skip version/flags
 
     // pitm
-    val pitm = child(mBody, meta._2, "pitm").getOrElse(return null)
-    val pv = u8(pitm._1.toInt)
+    val pitm = child(b, mBody, meta._2, "pitm").getOrElse(return null)
+    val pv = u8(b, pitm._1.toInt)
     val primary: Long =
-      if (pv == 0) { if (pitm._2 - pitm._1 < 6) return null; be16(pitm._1.toInt + 4).toLong }
-      else { if (pitm._2 - pitm._1 < 8) return null; be32(pitm._1.toInt + 4) }
+      if (pv == 0) { if (pitm._2 - pitm._1 < 6) return null; u16be(b, pitm._1.toInt + 4).toLong }
+      else { if (pitm._2 - pitm._1 < 8) return null; u32be(b, pitm._1.toInt + 4) }
 
     // iinf / infe: item inventory
-    val iinf = child(mBody, meta._2, "iinf").getOrElse(return null)
-    val iv = u8(iinf._1.toInt)
+    val iinf = child(b, mBody, meta._2, "iinf").getOrElse(return null)
+    val iv = u8(b, iinf._1.toInt)
     val declaredItems =
-      if (iv == 0) { if (iinf._2 - iinf._1 < 6) return null; be16(iinf._1.toInt + 4).toLong }
-      else { if (iinf._2 - iinf._1 < 8) return null; be32(iinf._1.toInt + 4) }
+      if (iv == 0) { if (iinf._2 - iinf._1 < 6) return null; u16be(b, iinf._1.toInt + 4).toLong }
+      else { if (iinf._2 - iinf._1 < 8) return null; u32be(b, iinf._1.toInt + 4) }
     if (declaredItems > MaxItems) return null
     val infeStart = iinf._1 + (if (iv == 0) 6 else 8)
     var itemTypes = Map.empty[Long, String]
-    children(infeStart, iinf._2, MaxItems).foreach { case (t, s, e) =>
+    children(b, infeStart, iinf._2, MaxItems).foreach { case (t, s, e) =>
       if (t == "infe" && e - s >= 8) {
-        val v = u8(s.toInt)
+        val v = u8(b, s.toInt)
         if (v == 2 && e - s >= 12)
-          itemTypes += be16(s.toInt + 4).toLong -> cc(s.toInt + 8)
+          itemTypes += u16be(b, s.toInt + 4).toLong -> cc(b, s.toInt + 8)
         else if (v == 3 && e - s >= 14)
-          itemTypes += be32(s.toInt + 4) -> cc(s.toInt + 10)
+          itemTypes += u32be(b, s.toInt + 4) -> cc(b, s.toInt + 10)
       }
     }
     if (itemTypes.size != declaredItems) return null
 
     // iprp → ipco property pool (1-based) + ipma associations
-    val iprp = child(mBody, meta._2, "iprp").getOrElse(return null)
-    val ipco = child(iprp._1, iprp._2, "ipco").getOrElse(return null)
-    val props = children(ipco._1, ipco._2) // index i ↔ property i+1
-    val ipma = child(iprp._1, iprp._2, "ipma").getOrElse(return null)
-    val av = u8(ipma._1.toInt)
-    val aflags = be32(ipma._1.toInt) & 0xffffff
+    val iprp = child(b, mBody, meta._2, "iprp").getOrElse(return null)
+    val ipco = child(b, iprp._1, iprp._2, "ipco").getOrElse(return null)
+    val props = children(b, ipco._1, ipco._2) // index i ↔ property i+1
+    val ipma = child(b, iprp._1, iprp._2, "ipma").getOrElse(return null)
+    val av = u8(b, ipma._1.toInt)
+    val aflags = u32be(b, ipma._1.toInt) & 0xffffff
     if (ipma._2 - ipma._1 < 8) return null
-    val nAssocEntries = be32(ipma._1.toInt + 4)
+    val nAssocEntries = u32be(b, ipma._1.toInt + 4)
     if (nAssocEntries > MaxItems) return null
     var assoc = Map.empty[Long, Vector[Int]]
     var p = ipma._1 + 8
@@ -157,19 +157,19 @@ object Avif {
       val idLen = if (av < 1) 2 else 4
       if (p + idLen + 1 > ipma._2) return null
       val itemId =
-        if (av < 1) be16(p.toInt).toLong else be32(p.toInt)
+        if (av < 1) u16be(b, p.toInt).toLong else u32be(b, p.toInt)
       p += idLen
-      val cnt = u8(p.toInt); p += 1
+      val cnt = u8(b, p.toInt); p += 1
       if (cnt > MaxAssocs) return null
       val idxs = Vector.newBuilder[Int]
       var a = 0
       while (a < cnt) {
         if ((aflags & 1) != 0) {
           if (p + 2 > ipma._2) return null
-          idxs += (be16(p.toInt) & 0x7fff); p += 2
+          idxs += (u16be(b, p.toInt) & 0x7fff); p += 2
         } else {
           if (p + 1 > ipma._2) return null
-          idxs += (u8(p.toInt) & 0x7f); p += 1
+          idxs += (u8(b, p.toInt) & 0x7f); p += 1
         }
         a += 1
       }
@@ -187,10 +187,10 @@ object Avif {
 
     val ispe = firstProp(primary, "ispe").getOrElse(return null)
     if (ispe._2 - ispe._1 < 12) return null
-    val width = be32(ispe._1.toInt + 4)
-    val height = be32(ispe._1.toInt + 8)
+    val width = u32be(b, ispe._1.toInt + 4)
+    val height = u32be(b, ispe._1.toInt + 8)
     val nChannels = firstProp(primary, "pixi") match {
-      case Some((s, e2)) if e2 - s >= 5 => u8(s.toInt + 4).toLong
+      case Some((s, e2)) if e2 - s >= 5 => u8(b, s.toInt + 4).toLong
       case _ => -1L
     }
     val hasAlpha = assoc.exists { case (_, idxs) =>
@@ -199,13 +199,13 @@ object Avif {
     val hasExif = itemTypes.valuesIterator.contains("Exif")
 
     // iloc: extents of the primary item, bounds-checked for ALL items
-    val iloc = child(mBody, meta._2, "iloc").getOrElse(return null)
-    val lv = u8(iloc._1.toInt)
+    val iloc = child(b, mBody, meta._2, "iloc").getOrElse(return null)
+    val lv = u8(b, iloc._1.toInt)
     if (iloc._2 - iloc._1 < 8) return null
-    val szByte = u8(iloc._1.toInt + 4)
+    val szByte = u8(b, iloc._1.toInt + 4)
     val offSize = (szByte >> 4) & 0xf
     val lenSize = szByte & 0xf
-    val bo = u8(iloc._1.toInt + 5)
+    val bo = u8(b, iloc._1.toInt + 5)
     val baseSize = (bo >> 4) & 0xf
     val idxSize = if (lv == 1 || lv == 2) bo & 0xf else 0
     if (!Set(0, 4, 8).contains(offSize) || !Set(0, 4, 8).contains(lenSize) ||
@@ -213,8 +213,8 @@ object Avif {
       return null
     var q = iloc._1 + 6
     val itemCount: Long =
-      if (lv < 2) { if (q + 2 > iloc._2) return null; val c = be16(q.toInt).toLong; q += 2; c }
-      else { if (q + 4 > iloc._2) return null; val c = be32(q.toInt); q += 4; c }
+      if (lv < 2) { if (q + 2 > iloc._2) return null; val c = u16be(b, q.toInt).toLong; q += 2; c }
+      else { if (q + 4 > iloc._2) return null; val c = u32be(b, q.toInt); q += 4; c }
     if (itemCount > MaxItems) return null
     var primaryBytes = -1L
     var nExtents = -1L
@@ -222,22 +222,22 @@ object Avif {
     var it = 0L
     while (it < itemCount) {
       val itemId: Long =
-        if (lv < 2) { if (q + 2 > iloc._2) return null; val v = be16(q.toInt).toLong; q += 2; v }
-        else { if (q + 4 > iloc._2) return null; val v = be32(q.toInt); q += 4; v }
+        if (lv < 2) { if (q + 2 > iloc._2) return null; val v = u16be(b, q.toInt).toLong; q += 2; v }
+        else { if (q + 4 > iloc._2) return null; val v = u32be(b, q.toInt); q += 4; v }
       if (lv == 1 || lv == 2) q += 2 // construction_method
       q += 2 // data_reference_index
       if (q + baseSize > iloc._2) return null
-      val base = beN(q.toInt, baseSize); q += baseSize
+      val base = beN(b, q.toInt, baseSize); q += baseSize
       if (q + 2 > iloc._2) return null
-      val extCount = be16(q.toInt); q += 2
+      val extCount = u16be(b, q.toInt); q += 2
       if (extCount > MaxExtents) return null
       var sum = 0L
       var x = 0
       while (x < extCount) {
         if (q + idxSize + offSize + lenSize > iloc._2) return null
         q += idxSize
-        val off = beN(q.toInt, offSize); q += offSize
-        val len = beN(q.toInt, lenSize); q += lenSize
+        val off = beN(b, q.toInt, offSize); q += offSize
+        val len = beN(b, q.toInt, lenSize); q += lenSize
         if (base + off < 0 || len < 0 || base + off + len > b.length)
           boundsOk = false
         sum += len
@@ -264,63 +264,33 @@ object Avif {
 
   /** Re-walk meta→iloc for one item's first extent slice. */
   private def primaryExtent(b: Array[Byte], itemId: Long): Array[Byte] = {
-    def u8(i: Int) = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) |
-        u8(i + 3)) & 0xffffffffL
-    def beN(i: Int, n: Int): Long = {
-      var v = 0L; var j = 0
-      while (j < n) { v = (v << 8) | u8(i + j); j += 1 }
-      v
-    }
-    def cc(i: Int) =
-      if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-    def child(start: Long, end: Long, id: String): Option[(Long, Long)] = {
-      var i = start
-      while (i + 8 <= end) {
-        val size = be32(i.toInt)
-        val (hdr, boxEnd) =
-          if (size == 0) (8L, end)
-          else if (size == 1) {
-            if (i + 16 > end) return None
-            val large = beN(i.toInt + 8, 8)
-            if (large < 16 || large > end - i) return None
-            (16L, i + large)
-          } else if (size < 8 || size > end - i) return None
-          else (8L, i + size)
-        if (cc(i.toInt + 4) == id) return Some((i + hdr, boxEnd))
-        i = boxEnd
-      }
-      None
-    }
-    val meta = child(0, b.length.toLong, "meta").getOrElse(return null)
-    val iloc = child(meta._1 + 4, meta._2, "iloc").getOrElse(return null)
-    val lv = u8(iloc._1.toInt)
-    val szByte = u8(iloc._1.toInt + 4)
+    val meta = child(b, 0, b.length.toLong, "meta").getOrElse(return null)
+    val iloc = child(b, meta._1 + 4, meta._2, "iloc").getOrElse(return null)
+    val lv = u8(b, iloc._1.toInt)
+    val szByte = u8(b, iloc._1.toInt + 4)
     val offSize = (szByte >> 4) & 0xf
     val lenSize = szByte & 0xf
-    val bo = u8(iloc._1.toInt + 5)
+    val bo = u8(b, iloc._1.toInt + 5)
     val baseSize = (bo >> 4) & 0xf
     val idxSize = if (lv == 1 || lv == 2) bo & 0xf else 0
     var q = iloc._1 + 6
     val itemCount: Long =
-      if (lv < 2) { val c = be16(q.toInt).toLong; q += 2; c }
-      else { val c = be32(q.toInt); q += 4; c }
+      if (lv < 2) { val c = u16be(b, q.toInt).toLong; q += 2; c }
+      else { val c = u32be(b, q.toInt); q += 4; c }
     var it = 0L
     while (it < itemCount) {
       val id: Long =
-        if (lv < 2) { val v = be16(q.toInt).toLong; q += 2; v }
-        else { val v = be32(q.toInt); q += 4; v }
+        if (lv < 2) { val v = u16be(b, q.toInt).toLong; q += 2; v }
+        else { val v = u32be(b, q.toInt); q += 4; v }
       if (lv == 1 || lv == 2) q += 2
       q += 2
-      val base = beN(q.toInt, baseSize); q += baseSize
-      val extCount = be16(q.toInt); q += 2
+      val base = beN(b, q.toInt, baseSize); q += baseSize
+      val extCount = u16be(b, q.toInt); q += 2
       var x = 0
       while (x < extCount) {
         q += idxSize
-        val off = beN(q.toInt, offSize); q += offSize
-        val len = beN(q.toInt, lenSize); q += lenSize
+        val off = beN(b, q.toInt, offSize); q += offSize
+        val len = beN(b, q.toInt, lenSize); q += lenSize
         if (id == itemId && x == 0) {
           if (base + off + len > b.length) return null
           return java.util.Arrays.copyOfRange(
@@ -337,16 +307,9 @@ object Avif {
   // fixture encoder
   // ------------------------------------------------------------------
 
-  private def be16b(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write((v >> 8) & 0xff); o.write(v & 0xff)
-  }
-  private def be32b(o: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    o.write(((v >> 24) & 0xff).toInt); o.write(((v >> 16) & 0xff).toInt)
-    o.write(((v >> 8) & 0xff).toInt); o.write((v & 0xff).toInt)
-  }
   private def box(tpe: String, body: Array[Byte]): Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream(body.length + 8)
-    be32b(o, body.length + 8L)
+    put32be(o, body.length + 8L)
     o.write(tpe.getBytes("US-ASCII"))
     o.write(body)
     o.toByteArray
@@ -379,14 +342,14 @@ object Avif {
 
     val ftyp = {
       val o = new java.io.ByteArrayOutputStream()
-      o.write(brand.getBytes("US-ASCII")); be32b(o, 0L)
+      o.write(brand.getBytes("US-ASCII")); put32be(o, 0L)
       o.write("mif1".getBytes("US-ASCII")) // compatible brand
       box("ftyp", o.toByteArray)
     }
 
     def infe(id: Int, tpe: String): Array[Byte] = {
       val o = new java.io.ByteArrayOutputStream()
-      be16b(o, id); be16b(o, 0)
+      put16be(o, id); put16be(o, 0)
       o.write(tpe.getBytes("US-ASCII")); o.write(0) // empty item_name
       fullbox("infe", 2, 0, o.toByteArray)
     }
@@ -395,20 +358,20 @@ object Avif {
       (if (exif) Vector((if (alpha) 3 else 2, "Exif")) else Vector.empty)
     val iinf = {
       val o = new java.io.ByteArrayOutputStream()
-      be16b(o, itemDefs.size)
+      put16be(o, itemDefs.size)
       itemDefs.foreach { case (id, t) => o.write(infe(id, t)) }
       fullbox("iinf", 0, 0, o.toByteArray)
     }
 
     val pitm = {
       val o = new java.io.ByteArrayOutputStream()
-      be16b(o, 1)
+      put16be(o, 1)
       fullbox("pitm", 0, 0, o.toByteArray)
     }
 
     val ispe = {
       val o = new java.io.ByteArrayOutputStream()
-      be32b(o, w); be32b(o, h)
+      put32be(o, w); put32be(o, h)
       fullbox("ispe", 0, 0, o.toByteArray)
     }
     val pixi = {
@@ -430,9 +393,9 @@ object Avif {
     }
     val ipma = {
       val o = new java.io.ByteArrayOutputStream()
-      be32b(o, if (alpha) 2L else 1L)
-      be16b(o, 1); o.write(2); o.write(1); o.write(2) // item 1 → ispe, pixi
-      if (alpha) { be16b(o, 2); o.write(2); o.write(1); o.write(3) } // → ispe, auxC
+      put32be(o, if (alpha) 2L else 1L)
+      put16be(o, 1); o.write(2); o.write(1); o.write(2) // item 1 → ispe, pixi
+      if (alpha) { put16be(o, 2); o.write(2); o.write(1); o.write(3) } // → ispe, auxC
       fullbox("ipma", 0, 0, o.toByteArray)
     }
     val iprp = {
@@ -445,18 +408,18 @@ object Avif {
     def ilocBytes(mdatBody: Long): Array[Byte] = {
       val o = new java.io.ByteArrayOutputStream()
       o.write(0x44); o.write(0x00) // offset_size 4, length_size 4, base 0
-      be16b(o, itemDefs.size)
+      put16be(o, itemDefs.size)
       var cursor = mdatBody
       itemDefs.foreach { case (id, tpe) =>
-        be16b(o, id); be16b(o, 0) // item_ID, data_reference_index
+        put16be(o, id); put16be(o, 0) // item_ID, data_reference_index
         val (cnt, each) = tpe match {
           case "Exif" => (1, exifLen)
           case _ if id == 2 && alpha => (1, alphaLen)
           case _ => (nExt, extLen)
         }
-        be16b(o, cnt)
+        put16be(o, cnt)
         for (_ <- 0 until cnt) {
-          be32b(o, cursor); be32b(o, each)
+          put32be(o, cursor); put32be(o, each)
           cursor += each
         }
       }

@@ -35,8 +35,6 @@ object DocText {
   private[graft] final case class Extracted(
       kind: String, srcName: String, nParts: Long, text: String)
 
-  private val MaxEntries = 1 << 16
-  private val MaxNameLen = 4096
   private val MaxEntryInflated = 8L << 20 // per text-bearing member
   private val MaxTotalInflated = 64L << 20 // per document
   private val MaxParts = 512 // spine items / paragraphs budget
@@ -45,72 +43,14 @@ object DocText {
   // ZIP member access (central directory + bounded raw-deflate inflate)
   // ------------------------------------------------------------------
 
-  private final case class Ent(name: String, method: Int, crc: Long,
-                               comp: Long, uncomp: Long, lho: Long)
-
-  /** Central-directory walk (same APPNOTE layout + budgets as
-    * [[Zip.zipMeta]]); returns null on any malformed structure. */
-  private def entries(bytes: Array[Byte]): Vector[Ent] = {
-    if (bytes == null || bytes.length < 22) return null
-    val n = bytes.length
-    def u8(i: Int) = bytes(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    var eocd = -1
-    var i = n - 22
-    val stop = math.max(0, n - 22 - 65535)
-    while (eocd < 0 && i >= stop) {
-      if (u8(i) == 0x50 && u8(i + 1) == 0x4b && u8(i + 2) == 0x05 &&
-          u8(i + 3) == 0x06 && i + 22 + u16(i + 20) == n) eocd = i
-      i -= 1
-    }
-    if (eocd < 0) return null
-    val total = u16(eocd + 10)
-    if (u16(eocd + 8) != total || total > MaxEntries) return null
-    val cdSize = u32(eocd + 12)
-    val cdOff = u32(eocd + 16)
-    if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > eocd) return null
-    var p = cdOff.toInt
-    val cdEnd = (cdOff + cdSize).toInt
-    val out = Vector.newBuilder[Ent]
-    var k = 0
-    while (k < total) {
-      if (p + 46 > cdEnd || u32(p) != 0x02014b50L) return null
-      val method = u16(p + 10)
-      val crc = u32(p + 16)
-      val comp = u32(p + 20)
-      val uncomp = u32(p + 24)
-      val nameLen = u16(p + 28)
-      val extraLen = u16(p + 30)
-      val cmtLen = u16(p + 32)
-      val lho = u32(p + 42)
-      if (nameLen > MaxNameLen || p + 46 + nameLen + extraLen + cmtLen > cdEnd)
-        return null
-      if (comp < 0 || uncomp < 0 || lho < 0) return null
-      out += Ent(new String(bytes, p + 46, nameLen, "UTF-8"),
-        method, crc, comp, uncomp, lho)
-      p += 46 + nameLen + extraLen + cmtLen
-      k += 1
-    }
-    out.result()
-  }
-
   /** Member bytes: STORED copy or bounded raw-deflate inflate, CRC-32
     * verified either way. Null on budget breach, truncation, a stream
     * producing more than its declared size (the classic bomb lie), or
     * CRC mismatch. */
-  private def entryBytes(bytes: Array[Byte], e: Ent): Array[Byte] = {
-    val n = bytes.length
+  private def entryBytes(bytes: Array[Byte], e: Zip.Entry): Array[Byte] = {
     if (e.uncomp > MaxEntryInflated) return null
-    def u16(i: Int) = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-    def u32(i: Int): Long =
-      (bytes(i) & 0xff).toLong | ((bytes(i + 1) & 0xff).toLong << 8) |
-        ((bytes(i + 2) & 0xff).toLong << 16) | ((bytes(i + 3) & 0xff).toLong << 24)
-    if (e.lho + 30 > n || u32(e.lho.toInt) != 0x04034b50L) return null
-    val dataAt = e.lho + 30 + u16(e.lho.toInt + 26) + u16(e.lho.toInt + 28)
-    if (dataAt + e.comp > n) return null
+    val dataAt = Zip.dataAt(bytes, e)
+    if (dataAt < 0) return null
     val data: Array[Byte] = e.method match {
       case 0 =>
         if (e.comp != e.uncomp) return null
@@ -257,7 +197,7 @@ object DocText {
     catch { case scala.util.control.NonFatal(_) => null }
 
   private def extractImpl(bytes: Array[Byte]): Extracted = {
-    val ents = entries(bytes)
+    val ents = Zip.centralDirectory(bytes)
     if (ents == null || ents.isEmpty) return null
     val byName = ents.iterator.map(e => e.name -> e).toMap
     var totalInflated = 0L
@@ -353,64 +293,6 @@ object DocText {
   // fixture encoders (deflated members, real CRCs)
   // ------------------------------------------------------------------
 
-  private def deflateRaw(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(
-      java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    try {
-      d.setInput(data); d.finish()
-      val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
-      val buf = new Array[Byte](4096)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
-  /** Minimal zip builder (method 0 stored / 8 deflated) shared by the
-    * two fixture encoders; same record layout as [[Zip.encodeZip]]. */
-  private final class Builder {
-    private val out = new java.io.ByteArrayOutputStream()
-    private val cd = new java.io.ByteArrayOutputStream()
-    private var n = 0
-    private def u16(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      b.write(v & 0xff); b.write((v >> 8) & 0xff)
-    }
-    private def u32(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      b.write((v & 0xff).toInt); b.write(((v >> 8) & 0xff).toInt)
-      b.write(((v >> 16) & 0xff).toInt); b.write(((v >> 24) & 0xff).toInt)
-    }
-    def add(name: String, data: Array[Byte], deflate: Boolean): Unit = {
-      val lho = out.size().toLong
-      val nb = name.getBytes("UTF-8")
-      val c = new java.util.zip.CRC32()
-      c.update(data)
-      val payload = if (deflate) deflateRaw(data) else data
-      val method = if (deflate) 8 else 0
-      u32(out, 0x04034b50L); u16(out, 20); u16(out, 0); u16(out, method)
-      u16(out, 0); u16(out, 0)
-      u32(out, c.getValue); u32(out, payload.length.toLong)
-      u32(out, data.length.toLong)
-      u16(out, nb.length); u16(out, 0)
-      out.write(nb); out.write(payload)
-      u32(cd, 0x02014b50L); u16(cd, 20); u16(cd, 20); u16(cd, 0)
-      u16(cd, method); u16(cd, 0); u16(cd, 0)
-      u32(cd, c.getValue); u32(cd, payload.length.toLong)
-      u32(cd, data.length.toLong)
-      u16(cd, nb.length); u16(cd, 0); u16(cd, 0); u16(cd, 0); u16(cd, 0)
-      u32(cd, 0L); u32(cd, lho)
-      cd.write(nb)
-      n += 1
-    }
-    def result(): Array[Byte] = {
-      val cdOff = out.size().toLong
-      val cdBytes = cd.toByteArray
-      out.write(cdBytes)
-      u32(out, 0x06054b50L); u16(out, 0); u16(out, 0)
-      u16(out, n); u16(out, n)
-      u32(out, cdBytes.length.toLong); u32(out, cdOff); u16(out, 0)
-      out.toByteArray
-    }
-  }
-
   /** Analytic docx: k%7+1 paragraphs, two runs each (the second with
     * `xml:space="preserve"` and an `&amp;` entity), plus a trailing
     * `<w:sectPr/>` segment with no runs (must not count) and a
@@ -418,7 +300,7 @@ object DocText {
   private[graft] def encodeDocx(docId: Long, lang: String): Array[Byte] = {
     val k = ((docId % 251) + 251) % 251
     val np = (k % 7 + 1).toInt
-    val b = new Builder
+    val b = new Zip.Writer
     b.add("[Content_Types].xml",
       ("<Types><Override PartName=\"/word/document.xml\" " +
         "ContentType=\"application/vnd.openxmlformats-officedocument" +
@@ -448,7 +330,7 @@ object DocText {
     val k = ((docId % 251) + 251) % 251
     val nc = (k % 4 + 1).toInt
     val order = if (k % 3 == 0) (nc - 1) to 0 by -1 else 0 until nc
-    val b = new Builder
+    val b = new Zip.Writer
     b.add("mimetype", "application/epub+zip".getBytes("UTF-8"),
       deflate = false)
     b.add("META-INF/container.xml",
@@ -482,7 +364,7 @@ object DocText {
   private[graft] def encodeXlsx(docId: Long, lang: String): Array[Byte] = {
     val k = ((docId % 251) + 251) % 251
     val np = (k % 8 + 1).toInt
-    val b = new Builder
+    val b = new Zip.Writer
     b.add("[Content_Types].xml",
       ("<Types><Override PartName=\"/xl/workbook.xml\" " +
         "ContentType=\"application/vnd.openxmlformats-officedocument" +
@@ -512,7 +394,7 @@ object DocText {
   private[graft] def encodePptx(docId: Long, lang: String): Array[Byte] = {
     val k = ((docId % 251) + 251) % 251
     val ns = (k % 12 + 1).toInt
-    val b = new Builder
+    val b = new Zip.Writer
     b.add("[Content_Types].xml",
       ("<Types><Override PartName=\"/ppt/presentation.xml\" " +
         "ContentType=\"application/vnd.openxmlformats-officedocument" +

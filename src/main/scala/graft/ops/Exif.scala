@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -65,8 +67,7 @@ object Exif {
 
     private def exifMetaImpl(bytes: Array[Byte]): Meta = {
     if (bytes == null || bytes.length < 4) return null
-    def u8(i: Int) = bytes(i) & 0xff
-    if (u8(0) != 0xff || u8(1) != 0xd8) return null
+    if (u8(bytes, 0) != 0xff || u8(bytes, 1) != 0xd8) return null
     // marker scan for APP1 "Exif\0\0" (stops at SOS — EXIF precedes
     // entropy data by spec)
     var pos = 2
@@ -74,10 +75,10 @@ object Exif {
     var tiffEnd = -1
     while (tiffAt < 0) {
       if (pos + 4 > bytes.length) return null
-      if (u8(pos) != 0xff) return null
-      val m = u8(pos + 1)
+      if (u8(bytes, pos) != 0xff) return null
+      val m = u8(bytes, pos + 1)
       if (m == 0xda || m == 0xd9) return null // image w/o EXIF
-      val len = (u8(pos + 2) << 8) | u8(pos + 3)
+      val len = u16be(bytes, pos + 2)
       if (len < 2 || pos + 2 + len > bytes.length) return null
       if (m == 0xe1 && len >= 8 &&
           bytes(pos + 4) == 'E' && bytes(pos + 5) == 'x' &&
@@ -93,27 +94,17 @@ object Exif {
 
   /** Parse a TIFF blob confined to [at, end). */
   private def parseTiff(bytes: Array[Byte], at: Int, end: Int): Meta = {
-    def u8(i: Int) = bytes(i) & 0xff
     val n = end - at
     if (n < 8) return null
     val le =
-      if (u8(at) == 'I' && u8(at + 1) == 'I') true
-      else if (u8(at) == 'M' && u8(at + 1) == 'M') false
+      if (bytes(at) == 'I' && bytes(at + 1) == 'I') true
+      else if (bytes(at) == 'M' && bytes(at + 1) == 'M') false
       else return null
-    def u16(off: Int): Int = {
-      if (off < 0 || off + 2 > n) return -1
-      if (le) u8(at + off) | (u8(at + off + 1) << 8)
-      else (u8(at + off) << 8) | u8(at + off + 1)
-    }
-    def u32(off: Int): Long = {
-      if (off < 0 || off + 4 > n) return -1L
-      if (le)
-        u8(at + off).toLong | (u8(at + off + 1).toLong << 8) |
-          (u8(at + off + 2).toLong << 16) | (u8(at + off + 3).toLong << 24)
-      else
-        (u8(at + off).toLong << 24) | (u8(at + off + 1).toLong << 16) |
-          (u8(at + off + 2).toLong << 8) | u8(at + off + 3).toLong
-    }
+    // offsets are TIFF-relative and untrusted: -1 past the blob's end
+    def u16(off: Int): Int =
+      if (off < 0 || off + 2 > n) -1 else if (le) u16le(bytes, at + off) else u16be(bytes, at + off)
+    def u32(off: Int): Long =
+      if (off < 0 || off + 4 > n) -1L else if (le) u32le(bytes, at + off) else u32be(bytes, at + off)
     if (u16(2) != 42) return null
     val ifd0 = u32(4)
     if (ifd0 < 8 || ifd0 > n - 2) return null
@@ -227,7 +218,7 @@ object Exif {
     val seg = new java.io.ByteArrayOutputStream()
     seg.write(0xff); seg.write(0xe1)
     val len = app1.length + 2
-    seg.write((len >> 8) & 0xff); seg.write(len & 0xff)
+    put16be(seg, len)
     seg.write(app1)
     val img = Multimodal.encodeJpegAc(k, 1, 1)
     img.take(2) ++ seg.toByteArray ++ img.drop(2)
@@ -235,12 +226,9 @@ object Exif {
 
   private def buildTiff(docId: Long, k: Long, le: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit =
-      if (le) { w8(v); w8(v >> 8) } else { w8(v >> 8); w8(v) }
-    def w32(v: Long): Unit =
-      if (le) { w8(v.toInt); w8((v >> 8).toInt); w8((v >> 16).toInt); w8((v >> 24).toInt) }
-      else { w8((v >> 24).toInt); w8((v >> 16).toInt); w8((v >> 8).toInt); w8(v.toInt) }
+    def w16(v: Int): Unit = if (le) put16le(out, v) else put16be(out, v)
+    def w32(v: Long, o: java.io.ByteArrayOutputStream = out): Unit =
+      if (le) put32le(o, v) else put32be(o, v)
 
     val make = s"cam${k % 7}"
     val model = s"model ${docId % 5}"
@@ -282,19 +270,13 @@ object Exif {
       val off = dataAt
       // (deg-as-ppm/1e6, 0/1, 0/1) — exactly the walk's pinned formula
       val buf = new java.io.ByteArrayOutputStream()
-      def r32(v: Long): Unit = {
-        if (le) { buf.write(v.toInt & 0xff); buf.write(((v >> 8) & 0xff).toInt)
-          buf.write(((v >> 16) & 0xff).toInt); buf.write(((v >> 24) & 0xff).toInt) }
-        else { buf.write(((v >> 24) & 0xff).toInt); buf.write(((v >> 16) & 0xff).toInt)
-          buf.write(((v >> 8) & 0xff).toInt); buf.write(v.toInt & 0xff) }
-      }
-      r32(ppm); r32(1000000L); r32(0L); r32(1L); r32(0L); r32(1L)
+      Seq(ppm, 1000000L, 0L, 1L, 0L, 1L).foreach(w32(_, buf))
       data.write(buf.toByteArray); dataAt += 24
       off
     }
 
     // header
-    if (le) { w8('I'); w8('I') } else { w8('M'); w8('M') }
+    if (le) { out.write('I'); out.write('I') } else { out.write('M'); out.write('M') }
     w16(42); w32(ifd0At)
 
     def entry(tag: Int, typ: Int, count: Long, value: Long): Unit = {

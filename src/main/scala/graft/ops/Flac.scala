@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types._
@@ -158,15 +160,13 @@ object Flac {
       bps: Int, totalSamples: Long)
 
   private def parseStreamInfo(b: Array[Byte], off: Int): StreamInfo = {
-    @inline def u8(i: Int) = b(off + i) & 0xff
-    val minBlock = (u8(0) << 8) | u8(1)
-    val maxBlock = (u8(2) << 8) | u8(3)
+    val minBlock = u16be(b, off)
+    val maxBlock = u16be(b, off + 2)
     // 24-bit min/max frame size skipped (informational)
-    val rate = (u8(10) << 12) | (u8(11) << 4) | (u8(12) >> 4)
-    val channels = ((u8(12) >> 1) & 0x07) + 1
-    val bps = (((u8(12) & 1) << 4) | (u8(13) >> 4)) + 1
-    val total = ((u8(13) & 0x0f).toLong << 32) | (u8(14).toLong << 24) |
-      (u8(15).toLong << 16) | (u8(16).toLong << 8) | u8(17).toLong
+    val rate = u24be(b, off + 10) >> 4
+    val channels = ((u8(b, off + 12) >> 1) & 0x07) + 1
+    val bps = ((u16be(b, off + 12) >> 4) & 0x1f) + 1
+    val total = ((u8(b, off + 13) & 0x0f).toLong << 32) | u32be(b, off + 14)
     StreamInfo(minBlock, maxBlock, rate, channels, bps, total)
   }
 
@@ -323,8 +323,7 @@ object Flac {
       val hdr = b(pos) & 0xff
       last = (hdr & 0x80) != 0
       val typ = hdr & 0x7f
-      val len = ((b(pos + 1) & 0xff) << 16) | ((b(pos + 2) & 0xff) << 8) |
-        (b(pos + 3) & 0xff)
+      val len = u24be(b, pos + 1)
       if (typ == 127) throw Bad // forbidden block type
       if (pos + 4L + len > b.length) throw Bad // declared length is a lie
       if (firstBlock) {
@@ -762,24 +761,15 @@ object Flac {
     // PADDING block to exercise the metadata walk)
     val lastFlag = if (regime == 3) 0x00 else 0x80
     out.write(lastFlag); out.write(0); out.write(0); out.write(34)
-    val si = new Array[Byte](34)
-    def be16(off: Int, v: Int): Unit = {
-      si(off) = (v >> 8).toByte; si(off + 1) = v.toByte
-    }
     val lastBlock = if (n % block == 0) block else n % block
-    be16(0, math.min(block, lastBlock)); be16(2, block)
-    // min/max frame size 0 = unknown (bytes 4..9 stay 0)
+    put16be(out, math.min(block, lastBlock)); put16be(out, block)
+    out.write(new Array[Byte](6)) // min/max frame size 0 = unknown
     val rate = 8000
-    si(10) = (rate >> 12).toByte
-    si(11) = ((rate >> 4) & 0xff).toByte
-    si(12) = (((rate & 0xf) << 4) | ((nch - 1) << 1) | ((bps - 1) >> 4)).toByte
-    si(13) = ((((bps - 1) & 0xf) << 4) | ((n.toLong >> 32) & 0xf)).toInt.toByte
-    si(14) = ((n >> 24) & 0xff).toByte
-    si(15) = ((n >> 16) & 0xff).toByte
-    si(16) = ((n >> 8) & 0xff).toByte
-    si(17) = (n & 0xff).toByte
-    // MD5 zeros = unknown
-    out.write(si)
+    put16be(out, rate >> 4)
+    out.write(((rate & 0xf) << 4) | ((nch - 1) << 1) | ((bps - 1) >> 4))
+    out.write(((((bps - 1) & 0xf) << 4) | ((n.toLong >> 32) & 0xf)).toInt)
+    put32be(out, n)
+    out.write(new Array[Byte](16)) // MD5 zeros = unknown
     if (regime == 3) { // PADDING block, marked last
       out.write(0x81); out.write(0); out.write(0); out.write(4)
       out.write(Array[Byte](0, 0, 0, 0))
@@ -878,16 +868,12 @@ object Flac {
     out.write(plain(4) & 0x7f) // STREAMINFO, no longer last
     out.write(plain, 5, 3 + 34)
     val vc = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      vc.write(v & 0xff); vc.write((v >> 8) & 0xff)
-      vc.write((v >> 16) & 0xff); vc.write((v >> 24) & 0xff)
-    }
     val vb = vendor.getBytes("UTF-8")
-    le32(vb.length); vc.write(vb)
-    le32(tags.length)
+    put32le(vc, vb.length); vc.write(vb)
+    put32le(vc, tags.length)
     tags.foreach { case (k, v) =>
       val c = s"$k=$v".getBytes("UTF-8")
-      le32(c.length); vc.write(c)
+      put32le(vc, c.length); vc.write(c)
     }
     val payload = vc.toByteArray
     out.write(0x80 | 4) // VORBIS_COMMENT, last
@@ -916,8 +902,7 @@ object Flac {
         val hdr = b(pos) & 0xff
         last = (hdr & 0x80) != 0
         val typ = hdr & 0x7f
-        val len = ((b(pos + 1) & 0xff) << 16) | ((b(pos + 2) & 0xff) << 8) |
-          (b(pos + 3) & 0xff)
+        val len = u24be(b, pos + 1)
         if (typ == 127) return null
         if (first && typ != 0) return null
         first = false
@@ -925,14 +910,7 @@ object Flac {
         if (typ == 4) {
           val off = pos + 4
           var p = off
-          def le32(): Int =
-            if (p + 4 > off + len) -1
-            else {
-              val v = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-                ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-              p += 4
-              v
-            }
+          def le32(): Int = if (p + 4 > off + len) -1 else { p += 4; i32le(b, p - 4) }
           val vl = le32()
           if (vl < 0 || p + vl.toLong > off + len) return null
           val vendor = new String(b, p, vl, "UTF-8")

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -42,13 +44,8 @@ object Ico {
 
     private def icoStatsImpl(bytes: Array[Byte]): Stats = {
     if (bytes == null || bytes.length < 6) return null
-    def u8(i: Int) = bytes(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    if (u16(0) != 0 || u16(2) != 1) return null
-    val n = u16(4)
+    if (u16le(bytes, 0) != 0 || u16le(bytes, 2) != 1) return null
+    val n = u16le(bytes, 4)
     if (n < 1 || n > MaxImages || 6 + 16 * n > bytes.length) return null
 
     var sumR = 0L; var sumG = 0L; var sumB = 0L; var nTrans = 0L
@@ -57,16 +54,16 @@ object Ico {
     var i = 0
     while (i < n) {
       val e = 6 + 16 * i
-      val dw = if (u8(e) == 0) 256 else u8(e)
-      val dh = if (u8(e + 1) == 0) 256 else u8(e + 1)
-      val size = u32(e + 8)
-      val off = u32(e + 12)
+      val dw = if (u8(bytes, e) == 0) 256 else u8(bytes, e)
+      val dh = if (u8(bytes, e + 1) == 0) 256 else u8(bytes, e + 1)
+      val size = u32le(bytes, e + 8)
+      val off = u32le(bytes, e + 12)
       if (off < 0 || size < 8 || off + size > bytes.length) return null
       totalPixels += dw.toLong * dh
       if (totalPixels > Multimodal.MaxInflateBytes / 4) return null
       val p = off.toInt
-      val isPng = size >= 8 && u8(p) == 0x89 && u8(p + 1) == 'P' &&
-        u8(p + 2) == 'N' && u8(p + 3) == 'G'
+      val isPng = size >= 8 && u8(bytes, p) == 0x89 && u8(bytes, p + 1) == 'P' &&
+        u8(bytes, p + 2) == 'N' && u8(bytes, p + 3) == 'G'
       if (isPng) {
         val payload = java.util.Arrays.copyOfRange(bytes, p, (off + size).toInt)
         val (pw, ph, sr, sg, sb, _) = Multimodal.decodePngStats(payload)
@@ -74,11 +71,11 @@ object Ico {
         sumR += sr; sumG += sg; sumB += sb
       } else {
         // ICO-DIB: BITMAPINFOHEADER, biHeight doubled (XOR + AND mask)
-        if (size < 40 || u32(p) != 40L) return null
-        val bw = u32(p + 4)
-        val bh2 = u32(p + 8)
-        val planes = u16(p + 12); val bpp = u16(p + 14)
-        val compression = u32(p + 16)
+        if (size < 40 || u32le(bytes, p) != 40L) return null
+        val bw = u32le(bytes, p + 4)
+        val bh2 = u32le(bytes, p + 8)
+        val planes = u16le(bytes, p + 12); val bpp = u16le(bytes, p + 14)
+        val compression = u32le(bytes, p + 16)
         if (bw != dw || bh2 != 2L * dh || planes != 1 ||
             bpp != 24 || compression != 0L) return null
         val w = dw; val h = dh
@@ -96,12 +93,12 @@ object Ico {
           val andRow = andAt + andStride * (h - 1 - y)
           var x = 0
           while (x < w) {
-            val maskBit = (u8(andRow + (x >> 3)) >> (7 - (x & 7))) & 1
+            val maskBit = (u8(bytes, andRow + (x >> 3)) >> (7 - (x & 7))) & 1
             if (maskBit == 1) nTrans += 1
             else {
-              sumB += u8(xorRow + 3 * x)
-              sumG += u8(xorRow + 3 * x + 1)
-              sumR += u8(xorRow + 3 * x + 2)
+              sumB += u8(bytes, xorRow + 3 * x)
+              sumG += u8(bytes, xorRow + 3 * x + 1)
+              sumR += u8(bytes, xorRow + 3 * x + 2)
             }
             x += 1
           }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -44,8 +46,6 @@ object JpegProgressive {
     try {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
         return bad
-      def u8(i: Int) = bytes(i) & 0xff
-      def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
       var pos = 2
       val qt = Array.ofDim[Int](4, 64)
       val qtSeen = new Array[Boolean](4)
@@ -75,9 +75,9 @@ object JpegProgressive {
         while (bitCnt <= 56 && !feedDone) {
           if (p >= bytes.length) feedDone = true
           else {
-            val v = u8(p)
+            val v = u8(bytes, p)
             if (v == 0xff) {
-              if (p + 1 < bytes.length && u8(p + 1) == 0x00) {
+              if (p + 1 < bytes.length && u8(bytes, p + 1) == 0x00) {
                 bitBuf = (bitBuf << 8) | 0xff; bitCnt += 8; p += 2
               } else feedDone = true
             } else { bitBuf = (bitBuf << 8) | v; bitCnt += 8; p += 1 }
@@ -234,8 +234,8 @@ object JpegProgressive {
           if (restartInterval > 0 && unitIdx > 0 && unitIdx % restartInterval == 0) {
             bitCnt -= bitCnt % 8
             fail = false; feedDone = false
-            if (p + 1 < bytes.length && u8(p) == 0xff &&
-                u8(p + 1) >= 0xd0 && u8(p + 1) <= 0xd7) {
+            if (p + 1 < bytes.length && u8(bytes, p) == 0xff &&
+                u8(bytes, p + 1) >= 0xd0 && u8(bytes, p + 1) <= 0xd7) {
               p += 2
               java.util.Arrays.fill(pred, 0)
               eobrun = 0
@@ -303,40 +303,40 @@ object JpegProgressive {
       val scanDc = new Array[Int](4); val scanAc = new Array[Int](4)
       while (!sawEoi) {
         if (pos + 2 > bytes.length) return bad
-        if (u8(pos) != 0xff) return bad
-        val m = u8(pos + 1)
+        if (u8(bytes, pos) != 0xff) return bad
+        val m = u8(bytes, pos + 1)
         if (m == 0xd9) { sawEoi = true }
         else if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { pos += 2 }
         else {
           if (pos + 4 > bytes.length) return bad
-          val len = u16(pos + 2)
+          val len = u16be(bytes, pos + 2)
           if (len < 2 || pos + 2 + len > bytes.length) return bad
           val body = pos + 4
           m match {
             case 0xdb =>
               var q = body
               while (q < pos + 2 + len) {
-                val pq = u8(q) >> 4; val tq = u8(q) & 15
+                val pq = u8(bytes, q) >> 4; val tq = u8(bytes, q) & 15
                 if (pq != 0 || tq > 3 || q + 65 > pos + 2 + len) return bad
                 var i = 0
-                while (i < 64) { qt(tq)(i) = u8(q + 1 + i); i += 1 }
+                while (i < 64) { qt(tq)(i) = u8(bytes, q + 1 + i); i += 1 }
                 qtSeen(tq) = true
                 q += 65
               }
               pos += 2 + len
             case 0xc2 =>
               if (coefs != null) return bad // one frame only
-              if (len < 8 || u8(body) != 8) return bad
-              h = u16(body + 1); w = u16(body + 3)
-              nComp = u8(body + 5)
+              if (len < 8 || u8(bytes, body) != 8) return bad
+              h = u16be(bytes, body + 1); w = u16be(bytes, body + 3)
+              nComp = u8(bytes, body + 5)
               if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3)) return bad
               if (w.toLong * h > MaxInflateBytes / 4) return bad
               var c = 0
               while (c < nComp) {
                 val o = body + 6 + 3 * c
-                compId(c) = u8(o)
-                compSampH(c) = u8(o + 1) >> 4; compSampV(c) = u8(o + 1) & 15
-                compQ(c) = u8(o + 2)
+                compId(c) = u8(bytes, o)
+                compSampH(c) = u8(bytes, o + 1) >> 4; compSampV(c) = u8(bytes, o + 1) & 15
+                compQ(c) = u8(bytes, o + 2)
                 if (compSampH(c) < 1 || compSampH(c) > 2 ||
                     compSampV(c) < 1 || compSampV(c) > 2 || compQ(c) > 3) return bad
                 c += 1
@@ -361,13 +361,13 @@ object JpegProgressive {
             case 0xc4 =>
               var q = body
               while (q < pos + 2 + len) {
-                val tc = u8(q) >> 4; val th = u8(q) & 15
+                val tc = u8(bytes, q) >> 4; val th = u8(bytes, q) & 15
                 if (tc > 1 || th > 3 || q + 17 > pos + 2 + len) return bad
                 var total = 0
                 var l = 1
-                while (l <= 16) { huffCount(tc)(th)(l) = u8(q + l); total += u8(q + l); l += 1 }
+                while (l <= 16) { huffCount(tc)(th)(l) = u8(bytes, q + l); total += u8(bytes, q + l); l += 1 }
                 if (total > 256 || q + 17 + total > pos + 2 + len) return bad
-                huffVals(tc)(th) = Array.tabulate(total)(i => u8(q + 17 + i))
+                huffVals(tc)(th) = Array.tabulate(total)(i => u8(bytes, q + 17 + i))
                 var code = 0; var vi = 0
                 l = 1
                 while (l <= 16) {
@@ -382,27 +382,27 @@ object JpegProgressive {
               pos += 2 + len
             case 0xdd =>
               if (len != 4) return bad
-              restartInterval = u16(body)
+              restartInterval = u16be(bytes, body)
               pos += 2 + len
             case 0xda =>
               if (coefs == null) return bad // SOS before SOF2
-              val ns = u8(body)
+              val ns = u8(bytes, body)
               if (ns < 1 || ns > 4 || len < 6 + 2 * ns) return bad
               val scanComps = new Array[Int](ns)
               var c = 0
               while (c < ns) {
-                val id = u8(body + 1 + 2 * c)
+                val id = u8(bytes, body + 1 + 2 * c)
                 val ci = compId.indexOf(id)
                 if (ci < 0 || ci >= nComp) return bad
                 scanComps(c) = ci
-                scanDc(ci) = u8(body + 2 + 2 * c) >> 4
-                scanAc(ci) = u8(body + 2 + 2 * c) & 15
+                scanDc(ci) = u8(bytes, body + 2 + 2 * c) >> 4
+                scanAc(ci) = u8(bytes, body + 2 + 2 * c) & 15
                 c += 1
               }
-              val ss0 = u8(body + 1 + 2 * ns)
-              val se0 = u8(body + 2 + 2 * ns)
-              val ah0 = u8(body + 3 + 2 * ns) >> 4
-              val al0 = u8(body + 3 + 2 * ns) & 15
+              val ss0 = u8(bytes, body + 1 + 2 * ns)
+              val se0 = u8(bytes, body + 2 + 2 * ns)
+              val ah0 = u8(bytes, body + 3 + 2 * ns) >> 4
+              val al0 = u8(bytes, body + 3 + 2 * ns) & 15
               // G.1: DC scans are Ss=Se=0 (interleave allowed); AC scans
               // are single-component with 1 ≤ Ss ≤ Se ≤ 63; successive
               // approximation refines one bit at a time
@@ -413,7 +413,7 @@ object JpegProgressive {
                   pos + 2 + len)) return bad
               pos = p // entropy reader stopped at the next marker
               // tolerate a byte-aligned stop mid-stuffing: resync to FF
-              while (pos < bytes.length && u8(pos) != 0xff) pos += 1
+              while (pos < bytes.length && u8(bytes, pos) != 0xff) pos += 1
             case _ =>
               pos += 2 + len
           }
@@ -540,15 +540,10 @@ object JpegProgressive {
   private[graft] def encodeJpegProg(k: Long, nbx: Int, nby: Int): Array[Byte] = {
     val w = 8 * nbx; val h = 8 * nby
     val out = new java.io.ByteArrayOutputStream()
-    def u8v(v: Int): Unit = out.write(v & 0xff)
-    def u16v(v: Int): Unit = { u8v(v >> 8); u8v(v) }
-    def marker(m: Int, bodyBytes: Array[Int]): Unit = {
-      u8v(0xff); u8v(m); u16v(bodyBytes.length + 2); bodyBytes.foreach(u8v)
-    }
-    u8v(0xff); u8v(0xd8)
-    marker(0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
-    marker(0xc2, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, 1, 1, 0x11, 0))
-    marker(0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
+    out.write(0xff); out.write(0xd8)
+    Multimodal.jpegMarker(out, 0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
+    Multimodal.jpegMarker(out, 0xc2, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, 1, 1, 0x11, 0))
+    Multimodal.jpegMarker(out, 0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
       (0x10 +: (AcProgBits ++ AcProgVals)))
     val dcLum = huffCodes(DcLumBits, DcLumVals)
     val acTab = huffCodes(AcProgBits, AcProgVals)
@@ -573,7 +568,7 @@ object JpegProgressive {
       if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
     def extendBits(v: Int): Int = if (v < 0) v - 1 else v
     def sos(ss: Int, se: Int, ah: Int, al: Int): Unit =
-      marker(0xda, Array(1, 1, 0x00, ss, se, (ah << 4) | al))
+      Multimodal.jpegMarker(out, 0xda, Array(1, 1, 0x00, ss, se, (ah << 4) | al))
 
     // target quantized coefficients per block, by zigzag index
     def coefAt(bx: Int, by: Int, zz: Int): Int = zz match {
@@ -708,7 +703,7 @@ object JpegProgressive {
     emitEobrunRefine()
     flushScan()
 
-    u8v(0xff); u8v(0xd9)
+    out.write(0xff); out.write(0xd9)
     out.toByteArray
   }
 

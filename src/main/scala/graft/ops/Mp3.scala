@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType,
@@ -64,7 +66,6 @@ object Mp3 {
 
     private def mp3MetaImpl(bytes: Array[Byte]): Meta = {
     if (bytes == null || bytes.length < 4) return null
-    def u8(i: Int) = bytes(i) & 0xff
     var pos = 0
 
     var title: String = null
@@ -74,15 +75,15 @@ object Mp3 {
 
     // ---- ID3v2 (optional, at most one, at the start) ----------------
     if (bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D' && bytes(2) == '3') {
-      val verMajor = u8(3)
+      val verMajor = u8(bytes, 3)
       if (verMajor != 3 && verMajor != 4) return null
-      if ((u8(5) & 0x0f) != 0) return null // unknown flags
+      if ((u8(bytes, 5) & 0x0f) != 0) return null // unknown flags
       // syncsafe 28-bit size; any high bit set is malformed
       var tagSize = 0
       var i = 6
       while (i < 10) {
-        if ((u8(i) & 0x80) != 0) return null
-        tagSize = (tagSize << 7) | u8(i)
+        if ((u8(bytes, i) & 0x80) != 0) return null
+        tagSize = (tagSize << 7) | u8(bytes, i)
         i += 1
       }
       if (tagSize > MaxId3Size || 10 + tagSize > bytes.length) return null
@@ -98,17 +99,17 @@ object Mp3 {
           // v2.3 frame sizes are plain 32-bit; v2.4 are syncsafe
           val fsz =
             if (verMajor == 3)
-              (u8(p + 4) << 24) | (u8(p + 5) << 16) | (u8(p + 6) << 8) | u8(p + 7)
+              i32be(bytes, p + 4)
             else {
-              if (((u8(p + 4) | u8(p + 5) | u8(p + 6) | u8(p + 7)) & 0x80) != 0)
+              if (((u8(bytes, p + 4) | u8(bytes, p + 5) | u8(bytes, p + 6) | u8(bytes, p + 7)) & 0x80) != 0)
                 return null
-              (u8(p + 4) << 21) | (u8(p + 5) << 14) | (u8(p + 6) << 7) | u8(p + 7)
+              (u8(bytes, p + 4) << 21) | (u8(bytes, p + 5) << 14) | (u8(bytes, p + 6) << 7) | u8(bytes, p + 7)
             }
           if (fsz < 0 || fsz > MaxId3Size || p + 10 + fsz > end) return null
-          if ((u8(p + 8) | u8(p + 9)) != 0) return null // frame flags unused
+          if ((u8(bytes, p + 8) | u8(bytes, p + 9)) != 0) return null // frame flags unused
           val body = p + 10
           if (fid.startsWith("T") && fsz >= 1) {
-            val enc = u8(body)
+            val enc = u8(bytes, body)
             // fixture + walk support latin1 (0) and utf-8 (3); UTF-16
             // variants are real but out of the deterministic tier
             if (enc != 0 && enc != 3) return null
@@ -153,11 +154,11 @@ object Mp3 {
         hasId3v1 = true; atEnd = true
       } else {
         if (pos + 4 > bytes.length || nFrames >= MaxFrames) return null
-        if (u8(pos) != 0xff || u8(pos + 1) != 0xfb) return null // MPEG1 L3, no CRC
-        val brIdx = u8(pos + 2) >> 4
-        val srIdx = (u8(pos + 2) >> 2) & 3
-        val pad = (u8(pos + 2) >> 1) & 1
-        val m = u8(pos + 3) >> 6
+        if (u8(bytes, pos) != 0xff || u8(bytes, pos + 1) != 0xfb) return null // MPEG1 L3, no CRC
+        val brIdx = u8(bytes, pos + 2) >> 4
+        val srIdx = (u8(bytes, pos + 2) >> 2) & 3
+        val pad = (u8(bytes, pos + 2) >> 1) & 1
+        val m = u8(bytes, pos + 3) >> 6
         if (brIdx < 1 || brIdx > 14 || srIdx > 2) return null
         val sr = SampleRate(srIdx)
         if (sampleRate < 0) { sampleRate = sr; mode = Modes(m) }
@@ -172,12 +173,10 @@ object Mp3 {
           if (off + 16 <= pos + flen) {
             val magic = new String(bytes, off, 4, "ISO-8859-1")
             if (magic == "Xing" || magic == "Info") {
-              val flags = (u8(off + 4) << 24) | (u8(off + 5) << 16) |
-                (u8(off + 6) << 8) | u8(off + 7)
+              val flags = i32be(bytes, off + 4)
               if ((flags & 1) != 0) {
                 vbrHeader = magic
-                vbrFrames = ((u8(off + 8).toLong << 24) | (u8(off + 9) << 16) |
-                  (u8(off + 10) << 8) | u8(off + 11))
+                vbrFrames = u32be(bytes, off + 8)
               }
             }
           }
@@ -224,8 +223,7 @@ object Mp3 {
         b.write((n >> 21) & 0x7f); b.write((n >> 14) & 0x7f)
         b.write((n >> 7) & 0x7f); b.write(n & 0x7f)
       } else {
-        b.write((n >> 24) & 0xff); b.write((n >> 16) & 0xff)
-        b.write((n >> 8) & 0xff); b.write(n & 0xff)
+        put32be(b, n)
       }
       b.write(0); b.write(0)
       b.write(body)

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -87,39 +89,36 @@ object Multimodal {
     * Unknown/truncated input → ("unknown", -1, -1), never a throw: at
     * corpus scale malformed bytes are data, not errors. */
   def parseImageHeader(b: Array[Byte]): (String, Int, Int) = {
-    def u8(i: Int) = b(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le24(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    if (b.length >= 24 && u8(0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
-        b(3) == 'G' && new String(b, 12, 4, "US-ASCII") == "IHDR")
-      ("png", be32(16), be32(20))
-    else if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
+    if (b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
+        b(3) == 'G' && fourCC(b, 12) == "IHDR") {
+      // PNG caps each dimension at 2^31-1: a set top bit is no shape
+      val w = i32be(b, 16); val h = i32be(b, 20)
+      if (w < 0 || h < 0) ("png", -1, -1) else ("png", w, h)
+    } else if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
         b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a')
-      ("gif", le16(6), le16(8))
+      ("gif", u16le(b, 6), u16le(b, 8))
     else if (b.length >= 16 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
         b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' && b(11) == 'P') {
-      new String(b, 12, 4, "US-ASCII") match {
+      fourCC(b, 12) match {
         case "VP8X" if b.length >= 30 =>
-          ("webp", le24(24) + 1, le24(27) + 1)
-        case "VP8L" if b.length >= 25 && u8(20) == 0x2f =>
-          val bits = le24(21) | (u8(24) << 24)
+          ("webp", u24le(b, 24) + 1, u24le(b, 27) + 1)
+        case "VP8L" if b.length >= 25 && u8(b, 20) == 0x2f =>
+          val bits = u24le(b, 21) | (u8(b, 24) << 24)
           ("webp", (bits & 0x3fff) + 1, ((bits >> 14) & 0x3fff) + 1)
-        case "VP8 " if b.length >= 30 && u8(23) == 0x9d && u8(24) == 0x01 &&
-            u8(25) == 0x2a =>
-          ("webp", le16(26) & 0x3fff, le16(28) & 0x3fff)
+        case "VP8 " if b.length >= 30 && u8(b, 23) == 0x9d && u8(b, 24) == 0x01 &&
+            u8(b, 25) == 0x2a =>
+          ("webp", u16le(b, 26) & 0x3fff, u16le(b, 28) & 0x3fff)
         case _ => ("webp", -1, -1)
       }
-    } else if (b.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
+    } else if (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) {
       // walk FF-marker segments to the first frame header: SOF0-SOF15
       // are 0xC0-0xCF minus DHT (C4), JPG (C8), DAC (CC)
       var i = 2
-      while (i + 9 <= b.length && u8(i) == 0xff) {
-        val m = u8(i + 1)
+      while (i + 9 <= b.length && u8(b, i) == 0xff) {
+        val m = u8(b, i + 1)
         if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
-          return ("jpeg", be16(i + 7), be16(i + 5))
-        i += 2 + be16(i + 2)
+          return ("jpeg", u16be(b, i + 7), u16be(b, i + 5))
+        i += 2 + u16be(b, i + 2)
       }
       ("jpeg", -1, -1)
     } else ("unknown", -1, -1)
@@ -195,21 +194,17 @@ object Multimodal {
     StructField("duration_ms", LongType, nullable = false),
   ))
 
+  /** The four-byte box/chunk type at i, or "" past the end of b. */
+  private def cc(b: Array[Byte], i: Int): String = if (i + 4 <= b.length) fourCC(b, i) else ""
+
   /** Parse format + timing metadata from real AV container bytes:
     * WAV (RIFF §"WAVE" chunk walk: `fmt ` PCM fields + `data` declared
     * size, all little-endian), MP4 (ISO 14496-12 box walk: `moov/mvhd`
     * timescale+duration, version 0 and 1 layouts, big-endian).
     * Unknown/truncated input → ("unknown", -1, -1, -1), never a throw. */
   def parseAvHeader(b: Array[Byte]): (String, Int, Int, Int, Long) = {
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Long = (le16(i) | (le16(i + 2).toLong << 16)) & 0xffffffffL
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
-    def cc(i: Int) = if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
     val none = ("unknown", -1, -1, -1, 0L)
-    if (b.length >= 12 && cc(0) == "RIFF" && cc(8) == "WAVE") {
+    if (b.length >= 12 && cc(b, 0) == "RIFF" && cc(b, 8) == "WAVE") {
       // chunk walk with a LONG cursor: declared sizes are untrusted u32,
       // so Int arithmetic would overflow negative on adversarial bytes
       // and index backwards (fuzz-caught); sizes may also honestly
@@ -219,39 +214,39 @@ object Multimodal {
       var dataLen = -1L
       while (i + 8 <= b.length && (channels < 0 || dataLen < 0)) {
         val at = i.toInt
-        val id = cc(at); val size = le32(at + 4)
+        val id = cc(b, at); val size = u32le(b, at + 4)
         if (id == "fmt " && i + 24 <= b.length) {
           // rate is u32 on disk but no real PCM rate approaches 2^31 —
           // an overflowing value is malformed data, not a rate
-          val rateL = le32(at + 12)
+          val rateL = u32le(b, at + 12)
           if (rateL > Int.MaxValue) return none
-          channels = le16(at + 10); rate = rateL.toInt
-          byteRate = le32(at + 16); bits = le16(at + 22)
+          channels = u16le(b, at + 10); rate = rateL.toInt
+          byteRate = u32le(b, at + 16); bits = u16le(b, at + 22)
         } else if (id == "data") dataLen = size
         i += 8L + size + (size & 1L) // chunks pad to even
       }
       if (channels < 0) return none
       val durMs = if (byteRate > 0 && dataLen > 0) dataLen * 1000L / byteRate else 0L
       ("wav", channels, rate, bits, durMs)
-    } else if (b.length >= 8 && cc(4) == "ftyp") {
+    } else if (b.length >= 8 && cc(b, 4) == "ftyp") {
       var i = 0L // box sizes are untrusted u32: Long cursor, same as above
       var timescale = -1L; var duration = -1L
       while (i + 8 <= b.length && timescale < 0) {
         val at = i.toInt
-        val size = be32(at); val id = cc(at + 4)
+        val size = u32be(b, at); val id = cc(b, at + 4)
         if (id == "moov") {
           // walk children of the container box
           var j = i + 8
           val end = math.min(i + size, b.length.toLong)
           while (j + 8 <= end && timescale < 0) {
             val ja = j.toInt
-            val csize = be32(ja)
-            if (cc(ja + 4) == "mvhd" && j + 16 <= b.length) {
-              val version = u8(ja + 8)
+            val csize = u32be(b, ja)
+            if (cc(b, ja + 4) == "mvhd" && j + 16 <= b.length) {
+              val version = u8(b, ja + 8)
               if (version == 1 && j + 40 <= b.length) {
-                timescale = be32(ja + 28); duration = be64(ja + 32)
+                timescale = u32be(b, ja + 28); duration = u64be(b, ja + 32)
               } else if (version == 0 && j + 28 <= b.length) {
-                timescale = be32(ja + 20); duration = be32(ja + 24)
+                timescale = u32be(b, ja + 20); duration = u32be(b, ja + 24)
               }
             }
             if (csize < 8) j = end else j += csize
@@ -442,20 +437,17 @@ object Multimodal {
     * Malformed input → all-(-1) stats, never a throw. */
   /** Validated BI_RGB 24-bit BMP geometry: (dataOff, w, h, stride,
     * topDown), or null on malformed input — the shared header walk of
-    * [[decodeBmp24Stats]] and [[decodeBmpBoxResize2]], keeping the
+    * [[decodeBmp24Stats]], [[decodeBmpBoxResize2]] and [[decodeBmpDHash]], keeping the
     * untrusted-dimension overflow discipline in one place. */
   private[graft] def bmp24Header(b: Array[Byte]): (Int, Int, Int, Int, Boolean) = {
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = le16(i) | (le16(i + 2) << 16) // signed: height may be <0
     if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return null
-    val dataOff = le32(10)
-    val w = le32(18)
-    val hRaw = le32(22)
+    val dataOff = i32le(b, 10)
+    val w = i32le(b, 18)
+    val hRaw = i32le(b, 22) // signed: height may be <0
     val topDown = hRaw < 0
     // abs in Long: hRaw may be Int.MinValue, whose Int abs is itself
     val h = math.abs(hRaw.toLong)
-    if (le16(28) != 24 || le32(30) != 0 || w <= 0 || h == 0) return null
+    if (u16le(b, 28) != 24 || i32le(b, 30) != 0 || w <= 0 || h == 0) return null
     // declared dimensions are untrusted: stride arithmetic in Long, and
     // both must already fit the stored bytes before any row is touched
     // (w near 2^31 would overflow `w * 3` to a negative Int stride and
@@ -471,7 +463,6 @@ object Multimodal {
   }
 
   private[graft] def decodeBmp24Stats(b: Array[Byte]): (Int, Int, Long, Long, Long, Long) = {
-    def u8(i: Int) = b(i) & 0xff
     val bad = (-1, -1, -1L, -1L, -1L, -1L)
     val hdr = bmp24Header(b)
     if (hdr == null) return bad
@@ -483,7 +474,7 @@ object Multimodal {
       var x = 0
       while (x < w) {
         val i = row + 3 * x
-        val bb = u8(i); val gg = u8(i + 1); val rr = u8(i + 2)
+        val bb = u8(b, i); val gg = u8(b, i + 1); val rr = u8(b, i + 2)
         sumR += rr; sumG += gg; sumB += bb
         if ((x & 1) == 0 && (y & 1) == 0) evenSum += rr + gg + bb
         x += 1
@@ -505,7 +496,6 @@ object Multimodal {
     * channel, or a wrong rounding mode each breaks a different column.
     * All-integer: the oracle replays the averages exactly. */
   private[graft] def decodeBmpBoxResize2(b: Array[Byte]): (Int, Int, Long, Long, Long, Long) = {
-    def u8(i: Int) = b(i) & 0xff
     val bad = (-1, -1, -1L, -1L, -1L, -1L)
     val hdr = bmp24Header(b)
     if (hdr == null) return bad
@@ -521,9 +511,9 @@ object Multimodal {
       while (ox < ow) {
         val i00 = r0 + 6 * ox; val i01 = i00 + 3
         val i10 = r1 + 6 * ox; val i11 = i10 + 3
-        val ab = (u8(i00) + u8(i01) + u8(i10) + u8(i11)) / 4
-        val ag = (u8(i00 + 1) + u8(i01 + 1) + u8(i10 + 1) + u8(i11 + 1)) / 4
-        val ar = (u8(i00 + 2) + u8(i01 + 2) + u8(i10 + 2) + u8(i11 + 2)) / 4
+        val ab = (u8(b, i00) + u8(b, i01) + u8(b, i10) + u8(b, i11)) / 4
+        val ag = (u8(b, i00 + 1) + u8(b, i01 + 1) + u8(b, i10 + 1) + u8(b, i11 + 1)) / 4
+        val ar = (u8(b, i00 + 2) + u8(b, i01 + 2) + u8(b, i10 + 2) + u8(b, i11 + 2)) / 4
         sumR += ar; sumG += ag; sumB += ab
         if (((ox + oy) & 1) == 0) mix += ar + 2L * ag + 3L * ab
         ox += 1
@@ -541,7 +531,6 @@ object Multimodal {
     * floored — the same libjpeg/Pillow "reduce" semantics as m47).
     * Same return shape and even-parity `mix` discipline. */
   private[graft] def decodeBmpBoxResizeK(b: Array[Byte], k: Int): (Int, Int, Long, Long, Long, Long) = {
-    def u8(i: Int) = b(i) & 0xff
     val bad = (-1, -1, -1L, -1L, -1L, -1L)
     val hdr = bmp24Header(b)
     if (hdr == null) return bad
@@ -562,7 +551,7 @@ object Multimodal {
           var dx = 0
           while (dx < k) {
             val i = r0 + 3 * (k * ox + dx)
-            tb += u8(i); tg += u8(i + 1); tr += u8(i + 2)
+            tb += u8(b, i); tg += u8(b, i + 1); tr += u8(b, i + 2)
             dx += 1
           }
           dy += 1
@@ -725,22 +714,9 @@ object Multimodal {
     * non-negative Long range for an engine-portable GROUP BY key.
     * Malformed input → (-1, -1, -1, -1), never a throw. */
   private[graft] def decodeBmpDHash(b: Array[Byte]): (Int, Int, Long, Long) = {
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-    val bad = (-1, -1, -1L, -1L)
-    if (b.length < 54 || b(0) != 'B' || b(1) != 'M') return bad
-    val dataOff = le32(10)
-    val w = le32(18)
-    val hRaw = le32(22)
-    val topDown = hRaw < 0
-    val h = math.abs(hRaw.toLong)
-    if (le16(28) != 24 || le32(30) != 0 || w <= 0 || h == 0) return bad
-    val strideL = (w.toLong * 3 + 3) / 4 * 4
-    if (dataOff < 0 || dataOff > b.length ||
-        h > (b.length.toLong - dataOff) / strideL) return bad
-    val stride = strideL.toInt
-    val hI = h.toInt
+    val hdr = bmp24Header(b)
+    if (hdr == null) return (-1, -1, -1L, -1L)
+    val (dataOff, w, hI, stride, topDown) = hdr
     // grid row base for image row y, honoring bottom-up storage
     def rowOff(y: Int) = dataOff + (if (topDown) y else hI - 1 - y) * stride
     val gray = Array.ofDim[Int](8, 9)
@@ -752,7 +728,7 @@ object Multimodal {
       while (gx < 9) {
         val sx = latticeCoord(gx, 9, w)
         val i = ro + 3 * sx
-        gray(gy)(gx) = (u8(i + 2) + 2 * u8(i + 1) + u8(i)) / 4
+        gray(gy)(gx) = (u8(b, i + 2) + 2 * u8(b, i + 1) + u8(b, i)) / 4
         gx += 1
       }
       gy += 1
@@ -1056,9 +1032,6 @@ object Multimodal {
       val sig = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
       var si = 0
       while (si < 8) { if ((bytes(si) & 0xff) != sig(si)) return bad; si += 1 }
-      def be32(o: Int): Int =
-        ((bytes(o) & 0xff) << 24) | ((bytes(o + 1) & 0xff) << 16) |
-          ((bytes(o + 2) & 0xff) << 8) | (bytes(o + 3) & 0xff)
       var pos = 8
       var w = -1; var h = -1; var colorType = -1; var bitDepth = -1
       var interlaced = false
@@ -1068,13 +1041,13 @@ object Multimodal {
       var done = false
       while (!done) {
         if (pos + 8 > bytes.length) return bad
-        val len = be32(pos)
+        val len = i32be(bytes, pos)
         if (len < 0 || pos + 12L + len > bytes.length) return bad
-        val typ = new String(bytes, pos + 4, 4, "US-ASCII")
+        val typ = fourCC(bytes, pos + 4)
         typ match {
           case "IHDR" =>
             if (len != 13) return bad
-            w = be32(pos + 8); h = be32(pos + 12)
+            w = i32be(bytes, pos + 8); h = i32be(bytes, pos + 12)
             bitDepth = bytes(pos + 16) & 0xff
             colorType = bytes(pos + 17) & 0xff
             if ((bytes(pos + 18) & 0xff) != 0 || (bytes(pos + 19) & 0xff) != 0)
@@ -1315,14 +1288,21 @@ object Multimodal {
     out.write(0) // block terminator
   }
 
+  /** One JPEG marker segment: FF, the marker, the big-endian segment
+    * length, then the body bytes. */
+  private[graft] def jpegMarker(out: java.io.ByteArrayOutputStream, m: Int,
+      body: Array[Int]): Unit = {
+    out.write(0xff); out.write(m); put16be(out, body.length + 2)
+    body.foreach(v => out.write(v))
+  }
+
   /** Encode a real GIF89a (global 256-color table, one image, real LZW;
     * interlaced when the seed is odd) holding [[gifIndex]] pixels. */
   private[graft] def encodeGif(k: Long, w: Int, h: Int): Array[Byte] = {
     val interlaced = (k & 1) == 1
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(w); le16(h)
+    put16le(out, w); put16le(out, h)
     out.write(0xf7) // global table, 8-bit color resolution, 256 entries
     out.write(0); out.write(0) // bg color, aspect
     for (j <- 0 until 256) {
@@ -1330,7 +1310,7 @@ object Multimodal {
       out.write(r); out.write(g); out.write(b)
     }
     out.write(0x2c) // image descriptor
-    le16(0); le16(0); le16(w); le16(h)
+    put16le(out, 0); put16le(out, 0); put16le(out, w); put16le(out, h)
     out.write(if (interlaced) 0x40 else 0x00)
     val rows = if (interlaced) interlaceRows(h) else 0 until h
     val indices = rows.toArray.flatMap(y => (0 until w).map(x => gifIndex(k, x, y)))
@@ -1351,18 +1331,16 @@ object Multimodal {
       if (b.length < 13) return bad
       val hdr = new String(b, 0, 6, "US-ASCII")
       if (hdr != "GIF87a" && hdr != "GIF89a") return bad
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
       var pos = 6
-      val sw = le16(pos); val sh = le16(pos + 2)
-      val packed = u8(pos + 4)
+      val sw = u16le(b, pos); val sh = u16le(b, pos + 2)
+      val packed = u8(b, pos + 4)
       pos += 7
       var palette: Array[Int] = null // packed rgb per entry
       def readTable(n: Int): Array[Int] = {
         val t = new Array[Int](n)
         var j = 0
         while (j < n) {
-          t(j) = (u8(pos) << 16) | (u8(pos + 1) << 8) | u8(pos + 2)
+          t(j) = u24be(b, pos)
           pos += 3; j += 1
         }
         t
@@ -1375,19 +1353,19 @@ object Multimodal {
       // block stream: skip extensions until the first image
       while (true) {
         if (pos >= b.length) return bad
-        u8(pos) match {
+        u8(b, pos) match {
           case 0x3b => return bad // trailer before any image
           case 0x21 => // extension: label + sub-blocks
             pos += 2
-            while ({ if (pos >= b.length) return bad; u8(pos) != 0 }) {
-              pos += 1 + u8(pos)
+            while ({ if (pos >= b.length) return bad; u8(b, pos) != 0 }) {
+              pos += 1 + u8(b, pos)
             }
             pos += 1
           case 0x2c =>
             pos += 1
             if (pos + 9 > b.length) return bad
-            val w = le16(pos + 4); val h = le16(pos + 6)
-            val ip = u8(pos + 8)
+            val w = u16le(b, pos + 4); val h = u16le(b, pos + 6)
+            val ip = u8(b, pos + 8)
             pos += 9
             var pal = palette
             if ((ip & 0x80) != 0) {
@@ -1400,11 +1378,11 @@ object Multimodal {
             val interlaced = (ip & 0x40) != 0
             // concatenate the LZW sub-blocks
             if (pos >= b.length) return bad
-            val minCode = u8(pos); pos += 1
+            val minCode = u8(b, pos); pos += 1
             if (minCode < 2 || minCode > 11) return bad
             val lzw = new java.io.ByteArrayOutputStream()
-            while ({ if (pos >= b.length) return bad; u8(pos) != 0 }) {
-              val n = u8(pos)
+            while ({ if (pos >= b.length) return bad; u8(b, pos) != 0 }) {
+              val n = u8(b, pos)
               if (pos + 1 + n > b.length) return bad
               lzw.write(b, pos + 1, n)
               pos += 1 + n
@@ -1550,8 +1528,7 @@ object Multimodal {
     val interlaced = (k & 1) == 1
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(w); le16(h)
+    put16le(out, w); put16le(out, h)
     out.write(0xf7); out.write(0); out.write(0)
     for (j <- 0 until 256) {
       val (r, g, b) = gifPalette(j)
@@ -1560,18 +1537,18 @@ object Multimodal {
     // NETSCAPE2.0 loop-forever application extension (ancillary skip)
     out.write(0x21); out.write(0xff); out.write(0x0b)
     out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(0x03); out.write(0x01); le16(0); out.write(0)
+    out.write(0x03); out.write(0x01); put16le(out, 0); out.write(0)
     for (f <- 0 until frames) {
       val (x0, y0) = gifAnimOrigin(f, w, h)
       val fw = w - x0; val fh = h - y0
       // Graphic Control Extension: disposal + transparency for f ≥ 1
       out.write(0x21); out.write(0xf9); out.write(0x04)
       out.write((disposalOf(f) << 2) | (if (f >= 1) 1 else 0))
-      le16(4) // delay: 4 cs
+      put16le(out, 4) // delay: 4 cs
       out.write(255) // transparent index (unused when flag clear)
       out.write(0)
       out.write(0x2c)
-      le16(x0); le16(y0); le16(fw); le16(fh)
+      put16le(out, x0); put16le(out, y0); put16le(out, fw); put16le(out, fh)
       out.write(if (interlaced) 0x40 else 0x00)
       val rows = if (interlaced) interlaceRows(fh) else 0 until fh
       val indices = rows.toArray.flatMap { ry =>
@@ -1601,12 +1578,10 @@ object Multimodal {
       if (b.length < 13) return none
       val hdr = new String(b, 0, 6, "US-ASCII")
       if (hdr != "GIF87a" && hdr != "GIF89a") return none
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
       var pos = 6
-      val sw = le16(pos); val sh = le16(pos + 2)
-      val packed = u8(pos + 4)
-      val bgIdx = u8(pos + 5)
+      val sw = u16le(b, pos); val sh = u16le(b, pos + 2)
+      val packed = u8(b, pos + 4)
+      val bgIdx = u8(b, pos + 5)
       pos += 7
       // canvas is an Int (4-byte) buffer: bound pixels to 1/4 of the byte
       // budget so the allocation honors the same cap as every decoder
@@ -1616,7 +1591,7 @@ object Multimodal {
         val t = new Array[Int](n)
         var j = 0
         while (j < n) {
-          t(j) = (u8(pos) << 16) | (u8(pos + 1) << 8) | u8(pos + 2)
+          t(j) = u24be(b, pos)
           pos += 3; j += 1
         }
         t
@@ -1637,27 +1612,27 @@ object Multimodal {
         .empty[(Int, Long, Long, Long, Long)]
       while (true) {
         if (pos >= b.length) return none
-        u8(pos) match {
+        u8(b, pos) match {
           case 0x3b =>
             return if (frames.isEmpty) none else frames.toArray
           case 0x21 =>
             if (pos + 2 > b.length) return none
-            val label = u8(pos + 1)
+            val label = u8(b, pos + 1)
             pos += 2
             if (label == 0xf9) { // Graphic Control Extension
-              if (pos + 6 > b.length || u8(pos) != 4) return none
-              val p = u8(pos + 1)
+              if (pos + 6 > b.length || u8(b, pos) != 4) return none
+              val p = u8(b, pos + 1)
               disposal = (p >> 2) & 7
               // reserved methods 4-7 reject at PARSE time — before any
               // LZW work, and even when no image follows the GCE
               if (disposal > 3) return none
-              transparent = if ((p & 1) != 0) u8(pos + 4) else -1
+              transparent = if ((p & 1) != 0) u8(b, pos + 4) else -1
               pos += 5
-              if (u8(pos) != 0) return none
+              if (u8(b, pos) != 0) return none
               pos += 1
             } else { // other extension: skip sub-blocks
-              while ({ if (pos >= b.length) return none; u8(pos) != 0 }) {
-                pos += 1 + u8(pos)
+              while ({ if (pos >= b.length) return none; u8(b, pos) != 0 }) {
+                pos += 1 + u8(b, pos)
               }
               pos += 1
             }
@@ -1670,9 +1645,9 @@ object Multimodal {
             if ((frames.length + 1).toLong * sw * sh > MaxInflateBytes)
               return none
             if (pos + 9 > b.length) return none
-            val x0 = le16(pos); val y0 = le16(pos + 2)
-            val fw = le16(pos + 4); val fh = le16(pos + 6)
-            val ip = u8(pos + 8)
+            val x0 = u16le(b, pos); val y0 = u16le(b, pos + 2)
+            val fw = u16le(b, pos + 4); val fh = u16le(b, pos + 6)
+            val ip = u8(b, pos + 8)
             pos += 9
             var pal = palette
             if ((ip & 0x80) != 0) {
@@ -1684,11 +1659,11 @@ object Multimodal {
               x0 + fw > sw || y0 + fh > sh) return none
             if (fw.toLong * fh > MaxInflateBytes) return none
             if (pos >= b.length) return none
-            val minCode = u8(pos); pos += 1
+            val minCode = u8(b, pos); pos += 1
             if (minCode < 2 || minCode > 11) return none
             val lzw = new java.io.ByteArrayOutputStream()
-            while ({ if (pos >= b.length) return none; u8(pos) != 0 }) {
-              val n = u8(pos)
+            while ({ if (pos >= b.length) return none; u8(b, pos) != 0 }) {
+              val n = u8(b, pos)
               if (pos + 1 + n > b.length) return none
               lzw.write(b, pos + 1, n)
               pos += 1 + n
@@ -1895,25 +1870,20 @@ object Multimodal {
     val gray = (k & 1) == 0
     val w = 16 * wMcu; val h = 16 * hMcu
     val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int, body: Array[Int]): Unit = {
-      u8(0xff); u8(m); u16(body.length + 2); body.foreach(u8)
-    }
-    u8(0xff); u8(0xd8) // SOI
+    out.write(0xff); out.write(0xd8) // SOI
     // DQT: table 0, q[0]=8, rest 16
-    marker(0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
+    jpegMarker(out, 0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
     // SOF0
     val comps =
       if (gray) Seq((1, 0x11, 0)) else Seq((1, 0x22, 0), (2, 0x11, 0), (3, 0x11, 0))
-    marker(0xc0, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, comps.length) ++
+    jpegMarker(out, 0xc0, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, comps.length) ++
       comps.flatMap { case (id, samp, q) => Seq(id, samp, q) })
     // DHT: DC lum (class 0 id 0), DC chr (class 0 id 1), AC min (class 1 id 0)
-    marker(0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
+    jpegMarker(out, 0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
       (0x01 +: (DcChrBits ++ DcChrVals)) ++
       (0x10 +: (AcMinBits ++ AcMinVals)))
     // SOS
-    marker(0xda, Array(comps.length) ++
+    jpegMarker(out, 0xda, Array(comps.length) ++
       comps.flatMap { case (id, _, _) =>
         Seq(id, if (id == 1) 0x00 else 0x10)
       } ++ Array(0, 63, 0))
@@ -1963,7 +1933,7 @@ object Multimodal {
       }
     }
     if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt) // pad with 1s
-    u8(0xff); u8(0xd9) // EOI
+    out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
 
@@ -1995,17 +1965,12 @@ object Multimodal {
   private[graft] def encodeJpegAc(k: Long, nbx: Int, nby: Int): Array[Byte] = {
     val w = 8 * nbx; val h = 8 * nby
     val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int, body: Array[Int]): Unit = {
-      u8(0xff); u8(m); u16(body.length + 2); body.foreach(u8)
-    }
-    u8(0xff); u8(0xd8) // SOI
-    marker(0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
-    marker(0xc0, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, 1, 1, 0x11, 0))
-    marker(0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
+    out.write(0xff); out.write(0xd8) // SOI
+    jpegMarker(out, 0xdb, 0 +: Array.tabulate(64)(i => if (i == 0) 8 else 16))
+    jpegMarker(out, 0xc0, Array(8, h >> 8, h & 0xff, w >> 8, w & 0xff, 1, 1, 0x11, 0))
+    jpegMarker(out, 0xc4, (0x00 +: (DcLumBits ++ DcLumVals)) ++
       (0x10 +: (AcM22Bits ++ AcM22Vals)))
-    marker(0xda, Array(1, 1, 0x00, 0, 63, 0))
+    jpegMarker(out, 0xda, Array(1, 1, 0x00, 0, 63, 0))
     val dcLum = huffCodes(DcLumBits, DcLumVals)
     val acTab = huffCodes(AcM22Bits, AcM22Vals)
     var bitBuf = 0L; var bitCnt = 0
@@ -2049,7 +2014,7 @@ object Multimodal {
       putBits(ec, el)
     }
     if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    u8(0xff); u8(0xd9)
+    out.write(0xff); out.write(0xd9)
     out.toByteArray
   }
 
@@ -2072,8 +2037,6 @@ object Multimodal {
     try {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
         return bad
-      def u8(i: Int) = bytes(i) & 0xff
-      def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
       var pos = 2
       val qt = Array.ofDim[Int](4, 64)
       val qtSeen = new Array[Boolean](4)
@@ -2091,37 +2054,37 @@ object Multimodal {
       var sosAt = -1
       while (sosAt < 0) {
         if (pos + 4 > bytes.length) return bad
-        if (u8(pos) != 0xff) return bad
-        val m = u8(pos + 1)
+        if (u8(bytes, pos) != 0xff) return bad
+        val m = u8(bytes, pos + 1)
         if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { pos += 2 }
         else {
-          val len = u16(pos + 2)
+          val len = u16be(bytes, pos + 2)
           if (len < 2 || pos + 2 + len > bytes.length) return bad
           val body = pos + 4
           m match {
             case 0xdb => // DQT (possibly several tables)
               var p = body
               while (p < pos + 2 + len) {
-                val pq = u8(p) >> 4; val tq = u8(p) & 15
+                val pq = u8(bytes, p) >> 4; val tq = u8(bytes, p) & 15
                 if (pq != 0 || tq > 3 || p + 65 > pos + 2 + len) return bad
                 var i = 0
-                while (i < 64) { qt(tq)(i) = u8(p + 1 + i); i += 1 }
+                while (i < 64) { qt(tq)(i) = u8(bytes, p + 1 + i); i += 1 }
                 qtSeen(tq) = true
                 p += 65
               }
             case 0xc0 => // SOF0 baseline
               if (len < 8) return bad
-              if (u8(body) != 8) return bad
-              h = u16(body + 1); w = u16(body + 3)
-              nComp = u8(body + 5)
+              if (u8(bytes, body) != 8) return bad
+              h = u16be(bytes, body + 1); w = u16be(bytes, body + 3)
+              nComp = u8(bytes, body + 5)
               if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3)) return bad
               if (w.toLong * h > MaxInflateBytes / 4) return bad
               var c = 0
               while (c < nComp) {
                 val o = body + 6 + 3 * c
-                compId(c) = u8(o)
-                compSampH(c) = u8(o + 1) >> 4; compSampV(c) = u8(o + 1) & 15
-                compQ(c) = u8(o + 2)
+                compId(c) = u8(bytes, o)
+                compSampH(c) = u8(bytes, o + 1) >> 4; compSampV(c) = u8(bytes, o + 1) & 15
+                compQ(c) = u8(bytes, o + 2)
                 if (compSampH(c) < 1 || compSampH(c) > 2 ||
                     compSampV(c) < 1 || compSampV(c) > 2 || compQ(c) > 3) return bad
                 c += 1
@@ -2132,13 +2095,13 @@ object Multimodal {
             case 0xc4 => // DHT (possibly several)
               var p = body
               while (p < pos + 2 + len) {
-                val tc = u8(p) >> 4; val th = u8(p) & 15
+                val tc = u8(bytes, p) >> 4; val th = u8(bytes, p) & 15
                 if (tc > 1 || th > 3 || p + 17 > pos + 2 + len) return bad
                 var total = 0
                 var l = 1
-                while (l <= 16) { huffCount(tc)(th)(l) = u8(p + l); total += u8(p + l); l += 1 }
+                while (l <= 16) { huffCount(tc)(th)(l) = u8(bytes, p + l); total += u8(bytes, p + l); l += 1 }
                 if (total > 256 || p + 17 + total > pos + 2 + len) return bad
-                huffVals(tc)(th) = Array.tabulate(total)(i => u8(p + 17 + i))
+                huffVals(tc)(th) = Array.tabulate(total)(i => u8(bytes, p + 17 + i))
                 var code = 0; var vi = 0
                 l = 1
                 while (l <= 16) {
@@ -2152,17 +2115,17 @@ object Multimodal {
               }
             case 0xdd => // DRI
               if (len != 4) return bad
-              restartInterval = u16(body)
+              restartInterval = u16be(bytes, body)
             case 0xda => // SOS
-              val ns = u8(body)
+              val ns = u8(bytes, body)
               if (ns != nComp || len < 6 + 2 * ns) return bad
               var c = 0
               while (c < ns) {
-                val id = u8(body + 1 + 2 * c)
+                val id = u8(bytes, body + 1 + 2 * c)
                 val ci = compId.indexOf(id)
                 if (ci < 0 || ci >= nComp) return bad
-                compDc(ci) = u8(body + 2 + 2 * c) >> 4
-                compAc(ci) = u8(body + 2 + 2 * c) & 15
+                compDc(ci) = u8(bytes, body + 2 + 2 * c) >> 4
+                compAc(ci) = u8(bytes, body + 2 + 2 * c) & 15
                 c += 1
               }
               sosAt = pos + 2 + len
@@ -2199,9 +2162,9 @@ object Multimodal {
         while (bitCnt <= 56 && !feedDone) {
           if (p >= bytes.length) { feedDone = true }
           else {
-            val v = u8(p)
+            val v = u8(bytes, p)
             if (v == 0xff) {
-              if (p + 1 < bytes.length && u8(p + 1) == 0x00) {
+              if (p + 1 < bytes.length && u8(bytes, p + 1) == 0x00) {
                 bitBuf = (bitBuf << 8) | 0xff; bitCnt += 8; p += 2
               } else feedDone = true // a real marker: stop feeding, but
               // already-buffered bits stay valid (the final MCU's codes
@@ -2307,7 +2270,7 @@ object Multimodal {
             // align to byte and consume the RSTn marker
             bitCnt -= bitCnt % 8
             fail = false; feedDone = false
-            if (p + 1 < bytes.length && u8(p) == 0xff && u8(p + 1) >= 0xd0 && u8(p + 1) <= 0xd7) {
+            if (p + 1 < bytes.length && u8(bytes, p) == 0xff && u8(bytes, p + 1) >= 0xd0 && u8(bytes, p + 1) <= 0xd7) {
               p += 2
               java.util.Arrays.fill(pred, 0)
               bitBuf = 0; bitCnt = 0
@@ -2437,26 +2400,22 @@ object Multimodal {
     val bad = (-1, -1L, -1L, -1L, -1L)
     try {
       if (b.length < 44) return bad
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-      def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return bad
+      if (fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WAVE") return bad
       var pos = 12
       var channels = -1
       var ok = false
       var dataOff = -1
       var dataLen = -1
       while (pos + 8 <= b.length && (channels < 0 || dataOff < 0)) {
-        val t = tag(pos)
-        val len = le32(pos + 4)
+        val t = fourCC(b, pos)
+        val len = i32le(b, pos + 4)
         if (len < 0 || pos + 8L + len > b.length) return bad
         t match {
           case "fmt " =>
             if (len < 16) return bad
-            val fmt = le16(pos + 8)
-            channels = le16(pos + 10)
-            val bits = le16(pos + 22)
+            val fmt = u16le(b, pos + 8)
+            channels = u16le(b, pos + 10)
+            val bits = u16le(b, pos + 22)
             ok = fmt == 1 && bits == 16 && channels >= 1
           case "data" => dataOff = pos + 8; dataLen = len
           case _ => () // ancillary chunk: skip by declared length
@@ -2468,7 +2427,7 @@ object Multimodal {
       var sum = 0L; var sumAbs = 0L; var maxAbs = 0L
       var i = 0
       while (i < n) {
-        val v = (le16(dataOff + 2 * i) << 16) >> 16 // sign-extend int16
+        val v = (u16le(b, dataOff + 2 * i) << 16) >> 16 // sign-extend int16
         sum += v
         val a = math.abs(v.toLong)
         sumAbs += a
@@ -2540,24 +2499,20 @@ object Multimodal {
   private[graft] def decodeWavPcm16(b: Array[Byte]): Array[Int] = {
     try {
       if (b.length < 44) return null
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-      def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return null
+      if (fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WAVE") return null
       var pos = 12
       var ok = false
       var dataOff = -1
       var dataLen = -1
       while (pos + 8 <= b.length && (!ok || dataOff < 0)) {
-        val t = tag(pos)
-        val len = le32(pos + 4)
+        val t = fourCC(b, pos)
+        val len = i32le(b, pos + 4)
         if (len < 0 || pos + 8L + len > b.length) return null
         t match {
           case "fmt " =>
             if (len < 16) return null
-            ok = le16(pos + 8) == 1 && le16(pos + 10) == 1 &&
-              le16(pos + 22) == 16
+            ok = u16le(b, pos + 8) == 1 && u16le(b, pos + 10) == 1 &&
+              u16le(b, pos + 22) == 16
           case "data" => dataOff = pos + 8; dataLen = len
           case _ => ()
         }
@@ -2565,7 +2520,7 @@ object Multimodal {
       }
       if (!ok || dataOff < 0 || dataLen < 2) return null
       val n = dataLen / 2
-      Array.tabulate(n)(i => (le16(dataOff + 2 * i) << 16) >> 16)
+      Array.tabulate(n)(i => (u16le(b, dataOff + 2 * i) << 16) >> 16)
     } catch { case scala.util.control.NonFatal(_) => null }
   }
 
@@ -2672,37 +2627,39 @@ object Multimodal {
     * policy as [[decodeWavStats]]; all-(-1) on damage, never a throw.
     * Integer-exact: |s| ≤ 2¹⁵ so each product ≤ 2³⁰ and any realistic
     * clip length stays far from Long overflow. */
+  /** The 16-bit PCM samples of a RIFF/WAVE file as (data offset,
+    * sample count): chunk walk to a PCM `fmt ` chunk (16-bit, at least
+    * one channel) and a `data` chunk of at least one sample, or null. */
+  private def wavPcm16Span(b: Array[Byte]): (Int, Int) = {
+    if (b.length < 44 || fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WAVE") return null
+    var pos = 12
+    var ok = false
+    var dataOff = -1
+    var dataLen = -1
+    while (pos + 8 <= b.length && (!ok || dataOff < 0)) {
+      val len = i32le(b, pos + 4)
+      if (len < 0 || pos + 8L + len > b.length) return null
+      fourCC(b, pos) match {
+        case "fmt " =>
+          if (len < 16) return null
+          ok = u16le(b, pos + 8) == 1 && u16le(b, pos + 22) == 16 && u16le(b, pos + 10) >= 1
+        case "data" => dataOff = pos + 8; dataLen = len
+        case _ => () // ancillary chunk: skip by declared length
+      }
+      pos += 8 + len + (len & 1) // chunks are word-aligned
+    }
+    if (!ok || dataOff < 0 || dataLen < 2) null else (dataOff, dataLen / 2)
+  }
+
   private[graft] def decodeWavAutocorr(b: Array[Byte], lags: Seq[Int]): (Long, Long, Seq[Long]) = {
     val bad = (-1L, -1L, lags.map(_ => -1L))
     try {
-      if (b.length < 44) return bad
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-      def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return bad
-      var pos = 12
-      var ok = false
-      var dataOff = -1
-      var dataLen = -1
-      while (pos + 8 <= b.length && (!ok || dataOff < 0)) {
-        val t = tag(pos)
-        val len = le32(pos + 4)
-        if (len < 0 || pos + 8L + len > b.length) return bad
-        t match {
-          case "fmt " =>
-            if (len < 16) return bad
-            ok = le16(pos + 8) == 1 && le16(pos + 22) == 16 && le16(pos + 10) >= 1
-          case "data" => dataOff = pos + 8; dataLen = len
-          case _ => () // ancillary chunk: skip by declared length
-        }
-        pos += 8 + len + (len & 1) // chunks are word-aligned
-      }
-      if (!ok || dataOff < 0 || dataLen < 2) return bad
-      val n = dataLen / 2
+      val span = wavPcm16Span(b)
+      if (span == null) return bad
+      val (dataOff, n) = span
       val s = new Array[Int](n)
       var i = 0
-      while (i < n) { s(i) = (le16(dataOff + 2 * i) << 16) >> 16; i += 1 }
+      while (i < n) { s(i) = (u16le(b, dataOff + 2 * i) << 16) >> 16; i += 1 }
       var energy = 0L
       i = 0
       while (i < n) { energy += s(i).toLong * s(i); i += 1 }
@@ -2780,35 +2737,14 @@ object Multimodal {
   private[graft] def decodeWavWindowAbs(b: Array[Byte], w: Int): (Long, Array[Long]) = {
     val bad = (-1L, Array.empty[Long])
     try {
-      if (b.length < 44 || w <= 0) return bad
-      def u8(i: Int) = b(i) & 0xff
-      def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-      def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WAVE") return bad
-      var pos = 12
-      var ok = false
-      var dataOff = -1
-      var dataLen = -1
-      while (pos + 8 <= b.length && (!ok || dataOff < 0)) {
-        val t = tag(pos)
-        val len = le32(pos + 4)
-        if (len < 0 || pos + 8L + len > b.length) return bad
-        t match {
-          case "fmt " =>
-            if (len < 16) return bad
-            ok = le16(pos + 8) == 1 && le16(pos + 22) == 16 && le16(pos + 10) >= 1
-          case "data" => dataOff = pos + 8; dataLen = len
-          case _ => () // ancillary chunk: skip by declared length
-        }
-        pos += 8 + len + (len & 1) // chunks are word-aligned
-      }
-      if (!ok || dataOff < 0 || dataLen < 2) return bad
-      val n = dataLen / 2
+      if (w <= 0) return bad
+      val span = wavPcm16Span(b)
+      if (span == null) return bad
+      val (dataOff, n) = span
       val wins = new Array[Long]((n + w - 1) / w)
       var i = 0
       while (i < n) {
-        val v = (le16(dataOff + 2 * i) << 16) >> 16 // sign-extend int16
+        val v = (u16le(b, dataOff + 2 * i) << 16) >> 16 // sign-extend int16
         wins(i / w) += math.abs(v.toLong)
         i += 1
       }
@@ -2952,45 +2888,52 @@ object Multimodal {
     StructField("max_sample_size", LongType, nullable = false),
   ))
 
+  /** First child box named `id` inside [start, end) of an MP4 → its body
+    * span, clamped to `end`. Box sizes are untrusted u32 (Long cursor): a
+    * size below 8, size-0 and largesize boxes included, stops the walk. */
+  private def mp4Child(b: Array[Byte], start: Long, end: Long,
+      id: String): Option[(Long, Long)] = {
+    var i = start
+    while (i + 8 <= end) {
+      val size = u32be(b, i.toInt)
+      if (size < 8) return None
+      if (cc(b, i.toInt + 4) == id) return Some((i + 8, math.min(i + size, end)))
+      i += size
+    }
+    None
+  }
+
+  /** The body spans of the first track's moov/trak/mdia box and of its
+    * minf/stbl box, below a leading `ftyp`. */
+  private def mp4SampleTables(b: Array[Byte]): Option[((Long, Long), (Long, Long))] =
+    if (b.length < 8 || cc(b, 4) != "ftyp") None
+    else for {
+      moov <- mp4Child(b, 0, b.length.toLong, "moov")
+      trak <- mp4Child(b, moov._1, moov._2, "trak")
+      mdia <- mp4Child(b, trak._1, trak._2, "mdia")
+      minf <- mp4Child(b, mdia._1, mdia._2, "minf")
+      stbl <- mp4Child(b, minf._1, minf._2, "stbl")
+    } yield (mdia, stbl)
+
   /** Walk moov/trak/mdia/{mdhd, minf/stbl/{stts, stsz}} and fold the
     * sample tables: (n_samples, duration_ms, total_sample_bytes,
     * max_sample_size). Declared box sizes and entry counts are untrusted
     * (Long cursors, end-clamping, count-vs-available-bytes caps) —
     * malformed input returns the (-1, 0, 0, 0) sentinel, never a throw. */
   private[graft] def parseMp4SampleStats(b: Array[Byte]): (Long, Long, Long, Long) = {
-    def u8(i: Int) = b(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def cc(i: Int) = if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
     val none = (-1L, 0L, 0L, 0L)
-    if (b.length < 8 || cc(4) != "ftyp") return none
-    // first child box named `id` inside [start, end) → its body span
-    def child(start: Long, end: Long, id: String): Option[(Long, Long)] = {
-      var i = start
-      while (i + 8 <= end) {
-        val size = be32(i.toInt)
-        if (size < 8) return None // malformed/size-0 box: stop the walk
-        if (cc(i.toInt + 4) == id) return Some((i + 8, math.min(i + size, end)))
-        i += size
-      }
-      None
-    }
     val stats = for {
-      moov <- child(0, b.length.toLong, "moov")
-      trak <- child(moov._1, moov._2, "trak")
-      mdia <- child(trak._1, trak._2, "mdia")
-      mdhd <- child(mdia._1, mdia._2, "mdhd")
-      minf <- child(mdia._1, mdia._2, "minf")
-      stbl <- child(minf._1, minf._2, "stbl")
-      stts <- child(stbl._1, stbl._2, "stts")
-      stsz <- child(stbl._1, stbl._2, "stsz")
+      (mdia, stbl) <- mp4SampleTables(b)
+      mdhd <- mp4Child(b, mdia._1, mdia._2, "mdhd")
+      stts <- mp4Child(b, stbl._1, stbl._2, "stts")
+      stsz <- mp4Child(b, stbl._1, stbl._2, "stsz")
     } yield {
       // mdhd v0: ver/flags, ctime, mtime, timescale, duration (u32 each);
       // v1 widens the times to u64, shifting timescale to offset 20
       val ma = mdhd._1.toInt
       val timescale =
-        if (mdhd._2 - mdhd._1 >= 20 && u8(ma) == 0) be32(ma + 12)
-        else if (mdhd._2 - mdhd._1 >= 28 && u8(ma) == 1) be32(ma + 20)
+        if (mdhd._2 - mdhd._1 >= 20 && u8(b, ma) == 0) u32be(b, ma + 12)
+        else if (mdhd._2 - mdhd._1 >= 28 && u8(b, ma) == 1) u32be(b, ma + 20)
         else -1L
       // stts: ver/flags, entry_count, then (sample_count, sample_delta)*
       val ta = stts._1.toInt
@@ -2998,14 +2941,14 @@ object Multimodal {
       var sumDeltas = 0L
       var ok = stts._2 - stts._1 >= 8
       if (ok) {
-        val declared = be32(ta + 4)
+        val declared = u32be(b, ta + 4)
         val avail = (stts._2 - stts._1 - 8) / 8
         if (declared > avail) ok = false
         else {
           var e = 0
           while (e < declared && ok) {
-            val cnt = be32(ta + 8 + e * 8)
-            val delta = be32(ta + 12 + e * 8)
+            val cnt = u32be(b, ta + 8 + e * 8)
+            val delta = u32be(b, ta + 12 + e * 8)
             // u32·u32 can exceed Long range (the BMP-overflow lesson:
             // wrapped intermediates turn bounds checks into lies) —
             // saturating guards keep adversarial tables in the sentinel
@@ -3024,8 +2967,8 @@ object Multimodal {
       val za = stsz._1.toInt
       var n = 0L; var total = 0L; var mx = 0L
       if (ok && stsz._2 - stsz._1 >= 12) {
-        val fixed = be32(za + 4)
-        n = be32(za + 8)
+        val fixed = u32be(b, za + 4)
+        n = u32be(b, za + 8)
         if (fixed > 0) {
           if (n > Long.MaxValue / fixed) ok = false // u32·u32 overflow guard
           else { total = n * fixed; mx = fixed }
@@ -3034,7 +2977,7 @@ object Multimodal {
         else {
           var i = 0
           while (i < n) {
-            val sz = be32(za + 12 + i * 4)
+            val sz = u32be(b, za + 12 + i * 4)
             total += sz
             if (sz > mx) mx = sz
             i += 1
@@ -3054,40 +2997,21 @@ object Multimodal {
     * entries (a 1-KB file can declare 2³²−1 samples — the allocation
     * must size from evidence, not declaration). Malformed → empty. */
   private[graft] def parseMp4SampleSizes(b: Array[Byte]): Array[Int] = {
-    def u8(i: Int) = b(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    def cc(i: Int) = if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-    if (b.length < 8 || cc(4) != "ftyp") return Array.empty
-    def child(start: Long, end: Long, id: String): Option[(Long, Long)] = {
-      var i = start
-      while (i + 8 <= end) {
-        val size = be32(i.toInt)
-        if (size < 8) return None
-        if (cc(i.toInt + 4) == id) return Some((i + 8, math.min(i + size, end)))
-        i += size
-      }
-      None
-    }
     val sizes = for {
-      moov <- child(0, b.length.toLong, "moov")
-      trak <- child(moov._1, moov._2, "trak")
-      mdia <- child(trak._1, trak._2, "mdia")
-      minf <- child(mdia._1, mdia._2, "minf")
-      stbl <- child(minf._1, minf._2, "stbl")
-      stsz <- child(stbl._1, stbl._2, "stsz")
+      (_, stbl) <- mp4SampleTables(b)
+      stsz <- mp4Child(b, stbl._1, stbl._2, "stsz")
       if stsz._2 - stsz._1 >= 12
     } yield {
       val za = stsz._1.toInt
-      val fixed = be32(za + 4)
-      val n = be32(za + 8)
+      val fixed = u32be(b, za + 4)
+      val n = u32be(b, za + 8)
       val cap = 1L << 20
       if (n > cap) Array.empty[Int]
       else if (fixed > 0) Array.fill(n.toInt)(
         math.min(fixed, Int.MaxValue.toLong).toInt)
       else if (n > (stsz._2 - stsz._1 - 12) / 4) Array.empty[Int]
       else Array.tabulate(n.toInt)(i =>
-        math.min(be32(za + 12 + i * 4), Int.MaxValue.toLong).toInt)
+        math.min(u32be(b, za + 12 + i * 4), Int.MaxValue.toLong).toInt)
     }
     sizes.getOrElse(Array.empty)
   }

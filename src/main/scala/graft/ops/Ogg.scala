@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -82,11 +84,6 @@ object Ogg {
 
     private def oggMetaImpl(bytes: Array[Byte]): Meta = {
     if (bytes == null || bytes.length < 28) return null
-    def u8(i: Int) = bytes(i) & 0xff
-    def u32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def u64(i: Int): Long = u32(i) | (u32(i + 4) << 32)
 
     var pos = 0
     var nPages = 0L
@@ -102,16 +99,16 @@ object Ogg {
       if (pos + 27 > bytes.length) return null
       if (bytes(pos) != 'O' || bytes(pos + 1) != 'g' || bytes(pos + 2) != 'g' ||
           bytes(pos + 3) != 'S') return null
-      if (u8(pos + 4) != 0) return null // stream structure version
-      val hType = u8(pos + 5)
-      val granule = u64(pos + 6)
-      val ser = u32(pos + 14)
-      val pageCrc = u32(pos + 22)
-      val nSegs = u8(pos + 26)
+      if (u8(bytes, pos + 4) != 0) return null // stream structure version
+      val hType = u8(bytes, pos + 5)
+      val granule = u64le(bytes, pos + 6)
+      val ser = u32le(bytes, pos + 14)
+      val pageCrc = u32le(bytes, pos + 22)
+      val nSegs = u8(bytes, pos + 26)
       if (pos + 27 + nSegs > bytes.length) return null
       var bodyLen = 0
       var si = 0
-      while (si < nSegs) { bodyLen += u8(pos + 27 + si); si += 1 }
+      while (si < nSegs) { bodyLen += u8(bytes, pos + 27 + si); si += 1 }
       val pageLen = 27 + nSegs + bodyLen
       if (pos + pageLen > bytes.length) return null
       if (crc(bytes, pos, pageLen, 22) != pageCrc) crcOk = false
@@ -127,10 +124,10 @@ object Ogg {
         // RFC 7845 §5.1: BOS page carries exactly OpusHead
         if ((hType & 2) == 0 || bodyLen < 19) return null
         if (new String(bytes, body, 8, "ISO-8859-1") != "OpusHead") return null
-        if (u8(body + 8) != 1) return null // version
-        channels = u8(body + 9).toLong
-        preSkip = u8(body + 10).toLong | (u8(body + 11).toLong << 8)
-        inputRate = u32(body + 12)
+        if (u8(bytes, body + 8) != 1) return null // version
+        channels = u8(bytes, body + 9).toLong
+        preSkip = u16le(bytes, body + 10).toLong
+        inputRate = u32le(bytes, body + 12)
       } else if (nPages == 1L) {
         // OpusTags (Vorbis-comment layout)
         if (bodyLen < 16) return null
@@ -138,7 +135,7 @@ object Ogg {
         var p = body + 8
         def lstr(): String = {
           if (p + 4 > body + bodyLen) return null
-          val len = u32(p)
+          val len = u32le(bytes, p)
           p += 4
           if (len < 0 || len > MaxCommentLen || p + len > body + bodyLen)
             return null
@@ -149,7 +146,7 @@ object Ogg {
         vendor = lstr()
         if (vendor == null) return null
         if (p + 4 > body + bodyLen) return null
-        val nc = u32(p); p += 4
+        val nc = u32le(bytes, p); p += 4
         if (nc < 0 || nc > MaxComments) return null
         var ci = 0L
         while (ci < nc) {
@@ -182,21 +179,17 @@ object Ogg {
   private def page(hType: Int, granule: Long, serial: Long, seq: Long,
       packets: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = out.write(v & 0xff)
-    def w32(v: Long): Unit = {
-      w8(v.toInt); w8((v >> 8).toInt); w8((v >> 16).toInt); w8((v >> 24).toInt)
-    }
     out.write("OggS".getBytes("ISO-8859-1"))
-    w8(0); w8(hType)
-    w32(granule); w32(granule >> 32)
-    w32(serial); w32(seq); w32(0L) // CRC placeholder
+    out.write(0); out.write(hType)
+    put32le(out, granule); put32le(out, granule >> 32)
+    put32le(out, serial); put32le(out, seq); put32le(out, 0L) // CRC placeholder
     val lacing = packets.flatMap { pk =>
       val full = Seq.fill(pk.length / 255)(255)
       full :+ (pk.length % 255) // terminal lacing value (may be 0)
     }
     require(lacing.size <= 255, "fixture page overflow")
-    w8(lacing.size)
-    lacing.foreach(w8)
+    out.write(lacing.size)
+    lacing.foreach(v => out.write(v))
     packets.foreach(out.write)
     val b = out.toByteArray
     val c = crc(b, 0, b.length, 22)
@@ -219,12 +212,8 @@ object Ogg {
     val head = new java.io.ByteArrayOutputStream()
     head.write("OpusHead".getBytes("ISO-8859-1"))
     head.write(1); head.write(channels)
-    head.write((preSkip & 0xff).toInt); head.write(((preSkip >> 8) & 0xff).toInt)
-    def r32(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      b.write((v & 0xff).toInt); b.write(((v >> 8) & 0xff).toInt)
-      b.write(((v >> 16) & 0xff).toInt); b.write(((v >> 24) & 0xff).toInt)
-    }
-    r32(head, inputRate)
+    put16le(head, preSkip.toInt)
+    put32le(head, inputRate)
     head.write(0); head.write(0) // output gain
     head.write(0) // mapping family 0
     out.write(page(2, 0L, serial, 0L, Seq(head.toByteArray)))
@@ -232,10 +221,10 @@ object Ogg {
     val tags = new java.io.ByteArrayOutputStream()
     tags.write("OpusTags".getBytes("ISO-8859-1"))
     def vstr(s: String): Unit = {
-      val b = s.getBytes("UTF-8"); r32(tags, b.length.toLong); tags.write(b)
+      val b = s.getBytes("UTF-8"); put32le(tags, b.length); tags.write(b)
     }
     vstr("graft ogg fixture")
-    r32(tags, 2L)
+    put32le(tags, 2L)
     vstr(s"TITLE=doc $docId")
     vstr(s"ARTIST=$lang")
     out.write(page(0, -1L, serial, 1L, Seq(tags.toByteArray)))

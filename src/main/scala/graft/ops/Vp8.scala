@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -117,7 +119,7 @@ object Vp8 {
       "AEAAQgBEAEYASABKAEwATgBQAFIAVABWAFgAWgBcAF4AYABiAGQAZgBoAGoAbABuAHAAcgB0AHcA" +
       "egB9AIAAgwCGAIkAjACPAJIAlQCYAJsAngChAKQApwCqAK0AsQC1ALkAvQDBAMUAyQDNANEA1QDZ" +
       "AN0A4QDlAOoA7wD1APkA/gEDAQgBDQESARcBHA==")
-    Array.tabulate(128)(i => ((raw(2 * i) & 0xff) << 8) | (raw(2 * i + 1) & 0xff))
+    Array.tabulate(128)(i => u16be(raw, 2 * i))
   }
 
   private val Zigzag = Array(0, 1, 4, 8, 5, 2, 3, 6, 9, 12, 13, 10, 7, 11, 14, 15)
@@ -362,13 +364,13 @@ object Vp8 {
   private[graft] def decodeVp8(payload: Array[Byte]): Frame = {
     try {
       if (payload.length < 10) return null
-      @inline def u8(i: Int) = payload(i) & 0xff
-      val ft = u8(0) | (u8(1) << 8) | (u8(2) << 16)
+      val ft = u24le(payload, 0)
       if ((ft & 1) != 0) return null // inter frame: not a still image
       val part1Size = ft >>> 5
-      if (u8(3) != 0x9d || u8(4) != 0x01 || u8(5) != 0x2a) return null
-      val w = (u8(6) | (u8(7) << 8)) & 0x3fff
-      val h = (u8(8) | (u8(9) << 8)) & 0x3fff
+      if (u8(payload, 3) != 0x9d || u8(payload, 4) != 0x01 || u8(payload, 5) != 0x2a)
+        return null
+      val w = u16le(payload, 6) & 0x3fff
+      val h = u16le(payload, 8) & 0x3fff
       if (w == 0 || h == 0 || w.toLong * h > MaxPixels) return null
       if (10 + part1Size > payload.length) return null
       val mbW = (w + 15) / 16; val mbH = (h + 15) / 16
@@ -445,7 +447,7 @@ object Vp8 {
         var i = 0
         while (i < nparts - 1) {
           val o = tpStart + i * 3
-          sizes(i) = u8(o) | (u8(o + 1) << 8) | (u8(o + 2) << 16)
+          sizes(i) = u24le(payload, o)
           i += 1
         }
         tpStart += (nparts - 1) * 3
@@ -1091,24 +1093,10 @@ object Vp8 {
   }
 
   private[graft] def decodeWebpVp8Frame(b: Array[Byte]): Frame = {
-    if (b == null || b.length < 20) return null
-    @inline def u8(i: Int) = b(i) & 0xff
-    def le32(i: Int): Long =
-      u8(i) | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-    if (tag(0) != "RIFF" || tag(8) != "WEBP") return null
-    var pos = 12
-    while (pos + 8 <= b.length) {
-      val t = tag(pos)
-      val sz = le32(pos + 4)
-      if (sz < 0 || sz > b.length - pos - 8) return null
-      if (t == "VP8 ") {
-        val payload = java.util.Arrays.copyOfRange(b, pos + 8, pos + 8 + sz.toInt)
-        return decodeVp8(payload)
-      }
-      pos += 8 + sz.toInt + (sz.toInt & 1)
-    }
-    null
+    if (b == null) return null
+    val at = Vp8l.webpChunk(b, "VP8 ")
+    if (at < 0) null
+    else decodeVp8(java.util.Arrays.copyOfRange(b, at + 8, at + 8 + u32le(b, at + 4).toInt))
   }
 
   // ------------------------------------------------------------------
@@ -1289,7 +1277,7 @@ object Vp8 {
 
     val tagv = (1 << 4) | (part1.length << 5) // keyframe, version 0, show
     val out = new java.io.ByteArrayOutputStream()
-    out.write(tagv & 0xff); out.write((tagv >> 8) & 0xff); out.write((tagv >> 16) & 0xff)
+    put24le(out, tagv)
     out.write(0x9d); out.write(0x01); out.write(0x2a)
     out.write(w & 0xff); out.write((w >> 8) & 0x3f)
     out.write(h & 0xff); out.write((h >> 8) & 0x3f)
@@ -1298,13 +1286,9 @@ object Vp8 {
     val payload = out.toByteArray
     val riff = new java.io.ByteArrayOutputStream()
     def wstr(s: String): Unit = riff.write(s.getBytes("US-ASCII"), 0, 4)
-    def wle32(v: Int): Unit = {
-      riff.write(v & 0xff); riff.write((v >> 8) & 0xff)
-      riff.write((v >> 16) & 0xff); riff.write((v >> 24) & 0xff)
-    }
     wstr("RIFF")
-    wle32(4 + 8 + payload.length + (payload.length & 1))
-    wstr("WEBP"); wstr("VP8 "); wle32(payload.length)
+    put32le(riff, 4 + 8 + payload.length + (payload.length & 1))
+    wstr("WEBP"); wstr("VP8 "); put32le(riff, payload.length)
     riff.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) riff.write(0)
     riff.toByteArray

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -570,29 +572,35 @@ object Vp8l {
     (w, h, buf)
   }
 
+  /** Offset of the first chunk tagged `tag` (its 8-byte header) in a
+    * RIFF/WEBP file of at least 20 bytes; -1 when the file is shorter or
+    * not RIFF/WEBP, has no such chunk, or a chunk size before it overruns
+    * the file. The found chunk's declared size (`u32le(b, at + 4)`) fits
+    * the file. */
+  private[graft] def webpChunk(b: Array[Byte], tag: String): Int = {
+    if (b.length < 20 || fourCC(b, 0) != "RIFF" || fourCC(b, 8) != "WEBP") return -1
+    var pos = 12
+    while (pos + 8 <= b.length) {
+      val sz = u32le(b, pos + 4)
+      if (sz > b.length - pos - 8) return -1
+      if (fourCC(b, pos) == tag) return pos
+      pos += 8 + sz.toInt + (sz.toInt & 1)
+    }
+    -1
+  }
+
+  /** Offset of the VP8L bitstream behind its 0x2f signature, or -1. */
+  private def vp8lPayload(b: Array[Byte]): Int = {
+    val at = webpChunk(b, "VP8L")
+    if (at < 0 || u32le(b, at + 4) < 5 || u8(b, at + 8) != 0x2f) -1 else at + 9
+  }
+
   /** RIFF walk + payload decode → Some((w, h, argb)) or None on any
     * malformation — the pixel surface the cross-format dHash consumes. */
   private[graft] def decodeWebpArgbOpt(
       b: Array[Byte]): Option[(Int, Int, Array[Int])] =
     try {
-      if (b.length < 20) return None
-      def u8(i: Int) = b(i) & 0xff
-      def le32(i: Int): Long =
-        u8(i) | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-          (u8(i + 3).toLong << 24)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WEBP") return None
-      var pos = 12
-      var payloadOff = -1
-      while (payloadOff < 0 && pos + 8 <= b.length) {
-        val t = tag(pos)
-        val sz = le32(pos + 4)
-        if (sz < 0 || sz > b.length - pos - 8) return None
-        if (t == "VP8L") {
-          if (sz < 5 || u8(pos + 8) != 0x2f) return None
-          payloadOff = pos + 9
-        } else pos += 8 + sz.toInt + (sz.toInt & 1)
-      }
+      val payloadOff = vp8lPayload(b)
       if (payloadOff < 0) None
       else Some(decodeVp8lPayload(b, payloadOff))
     } catch {
@@ -607,24 +615,7 @@ object Vp8l {
       b: Array[Byte]): (Int, Int, Long, Long, Long, Long) = {
     val bad = (-1, -1, -1L, -1L, -1L, -1L)
     try {
-      if (b.length < 20) return bad
-      def u8(i: Int) = b(i) & 0xff
-      def le32(i: Int): Long =
-        u8(i) | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-          (u8(i + 3).toLong << 24)
-      def tag(i: Int) = new String(b, i, 4, "US-ASCII")
-      if (tag(0) != "RIFF" || tag(8) != "WEBP") return bad
-      var pos = 12
-      var payloadOff = -1
-      while (payloadOff < 0 && pos + 8 <= b.length) {
-        val t = tag(pos)
-        val sz = le32(pos + 4)
-        if (sz < 0 || sz > b.length - pos - 8) return bad
-        if (t == "VP8L") {
-          if (sz < 5 || u8(pos + 8) != 0x2f) return bad
-          payloadOff = pos + 9
-        } else pos += 8 + sz.toInt + (sz.toInt & 1)
-      }
+      val payloadOff = vp8lPayload(b)
       if (payloadOff < 0) return bad
       val (w, h, argb) = decodeVp8lPayload(b, payloadOff)
       var sr = 0L; var sg = 0L; var sb = 0L; var es = 0L
@@ -975,14 +966,10 @@ object Vp8l {
     val payload = Array[Byte](0x2f) ++ bw.toBytes
     val out = new java.io.ByteArrayOutputStream()
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"))
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
     val chunkLen = payload.length
     val padded = chunkLen + (chunkLen & 1)
-    ascii("RIFF"); le32(4 + 8 + padded); ascii("WEBP")
-    ascii("VP8L"); le32(chunkLen)
+    ascii("RIFF"); put32le(out, 4 + 8 + padded); ascii("WEBP")
+    ascii("VP8L"); put32le(out, chunkLen)
     out.write(payload)
     if ((chunkLen & 1) == 1) out.write(0)
     out.toByteArray

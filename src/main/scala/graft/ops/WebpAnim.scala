@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -37,35 +39,28 @@ object WebpAnim {
 
     private def webpMetaImpl(bytes: Array[Byte]): Meta = {
     if (bytes == null || bytes.length < 20) return null
-    def u8(i: Int) = bytes(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u24(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-    def u32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def cc(i: Int) = new String(bytes, i, 4, "ISO-8859-1")
-    if (cc(0) != "RIFF" || cc(8) != "WEBP") return null
-    val riffLen = u32(4)
+    if (fourCC(bytes, 0) != "RIFF" || fourCC(bytes, 8) != "WEBP") return null
+    val riffLen = u32le(bytes, 4)
     if (riffLen < 4 || 8 + riffLen > bytes.length) return null
     val end = (8 + riffLen).toInt
 
     /** Dims from the first bitstream bytes of a still chunk. */
     def vp8Dims(at: Int, size: Long): (Long, Long) = {
-      if (size < 10 || u8(at + 3) != 0x9d || u8(at + 4) != 0x01 ||
-          u8(at + 5) != 0x2a) return null
-      ((u16(at + 6) & 0x3fff).toLong, (u16(at + 8) & 0x3fff).toLong)
+      if (size < 10 || u8(bytes, at + 3) != 0x9d || u8(bytes, at + 4) != 0x01 ||
+          u8(bytes, at + 5) != 0x2a) return null
+      ((u16le(bytes, at + 6) & 0x3fff).toLong, (u16le(bytes, at + 8) & 0x3fff).toLong)
     }
     def vp8lDims(at: Int, size: Long): (Long, Long) = {
-      if (size < 5 || u8(at) != 0x2f) return null
-      val w = 1L + (u8(at + 1) | ((u8(at + 2) & 0x3f) << 8))
-      val h = 1L + ((u8(at + 2) >> 6) | (u8(at + 3) << 2) |
-        ((u8(at + 4) & 0x0f) << 10))
+      if (size < 5 || u8(bytes, at) != 0x2f) return null
+      val w = 1L + (u8(bytes, at + 1) | ((u8(bytes, at + 2) & 0x3f) << 8))
+      val h = 1L + ((u8(bytes, at + 2) >> 6) | (u8(bytes, at + 3) << 2) |
+        ((u8(bytes, at + 4) & 0x0f) << 10))
       (w, h)
     }
 
     var p = 12
-    val first = cc(p)
-    val firstSize = u32(p + 4)
+    val first = fourCC(bytes, p)
+    val firstSize = u32le(bytes, p + 4)
     if (firstSize < 0 || p + 8 + firstSize > end) return null
     first match {
       case "VP8 " =>
@@ -78,31 +73,31 @@ object WebpAnim {
         Meta("vp8l-still", d._1, d._2, 1L, -1L, -1L, d._1 * d._2)
       case "VP8X" =>
         if (firstSize != 10) return null
-        val flags = u8(p + 8)
+        val flags = u8(bytes, p + 8)
         val animated = (flags & 0x02) != 0
-        val canvasW = u24(p + 12) + 1L
-        val canvasH = u24(p + 15) + 1L
+        val canvasW = u24le(bytes, p + 12) + 1L
+        val canvasH = u24le(bytes, p + 15) + 1L
         p += 8 + 10
         var loop = -1L
         var nFrames = 0L
         var dur = 0L
         var area = 0L
         while (p + 8 <= end) {
-          val name = cc(p)
-          val size = u32(p + 4)
+          val name = fourCC(bytes, p)
+          val size = u32le(bytes, p + 4)
           if (size < 0 || p + 8 + size > end) return null
           name match {
             case "ANIM" =>
               if (size < 6) return null
-              loop = u16(p + 8 + 4).toLong
+              loop = u16le(bytes, p + 8 + 4).toLong
             case "ANMF" =>
               if (size < 16 || nFrames >= MaxFrames) return null
               val b = p + 8
-              val fx = 2L * u24(b)
-              val fy = 2L * u24(b + 3)
-              val fw = u24(b + 6) + 1L
-              val fh = u24(b + 9) + 1L
-              val d = u24(b + 12).toLong
+              val fx = 2L * u24le(bytes, b)
+              val fy = 2L * u24le(bytes, b + 3)
+              val fw = u24le(bytes, b + 6) + 1L
+              val fh = u24le(bytes, b + 9) + 1L
+              val d = u24le(bytes, b + 12).toLong
               if (fx + fw > canvasW || fy + fh > canvasH)
                 return null // frame outside the canvas is malformed
               nFrames += 1
@@ -152,23 +147,16 @@ object WebpAnim {
       val canvasW = frames.map(f => f._1 + f._3).max
       val canvasH = frames.map(f => f._2 + f._4).max
       val body = new java.io.ByteArrayOutputStream()
-      def w8(v: Int): Unit = body.write(v & 0xff)
-      def w16(v: Int): Unit = { w8(v); w8(v >> 8) }
-      def w24(v: Int): Unit = { w8(v); w8(v >> 8); w8(v >> 16) }
-      def w32(v: Long): Unit = { w8(v.toInt); w8((v >> 8).toInt); w8((v >> 16).toInt); w8((v >> 24).toInt) }
       def chunk(name: String, payload: Array[Byte]): Unit = {
         body.write(name.getBytes("ISO-8859-1"))
-        w32(payload.length.toLong)
+        put32le(body, payload.length)
         body.write(payload)
-        if ((payload.length & 1) == 1) w8(0)
+        if ((payload.length & 1) == 1) body.write(0)
       }
       // VP8X: animation flag, canvas dims
       val vp8x = new java.io.ByteArrayOutputStream()
       vp8x.write(0x02); vp8x.write(0); vp8x.write(0); vp8x.write(0)
-      def x24(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
-        b.write(v & 0xff); b.write((v >> 8) & 0xff); b.write((v >> 16) & 0xff)
-      }
-      x24(vp8x, canvasW - 1); x24(vp8x, canvasH - 1)
+      put24le(vp8x, canvasW - 1); put24le(vp8x, canvasH - 1)
       chunk("VP8X", vp8x.toByteArray)
       // ANIM: background BGRA + loop count
       val anim = new java.io.ByteArrayOutputStream()
@@ -177,7 +165,8 @@ object WebpAnim {
       chunk("ANIM", anim.toByteArray)
       frames.foreach { case (fx, fy, w, h, d, inner) =>
         val f = new java.io.ByteArrayOutputStream()
-        x24(f, fx / 2); x24(f, fy / 2); x24(f, w - 1); x24(f, h - 1); x24(f, d)
+        put24le(f, fx / 2); put24le(f, fy / 2); put24le(f, w - 1); put24le(f, h - 1)
+        put24le(f, d)
         f.write(0x02) // blending flag set, dispose-to-none
         f.write(inner)
         chunk("ANMF", f.toByteArray)
@@ -186,8 +175,7 @@ object WebpAnim {
       val out = new java.io.ByteArrayOutputStream()
       out.write("RIFF".getBytes("ISO-8859-1"))
       val total = payload.length + 4
-      out.write(total & 0xff); out.write((total >> 8) & 0xff)
-      out.write((total >> 16) & 0xff); out.write((total >> 24) & 0xff)
+      put32le(out, total)
       out.write("WEBP".getBytes("ISO-8859-1"))
       out.write(payload)
       out.toByteArray

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -53,26 +55,21 @@ object Woff2 {
   private def woff2MetaImpl(b: Array[Byte]): Meta = {
     if (b == null || b.length < 48) return null
     val n = b.length
-    def u8(i: Int) = b(i) & 0xff
-    def u16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) |
-        u8(i + 3)) & 0xffffffffL
-    if (u32(0) != 0x774f4632L) return null // 'wOF2'
-    val flavor = u32(4) match {
+    if (u32be(b, 0) != 0x774f4632L) return null // 'wOF2'
+    val flavor = u32be(b, 4) match {
       case 0x00010000L => "ttf"
       case 0x4f54544fL => "otf" // 'OTTO'
       case 0x74727565L => "ttf" // 'true'
       case _ => return null
     }
-    if (u32(8) != n) return null // declared total length must match
-    val numTables = u16(12)
+    if (u32be(b, 8) != n) return null // declared total length must match
+    val numTables = u16be(b, 12)
     if (numTables == 0 || numTables > MaxTables) return null
-    val totalSfntSize = u32(16)
-    val totalCompressedSize = u32(20)
-    val metaOffset = u32(28)
-    val metaLength = u32(32)
-    val metaOrigLength = u32(36)
+    val totalSfntSize = u32be(b, 16)
+    val totalCompressedSize = u32be(b, 20)
+    val metaOffset = u32be(b, 28)
+    val metaLength = u32be(b, 32)
+    val metaOrigLength = u32be(b, 36)
 
     var p = 48
     def base128(): Long = {
@@ -81,7 +78,7 @@ object Woff2 {
       var done = false
       while (!done) {
         if (p >= n || i >= 5) return -1L
-        val c = u8(p); p += 1
+        val c = u8(b, p); p += 1
         if (i == 0 && c == 0x80) return -1L // leading zero forbidden
         v = (v << 7) | (c & 0x7f)
         if (v > 0xffffffffL) return -1L
@@ -99,13 +96,13 @@ object Woff2 {
     var t = 0
     while (t < numTables) {
       if (p >= n) return null
-      val flags = u8(p); p += 1
+      val flags = u8(b, p); p += 1
       val tagIdx = flags & 0x3f
       val version = (flags >> 6) & 3
       val tag =
         if (tagIdx == 63) {
           if (p + 4 > n) return null
-          val s = new String(b, p, 4, "ISO-8859-1"); p += 4
+          val s = fourCC(b, p); p += 4
           nCustom += 1
           s
         } else { nKnown += 1; KnownTags(tagIdx) }
@@ -154,13 +151,6 @@ object Woff2 {
   // fixture encoder
   // ------------------------------------------------------------------
 
-  private def be16(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write((v >> 8) & 0xff); o.write(v & 0xff)
-  }
-  private def be32(o: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    o.write(((v >> 24) & 0xff).toInt); o.write(((v >> 16) & 0xff).toInt)
-    o.write(((v >> 8) & 0xff).toInt); o.write((v & 0xff).toInt)
-  }
   private def writeBase128(o: java.io.ByteArrayOutputStream, v: Long): Unit = {
     val groups = Iterator.iterate(v)(_ >>> 7).takeWhile(_ != 0)
       .map(x => (x & 0x7f).toInt).toVector.reverse match {
@@ -222,16 +212,16 @@ object Woff2 {
     val total = headerLen + dirBytes.length + blob.length + meta.length
 
     val o = new java.io.ByteArrayOutputStream(total)
-    be32(o, 0x774f4632L)
-    be32(o, flavorBits)
-    be32(o, total.toLong)
-    be16(o, tables.length); be16(o, 0)
-    be32(o, 12L + tables.length * 16L + tables.map(_.orig).sum) // sfnt guess
-    be32(o, blob.length.toLong)
-    be16(o, 1); be16(o, 0)
-    be32(o, metaOffset.toLong); be32(o, if (withMeta) meta.length.toLong else 0L)
-    be32(o, if (withMeta) metaXml.length.toLong else 0L)
-    be32(o, 0L); be32(o, 0L) // no private block
+    put32be(o, 0x774f4632L)
+    put32be(o, flavorBits)
+    put32be(o, total.toLong)
+    put16be(o, tables.length); put16be(o, 0)
+    put32be(o, 12L + tables.length * 16L + tables.map(_.orig).sum) // sfnt guess
+    put32be(o, blob.length.toLong)
+    put16be(o, 1); put16be(o, 0)
+    put32be(o, metaOffset.toLong); put32be(o, if (withMeta) meta.length.toLong else 0L)
+    put32be(o, if (withMeta) metaXml.length.toLong else 0L)
+    put32be(o, 0L); put32be(o, 0L) // no private block
     o.write(dirBytes)
     o.write(blob)
     o.write(meta)

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bytes._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -36,6 +38,61 @@ object Zip {
   // walk
   // ------------------------------------------------------------------
 
+  /** One central-directory record. */
+  private[graft] final case class Entry(name: String, method: Int, crc: Long,
+      comp: Long, uncomp: Long, lho: Long)
+
+  /** The central directory of a single-disk archive, in record order:
+    * the EOCD record found by bounded backward scan (a comment can
+    * trail it; the spec caps the comment at 64K), then the PK\1\2
+    * records it points at, entry count and name length budgeted. Null
+    * on any malformed structure. */
+  private[graft] def centralDirectory(bytes: Array[Byte]): Vector[Entry] = {
+    if (bytes == null || bytes.length < 22) return null
+    val n = bytes.length
+    var eocd = -1
+    var i = n - 22
+    val stop = math.max(0, n - 22 - 65535)
+    while (eocd < 0 && i >= stop) {
+      if (i32le(bytes, i) == 0x06054b50 && i + 22 + u16le(bytes, i + 20) == n) eocd = i
+      i -= 1
+    }
+    if (eocd < 0) return null
+    val total = u16le(bytes, eocd + 10)
+    if (u16le(bytes, eocd + 8) != total) return null // single-disk archives only
+    if (total > MaxEntries) return null
+    val cdSize = u32le(bytes, eocd + 12)
+    val cdOff = u32le(bytes, eocd + 16)
+    if (cdOff + cdSize > eocd) return null
+    var p = cdOff.toInt
+    val cdEnd = (cdOff + cdSize).toInt
+    val out = Vector.newBuilder[Entry]
+    var k = 0
+    while (k < total) {
+      if (p + 46 > cdEnd || i32le(bytes, p) != 0x02014b50) return null
+      val nameLen = u16le(bytes, p + 28)
+      val extraLen = u16le(bytes, p + 30)
+      val cmtLen = u16le(bytes, p + 32)
+      if (nameLen > MaxNameLen || p + 46 + nameLen + extraLen + cmtLen > cdEnd)
+        return null
+      out += Entry(new String(bytes, p + 46, nameLen, "UTF-8"), u16le(bytes, p + 10),
+        u32le(bytes, p + 16), u32le(bytes, p + 20), u32le(bytes, p + 24),
+        u32le(bytes, p + 42))
+      p += 46 + nameLen + extraLen + cmtLen
+      k += 1
+    }
+    out.result()
+  }
+
+  /** Offset of an entry's data behind its PK\3\4 local header, or -1
+    * when the header is missing or the data overruns the file. */
+  private[graft] def dataAt(bytes: Array[Byte], e: Entry): Long = {
+    val n = bytes.length
+    if (e.lho + 30 > n || i32le(bytes, e.lho.toInt) != 0x04034b50) return -1L
+    val at = e.lho + 30 + u16le(bytes, e.lho.toInt + 26) + u16le(bytes, e.lho.toInt + 28)
+    if (at + e.comp > n) -1L else at
+  }
+
   private[graft] def zipMeta(bytes: Array[Byte]): Meta =
     // NonFatal net: a corpus walker must NEVER fail the task on one
     // adversarial object — any defect escaping the explicit bounds
@@ -43,100 +100,104 @@ object Zip {
     try zipMetaImpl(bytes)
     catch { case scala.util.control.NonFatal(_) => null }
 
-    private def zipMetaImpl(bytes: Array[Byte]): Meta = {
-    if (bytes == null || bytes.length < 22) return null
-    val n = bytes.length
-    def u8(i: Int) = bytes(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-
-    // EOCD backward scan (comment can trail it; spec caps comment at 64K)
-    var eocd = -1
-    var i = n - 22
-    val stop = math.max(0, n - 22 - 65535)
-    while (eocd < 0 && i >= stop) {
-      if (u8(i) == 0x50 && u8(i + 1) == 0x4b && u8(i + 2) == 0x05 &&
-          u8(i + 3) == 0x06 && i + 22 + u16(i + 20) == n) eocd = i
-      i -= 1
-    }
-    if (eocd < 0) return null
-    val total = u16(eocd + 10)
-    val cdSize = u32(eocd + 12)
-    val cdOff = u32(eocd + 16)
-    if (u16(eocd + 8) != total) return null // single-disk archives only
-    if (total > MaxEntries) return null
-    if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > eocd) return null
-
-    var p = cdOff.toInt
-    val cdEnd = (cdOff + cdSize).toInt
-    var nEntries = 0L
+  private def zipMetaImpl(bytes: Array[Byte]): Meta = {
+    val entries = centralDirectory(bytes)
+    if (entries == null) return null
     var sumComp = 0L; var sumUncomp = 0L
     var maxRatio = 0L
     var nStored = 0L; var nDeflate = 0L
-    var firstName: String = null
     var crcOk = true
-    var hasContentTypes = false
     var epubMime = false
-
-    while (nEntries < total) {
-      if (p + 46 > cdEnd || u32(p) != 0x02014b50L) return null
-      val method = u16(p + 10)
-      val crc = u32(p + 16)
-      val comp = u32(p + 20)
-      val uncomp = u32(p + 24)
-      val nameLen = u16(p + 28)
-      val extraLen = u16(p + 30)
-      val cmtLen = u16(p + 32)
-      val lho = u32(p + 42)
-      if (nameLen > MaxNameLen || p + 46 + nameLen + extraLen + cmtLen > cdEnd)
-        return null
-      val name = new String(bytes, p + 46, nameLen, "UTF-8")
-      if (firstName == null) firstName = name
-      if (name == "[Content_Types].xml") hasContentTypes = true
-      if (comp < 0 || uncomp < 0) return null
-      sumComp += comp; sumUncomp += uncomp
-      if (comp > 0) {
-        val r = uncomp * 1000000L / comp
+    val it = entries.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      sumComp += e.comp; sumUncomp += e.uncomp
+      if (e.comp > 0) {
+        val r = e.uncomp * 1000000L / e.comp
         if (r > maxRatio) maxRatio = r
       }
-      method match {
+      e.method match {
         case 0 =>
           nStored += 1
-          if (comp != uncomp) return null
+          if (e.comp != e.uncomp) return null
           // verify via the local header — census-grade integrity check
-          if (lho < 0 || lho + 30 > n || u32(lho.toInt) != 0x04034b50L)
-            return null
-          val lNameLen = u16(lho.toInt + 26)
-          val lExtraLen = u16(lho.toInt + 28)
-          val dataAt = lho + 30 + lNameLen + lExtraLen
-          if (dataAt + comp > n) return null
+          val at = dataAt(bytes, e)
+          if (at < 0) return null
           val c = new java.util.zip.CRC32()
-          c.update(bytes, dataAt.toInt, comp.toInt)
-          if (c.getValue != crc) crcOk = false
-          if (name == "mimetype") {
-            val v = new String(bytes, dataAt.toInt, comp.toInt, "ISO-8859-1")
+          c.update(bytes, at.toInt, e.comp.toInt)
+          if (c.getValue != e.crc) crcOk = false
+          if (e.name == "mimetype") {
+            val v = new String(bytes, at.toInt, e.comp.toInt, "ISO-8859-1")
             if (v == "application/epub+zip") epubMime = true
           }
         case 8 => nDeflate += 1 // sized, never inflated here
         case _ => return null // other methods outside the census tier
       }
-      p += 46 + nameLen + extraLen + cmtLen
-      nEntries += 1
     }
 
     val kind =
-      if (hasContentTypes) "ooxml"
+      if (entries.exists(_.name == "[Content_Types].xml")) "ooxml"
       else if (epubMime) "epub"
       else "zip"
-    Meta(kind, nEntries, sumComp, sumUncomp, maxRatio, nStored, nDeflate,
-      firstName, crcOk)
+    Meta(kind, entries.length.toLong, sumComp, sumUncomp, maxRatio, nStored, nDeflate,
+      entries.headOption.map(_.name).orNull, crcOk)
   }
 
   // ------------------------------------------------------------------
-  // fixture encoder
+  // fixture encoders
   // ------------------------------------------------------------------
+
+  private def deflateRaw(data: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater(
+      java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    try {
+      d.setInput(data); d.finish()
+      val out = new java.io.ByteArrayOutputStream(data.length / 2 + 64)
+      val buf = new Array[Byte](4096)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
+
+  /** Minimal single-disk archive writer: STORED (method 0) or raw
+    * DEFLATE (method 8) members with real CRC-32s, time/date fixed at
+    * zero so the bytes are deterministic. */
+  private[graft] final class Writer {
+    private val out = new java.io.ByteArrayOutputStream()
+    private val cd = new java.io.ByteArrayOutputStream()
+    private var n = 0
+    def add(name: String, data: Array[Byte], deflate: Boolean): Unit = {
+      val lho = out.size().toLong
+      val nb = name.getBytes("UTF-8")
+      val c = new java.util.zip.CRC32()
+      c.update(data)
+      val payload = if (deflate) deflateRaw(data) else data
+      val method = if (deflate) 8 else 0
+      put32le(out, 0x04034b50L); put16le(out, 20); put16le(out, 0); put16le(out, method)
+      put16le(out, 0); put16le(out, 0)
+      put32le(out, c.getValue); put32le(out, payload.length)
+      put32le(out, data.length)
+      put16le(out, nb.length); put16le(out, 0)
+      out.write(nb); out.write(payload)
+      put32le(cd, 0x02014b50L); put16le(cd, 20); put16le(cd, 20); put16le(cd, 0)
+      put16le(cd, method); put16le(cd, 0); put16le(cd, 0)
+      put32le(cd, c.getValue); put32le(cd, payload.length)
+      put32le(cd, data.length)
+      put16le(cd, nb.length); put16le(cd, 0); put16le(cd, 0); put16le(cd, 0); put16le(cd, 0)
+      put32le(cd, 0L); put32le(cd, lho)
+      cd.write(nb)
+      n += 1
+    }
+    def result(): Array[Byte] = {
+      val cdOff = out.size().toLong
+      val cdBytes = cd.toByteArray
+      out.write(cdBytes)
+      put32le(out, 0x06054b50L); put16le(out, 0); put16le(out, 0)
+      put16le(out, n); put16le(out, n)
+      put32le(out, cdBytes.length); put32le(out, cdOff); put16le(out, 0)
+      out.toByteArray
+    }
+  }
 
   /** Deterministic all-STORED ZIP: k%12+1 payload entries of analytic
     * text, plus a kind-marker entry (k%3: OOXML content-types / EPUB
@@ -145,53 +206,17 @@ object Zip {
     * exercised in ZipSpec against JDK-written archives. */
   private[graft] def encodeZip(docId: Long, lang: String): Array[Byte] = {
     val k = ((docId % 251) + 251) % 251
-    val out = new java.io.ByteArrayOutputStream()
-    val cd = new java.io.ByteArrayOutputStream()
-    var nEntries = 0
-    def u16(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      b.write(v & 0xff); b.write((v >> 8) & 0xff)
-    }
-    def u32(b: java.io.ByteArrayOutputStream, v: Long): Unit = {
-      b.write((v & 0xff).toInt); b.write(((v >> 8) & 0xff).toInt)
-      b.write(((v >> 16) & 0xff).toInt); b.write(((v >> 24) & 0xff).toInt)
-    }
-    def entry(name: String, data: Array[Byte]): Unit = {
-      val lho = out.size().toLong
-      val nb = name.getBytes("UTF-8")
-      val c = new java.util.zip.CRC32()
-      c.update(data)
-      val crc = c.getValue
-      // local header
-      u32(out, 0x04034b50L); u16(out, 20); u16(out, 0); u16(out, 0)
-      u16(out, 0); u16(out, 0) // time/date fixed zero — deterministic
-      u32(out, crc); u32(out, data.length.toLong); u32(out, data.length.toLong)
-      u16(out, nb.length); u16(out, 0)
-      out.write(nb); out.write(data)
-      // central record
-      u32(cd, 0x02014b50L); u16(cd, 20); u16(cd, 20); u16(cd, 0); u16(cd, 0)
-      u16(cd, 0); u16(cd, 0)
-      u32(cd, crc); u32(cd, data.length.toLong); u32(cd, data.length.toLong)
-      u16(cd, nb.length); u16(cd, 0); u16(cd, 0); u16(cd, 0); u16(cd, 0)
-      u32(cd, 0L); u32(cd, lho)
-      cd.write(nb)
-      nEntries += 1
-    }
+    val w = new Writer
     k % 3 match {
-      case 0 => entry("[Content_Types].xml",
-        s"<Types doc='$docId'/>".getBytes("UTF-8"))
-      case 1 => entry("mimetype", "application/epub+zip".getBytes("UTF-8"))
+      case 0 => w.add("[Content_Types].xml",
+        s"<Types doc='$docId'/>".getBytes("UTF-8"), deflate = false)
+      case 1 => w.add("mimetype", "application/epub+zip".getBytes("UTF-8"), deflate = false)
       case _ => ()
     }
     for (i <- 0 until (k % 12 + 1).toInt)
-      entry(s"part/e$i.txt",
-        s"entry $i of doc $docId in $lang".getBytes("UTF-8"))
-    val cdOff = out.size().toLong
-    val cdBytes = cd.toByteArray
-    out.write(cdBytes)
-    u32(out, 0x06054b50L); u16(out, 0); u16(out, 0)
-    u16(out, nEntries); u16(out, nEntries)
-    u32(out, cdBytes.length.toLong); u32(out, cdOff); u16(out, 0)
-    out.toByteArray
+      w.add(s"part/e$i.txt",
+        s"entry $i of doc $docId in $lang".getBytes("UTF-8"), deflate = false)
+    w.result()
   }
 
   // ------------------------------------------------------------------

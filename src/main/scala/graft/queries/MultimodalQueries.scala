@@ -1985,7 +1985,6 @@ object MultimodalQueries {
           .when(slot === 5, Tar.packTar(col("doc_id"), col("lang")))
           .otherwise(graft.ops.Avif.packAvif(col("doc_id")))
         val route = udf((b: Array[Byte]) => {
-          def u8(i: Int) = b(i) & 0xff
           if (b == null || b.length < 4) ("unknown", 0L, 0L)
           else if (b(0) == 'P' && b(1) == 'K') {
             val m = Zip.zipMeta(b)
@@ -1994,7 +1993,7 @@ object MultimodalQueries {
           } else if (b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
             val m = Mp3.mp3Meta(b)
             if (m == null) ("mp3", 0L, 0L) else ("mp3", 1L, m.durationMs)
-          } else if (u8(0) == 0 && u8(1) == 0 && u8(2) == 1 && u8(3) == 0) {
+          } else if (b(0) == 0 && b(1) == 0 && b(2) == 1 && b(3) == 0) {
             val m = Ico.icoStats(b)
             if (m == null) ("ico", 0L, 0L) else ("ico", 1L, m.nImages)
           } else if (b(0) == '%' && b(1) == 'P' && b(2) == 'D' && b(3) == 'F') {

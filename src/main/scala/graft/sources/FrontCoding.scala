@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.core.Bytes.{i32be, put32be}
+
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -41,15 +43,9 @@ object FrontCoding {
     out.write(v.toInt)
   }
 
-  private def writeU32(out: ByteArrayOutputStream, v: Int): Unit = {
-    out.write((v >>> 24) & 0xff); out.write((v >>> 16) & 0xff)
-    out.write((v >>> 8) & 0xff); out.write(v & 0xff)
-  }
-
   private def readU32(b: Array[Byte], at: Int): Int = {
     require(at >= 0 && at + 4 <= b.length, "truncated trailer")
-    ((b(at) & 0xff) << 24) | ((b(at + 1) & 0xff) << 16) |
-      ((b(at + 2) & 0xff) << 8) | (b(at + 3) & 0xff)
+    i32be(b, at)
   }
 
   private final class Reader(b: Array[Byte], end: Int) {
@@ -114,8 +110,8 @@ object FrontCoding {
       prev = cur
       i += 1
     }
-    restarts.foreach(writeU32(out, _))
-    writeU32(out, restarts.length)
+    restarts.foreach(put32be(out, _))
+    put32be(out, restarts.length)
     out.toByteArray
   }
 

@@ -55,7 +55,7 @@ object ParquetFooter {
     def fail(): Unit = failed = true
     def u8(): Int = {
       if (failed || pos >= end) { fail(); 0 }
-      else { val v = b(pos) & 0xff; pos += 1; v }
+      else { pos += 1; graft.core.Bytes.u8(b, pos - 1) }
     }
     def varint(): Long = {
       var shift = 0

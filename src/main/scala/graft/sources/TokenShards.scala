@@ -94,12 +94,10 @@ object TokenShards {
             }))
           val bin = fs.create(binTmp, true)
           val idx = fs.create(idxTmp, true)
-          // little-endian scratch buffers (FSDataOutputStream itself is
-          // big-endian DataOutput — bypass it with explicit buffers)
-          def le32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
-          def le64(v: Long): Array[Byte] = java.nio.ByteBuffer.allocate(8)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(v).array()
+          // one little-endian index entry (FSDataOutputStream itself is
+          // big-endian DataOutput — bypass it with an explicit buffer)
+          val entry = java.nio.ByteBuffer.allocate(IdxEntryBytes)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
           var min = Long.MaxValue
           var max = Long.MinValue
           var nDocs = 0L
@@ -107,7 +105,8 @@ object TokenShards {
           it.foreach { r =>
             val k = r.getLong(0)
             val ids = r.getSeq[Int](1)
-            idx.write(le64(k)); idx.write(le64(off)); idx.write(le32(ids.length))
+            entry.clear(); entry.putLong(k).putLong(off).putInt(ids.length)
+            idx.write(entry.array())
             val buf = java.nio.ByteBuffer.allocate(ids.length * 4)
               .order(java.nio.ByteOrder.LITTLE_ENDIAN)
             ids.foreach(buf.putInt)

@@ -1,5 +1,7 @@
 package graft.sources
 
+import graft.core.Bytes.u32le
+
 import java.io.{ByteArrayInputStream, EOFException, IOException, InputStream}
 
 import com.github.luben.zstd.ZstdInputStream
@@ -190,9 +192,7 @@ object ZstdMembers {
   private[sources] val MaxDictBytes = 8 << 20
 
   private def isZstdFrame(b: Array[Byte], off: Int): Boolean =
-    b.length >= off + 4 && (b(off) & 0xff) == 0x28 &&
-      (b(off + 1) & 0xff) == 0xb5 && (b(off + 2) & 0xff) == 0x2f &&
-      (b(off + 3) & 0xff) == 0xfd
+    b.length >= off + 4 && u32le(b, off) == 0xfd2fb528L
 
   /** The dictionary slot's usable bytes: raw content, or a zstd frame
     * inflated under [[MaxDictBytes]]. */
@@ -210,11 +210,7 @@ object ZstdMembers {
   /** Embedded ID of a formatted dictionary (magic 0xEC30A437, RFC 8878
     * §5); 0 for a raw-content dictionary. */
   private[sources] def embeddedDictId(bytes: Array[Byte]): Long =
-    if (bytes.length >= 8 && (bytes(0) & 0xff) == 0x37 &&
-        (bytes(1) & 0xff) == 0xa4 && (bytes(2) & 0xff) == 0x30 &&
-        (bytes(3) & 0xff) == 0xec)
-      (bytes(4) & 0xffL) | ((bytes(5) & 0xffL) << 8) |
-        ((bytes(6) & 0xffL) << 16) | ((bytes(7) & 0xffL) << 24)
+    if (bytes.length >= 8 && u32le(bytes, 0) == 0xec30a437L) u32le(bytes, 4)
     else 0L
 
   /** Scan the HEAD of whole-archive bytes for the warc-zstd dictionary
@@ -228,13 +224,10 @@ object ZstdMembers {
   def dictAtHead(bytes: Array[Byte]): Array[Byte] = {
     if (bytes == null) return null
     var i = 0
-    def le32(p: Int): Long =
-      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
     while (i + 8 <= bytes.length) {
-      val magic = le32(i)
+      val magic = u32le(bytes, i)
       if (magic >= 0x184d2a50L && magic <= 0x184d2a5fL) {
-        val n = le32(i + 4)
+        val n = u32le(bytes, i + 4)
         if (i + 8 + n > bytes.length) return null
         if (magic == 0x184d2a5dL) {
           // The dict budget applies only to the dict slot itself; a large
@@ -254,16 +247,13 @@ object ZstdMembers {
     * whose stream pointer is left untouched. */
   def dictAtHead(in: org.apache.hadoop.fs.FSDataInputStream): Array[Byte] = {
     val hdr = new Array[Byte](8)
-    def le32(p: Int): Long =
-      (hdr(p) & 0xffL) | ((hdr(p + 1) & 0xffL) << 8) |
-        ((hdr(p + 2) & 0xffL) << 16) | ((hdr(p + 3) & 0xffL) << 24)
     var pos = 0L
     while (true) {
       try in.readFully(pos, hdr, 0, 8)
       catch { case _: java.io.EOFException => return null }
-      val magic = le32(0)
+      val magic = u32le(hdr, 0)
       if (magic >= 0x184d2a50L && magic <= 0x184d2a5fL) {
-        val n = le32(4)
+        val n = u32le(hdr, 4)
         if (magic == 0x184d2a5dL) {
           // Budget-check only the dict slot; other skippable frames (any
           // size) are stepped over on the positioned-read path too.

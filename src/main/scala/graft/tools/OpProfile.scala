@@ -10,6 +10,9 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 /** Scratch profiler (r20 optimization round; not part of the library
   * surface): run registry queries through the noop sink and report
   *   - wall seconds per run (two runs; min is the noise-floor estimate),
+  *     split into build (the registry builder call, eager staging and
+  *     checkpoints included) and plan (analysis, optimization and
+  *     physical planning of the final frame); the rest is execution,
   *   - total shuffle read/write bytes from task metrics,
   *   - a per-JOB wall breakdown (eager builder work — staging writes,
   *     checkpoint rounds — shows up as its own jobs, invisible in any
@@ -25,10 +28,7 @@ object OpProfile {
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val showPlan = args.contains("--plan")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val shuffleWrite = new AtomicLong
@@ -96,11 +96,14 @@ object OpProfile {
             shuffleWrite.set(0); shuffleRead.set(0)
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
-            val tBuild = (System.nanoTime() - t0) / 1e9
+            val t1 = System.nanoTime()
+            df.queryExecution.executedPlan // force planning
+            val t2 = System.nanoTime()
             df.write.format("noop").mode("overwrite").save()
             val sec = (System.nanoTime() - t0) / 1e9
             Thread.sleep(1500) // listener bus drain
-            println(f"[opprofile] $name%-28s run$i ${sec}%7.2f s (build ${tBuild}%5.2f) " +
+            println(f"[opprofile] $name%-28s run$i ${sec}%7.2f s " +
+              f"(build ${(t1 - t0) / 1e9}%5.2f plan ${(t2 - t1) / 1e9}%5.2f) " +
               f"shufW=${shuffleWrite.get / 1e6}%8.1fMB shufR=${shuffleRead.get / 1e6}%8.1fMB")
             val rows = jobRows.toArray(Array.empty[String])
             if (rows.length > 1 && i == reps) rows.foreach(println)

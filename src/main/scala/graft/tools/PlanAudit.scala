@@ -29,10 +29,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outMd) = args: @unchecked
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class Row(name: String, cartesian: Int, windows: Int,

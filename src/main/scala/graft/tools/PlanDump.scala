@@ -24,10 +24,7 @@ object PlanDump {
     // soak scale (Iterative.planOnly's contract): use --exec there.
     val exec = args.contains("--exec")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

@@ -78,6 +78,18 @@ class MultimodalSpec extends AnyFunSuite with SparkSuite {
     assert(Multimodal.parseImageHeader(Array[Byte]())._1 == "unknown")
   }
 
+  test("PNG IHDR dimensions past 2^31-1 are no shape") {
+    // signature + IHDR (width 0x80000000, height 4) + CRC: 33 bytes
+    val head = ByteWalkerFuzzSpec.PngWideIhdr
+    assert(head.length == 33)
+    assert(Multimodal.parseImageHeader(head) == (("png", -1, -1)))
+    val tall = head.clone()
+    tall(16) = 0; tall(20) = 0x80.toByte // width 0, height 0x80000004
+    assert(Multimodal.parseImageHeader(tall) == (("png", -1, -1)))
+    tall(20) = 0x7f; tall(21) = 0xff.toByte // height 0x7fff0004 fits
+    assert(Multimodal.parseImageHeader(tall) == (("png", 0, 0x7fff0004)))
+  }
+
   test("packImage synthesizes bytes the real parser round-trips") {
     import spark.implicits._
     val df = Seq((0L, 16, 9), (1L, 1897, 1061), (2L, 65535, 65535), (3L, 4000, 3000),

@@ -91,9 +91,9 @@ object Multimodal {
   def parseImageHeader(b: Array[Byte]): (String, Int, Int) = {
     if (b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
         b(3) == 'G' && fourCC(b, 12) == "IHDR") {
-      // PNG caps each dimension at 2^31-1: a set top bit is no shape
+      // PNG dimensions are 1 to 2^31-1: zero or a set top bit is no shape
       val w = i32be(b, 16); val h = i32be(b, 20)
-      if (w < 0 || h < 0) ("png", -1, -1) else ("png", w, h)
+      if (w <= 0 || h <= 0) ("png", -1, -1) else ("png", w, h)
     } else if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
         b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a')
       ("gif", u16le(b, 6), u16le(b, 8))

@@ -126,10 +126,11 @@ object InteractiveQueries {
     // (archive_file, byte_offset) lookup — the reference resolves a URL
     // fingerprint to its stored location and seeks (MasterServer content
     // fetch; queryserver detail query). The real seekable index over ARC
-    // members is ArcSource.readIndex/fetchRecordAt (SourcesSpec
-    // round-trips it); this oracle analog replays the index layout over
-    // `documents`: one archive per source, offsets = running byte sums in
-    // doc_id order, and the fetched content identity checked via md5.
+    // members is the graft-arc scan's (arc_file, offset) columns, read
+    // back by ArcSource.fetchRecordAt (i8); this oracle analog replays the
+    // index layout over `documents`: one archive per source, offsets =
+    // running byte sums in doc_id order, and the fetched content identity
+    // checked via md5.
     Q(
       "i7_content_fetch",
       (s, dir) => {

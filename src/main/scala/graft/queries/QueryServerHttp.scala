@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.sources.v2.{ArcFormat, WarcFormat}
+
 /** Thin HTTP front end over [[QueryServer]] — the serving shape of the
   * reference's QueryServerFE, which registers one servlet per named
   * query over the master's query engine (QueryServerFE.java:111-118,
@@ -47,27 +49,36 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
           java.net.URLDecoder.decode(v, UTF_8)
       }.toMap
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
+  private def respond(ex: HttpExchange, code: Int, body: Array[Byte],
+      contentType: String): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(code, body.length.toLong)
     val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
+    try os.write(body) finally os.close()
   }
 
   private def handle(ex: HttpExchange)(f: => String): Unit =
-    try respond(ex, 200, f)
-    catch {
-      case e: QueryServerHttp.TooManyJobsException =>
-        respond(ex, 429, s"""{"error":${jsonStr(e.getMessage)}}""")
-      // bad request names / sort columns surface as require() or map
-      // lookups — client errors, not server faults
+    handleBytes(ex)((f.getBytes(UTF_8), "application/json"))
+
+  /** Serves `f`'s (body, content type), or a JSON error: 429 at the job
+    * cap, 400 for client errors, 500 for anything else. */
+  private def handleBytes(ex: HttpExchange)(f: => (Array[Byte], String)): Unit = {
+    def error(code: Int, msg: String): Unit =
+      respond(ex, code, s"""{"error":${jsonStr(msg)}}""".getBytes(UTF_8),
+        "application/json")
+    try {
+      val (body, contentType) = f
+      respond(ex, 200, body, contentType)
+    } catch {
+      case e: QueryServerHttp.TooManyJobsException => error(429, e.getMessage)
+      // bad request names / sort columns / numbers surface as require(),
+      // map lookups or NumberFormatException (an IllegalArgumentException)
+      // — client errors, not server faults
       case e @ (_: IllegalArgumentException | _: NoSuchElementException) =>
-        respond(ex, 400, s"""{"error":${jsonStr(e.getMessage)}}""")
-      case e: Exception =>
-        respond(ex, 500, s"""{"error":${jsonStr(e.toString)}}""")
-    }
-    finally ex.close()
+        error(400, e.getMessage)
+      case e: Exception => error(500, e.toString)
+    } finally ex.close()
+  }
 
   private def jsonStr(s: String): String =
     "\"" + Option(s).getOrElse("").flatMap {
@@ -83,16 +94,20 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
     // layer bounds paging the same way (ClientQueryInfo's bounded window,
     // queryserver.jr:50-62). Violations → 400 via the handle() path.
     val pageSize = p.getOrElse("pageSize", "25").toInt
-    require(pageSize >= 1 && pageSize <= QueryServerHttp.MaxPageSize,
-      s"pageSize must be in [1, ${QueryServerHttp.MaxPageSize}], got $pageSize")
     val offset = p.getOrElse("offset", "0").toLong
-    require(offset >= 0, s"offset must be >= 0, got $offset")
+    checkPage(offset, pageSize)
     server.PageRequest(
       sortBy = p.getOrElse("sortBy",
         throw new IllegalArgumentException("missing sortBy parameter")),
       ascending = p.getOrElse("dir", "asc") != "desc",
       offset = offset,
       pageSize = pageSize)
+  }
+
+  private def checkPage(offset: Long, pageSize: Int): Unit = {
+    require(pageSize >= 1 && pageSize <= QueryServerHttp.MaxPageSize,
+      s"pageSize must be in [1, ${QueryServerHttp.MaxPageSize}], got $pageSize")
+    require(offset >= 0, s"offset must be >= 0, got $offset")
   }
 
   http.createContext("/query/", (ex: HttpExchange) => handle(ex) {
@@ -210,9 +225,7 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
       val req = j.req.copy(
         offset = p.get("offset").map(_.toLong).getOrElse(j.req.offset),
         pageSize = p.get("pageSize").map(_.toInt).getOrElse(j.req.pageSize))
-      require(req.offset >= 0, s"offset must be >= 0, got ${req.offset}")
-      require(req.pageSize >= 1 && req.pageSize <= QueryServerHttp.MaxPageSize,
-        s"pageSize must be in [1, ${QueryServerHttp.MaxPageSize}], got ${req.pageSize}")
+      checkPage(req.offset, req.pageSize)
       server.page(j.name, req).toJSON.collect().mkString("[", ",", "]")
     } else j.result
   })
@@ -230,50 +243,38 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
   // Only enabled when an archiveRoot is configured; the path must stay
   // under it (no "..", no absolute paths) — the bind is loopback-only,
   // but the root is the contract.
-  http.createContext("/fetch", (ex: HttpExchange) => {
+  http.createContext("/fetch", (ex: HttpExchange) => handleBytes(ex) {
+    val p = params(ex)
+    val root = archiveRoot.getOrElse(
+      throw new IllegalArgumentException("content fetch is not enabled (no archive root)"))
+    val rel = p.getOrElse("file",
+      throw new IllegalArgumentException("missing file parameter"))
+    require(!rel.startsWith("/") && !rel.split("/").contains("..") && rel.nonEmpty,
+      s"file must be a relative path under the archive root, got '$rel'")
+    // the formats' own default file-name patterns decide what is an archive
+    val fileName = rel.substring(rel.lastIndexOf('/') + 1)
+    val warc = WarcFormat.defaultNames.matches(fileName)
+    require(warc || ArcFormat.defaultNames.matches(fileName),
+      s"not an archive file: '$rel'")
+    val offset = p.getOrElse("offset", "0").toLong
+    require(offset >= 0, s"offset must be >= 0, got $offset")
+    val f = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root), rel)
+    val fs = f.getFileSystem(server.spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(f)
     try {
-      val p = params(ex)
-      val root = archiveRoot.getOrElse(
-        throw new IllegalArgumentException("content fetch is not enabled (no archive root)"))
-      val rel = p.getOrElse("file",
-        throw new IllegalArgumentException("missing file parameter"))
-      require(!rel.startsWith("/") && !rel.split("/").contains("..") && rel.nonEmpty,
-        s"file must be a relative path under the archive root, got '$rel'")
-      require(rel.endsWith(".warc.gz") || rel.endsWith(".arc.gz") ||
-          rel.endsWith(".warc.zst"),
-        s"not an archive file: '$rel'")
-      val offset = p.getOrElse("offset", "0").toLong
-      require(offset >= 0, s"offset must be >= 0, got $offset")
-      val f = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root), rel)
-      val fs = f.getFileSystem(server.spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(f)
-      val (payload, mime) =
-        try {
-          // a .warc.zst written with a shared dictionary needs the head
-          // slot before any member decodes (positioned reads — the
-          // stream pointer is untouched before the seek)
-          val dict =
-            if (rel.endsWith(".warc.zst")) graft.sources.ZstdMembers.dictAtHead(in)
-            else null
-          in.seek(offset)
-          if (rel.endsWith(".warc.gz") || rel.endsWith(".warc.zst"))
-            graft.sources.v2.WarcRecords.fetchPayload(in, dict)
-          else {
-            val rec = graft.sources.ArcSource.parseArc(in).next()
-            (rec.content, rec.mimeType)
-          }
-        } finally in.close()
-      ex.getResponseHeaders.set("Content-Type", mime)
-      ex.sendResponseHeaders(200, payload.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(payload) finally os.close()
-    } catch {
-      case e @ (_: IllegalArgumentException | _: NoSuchElementException |
-          _: NumberFormatException) =>
-        respond(ex, 400, s"""{"error":${jsonStr(e.getMessage)}}""")
-      case e: Exception =>
-        respond(ex, 500, s"""{"error":${jsonStr(e.toString)}}""")
-    } finally ex.close()
+      // a .warc.zst written with a shared dictionary needs the head
+      // slot before any member decodes (positioned reads — the
+      // stream pointer is untouched before the seek)
+      val dict =
+        if (rel.endsWith(".warc.zst")) graft.sources.ZstdMembers.dictAtHead(in)
+        else null
+      in.seek(offset)
+      if (warc) graft.sources.v2.WarcRecords.fetchPayload(in, dict)
+      else {
+        val rec = graft.sources.ArcSource.parseArc(in).next()
+        (rec.content, rec.mimeType)
+      }
+    } finally in.close()
   })
 
   http.createContext("/cancel/", (ex: HttpExchange) => handle(ex) {

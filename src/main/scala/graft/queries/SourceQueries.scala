@@ -675,9 +675,10 @@ object SourceQueries {
     ),
 
     // Q5 (content half), end-to-end through real archive bytes: write a
-    // documents slice as ARC, build the (url, arc_file, offset) content
-    // index by walking gzip member spans (reference DatabaseIndexV2's
-    // metadata→archive-location resolution), then POINT-FETCH each probe
+    // documents slice as ARC, read the (url, arc_file, offset) content
+    // index from the graft-arc scan's metadata columns (reference
+    // DatabaseIndexV2's metadata→archive-location resolution, as i10 does
+    // for WARC), then POINT-FETCH each probe
     // url by seeking its member offset and parsing just that record
     // (MasterServer.java:1057 / queryserver.jr:229-233 serve page bytes
     // exactly this way). i7 verifies the offset arithmetic analytically;
@@ -699,15 +700,16 @@ object SourceQueries {
         val fetchAt = udf { (bytes: Array[Byte], off: Long) =>
           ArcSource.fetchRecordAt(bytes, off).content
         }
-        val probes = ArcSource.readIndex(s, out).toDF()
+        // the index is the scan's metadata columns: no payload is read
+        val probes = s.read.format("graft-arc").load(out)
           .filter(element_at(split(col("url"), "/"), -1).cast("long") % 21 === 0)
-          .select(col("url"), col("arcFile"), col("offset"), col("length"))
-        // per-file bytes join: the fetch seeks inside the member span, so
+          .select(col("url"), col("arc_file"), col("offset"), col("length"))
+        // per-file bytes join: the fetch seeks to the member offset, so
         // only probed files are read and only probed members are inflated
         val files = s.read.format("binaryFile")
           .option("pathGlobFilter", "*.arc.gz").load(out)
-          .select(col("path").as("arcFile"), col("content").as("file_bytes"))
-        probes.join(files, "arcFile")
+          .select(col("path").as("arc_file"), col("content").as("file_bytes"))
+        probes.join(files, "arc_file")
           .select(col("url"), col("length"),
             md5(fetchAt(col("file_bytes"), col("offset"))).as("content_md5"))
       },

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.util.zip.GZIPInputStream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** One parsed ARC record (the classic Internet Archive ARC 1.x format the
   * reference crawls into — util/ArcFileReader.java:68,
@@ -90,20 +90,6 @@ object ArcSource {
       .filter(r => !r.url.startsWith("filedesc://"))
   }
 
-  /** One row of the archive content index: where a record's bytes live.
-    * The reference's query server serves archived page content by exactly
-    * this (archive file, byte offset) pair — the detail/content query
-    * resolves a URL fingerprint to the stored location and seeks
-    * (service/queryserver semantics; ArcFileReader seeks members). */
-  final case class ArcIndexEntry(
-      url: String,
-      arcFile: String,
-      offset: Long,
-      compressedLength: Long,
-      mimeType: String,
-      length: Long,
-  )
-
   /** (offset, compressedLength) span of every gzip member in a multi-member
     * archive — the seekable positions a content fetch can jump to. Rides
     * [[GzipMembers]]' offset tracking (the one RFC-1952 member walk in
@@ -123,29 +109,11 @@ object ArcSource {
   }
 
   /** Point content fetch: parse the single record whose gzip member starts
-    * at `offset` — the random-access read the index entries point to. */
+    * at `offset` — the random-access read the `graft-arc` scan's
+    * (`arc_file`, `offset`) columns point to. */
   def fetchRecordAt(bytes: Array[Byte], offset: Long): ArcRecord =
     parseArc(new ByteArrayInputStream(
       bytes, offset.toInt, bytes.length - offset.toInt)).next()
-
-  /** Read ARC files into the content index (one entry per record, version
-    * blocks dropped). Each file is one task; member spans are discovered
-    * by streaming inflation, so the index build is a single scan. */
-  def readIndex(spark: SparkSession, path: String): Dataset[ArcIndexEntry] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.arc.gz")
-      .load(path)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        memberSpans(bytes).iterator.flatMap { case (off, clen) =>
-          val rec = fetchRecordAt(bytes, off)
-          if (rec.url.startsWith("filedesc://")) None
-          else Some(ArcIndexEntry(rec.url, file, off, clen, rec.mimeType, rec.length))
-        }
-      }
-  }
 
   /** Writer for tests/fixtures: one gzip member per record. */
   def writeArc(records: Seq[ArcRecord], withVersionBlock: Boolean = true): Array[Byte] = {

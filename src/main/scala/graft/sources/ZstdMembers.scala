@@ -28,8 +28,9 @@ trait MemberStream {
   * shared dictionary amortized over millions of small records). A
   * formatted dictionary's embedded ID (magic 0xEC30A437, RFC 8878 §5)
   * is checked against each frame's declared ID. Other skippable frames
-  * (RFC 8878 §9.2) are passed over. [[graft.sources.v2.WarcDataWriter]]
-  * still produces self-contained frames.
+  * (RFC 8878 §9.2) are passed over. [[graft.sources.v2.WarcEncoder]]
+  * writes self-contained frames unless `dictSamples` > 0, when it writes
+  * this dictionary slot first.
   *
   * Member boundaries are found by walking the frame's block headers
   * (RFC 8878 §3.1.1: each block header carries its on-wire size, so the

@@ -1,22 +1,13 @@
 package graft.sources.v2
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputStream}
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.GzipMembers
 
@@ -24,7 +15,8 @@ import graft.sources.GzipMembers
   *
   * The reference reads ARC archives with a record-oriented InputFormat
   * (hadoop/io/ARCInputFormat.java:39, util/ArcFileReader.java:68). The
-  * Spark-native re-expression is a `TableProvider` whose scan:
+  * Spark-native re-expression is a `TableProvider` whose scan (shared
+  * with `graft-warc`, see [[ArchiveScan]]):
   *
   *  - **streams** each archive through a fixed 64 KiB window (no whole-file
   *    `binaryFile` buffering, no 2 GiB ceiling — a 100 TB crawl is many
@@ -40,26 +32,16 @@ import graft.sources.GzipMembers
   *    **statistics** (compressed size) so Spark can schedule for locality
   *    and size joins.
   *
-  * Files are one `InputPartition` each: ARC gzip members are not splittable
-  * without a pre-built member index (that index — `ArcSource.readIndex` —
-  * is itself the product of this scan, mirroring the reference's seekable
-  * member model).
+  * Its (`url`, `arc_file`, `offset`, `length`) columns are the seekable
+  * content index a point fetch ([[graft.sources.ArcSource.fetchRecordAt]])
+  * jumps into, mirroring the reference's seekable member model.
   */
-class ArcDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-arc"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ArcTable.schema
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new ArcTable(new CaseInsensitiveStringMap(properties))
-}
+class ArcDataSource extends ArchiveDataSource(ArcFormat)
 
-object ArcTable {
-  /** Full row shape; readers materialize a pruned subset of it. */
-  val schema: StructType = StructType(Seq(
+object ArcFormat extends ArchiveFormat {
+  override val name: String = "graft-arc"
+
+  override val schema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
     StructField("ip", StringType, nullable = false),
     StructField("archive_date", StringType, nullable = false),
@@ -69,318 +51,96 @@ object ArcTable {
     StructField("offset", LongType, nullable = false),
     StructField("content", BinaryType, nullable = false),
   ))
-}
 
-final class ArcTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String =
-    s"graft-arc(${options.getOrDefault("path", "")})"
-  override def schema(): StructType = ArcTable.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ,
-      // writers provide the 5 record fields; length/arc_file/offset are
-      // derived at read time, so the write schema is narrower than the
-      // table's (ArcBatchWrite validates the required set)
-      TableCapability.ACCEPT_ANY_SCHEMA)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new ArcScanBuilder(opts)
+  override val defaultNames = """.*\.arc\.gz""".r
+
+  override val filters = new HeaderFilters(
+    Set("url", "ip", "archive_date", "mime_type"), nullable = false)
+
+  override def newReader(partition: ArchiveInputPartition, conf: Configuration,
+      fieldNames: Array[String], pushed: Array[Filter],
+      ignoreCorrupt: Boolean): PartitionReader[InternalRow] =
+    new ArcPartitionReader(partition, conf, fieldNames, pushed, ignoreCorrupt)
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     ArcWriteBuilder(info)
-}
-
-final class ArcScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = ArcTable.schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ours, residual) = filters.partition(ArcFilters.supported)
-    pushed = ours
-    residual // Spark keeps evaluating only what we can't
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = ArcScan(options, required, pushed)
-}
-
-final case class ArcScan(
-    options: CaseInsensitiveStringMap,
-    required: StructType,
-    pushed: Array[Filter],
-) extends Scan with Batch with SupportsReportStatistics with ArchiveStreamScan {
-
-  override def formatName: String = "graft-arc"
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-arc PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
-      s"ReadSchema: ${required.catalogString}"
-
-  private def hadoopConf: Configuration =
-    SparkSession.active.sparkContext.hadoopConfiguration
-
-  /** Simple `*`/`?` name glob → regex (the `pathGlobFilter` option). */
-  private def globRegex(glob: String): String =
-    glob.flatMap {
-      case '*' => ".*"
-      case '?' => "."
-      case c if "\\.[]{}()+-^$|".contains(c) => "\\" + c
-      case c => c.toString
-    }
-
-  private def listFiles(): Seq[FileStatus] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("graft-arc: 'path' option is required"))
-    val nameRe = globRegex(options.getOrDefault("pathGlobFilter", "*.arc.gz")).r
-    val conf = hadoopConf
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
-    matched.toSeq.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-      else Seq(st)
-    }.filter(st => nameRe.matches(st.getPath.getName))
-      .sortBy(_.getPath.toString)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = hadoopConf
-    listFiles().map { st =>
-      val fs = st.getPath.getFileSystem(conf)
-      val hosts =
-        try fs.getFileBlockLocations(st, 0, st.getLen).flatMap(_.getHosts).distinct
-        catch { case _: Exception => Array.empty[String] }
-      ArcInputPartition(st.getPath.toString, st.getLen, hosts): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    readerFactory()
-
-  /** Shared by the batch and micro-batch paths. */
-  override def readerFactory(): PartitionReaderFactory =
-    ArcReaderFactory(
-      new SerializableConfiguration(hadoopConf),
-      required.fieldNames,
-      pushed,
-      options.getBoolean("ignoreCorruptFiles", false),
-    )
-
-  /** Current sorted file listing, for the streaming offset model. */
-  override def listFilesForStream(): Seq[FileStatus] = listFiles()
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArcMicroBatchStream(this)
-
-  override def estimateStatistics(): Statistics = {
-    val total = listFiles().map(_.getLen).sum
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(total)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
-  }
-}
-
-final case class ArcInputPartition(path: String, length: Long, hosts: Array[String])
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = hosts
-}
-
-final case class ArcReaderFactory(
-    conf: SerializableConfiguration,
-    fieldNames: Array[String],
-    pushed: Array[Filter],
-    ignoreCorrupt: Boolean = false,
-) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ArcPartitionReader(
-      partition.asInstanceOf[ArcInputPartition], conf.value, fieldNames, pushed,
-      ignoreCorrupt)
 }
 
 /** Streams one archive file member-by-member; parses the 5-field ARC header
   * line, applies the pushed predicates, and only then (and only if the
   * `content` column is required) materializes payload bytes. */
 final class ArcPartitionReader(
-    partition: ArcInputPartition,
+    partition: ArchiveInputPartition,
     conf: Configuration,
     fieldNames: Array[String],
     pushed: Array[Filter],
     ignoreCorrupt: Boolean = false,
-) extends PartitionReader[InternalRow] {
+) extends ArchivePartitionReader(ArcFormat, partition, conf, ignoreCorrupt)
+    with HeaderValues {
 
-  private val path = new Path(partition.path)
-  private val raw: InputStream =
-    new BufferedInputStream(path.getFileSystem(conf).open(path), 1 << 16)
   private val members = new GzipMembers(raw)
-  private val needContent = fieldNames.contains("content")
-  private val fileName = UTF8String.fromString(partition.path)
-  private var row: InternalRow = _
+  // the current record's header tokens (url ip date mime … length)
+  private var parts: Array[String] = _
+  private var len = 0L
 
-  private def readHeaderLine(in: InputStream): String = {
-    val buf = new ByteArrayOutputStream(128)
-    var b = in.read()
-    while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
-    if (b == -1 && buf.size() == 0) null else buf.toString("UTF-8")
+  override def header(col: String): String = col match {
+    case "url" => parts(0)
+    case "ip" => parts(1)
+    case "archive_date" => parts(2)
+    case "mime_type" => parts(3)
   }
+  override def recordLength: Long = len
 
-  private def readPayload(in: InputStream, n: Long): Array[Byte] = {
-    val out = new Array[Byte](n.toInt)
-    var off = 0
-    while (off < n) {
-      val r = in.read(out, off, (n - off).toInt)
-      if (r < 0) throw new EOFException(s"ARC payload truncated at $off/$n")
-      off += r
-    }
-    out
-  }
-
-  override def next(): Boolean =
-    try nextRecord()
-    catch {
-      // gzip-layer damage (bad magic, truncated member, payload EOF,
-      // absurd-length allocation): the compressed stream state is
-      // unrecoverable, so with ignoreCorruptFiles the REST of this file
-      // is skipped and the scan moves on — one bad archive out of a
-      // 100 TB crawl must not kill the job. Records already emitted
-      // stand; header-level damage is handled per-member in
-      // nextRecord() without abandoning the file. The catch is limited
-      // to the corruption surface (IOException covers EOF/Zip; a garbage
-      // length allocation surfaces as NegativeArraySizeException) so a
-      // programming error in pushdown/row assembly still fails the task
-      // instead of silently dropping the file's records
-      case e @ (_: java.io.IOException | _: NumberFormatException |
-          _: NegativeArraySizeException) if ignoreCorrupt =>
-        System.err.println(
-          s"graft-arc: skipping corrupt remainder of ${partition.path}: $e")
+  /** Tokenize a header line into `parts`/`len`. Header-level damage
+    * (wrong token count, non-numeric length) is member-level: the gzip
+    * boundary is intact, so under ignoreCorruptFiles this returns false
+    * and just this record is dropped. */
+  private def parseHeader(line: String): Boolean =
+    try {
+      val p = line.trim.split(" ")
+      if (p.length < 5)
+        throw new java.io.IOException(s"malformed ARC header: $line")
+      len = p(p.length - 1).toLong
+      parts = p
+      true
+    } catch {
+      case e @ (_: java.io.IOException | _: NumberFormatException)
+          if ignoreCorrupt =>
+        skipMalformed(e)
         false
     }
 
-  private def nextRecord(): Boolean = {
+  override protected def nextRecord(): Boolean = {
     row = null
     while (row == null) {
       val member = members.nextMember()
       if (member == null) return false
       val offset = members.memberOffset
-      val line = readHeaderLine(member)
-      if (line == null || line.trim.isEmpty) {
-        member.close()
+      val line = ArchiveIO.readLine(member)
+      if (line == null || line.trim.isEmpty || !parseHeader(line) ||
+          parts(0).startsWith("filedesc://") || // version block
+          !ArcFormat.filters.matches(pushed, this)) {
+        member.close() // drained to the boundary; payload never materialized
       } else {
-        // header-level damage (wrong token count, non-numeric length) is
-        // MEMBER-level: the gzip boundary is intact, so with
-        // ignoreCorruptFiles just this record is dropped (member.close()
-        // drains to the boundary) and the file continues — only gzip-layer
-        // failures abort the remainder of the file (catch in next())
-        val parsed =
-          try {
-            val parts = line.trim.split(" ")
-            if (parts.length < 5)
-              throw new java.io.IOException(s"malformed ARC header: $line")
-            Some((parts(0), parts(1), parts(2), parts(3),
-              parts(parts.length - 1).toLong))
-          } catch {
-            case e @ (_: java.io.IOException | _: NumberFormatException)
-                if ignoreCorrupt =>
-              System.err.println(
-                s"graft-arc: skipping malformed record in ${partition.path}: $e")
-              None
+        val values = new Array[Any](fieldNames.length)
+        var i = 0
+        while (i < fieldNames.length) {
+          values(i) = fieldNames(i) match {
+            case "url" => UTF8String.fromString(parts(0))
+            case "ip" => UTF8String.fromString(parts(1))
+            case "archive_date" => UTF8String.fromString(parts(2))
+            case "mime_type" => UTF8String.fromString(parts(3))
+            case "length" => len
+            case "arc_file" => fileName
+            case "offset" => offset
+            case "content" => ArchiveIO.readFully(member, len, "ARC payload")
           }
-        if (parsed.isEmpty) {
-          member.close()
-        } else {
-        val (url, ip, date, mime, len) = parsed.get
-        if (url.startsWith("filedesc://")) { // version block
-          member.close()
-        } else {
-          if (!ArcFilters.matches(pushed, url, ip, date, mime, len)) {
-            member.close() // predicate failed — payload never materialized
-          } else {
-            val values = new Array[Any](fieldNames.length)
-            var i = 0
-            while (i < fieldNames.length) {
-              values(i) = fieldNames(i) match {
-                case "url" => UTF8String.fromString(url)
-                case "ip" => UTF8String.fromString(ip)
-                case "archive_date" => UTF8String.fromString(date)
-                case "mime_type" => UTF8String.fromString(mime)
-                case "length" => len
-                case "arc_file" => fileName
-                case "offset" => offset
-                case "content" => readPayload(member, len)
-              }
-              i += 1
-            }
-            member.close() // drain the record separator / remainder
-            row = new GenericInternalRow(values)
-          }
+          i += 1
         }
-        }
+        member.close() // drain the record separator / remainder
+        row = new GenericInternalRow(values)
       }
     }
     true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = raw.close()
-}
-
-/** The predicate subset evaluable on the header line alone. */
-object ArcFilters {
-  private val stringCols = Set("url", "ip", "archive_date", "mime_type")
-  private val allCols = stringCols + "length"
-
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(a, _: String) => stringCols(a)
-    case StringStartsWith(a, _) => stringCols(a)
-    case StringEndsWith(a, _) => stringCols(a)
-    case StringContains(a, _) => stringCols(a)
-    case In(a, vs) => stringCols(a) && vs.forall(_.isInstanceOf[String])
-    case EqualTo(a, _: Long) => a == "length"
-    case GreaterThan(a, _: Long) => a == "length"
-    case GreaterThanOrEqual(a, _: Long) => a == "length"
-    case LessThan(a, _: Long) => a == "length"
-    case LessThanOrEqual(a, _: Long) => a == "length"
-    case IsNotNull(a) => allCols(a) // vacuously true: fields never null
-    case And(l, r) => supported(l) && supported(r)
-    case Or(l, r) => supported(l) && supported(r)
-    case Not(c) => supported(c)
-    case _ => false
-  }
-
-  def matches(
-      filters: Array[Filter],
-      url: String, ip: String, date: String, mime: String, len: Long): Boolean = {
-    def strVal(a: String): String = a match {
-      case "url" => url
-      case "ip" => ip
-      case "archive_date" => date
-      case "mime_type" => mime
-    }
-    def eval(f: Filter): Boolean = f match {
-      case EqualTo(a, v: String) => strVal(a) == v
-      case StringStartsWith(a, p) => strVal(a).startsWith(p)
-      case StringEndsWith(a, s) => strVal(a).endsWith(s)
-      case StringContains(a, s) => strVal(a).contains(s)
-      case In(a, vs) => vs.exists(_ == strVal(a))
-      case EqualTo("length", v: Long) => len == v
-      case GreaterThan("length", v: Long) => len > v
-      case GreaterThanOrEqual("length", v: Long) => len >= v
-      case LessThan("length", v: Long) => len < v
-      case LessThanOrEqual("length", v: Long) => len <= v
-      case IsNotNull(_) => true
-      case And(l, r) => eval(l) && eval(r)
-      case Or(l, r) => eval(l) || eval(r)
-      case Not(c) => !eval(c)
-      case other =>
-        throw new IllegalStateException(s"unpushable filter slipped through: $other")
-    }
-    filters.forall(eval)
   }
 }

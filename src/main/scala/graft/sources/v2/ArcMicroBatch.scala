@@ -33,18 +33,10 @@ final case class ArcStreamOffset(lastFile: String) extends Offset {
   }
 }
 
-/** The scan surface the archive micro-batch stream needs — implemented by
-  * both the ARC and WARC scans, which share the file-per-partition,
-  * name-watermark streaming model. */
-private[v2] trait ArchiveStreamScan {
-  def listFilesForStream(): Seq[org.apache.hadoop.fs.FileStatus]
-  def readerFactory(): PartitionReaderFactory
-  def formatName: String
-}
+/** Shared by the ARC and WARC scans (file-per-partition, name watermark). */
+final class ArcMicroBatchStream(scan: ArchiveScan) extends MicroBatchStream {
 
-final class ArcMicroBatchStream(scan: ArchiveStreamScan) extends MicroBatchStream {
-
-  private def sortedFiles() = scan.listFilesForStream()
+  private def sortedFiles() = scan.listFiles()
 
   override def initialOffset(): Offset = ArcStreamOffset("")
 
@@ -58,7 +50,7 @@ final class ArcMicroBatchStream(scan: ArchiveStreamScan) extends MicroBatchStrea
     // every already-processed archive as duplicates
     if (json.contains("\"fileCount\""))
       throw new IllegalStateException(
-        s"${scan.formatName}: legacy file-count stream offset $json is not " +
+        s"${scan.format.name}: legacy file-count stream offset $json is not " +
           "supported; restart the stream with a fresh checkpoint location")
     ArcStreamOffset(
       """"lastFile"\s*:\s*"((?:[^"\\]|\\u[0-9a-fA-F]{4}|\\.)*)"""".r
@@ -96,12 +88,12 @@ final class ArcMicroBatchStream(scan: ArchiveStreamScan) extends MicroBatchStrea
         p > from && p <= to
       }
       .map { st =>
-        ArcInputPartition(st.getPath.toString, st.getLen, Array.empty): InputPartition
+        ArchiveInputPartition(st.getPath.toString, st.getLen, Array.empty): InputPartition
       }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory()
+    scan.createReaderFactory()
 
   override def commit(end: Offset): Unit = ()
 

@@ -1,146 +1,62 @@
 package graft.sources.v2
 
+import java.io.OutputStream
 import java.util.zip.GZIPOutputStream
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** The `graft-arc` write path (S7 — the reference's ParserOutputFormat
   * writes crawl output back as ARC archives,
-  * mapred/ec2/parser/ParserOutputFormat.java:81).
+  * mapred/ec2/parser/ParserOutputFormat.java:81), over the shared
+  * [[ArchiveBatchWrite]] protocol.
   *
-  * Each task writes `part-<partition>-<task>[-<seq>].arc.gz` files: a
-  * filedesc:// version block followed by one gzip member per record — the
-  * exact layout the reader streams, so archives round-trip and stay
-  * seekable by member offset. Files ROLL at `rollSize` bytes (default the
-  * reference's 100 MB cap, util/ArcFileWriter.java:88), so one huge task
-  * never produces one huge archive. Task files are written under a
-  * `_temporary` prefix and renamed into place at driver commit (rename is
-  * atomic on HDFS-like stores), so a failed/speculative task never leaves
-  * a partial archive visible.
+  * Each file is a filedesc:// version block followed by one gzip member
+  * per record — the exact layout the reader streams, so archives
+  * round-trip and stay seekable by member offset. `rollSize` defaults to
+  * the reference's 100 MB cap (util/ArcFileWriter.java:88).
   */
 final case class ArcWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = ArcBatchWrite(
-      info.options.get("path"),
-      info.schema(),
-      new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration),
-      info.options.getLong("rollSize", 100000000L))
-  }
-}
-
-final case class ArcBatchWrite(
-    path: String,
-    schema: StructType,
-    conf: SerializableConfiguration,
-    rollSize: Long,
-) extends BatchWrite {
-  require(path != null, "graft-arc: 'path' option is required to write")
-
-  private val required = Seq("url", "ip", "archive_date", "mime_type", "content")
-  require(required.forall(schema.fieldNames.contains),
-    s"graft-arc write needs columns $required, got ${schema.fieldNames.toSeq}")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    ArcWriterFactory(path, schema.fieldNames, conf, rollSize)
-
-  /** NOTE: like Hadoop's v1 file committer, the rename loop is not
-    * atomic across tasks — a rename failure throws after earlier tasks'
-    * archives are already visible. Callers treating the output dir as
-    * transactional should write to a fresh directory per attempt. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    messages.foreach { case ArcCommit(tmps) =>
-      tmps.foreach { tmp =>
-        val src = new Path(tmp)
-        val dst = new Path(dir, src.getName)
-        // rename returns false (not an exception) on e.g. an existing
-        // destination; ignoring it would silently drop the task's archive
-        // and then delete it with _temporary below
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"graft-arc commit: rename $src -> $dst failed (destination exists?)")
-      }
+    override def toBatch: BatchWrite = {
+      val path = info.options.get("path")
+      ArchiveBatchWrite.validate(ArcFormat.name, path, info.schema(),
+        Seq("url", "ip", "archive_date", "mime_type", "content"))
+      val fieldNames = info.schema().fieldNames
+      ArchiveBatchWrite(ArcFormat.name, path,
+        new SerializableConfiguration(
+          SparkSession.active.sparkContext.hadoopConfiguration),
+        info.options.getLong("rollSize", 100000000L),
+        () => new ArcEncoder(fieldNames))
     }
-    fs.delete(new Path(dir, "_temporary"), true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.collect { case ArcCommit(tmps) =>
-      tmps.foreach(t => fs.delete(new Path(t), false))
-    }
-    fs.delete(new Path(path, "_temporary"), true)
   }
 }
 
-final case class ArcCommit(tmpFiles: Seq[String]) extends WriterCommitMessage
-
-final case class ArcWriterFactory(
-    path: String,
-    fieldNames: Array[String],
-    conf: SerializableConfiguration,
-    rollSize: Long,
-) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ArcDataWriter(path, fieldNames, conf, partitionId, taskId, rollSize)
-}
-
-final class ArcDataWriter(
-    dir: String,
-    fieldNames: Array[String],
-    conf: SerializableConfiguration,
-    partitionId: Int,
-    taskId: Long,
-    rollSize: Long,
-) extends DataWriter[InternalRow] {
-
+/** One gzip member per record: `url ip date mime length\n`, the payload,
+  * and a closing newline. */
+final class ArcEncoder(fieldNames: Array[String]) extends ArchiveEncoder {
   private val idx = fieldNames.zipWithIndex.toMap
-  private val fs = new Path(dir).getFileSystem(conf.value)
-  private val done = scala.collection.mutable.ArrayBuffer[String]()
-  private var seq = 0
-  private var tmp: Path = null
-  private var out: org.apache.hadoop.fs.FSDataOutputStream = null
-  openNext()
 
-  /** Start the next archive in the roll sequence: its own filedesc://
-    * version block, so every rolled file is a complete standalone ARC. */
-  private def openNext(): Unit = {
-    val name =
-      if (seq == 0) f"part-$partitionId%05d-$taskId.arc.gz"
-      else f"part-$partitionId%05d-$taskId-$seq%04d.arc.gz"
-    tmp = new Path(new Path(dir, "_temporary"), name)
-    out = fs.create(tmp, true)
-    seq += 1
-    writeMember(
-      s"filedesc://$name 0.0.0.0 20080101000000 text/plain",
+  override def ext: String = "arc.gz"
+
+  override def begin(out: OutputStream, fileName: String): Unit =
+    writeMember(out,
+      s"filedesc://$fileName 0.0.0.0 20080101000000 text/plain",
       "1 0 graft\nURL IP-address Archive-date Content-type Archive-length"
         .getBytes("UTF-8"))
+
+  override def write(out: OutputStream, row: InternalRow): Unit = {
+    val url = row.getUTF8String(idx("url")).toString
+    val ip = row.getUTF8String(idx("ip")).toString
+    val date = row.getUTF8String(idx("archive_date")).toString
+    val mime = row.getUTF8String(idx("mime_type")).toString
+    writeMember(out, s"$url $ip $date $mime", row.getBinary(idx("content")))
   }
 
-  private def roll(): Unit = {
-    out.close()
-    done += tmp.toString
-    openNext()
-  }
-
-  /** Shields the shared file stream from GZIPOutputStream.close(), so
-    * each member's close() can release its native Deflater (finish()
-    * alone never calls Deflater.end() — one leaked native buffer per
-    * record would OOM a large task) while the archive stays open. */
-  private final class NonClosing(o: java.io.OutputStream)
-      extends java.io.FilterOutputStream(o) {
-    override def close(): Unit = flush()
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
-  }
-
-  private def writeMember(headerPrefix: String, payload: Array[Byte]): Unit = {
+  private def writeMember(out: OutputStream, headerPrefix: String,
+      payload: Array[Byte]): Unit = {
     val gz = new GZIPOutputStream(new NonClosing(out))
     gz.write(s"$headerPrefix ${payload.length}".getBytes("UTF-8"))
     gz.write('\n')
@@ -148,30 +64,4 @@ final class ArcDataWriter(
     gz.write('\n')
     gz.close() // member boundary: finish + end() the deflater; file stays open
   }
-
-  override def write(row: InternalRow): Unit = {
-    val url = row.getUTF8String(idx("url")).toString
-    val ip = row.getUTF8String(idx("ip")).toString
-    val date = row.getUTF8String(idx("archive_date")).toString
-    val mime = row.getUTF8String(idx("mime_type")).toString
-    val content = row.getBinary(idx("content"))
-    // roll LAZILY (before the next record, not after the last): an eager
-    // post-write roll would commit a trailing archive holding only the
-    // filedesc block when the final record crosses the cap
-    if (out.getPos >= rollSize) roll()
-    writeMember(s"$url $ip $date $mime", content)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    done += tmp.toString
-    ArcCommit(done.toSeq)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    (done.toSeq :+ tmp.toString).foreach(t => fs.delete(new Path(t), false))
-  }
-
-  override def close(): Unit = ()
 }

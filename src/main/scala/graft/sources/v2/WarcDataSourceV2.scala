@@ -1,22 +1,15 @@
 package graft.sources.v2
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, InputStream}
-import java.util.OptionalLong
+import java.io.{BufferedInputStream, IOException, InputStream}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{GzipMembers, MemberStream, ZstdMembers}
 
@@ -45,25 +38,16 @@ import graft.sources.{GzipMembers, MemberStream, ZstdMembers}
   *    itself. The split only runs when a block-derived column survives
   *    pruning.
   */
-class WarcDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-warc"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarcTable.schema
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new WarcTable(new CaseInsensitiveStringMap(properties))
-}
+class WarcDataSource extends ArchiveDataSource(WarcFormat)
 
-object WarcTable {
-  /** Full row shape; readers materialize a pruned subset.
-    * Header-derived fields are non-null (a record missing a mandatory
+object WarcFormat extends ArchiveFormat {
+  override val name: String = "graft-warc"
+
+  /** Header-derived fields are non-null (a record missing a mandatory
     * header is malformed); block-derived fields (`http_status`,
     * `mime_type`, `payload`) are null for records without an HTTP
     * envelope. */
-  val schema: StructType = StructType(Seq(
+  override val schema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = true), // warcinfo has no target URI
     StructField("warc_type", StringType, nullable = false),
     StructField("warc_date", StringType, nullable = false),
@@ -90,137 +74,24 @@ object WarcTable {
       MapType(StringType, StringType, valueContainsNull = false), nullable = false),
   ))
 
+  /** Both member codecs; an explicit pathGlobFilter narrows to one. */
+  override val defaultNames = """.*\.warc\.(gz|zst)""".r
+
+  override val filters = new HeaderFilters(
+    Set("url", "warc_type", "warc_date", "record_id", "ip", "content_type"),
+    nullable = true)
+
   /** Columns that require reading (or splitting) the record block. */
   private[v2] val blockCols =
     Set("content", "payload", "http_status", "mime_type", "http_headers")
-}
 
-final class WarcTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String =
-    s"graft-warc(${options.getOrDefault("path", "")})"
-  override def schema(): StructType = WarcTable.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ,
-      // writers provide the record fields; length/record_id/warc_file/
-      // offset are derived (WarcBatchWrite validates the required set)
-      TableCapability.ACCEPT_ANY_SCHEMA)
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(opts)
+  override def newReader(partition: ArchiveInputPartition, conf: Configuration,
+      fieldNames: Array[String], pushed: Array[Filter],
+      ignoreCorrupt: Boolean): PartitionReader[InternalRow] =
+    new WarcPartitionReader(partition, conf, fieldNames, pushed, ignoreCorrupt)
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     WarcWriteBuilder(info)
-}
-
-final class WarcScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = WarcTable.schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ours, residual) = filters.partition(WarcFilters.supported)
-    pushed = ours
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = WarcScan(options, required, pushed)
-}
-
-final case class WarcScan(
-    options: CaseInsensitiveStringMap,
-    required: StructType,
-    pushed: Array[Filter],
-) extends Scan with Batch with SupportsReportStatistics with ArchiveStreamScan {
-
-  override def formatName: String = "graft-warc"
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-warc PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
-      s"ReadSchema: ${required.catalogString}"
-
-  private def hadoopConf: Configuration =
-    SparkSession.active.sparkContext.hadoopConfiguration
-
-  private def globRegex(glob: String): String =
-    glob.flatMap {
-      case '*' => ".*"
-      case '?' => "."
-      case c if "\\.[]{}()+-^$|".contains(c) => "\\" + c
-      case c => c.toString
-    }
-
-  private def listFiles(): Seq[FileStatus] = {
-    val path = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("graft-warc: 'path' option is required"))
-    // default accepts both member codecs; an explicit pathGlobFilter
-    // narrows to one
-    val nameRe = Option(options.get("pathGlobFilter"))
-      .map(g => globRegex(g).r)
-      .getOrElse(""".*\.warc\.(gz|zst)""".r)
-    val conf = hadoopConf
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
-    matched.toSeq.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-      else Seq(st)
-    }.filter(st => nameRe.matches(st.getPath.getName))
-      .sortBy(_.getPath.toString)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = hadoopConf
-    listFiles().map { st =>
-      val fs = st.getPath.getFileSystem(conf)
-      val hosts =
-        try fs.getFileBlockLocations(st, 0, st.getLen).flatMap(_.getHosts).distinct
-        catch { case _: Exception => Array.empty[String] }
-      ArcInputPartition(st.getPath.toString, st.getLen, hosts): InputPartition
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = readerFactory()
-
-  override def readerFactory(): PartitionReaderFactory =
-    WarcReaderFactory(
-      new SerializableConfiguration(hadoopConf),
-      required.fieldNames,
-      pushed,
-      options.getBoolean("ignoreCorruptFiles", false),
-    )
-
-  override def listFilesForStream(): Seq[FileStatus] = listFiles()
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArcMicroBatchStream(this)
-
-  override def estimateStatistics(): Statistics = {
-    val total = listFiles().map(_.getLen).sum
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(total)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
-  }
-}
-
-final case class WarcReaderFactory(
-    conf: SerializableConfiguration,
-    fieldNames: Array[String],
-    pushed: Array[Filter],
-    ignoreCorrupt: Boolean = false,
-) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(
-      partition.asInstanceOf[ArcInputPartition], conf.value, fieldNames, pushed,
-      ignoreCorrupt)
 }
 
 /** Streams one WARC file record-by-record. Named headers are parsed and
@@ -229,73 +100,38 @@ final case class WarcReaderFactory(
   * The HTTP envelope split runs only when a block-derived column is in
   * the read schema. */
 final class WarcPartitionReader(
-    partition: ArcInputPartition,
+    partition: ArchiveInputPartition,
     conf: Configuration,
     fieldNames: Array[String],
     pushed: Array[Filter],
     ignoreCorrupt: Boolean = false,
-) extends PartitionReader[InternalRow] {
+) extends ArchivePartitionReader(WarcFormat, partition, conf, ignoreCorrupt)
+    with HeaderValues {
 
-  private val path = new Path(partition.path)
-  private val raw: InputStream =
-    new BufferedInputStream(path.getFileSystem(conf).open(path), 1 << 16)
   // member codec by extension: `.warc.zst` = one zstd frame per record
   // (same seekable-offset contract), anything else the gzip layout
   private val members: MemberStream =
     if (partition.path.endsWith(".zst")) new ZstdMembers(raw)
     else new GzipMembers(raw)
-  private val needBlock = fieldNames.exists(WarcTable.blockCols)
+  private val needBlock = fieldNames.exists(WarcFormat.blockCols)
   private val needSplit = fieldNames.exists(f =>
     f == "payload" || f == "http_status" || f == "mime_type" || f == "http_headers")
-  private val fileName = UTF8String.fromString(partition.path)
   private var member: InputStream = _
   private var memberStart: Long = 0L
-  private var row: InternalRow = _
+  // the current record's named headers and the typed fields drawn from them
+  private var headers: scala.collection.mutable.LinkedHashMap[String, String] = _
+  private var url, wtype, date, recId, ip, ctype: String = _
+  private var len = 0L
 
-  /** Read one CRLF/LF-terminated line; null at end of stream. */
-  private def readLine(in: InputStream): String = {
-    val buf = new ByteArrayOutputStream(128)
-    var b = in.read()
-    while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
-    if (b == -1 && buf.size() == 0) return null
-    val s = buf.toString("UTF-8")
-    if (s.endsWith("\r")) s.substring(0, s.length - 1) else s
+  override def header(col: String): String = col match {
+    case "url" => url
+    case "warc_type" => wtype
+    case "warc_date" => date
+    case "record_id" => recId
+    case "ip" => ip
+    case "content_type" => ctype
   }
-
-  private def readBlock(in: InputStream, n: Long): Array[Byte] = {
-    val out = new Array[Byte](n.toInt)
-    var off = 0
-    while (off < n) {
-      val r = in.read(out, off, (n - off).toInt)
-      if (r < 0) throw new EOFException(s"WARC block truncated at $off/$n")
-      off += r
-    }
-    out
-  }
-
-  private def skipBlock(in: InputStream, n: Long): Unit = {
-    var left = n
-    while (left > 0) {
-      val r = in.skip(left)
-      if (r > 0) left -= r
-      else if (in.read() >= 0) left -= 1 // skip() can return 0 mid-stream
-      else throw new EOFException(s"WARC block truncated with $left/$n left")
-    }
-  }
-
-  override def next(): Boolean =
-    try nextRecord()
-    catch {
-      // same corruption policy as graft-arc: gzip-layer or block-length
-      // damage abandons the remainder of THIS file under
-      // ignoreCorruptFiles; header-level damage is handled per-record in
-      // nextRecord() without abandoning the file
-      case e @ (_: java.io.IOException | _: NumberFormatException |
-          _: NegativeArraySizeException) if ignoreCorrupt =>
-        System.err.println(
-          s"graft-warc: skipping corrupt remainder of ${partition.path}: $e")
-        false
-    }
+  override def recordLength: Long = len
 
   /** Advance to the next record's `WARC/` magic line, crossing member
     * boundaries; null at end of archive. */
@@ -306,109 +142,92 @@ final class WarcPartitionReader(
         if (member == null) return null
         memberStart = members.memberOffset
       }
-      val line = readLine(member)
+      val line = ArchiveIO.readLine(member)
       if (line == null) { member.close(); member = null } // member exhausted
       else if (line.nonEmpty) return line // blank = inter-record CRLFs
     }
     null // unreachable
   }
 
-  private def nextRecord(): Boolean = {
+  /** Parse the named headers after `magic`. Header-level damage leaves
+    * the member boundary intact: under ignoreCorruptFiles this returns
+    * false, and the scan drops just this record and continues at the
+    * next member. */
+  private def parseHeaders(magic: String): Boolean =
+    try {
+      if (!magic.startsWith("WARC/"))
+        throw new java.io.IOException(s"not a WARC record header: $magic")
+      val h = WarcRecords.readHeaders(member)
+      len = WarcRecords.contentLength(h)
+      headers = h
+      url = h.getOrElse("warc-target-uri", null)
+      wtype = h.getOrElse("warc-type", "unknown")
+      date = h.getOrElse("warc-date", "")
+      recId = h.getOrElse("warc-record-id", "")
+      ip = h.getOrElse("warc-ip-address", null)
+      ctype = h.getOrElse("content-type", null)
+      true
+    } catch {
+      case e @ (_: java.io.IOException | _: NumberFormatException)
+          if ignoreCorrupt =>
+        skipMalformed(e)
+        if (member != null) { member.close(); member = null }
+        false
+    }
+
+  override protected def nextRecord(): Boolean = {
     row = null
     while (row == null) {
       val magic = nextMagic()
       if (magic == null) return false
       val offset = memberStart
-      val parsed =
-        try {
-          if (!magic.startsWith("WARC/"))
-            throw new java.io.IOException(s"not a WARC record header: $magic")
-          // named headers up to the blank separator line; folded
-          // continuation lines (obsolete but legal) are appended
-          val headers = scala.collection.mutable.LinkedHashMap[String, String]()
-          var last: String = null
-          var line = readLine(member)
-          while (line != null && line.nonEmpty) {
-            if ((line.head == ' ' || line.head == '\t') && last != null) {
-              headers(last) = headers(last) + " " + line.trim
-            } else {
-              val i = line.indexOf(':')
-              if (i < 0) throw new java.io.IOException(s"malformed WARC header line: $line")
-              last = line.substring(0, i).trim.toLowerCase
-              headers(last) = line.substring(i + 1).trim
-            }
-            line = readLine(member)
+      if (!parseHeaders(magic)) () // malformed header: record dropped
+      else if (!WarcFormat.filters.matches(pushed, this)) {
+        ArchiveIO.skipFully(member, len, "WARC block") // block never allocated
+      } else {
+        val block =
+          if (needBlock) ArchiveIO.readFully(member, len, "WARC block")
+          else { ArchiveIO.skipFully(member, len, "WARC block"); null }
+        // HTTP envelope split (response/request/revisit records carry
+        // an application/http block per the spec)
+        val (status, mime, payload, httpHeaders) =
+          if (needSplit && block != null && ctype != null &&
+              ctype.toLowerCase.startsWith("application/http"))
+            WarcHttp.split(block, needHeaders = fieldNames.contains("http_headers"))
+          else (null, null, block, null)
+        val values = new Array[Any](fieldNames.length)
+        var i = 0
+        while (i < fieldNames.length) {
+          values(i) = fieldNames(i) match {
+            case "url" => if (url == null) null else UTF8String.fromString(url)
+            case "warc_type" => UTF8String.fromString(wtype)
+            case "warc_date" => UTF8String.fromString(date)
+            case "record_id" => UTF8String.fromString(recId)
+            case "ip" => if (ip == null) null else UTF8String.fromString(ip)
+            case "content_type" =>
+              if (ctype == null) null else UTF8String.fromString(ctype)
+            case "length" => len
+            case "http_status" => status
+            case "mime_type" => mime
+            case "warc_file" => fileName
+            case "offset" => offset
+            case "content" => block
+            case "payload" => payload
+            case "http_headers" => httpHeaders
+            case "warc_headers" =>
+              new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+                new org.apache.spark.sql.catalyst.util.GenericArrayData(
+                  headers.keys.map(UTF8String.fromString).toArray[Any]),
+                new org.apache.spark.sql.catalyst.util.GenericArrayData(
+                  headers.values.map(UTF8String.fromString).toArray[Any]))
           }
-          val len = headers.getOrElse("content-length",
-            throw new java.io.IOException("WARC record missing Content-Length")).toLong
-          Some((headers, len))
-        } catch {
-          // header-level damage: the member boundary is intact, so drop
-          // just this record and continue at the next member
-          case e @ (_: java.io.IOException | _: NumberFormatException)
-              if ignoreCorrupt =>
-            System.err.println(
-              s"graft-warc: skipping malformed record in ${partition.path}: $e")
-            if (member != null) { member.close(); member = null }
-            None
+          i += 1
         }
-      parsed match {
-        case None => ()
-        case Some((headers, len)) =>
-          val url = headers.getOrElse("warc-target-uri", null)
-          val wtype = headers.getOrElse("warc-type", "unknown")
-          val date = headers.getOrElse("warc-date", "")
-          val recId = headers.getOrElse("warc-record-id", "")
-          val ip = headers.getOrElse("warc-ip-address", null)
-          val ctype = headers.getOrElse("content-type", null)
-          if (!WarcFilters.matches(pushed, url, wtype, date, recId, ip, ctype, len)) {
-            skipBlock(member, len) // predicate failed — block never allocated
-          } else {
-            val block = if (needBlock) readBlock(member, len) else { skipBlock(member, len); null }
-            // HTTP envelope split (response/request/revisit records carry
-            // an application/http block per the spec)
-            val (status, mime, payload, httpHeaders) =
-              if (needSplit && block != null && ctype != null &&
-                  ctype.toLowerCase.startsWith("application/http"))
-                WarcHttp.split(block, needHeaders = fieldNames.contains("http_headers"))
-              else (null, null, block, null)
-            val values = new Array[Any](fieldNames.length)
-            var i = 0
-            while (i < fieldNames.length) {
-              values(i) = fieldNames(i) match {
-                case "url" => if (url == null) null else UTF8String.fromString(url)
-                case "warc_type" => UTF8String.fromString(wtype)
-                case "warc_date" => UTF8String.fromString(date)
-                case "record_id" => UTF8String.fromString(recId)
-                case "ip" => if (ip == null) null else UTF8String.fromString(ip)
-                case "content_type" =>
-                  if (ctype == null) null else UTF8String.fromString(ctype)
-                case "length" => len
-                case "http_status" => status
-                case "mime_type" => mime
-                case "warc_file" => fileName
-                case "offset" => offset
-                case "content" => block
-                case "payload" => payload
-                case "http_headers" => httpHeaders
-                case "warc_headers" =>
-                  new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-                    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                      headers.keys.map(UTF8String.fromString).toArray[Any]),
-                    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                      headers.values.map(UTF8String.fromString).toArray[Any]))
-              }
-              i += 1
-            }
-            row = new GenericInternalRow(values)
-          }
+        row = new GenericInternalRow(values)
       }
     }
     true
   }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = raw.close()
 }
 
 /** Point access to WARC archive bytes: parse the single record whose
@@ -417,6 +236,33 @@ final class WarcPartitionReader(
   * query server seeks archive members the same way for page-content
   * fetches, ArcFileReader member seeks). */
 object WarcRecords {
+
+  /** The named headers up to the blank line that ends them, names
+    * lowercased, in order; a folded continuation line (one that starts
+    * with a space or tab — obsolete but legal) joins the header before
+    * it. The one header parser of the scan and the point fetch. */
+  def readHeaders(in: InputStream): scala.collection.mutable.LinkedHashMap[String, String] = {
+    val headers = scala.collection.mutable.LinkedHashMap[String, String]()
+    var last: String = null
+    var line = ArchiveIO.readLine(in)
+    while (line != null && line.nonEmpty) {
+      if ((line.head == ' ' || line.head == '\t') && last != null) {
+        headers(last) = headers(last) + " " + line.trim
+      } else {
+        val i = line.indexOf(':')
+        if (i < 0) throw new IOException(s"malformed WARC header line: $line")
+        last = line.substring(0, i).trim.toLowerCase
+        headers(last) = line.substring(i + 1).trim
+      }
+      line = ArchiveIO.readLine(in)
+    }
+    headers
+  }
+
+  /** The record's block length (`Content-Length`). */
+  def contentLength(headers: scala.collection.Map[String, String]): Long =
+    headers.getOrElse("content-length",
+      throw new IOException("WARC record missing Content-Length")).toLong
 
   /** (named headers lowercased, block bytes) of the record at `offset`.
     * `offset` must be a gzip member start (the scan's `offset` column);
@@ -461,34 +307,12 @@ object WarcRecords {
         if (dict != null) z.setDict(dict) else z
       } else new java.util.zip.GZIPInputStream(pb)
     val in = new BufferedInputStream(codec)
-    def readLine(): String = {
-      val buf = new ByteArrayOutputStream(128)
-      var b = in.read()
-      while (b != -1 && b != '\n') { buf.write(b); b = in.read() }
-      if (b == -1 && buf.size() == 0) return null
-      val s = buf.toString("UTF-8")
-      if (s.endsWith("\r")) s.substring(0, s.length - 1) else s
-    }
-    var magic = readLine()
-    while (magic != null && magic.isEmpty) magic = readLine()
+    var magic = ArchiveIO.readLine(in)
+    while (magic != null && magic.isEmpty) magic = ArchiveIO.readLine(in)
     require(magic != null && magic.startsWith("WARC/"),
       s"no WARC record at this offset: $magic")
-    val headers = scala.collection.mutable.LinkedHashMap[String, String]()
-    var line = readLine()
-    while (line != null && line.nonEmpty) {
-      val i = line.indexOf(':')
-      require(i > 0, s"malformed WARC header line: $line")
-      headers(line.substring(0, i).trim.toLowerCase) = line.substring(i + 1).trim
-      line = readLine()
-    }
-    val len = headers("content-length").toLong
-    val block = new Array[Byte](len.toInt)
-    var off = 0
-    while (off < len) {
-      val r = in.read(block, off, (len - off).toInt)
-      if (r < 0) throw new EOFException(s"WARC block truncated at $off/$len")
-      off += r
-    }
+    val headers = readHeaders(in)
+    val block = ArchiveIO.readFully(in, contentLength(headers), "WARC block")
     (headers.toMap, block)
   }
 
@@ -577,65 +401,4 @@ private[graft] object WarcHttp {
 
   private def skipSeparator(block: Array[Byte], at: Int): Int =
     if (block(at + 1) == '\n') at + 2 else at + 3 // \n\n vs \n\r\n
-}
-
-/** The predicate subset evaluable on the named headers alone (before the
-  * record block is read). */
-object WarcFilters {
-  private val stringCols =
-    Set("url", "warc_type", "warc_date", "record_id", "ip", "content_type")
-  private val allCols = stringCols + "length"
-
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(a, _: String) => stringCols(a)
-    case StringStartsWith(a, _) => stringCols(a)
-    case StringEndsWith(a, _) => stringCols(a)
-    case StringContains(a, _) => stringCols(a)
-    case In(a, vs) => stringCols(a) && vs.forall(_.isInstanceOf[String])
-    case EqualTo(a, _: Long) => a == "length"
-    case GreaterThan(a, _: Long) => a == "length"
-    case GreaterThanOrEqual(a, _: Long) => a == "length"
-    case LessThan(a, _: Long) => a == "length"
-    case LessThanOrEqual(a, _: Long) => a == "length"
-    case IsNull(a) => stringCols(a)
-    case IsNotNull(a) => allCols(a)
-    case And(l, r) => supported(l) && supported(r)
-    case Or(l, r) => supported(l) && supported(r)
-    case Not(c) => supported(c)
-    case _ => false
-  }
-
-  def matches(
-      filters: Array[Filter],
-      url: String, wtype: String, date: String, recId: String,
-      ip: String, ctype: String, len: Long): Boolean = {
-    def strVal(a: String): String = a match {
-      case "url" => url
-      case "warc_type" => wtype
-      case "warc_date" => date
-      case "record_id" => recId
-      case "ip" => ip
-      case "content_type" => ctype
-    }
-    def eval(f: Filter): Boolean = f match {
-      case EqualTo(a, v: String) => strVal(a) == v
-      case StringStartsWith(a, p) => { val s = strVal(a); s != null && s.startsWith(p) }
-      case StringEndsWith(a, x) => { val s = strVal(a); s != null && s.endsWith(x) }
-      case StringContains(a, x) => { val s = strVal(a); s != null && s.contains(x) }
-      case In(a, vs) => vs.exists(_ == strVal(a))
-      case EqualTo("length", v: Long) => len == v
-      case GreaterThan("length", v: Long) => len > v
-      case GreaterThanOrEqual("length", v: Long) => len >= v
-      case LessThan("length", v: Long) => len < v
-      case LessThanOrEqual("length", v: Long) => len <= v
-      case IsNull(a) => strVal(a) == null
-      case IsNotNull(a) => a == "length" || strVal(a) != null
-      case And(l, r) => eval(l) && eval(r)
-      case Or(l, r) => eval(l) || eval(r)
-      case Not(c) => !eval(c)
-      case other =>
-        throw new IllegalStateException(s"unpushable filter slipped through: $other")
-    }
-    filters.forall(eval)
-  }
 }

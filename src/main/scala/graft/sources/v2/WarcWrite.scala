@@ -1,22 +1,19 @@
 package graft.sources.v2
 
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** The `graft-warc` write path. Same task/commit discipline as
-  * [[ArcBatchWrite]] (the reference's archive writer rolls at a size cap
-  * and renames finished files into place, util/ArcFileWriter.java:88):
-  * each task writes `part-<partition>-<task>[-<seq>].warc.gz` under
-  * `_temporary` and the driver renames at commit; files roll at
-  * `rollSize` bytes, each rolled file opening with its own `warcinfo`
-  * record so every archive is standalone.
+/** The `graft-warc` write path, over the shared [[ArchiveBatchWrite]]
+  * protocol: `part-<partition>-<task>[-<seq>].warc.gz` (or `.warc.zst`)
+  * task files, renamed into place at commit; files roll at `rollSize`
+  * bytes (default 1 GB), each rolled file opening with its own
+  * `warcinfo` record so every archive is standalone.
   *
   * Record layout (ISO 28500): one gzip member per record — the
   * member-seekable layout the reader exposes as `offset` — containing
@@ -30,85 +27,33 @@ import org.apache.spark.util.SerializableConfiguration
   */
 final case class WarcWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder {
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite = WarcBatchWrite(
-      info.options.get("path"),
-      info.schema(),
-      new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration),
-      info.options.getLong("rollSize", 1000000000L),
-      info.options.getOrDefault("codec", "gzip"),
-      info.options.getInt("dictSamples", 0))
-  }
-}
-
-final case class WarcBatchWrite(
-    path: String,
-    schema: StructType,
-    conf: SerializableConfiguration,
-    rollSize: Long,
-    codec: String = "gzip",
-    dictSamples: Int = 0,
-) extends BatchWrite {
-  require(path != null, "graft-warc: 'path' option is required to write")
-  require(codec == "gzip" || codec == "zstd",
-    s"graft-warc: codec must be gzip or zstd, got $codec")
-  require(dictSamples == 0 || codec == "zstd",
-    "graft-warc: dictSamples requires codec=zstd")
-
-  private val required = Seq("url", "warc_type", "warc_date", "content_type", "content")
-  require(required.forall(schema.fieldNames.contains),
-    s"graft-warc write needs columns $required, got ${schema.fieldNames.toSeq}")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    WarcWriterFactory(path, schema.fieldNames, conf, rollSize, codec, dictSamples)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    messages.foreach { case ArcCommit(tmps) =>
-      tmps.foreach { tmp =>
-        val src = new Path(tmp)
-        val dst = new Path(dir, src.getName)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"graft-warc commit: rename $src -> $dst failed (destination exists?)")
-      }
+    override def toBatch: BatchWrite = {
+      val path = info.options.get("path")
+      val codec = info.options.getOrDefault("codec", "gzip")
+      val dictSamples = info.options.getInt("dictSamples", 0)
+      ArchiveBatchWrite.validate(WarcFormat.name, path, info.schema(),
+        Seq("url", "warc_type", "warc_date", "content_type", "content"))
+      require(codec == "gzip" || codec == "zstd",
+        s"graft-warc: codec must be gzip or zstd, got $codec")
+      require(dictSamples == 0 || codec == "zstd",
+        "graft-warc: dictSamples requires codec=zstd")
+      val fieldNames = info.schema().fieldNames
+      ArchiveBatchWrite(WarcFormat.name, path,
+        new SerializableConfiguration(
+          SparkSession.active.sparkContext.hadoopConfiguration),
+        info.options.getLong("rollSize", 1000000000L),
+        () => new WarcEncoder(fieldNames, codec, dictSamples))
     }
-    fs.delete(new Path(dir, "_temporary"), true)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
-    messages.collect { case ArcCommit(tmps) =>
-      tmps.foreach(t => fs.delete(new Path(t), false))
-    }
-    fs.delete(new Path(path, "_temporary"), true)
   }
 }
 
-final case class WarcWriterFactory(
-    path: String,
+/** One member (gzip) or frame (zstd) per record, each file opening with
+  * a `warcinfo` record; optionally a per-file zstd dictionary. */
+final class WarcEncoder(
     fieldNames: Array[String],
-    conf: SerializableConfiguration,
-    rollSize: Long,
-    codec: String = "gzip",
-    dictSamples: Int = 0,
-) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(path, fieldNames, conf, partitionId, taskId, rollSize,
-      codec, dictSamples)
-}
-
-final class WarcDataWriter(
-    dir: String,
-    fieldNames: Array[String],
-    conf: SerializableConfiguration,
-    partitionId: Int,
-    taskId: Long,
-    rollSize: Long,
-    codec: String = "gzip",
-    dictSamples: Int = 0,
-) extends DataWriter[InternalRow] {
+    codec: String,
+    dictSamples: Int,
+) extends ArchiveEncoder {
 
   private val idx = fieldNames.zipWithIndex.toMap
   private val hasIp = idx.contains("ip")
@@ -116,13 +61,8 @@ final class WarcDataWriter(
   // verbatim (e.g. WARC-Payload-Digest / WARC-Refers-To on revisit
   // records); the reader surfaces them back through `warc_headers`
   private val hasExtra = idx.contains("extra_headers")
-  private val fs = new Path(dir).getFileSystem(conf.value)
-  private val done = scala.collection.mutable.ArrayBuffer[String]()
-  private var seq = 0
-  private var tmp: Path = null
-  private var out: org.apache.hadoop.fs.FSDataOutputStream = null
-  private var currentName: String = null
-  private val ext = if (codec == "zstd") "warc.zst" else "warc.gz"
+
+  override val ext: String = if (codec == "zstd") "warc.zst" else "warc.gz"
 
   // --- per-file dictionary state (dictSamples > 0, codec=zstd): the
   // first N records of each FILE are buffered, a zstd dictionary is
@@ -131,36 +71,20 @@ final class WarcDataWriter(
   // file compresses against the shared dictionary. Files that close
   // before N samples (or whose training fails — zdict needs enough
   // material) flush self-contained. Buffered bytes are budgeted.
-  // NOTE: declared BEFORE openNext() — the constructor writes warcinfo.
   private val MaxPendingBytes = 8L << 20
   private val pending = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
   private var pendingBytes = 0L
   private var fileDict: com.github.luben.zstd.ZstdDictCompress = null
 
-  openNext()
-
-  private def openNext(): Unit = {
-    currentName =
-      if (seq == 0) f"part-$partitionId%05d-$taskId.$ext"
-      else f"part-$partitionId%05d-$taskId-$seq%04d.$ext"
-    tmp = new Path(new Path(dir, "_temporary"), currentName)
-    out = fs.create(tmp, true)
-    seq += 1
+  override def begin(out: OutputStream, fileName: String): Unit = {
     val info = "software: graft\r\nformat: WARC File Format 1.0\r\n".getBytes(UTF_8)
-    writeMember(Seq(
+    writeMember(out, Seq(
       "WARC-Type" -> "warcinfo",
-      "WARC-Record-ID" -> recordId(currentName, "", info),
+      "WARC-Record-ID" -> recordId(fileName, "", info),
       "WARC-Date" -> "2026-01-01T00:00:00Z",
-      "WARC-Filename" -> currentName,
+      "WARC-Filename" -> fileName,
       "Content-Type" -> "application/warc-fields",
     ), info)
-  }
-
-  private def roll(): Unit = {
-    finishFile()
-    out.close()
-    done += tmp.toString
-    openNext()
   }
 
   /** Deterministic name-based record id (RFC 4122 v3 over the record's
@@ -171,14 +95,6 @@ final class WarcDataWriter(
     md.update(date.getBytes(UTF_8)); md.update(0.toByte)
     md.update(block)
     s"<urn:uuid:${java.util.UUID.nameUUIDFromBytes(md.digest())}>"
-  }
-
-  /** Shields the shared file stream from GZIPOutputStream.close() — see
-    * [[ArcDataWriter]]'s NonClosing note on Deflater lifecycle. */
-  private final class NonClosing(o: java.io.OutputStream)
-      extends java.io.FilterOutputStream(o) {
-    override def close(): Unit = flush()
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
   }
 
   private def serializeMember(headers: Seq[(String, String)],
@@ -192,8 +108,8 @@ final class WarcDataWriter(
   /** One member (gzip) / one frame (zstd) per record — the seekable
     * layout; close() ends the member, NonClosing shields the shared
     * file stream in both codecs. */
-  private def emitCompressed(bytes: Array[Byte]): Unit = {
-    val z: java.io.OutputStream =
+  private def emitCompressed(out: OutputStream, bytes: Array[Byte]): Unit = {
+    val z: OutputStream =
       if (codec == "zstd") {
         val zs = new com.github.luben.zstd.ZstdOutputStream(new NonClosing(out), 3)
         if (fileDict != null) zs.setDict(fileDict)
@@ -203,7 +119,7 @@ final class WarcDataWriter(
     z.close()
   }
 
-  private def trainAndFlush(): Unit = {
+  private def trainAndFlush(out: OutputStream): Unit = {
     val dict =
       try {
         val trainer = new com.github.luben.zstd.ZstdDictTrainer(
@@ -235,29 +151,30 @@ final class WarcDataWriter(
     hdr(7) = ((dict.length >> 24) & 0xff).toByte
     out.write(hdr); out.write(dict)
     fileDict = new com.github.luben.zstd.ZstdDictCompress(dict, 3)
-    pending.foreach(emitCompressed)
+    pending.foreach(emitCompressed(out, _))
     pending.clear()
     pendingBytes = 0L
   }
 
-  private def writeMember(headers: Seq[(String, String)], block: Array[Byte]): Unit = {
+  private def writeMember(out: OutputStream, headers: Seq[(String, String)],
+      block: Array[Byte]): Unit = {
     val bytes = serializeMember(headers, block)
     if (codec == "zstd" && dictSamples > 0 && fileDict == null) {
       pending += bytes
       pendingBytes += bytes.length
       if (pending.length >= dictSamples || pendingBytes >= MaxPendingBytes)
-        trainAndFlush()
-    } else emitCompressed(bytes)
+        trainAndFlush(out)
+    } else emitCompressed(out, bytes)
   }
 
   /** End-of-file bookkeeping: flush an untrained buffer self-contained
     * and drop the per-file dictionary so the next file trains its own. */
-  private def finishFile(): Unit = {
-    if (pending.nonEmpty) trainAndFlush()
+  override def finish(out: OutputStream): Unit = {
+    if (pending.nonEmpty) trainAndFlush(out)
     if (fileDict != null) { fileDict.close(); fileDict = null }
   }
 
-  override def write(row: InternalRow): Unit = {
+  override def write(out: OutputStream, row: InternalRow): Unit = {
     val url = row.getUTF8String(idx("url")).toString
     val wtype = row.getUTF8String(idx("warc_type")).toString
     val date = row.getUTF8String(idx("warc_date")).toString
@@ -275,7 +192,6 @@ final class WarcDataWriter(
             m.valueArray.getUTF8String(i).toString
         }
       }
-    if (out.getPos >= rollSize) roll()
     val headers = Seq(
       "WARC-Type" -> wtype,
       "WARC-Record-ID" -> recordId(url, date, block),
@@ -284,20 +200,6 @@ final class WarcDataWriter(
       (if (ip == null) Seq.empty else Seq("WARC-IP-Address" -> ip)) ++
       extras ++
       Seq("Content-Type" -> ctype)
-    writeMember(headers, block)
+    writeMember(out, headers, block)
   }
-
-  override def commit(): WriterCommitMessage = {
-    finishFile()
-    out.close()
-    done += tmp.toString
-    ArcCommit(done.toSeq)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    (done.toSeq :+ tmp.toString).foreach(t => fs.delete(new Path(t), false))
-  }
-
-  override def close(): Unit = ()
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ArcRecord, ArcSource, GzipMembers}
-import graft.sources.v2.ArcScan
+import graft.sources.v2.{ArcFormat, ArchiveScan}
 
 class ArcV2Spec extends AnyFunSuite with SparkSuite {
 
@@ -84,11 +84,36 @@ class ArcV2Spec extends AnyFunSuite with SparkSuite {
       .select("url")
     val scan = df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
-    }.head.asInstanceOf[ArcScan]
+    }.head.asInstanceOf[ArchiveScan]
     assert(scan.pushed.exists(_.references.contains("mime_type")))
     assert(scan.pushed.exists(_.references.contains("length")))
     assert(df.collect().map(_.getString(0)).sorted.toSeq ==
       fixtures._2.filter(_.mimeType == "text/html").map(_.url).sorted)
+  }
+
+  test("pushdown agrees with Spark's own evaluation on every header predicate") {
+    val (dir, _) = fixtures
+    val strings = Seq(
+      ("url", "http://a.com/", "http://a.com", ".png", "b.org"),
+      ("ip", "10.0.0.1", "10.", ".1", "0.0"),
+      ("archive_date", "20240101120000", "2024", "120000", "0101"),
+      ("mime_type", "text/html", "text/", "/plain", "ext"))
+    val perColumn = strings.flatMap { case (c, v, p, x, m) =>
+      Seq(col(c) === v, col(c).isin(v, "none"), col(c).startsWith(p),
+        col(c).endsWith(x), col(c).contains(m))
+    }
+    val len = col("length")
+    val filters = perColumn ++ Seq(
+      len === 18L, len > 18L, len >= 18L, len < 550L, len <= 550L,
+      col("url").isNull, col("mime_type").isNotNull, len.isNotNull,
+      col("mime_type") === "text/html" && len > 17L,
+      col("url").startsWith("http://a") || col("mime_type") === "text/plain",
+      not(col("mime_type") === "text/html"),
+      not(col("url").isin("http://a.com/", "http://b.org/x")),
+      not(col("url").endsWith(".png") || len < 18L),
+      not(col("ip").contains("9") && len > 100L))
+    ArchivePushdown.check(spark, "graft-arc", dir, Seq("arc_file", "offset", "url"),
+      filters, ArcV2Spec.pushed)
   }
 
   test("V2 write round-trips through the V2 read (one archive per task)") {
@@ -210,7 +235,7 @@ class ArcV2Spec extends AnyFunSuite with SparkSuite {
     val f = Paths.get(dir, "ok.arc.gz")
     Files.write(f, ArcSource.writeArc(Seq(rec("http://e.example/", "text/html", "x"))))
     val reader = new graft.sources.v2.ArcPartitionReader(
-      graft.sources.v2.ArcInputPartition(f.toString, Files.size(f), Array.empty),
+      graft.sources.v2.ArchiveInputPartition(f.toString, Files.size(f), Array.empty),
       spark.sessionState.newHadoopConf(),
       fieldNames = Array("url", "no_such_field"),
       pushed = Array.empty,
@@ -223,7 +248,8 @@ class ArcV2Spec extends AnyFunSuite with SparkSuite {
     import org.apache.spark.sql.types.StructType
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val stream = new ArcMicroBatchStream(
-      ArcScan(CaseInsensitiveStringMap.empty(), new StructType(), Array.empty))
+      ArchiveScan(ArcFormat, CaseInsensitiveStringMap.empty(), new StructType(),
+        Array.empty))
     val nasty = Seq(
       "/data/plain.arc.gz",
       "/data/with\nnewline.arc.gz",
@@ -250,4 +276,44 @@ class ArcV2Spec extends AnyFunSuite with SparkSuite {
       assert(fetched.url == r.getString(2))
     }
   }
+}
+
+object ArcV2Spec {
+  /** What the scan claims for each filter of the pushdown case, in order. */
+  val pushed: Seq[String] = Seq(
+    "EqualTo(url,http://a.com/)",
+    "In(url, [http://a.com/,none])",
+    "StringStartsWith(url,http://a.com)",
+    "StringEndsWith(url,.png)",
+    "StringContains(url,b.org)",
+    "EqualTo(ip,10.0.0.1)",
+    "In(ip, [10.0.0.1,none])",
+    "StringStartsWith(ip,10.)",
+    "StringEndsWith(ip,.1)",
+    "StringContains(ip,0.0)",
+    "EqualTo(archive_date,20240101120000)",
+    "In(archive_date, [20240101120000,none])",
+    "StringStartsWith(archive_date,2024)",
+    "StringEndsWith(archive_date,120000)",
+    "StringContains(archive_date,0101)",
+    "EqualTo(mime_type,text/html)",
+    "In(mime_type, [none,text/html])",
+    "StringStartsWith(mime_type,text/)",
+    "StringEndsWith(mime_type,/plain)",
+    "StringContains(mime_type,ext)",
+    "EqualTo(length,18)",
+    "GreaterThan(length,18)",
+    "GreaterThanOrEqual(length,18)",
+    "LessThan(length,550)",
+    "LessThanOrEqual(length,550)",
+    "<no scan>",
+    "",
+    "",
+    "EqualTo(mime_type,text/html); GreaterThan(length,17)",
+    "Or(StringStartsWith(url,http://a),EqualTo(mime_type,text/plain))",
+    "Not(EqualTo(mime_type,text/html))",
+    "Not(In(url, [http://a.com/,http://b.org/x]))",
+    "GreaterThanOrEqual(length,18); Not(StringEndsWith(url,.png))",
+    "Or(Not(StringContains(ip,9)),LessThanOrEqual(length,100))",
+  )
 }

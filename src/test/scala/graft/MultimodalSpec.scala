@@ -86,8 +86,13 @@ class MultimodalSpec extends AnyFunSuite with SparkSuite {
     val tall = head.clone()
     tall(16) = 0; tall(20) = 0x80.toByte // width 0, height 0x80000004
     assert(Multimodal.parseImageHeader(tall) == (("png", -1, -1)))
-    tall(20) = 0x7f; tall(21) = 0xff.toByte // height 0x7fff0004 fits
-    assert(Multimodal.parseImageHeader(tall) == (("png", 0, 0x7fff0004)))
+    tall(20) = 0x7f; tall(21) = 0xff.toByte // height 0x7fff0004 fits, width 0
+    assert(Multimodal.parseImageHeader(tall) == (("png", -1, -1)))
+    tall(19) = 3 // width 3, height 0x7fff0004: a shape
+    assert(Multimodal.parseImageHeader(tall) == (("png", 3, 0x7fff0004)))
+    val flat = tall.clone()
+    flat(20) = 0; flat(21) = 0; flat(22) = 0; flat(23) = 0 // height 0
+    assert(Multimodal.parseImageHeader(flat) == (("png", -1, -1)))
   }
 
   test("packImage synthesizes bytes the real parser round-trips") {

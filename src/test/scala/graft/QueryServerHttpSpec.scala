@@ -183,6 +183,16 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       .select("warc_file", "offset").collect()
       .map(r => (r.getString(0), r.getLong(1))).head
     val rel = new java.io.File(new java.net.URI(file).getPath).getName
+    // an ARC archive beside it, served through the same endpoint
+    Seq(("http://f.example/2", "10.0.0.2", "20260101000000", "text/plain",
+        "<p>arc fetched</p>".getBytes("UTF-8")))
+      .toDF("url", "ip", "archive_date", "mime_type", "content")
+      .coalesce(1)
+      .write.format("graft-arc").mode("append").save(root)
+    val (arcFile, arcOffset) = spark.read.format("graft-arc").load(root)
+      .select("arc_file", "offset").collect()
+      .map(r => (r.getString(0), r.getLong(1))).head
+    val arcRel = new java.io.File(new java.net.URI(arcFile).getPath).getName
 
     val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_f").toString
     val server = new QueryServer(spark, cacheDir, sfDir)
@@ -197,6 +207,14 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       assert(resp.statusCode() == 200)
       assert(new String(resp.body(), "UTF-8") == "<html>fetched</html>")
       assert(resp.headers().firstValue("Content-Type").orElse("") == "text/html")
+      val arcResp = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/fetch?file=$arcRel&offset=$arcOffset"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(arcResp.statusCode() == 200)
+      assert(new String(arcResp.body(), "UTF-8") == "<p>arc fetched</p>")
+      assert(arcResp.headers().firstValue("Content-Type").orElse("") == "text/plain")
       // traversal and non-archive paths are client errors
       assert(this.get(port, s"/fetch?file=../$rel&offset=0")._1 == 400)
       assert(this.get(port, "/fetch?file=notthere.txt&offset=0")._1 == 400)

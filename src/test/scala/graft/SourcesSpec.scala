@@ -66,12 +66,14 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     Files.write(dir.resolve("part-000.arc.gz"), ArcSource.writeArc(arcRecords))
     val viaScheme = ArcSource.read(spark, s"mockfs://$dir").collect()
     assert(viaScheme.map(_.url).toSet == arcRecords.map(_.url).toSet)
-    // the index build takes the same path through the FS abstraction
-    val idx = ArcSource.readIndex(spark, s"mockfs://$dir").collect()
-    assert(idx.map(_.url).toSet == arcRecords.map(_.url).toSet)
+    // the graft-arc scan (the content index) takes the same path through
+    // the FS abstraction
+    val idx = spark.read.format("graft-arc").load(s"mockfs://$dir")
+      .select("url", "arc_file").collect()
+    assert(idx.map(_.getString(0)).toSet == arcRecords.map(_.url).toSet)
     // the recorded location is scheme-qualified (how the FS spells its
     // authority varies: mockfs:/ vs mockfs:///)
-    assert(idx.forall(_.arcFile.startsWith("mockfs:")))
+    assert(idx.forall(_.getString(1).startsWith("mockfs:")))
   }
 
   test("ARC: content index round-trips offsets to record bytes") {
@@ -90,19 +92,19 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("ARC: distributed index build via binaryFile scan") {
+  test("ARC: distributed index build via the graft-arc scan") {
     val dir = Files.createTempDirectory("arc_idx_test")
     Files.write(dir.resolve("part-000.arc.gz"), ArcSource.writeArc(arcRecords.take(2)))
     Files.write(dir.resolve("part-001.arc.gz"), ArcSource.writeArc(arcRecords.drop(2)))
-    val idx = ArcSource.readIndex(spark, dir.toString).collect()
-    assert(idx.map(_.url).toSet == arcRecords.map(_.url).toSet)
-    assert(idx.forall(_.compressedLength > 0))
+    val idx = spark.read.format("graft-arc").load(dir.toString)
+      .select("url", "arc_file", "offset", "length").collect()
+    assert(idx.map(_.getString(0)).toSet == arcRecords.map(_.url).toSet)
     // fetch through the index: read the file named in the entry, seek
     idx.foreach { e =>
-      val raw = Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(e.arcFile)))
-      val rec = ArcSource.fetchRecordAt(raw, e.offset)
-      assert(rec.url == e.url)
-      assert(rec.length == e.length)
+      val raw = Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(e.getString(1))))
+      val rec = ArcSource.fetchRecordAt(raw, e.getLong(2))
+      assert(rec.url == e.getString(0))
+      assert(rec.length == e.getLong(3))
     }
   }
 

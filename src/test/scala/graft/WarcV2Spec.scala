@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.v2.WarcScan
+import graft.sources.v2.ArchiveScan
 
 class WarcV2Spec extends AnyFunSuite with SparkSuite {
 
@@ -133,13 +133,68 @@ class WarcV2Spec extends AnyFunSuite with SparkSuite {
       .select("url")
     val scan = df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan
-    }.head.asInstanceOf[WarcScan]
+    }.head.asInstanceOf[ArchiveScan]
     assert(scan.pushed.exists(_.references.contains("warc_type")))
     assert(scan.pushed.exists(_.references.contains("length")))
     // http_status needs the block: must NOT be claimed by the scan
     assert(!scan.pushed.exists(_.references.contains("http_status")))
     assert(df.collect().map(_.getString(0)).sorted.toSeq ==
       Seq("http://a.com/", "http://b.org/big"))
+  }
+
+  test("pushdown agrees with Spark's own evaluation on every header predicate") {
+    // the warcinfo record has no url and no ip: every predicate meets nulls
+    val strings = Seq(
+      ("url", "http://a.com/", "http://a.com", "/big", "b.org"),
+      ("warc_type", "response", "re", "sion", "info"),
+      ("warc_date", "2026-01-02T03:04:05Z", "2026", "05Z", "T03"),
+      ("record_id", "<urn:uuid:0000-http://a.com/>", "<urn:uuid:0000-http://b",
+        "miss>", "null"),
+      ("ip", "10.0.0.1", "10.", ".2", "0.0"),
+      ("content_type", "text/plain", "application/", "=request", "warc"))
+    val perColumn = strings.flatMap { case (c, v, p, x, m) =>
+      Seq(col(c) === v, col(c).isin(v, "none"), col(c).startsWith(p),
+        col(c).endsWith(x), col(c).contains(m))
+    }
+    val len = col("length")
+    val filters = perColumn ++ Seq(
+      len === 20L, len > 20L, len >= 20L, len < 100L, len <= 100L,
+      col("url").isNull, col("ip").isNull, col("url").isNotNull,
+      col("ip").isNotNull, len.isNotNull,
+      col("warc_type") === "response" && len > 10L,
+      col("url").startsWith("http://a") || col("ip") === "10.0.0.2",
+      col("url").isNull || col("ip") === "10.0.0.2",
+      not(col("url") === "http://a.com/"),
+      not(col("ip").isin("10.0.0.1")),
+      not(col("url").startsWith("http://a") || len > 100L),
+      not(col("ip").isNull && col("warc_type") === "warcinfo"),
+      // Spark infers no IsNotNull for IN: a null url or ip must not
+      // turn NOT(IN) true
+      not(col("url").isin("http://a.com/", "http://b.org/big")),
+      not(col("ip").isin("10.0.0.1", "10.0.0.2")),
+      not(col("url").isin("http://a.com/", "x") || len > 100000L))
+    ArchivePushdown.check(spark, "graft-warc", fixtureDir,
+      Seq("warc_file", "offset", "warc_type", "url"), filters, WarcV2Spec.pushed)
+  }
+
+  test("folded header lines: the scan and the point fetch agree") {
+    import graft.sources.v2.WarcRecords
+    val dir = Files.createTempDirectory("warcv2fold").toString
+    val bytes = gzMember(Seq(record("response", "http://f.example/",
+      "hello".getBytes("UTF-8"), ctype = "text/plain",
+      extra = Seq("X-Folded: first part", "  second part"))))
+    Files.write(Paths.get(dir, "fold.warc.gz"), bytes)
+    val rows = spark.read.format("graft-warc").load(dir)
+      .select("url", "length", "offset", "warc_headers", "content").collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getString(0) == "http://f.example/" && r.getLong(1) == 5L &&
+      r.getLong(2) == 0L)
+    val scanned = r.getAs[Map[String, String]](3)
+    assert(scanned("x-folded") == "first part second part")
+    val (fetched, block) = WarcRecords.fetchRecordAt(bytes, r.getLong(2))
+    assert(fetched == scanned)
+    assert(block.toSeq == r.getAs[Array[Byte]](4).toSeq)
   }
 
   test("write → read round trip; rolled files stand alone") {
@@ -255,4 +310,60 @@ class WarcV2Spec extends AnyFunSuite with SparkSuite {
     assert(lax.collect().map(_.getString(0)).sorted.toSeq ==
       Seq("http://a.example/", "http://b.example/"))
   }
+}
+
+object WarcV2Spec {
+  /** What the scan claims for each filter of the pushdown case, in order. */
+  val pushed: Seq[String] = Seq(
+    "EqualTo(url,http://a.com/); IsNotNull(url)",
+    "In(url, [http://a.com/,none])",
+    "IsNotNull(url); StringStartsWith(url,http://a.com)",
+    "IsNotNull(url); StringEndsWith(url,/big)",
+    "IsNotNull(url); StringContains(url,b.org)",
+    "EqualTo(warc_type,response)",
+    "In(warc_type, [none,response])",
+    "StringStartsWith(warc_type,re)",
+    "StringEndsWith(warc_type,sion)",
+    "StringContains(warc_type,info)",
+    "EqualTo(warc_date,2026-01-02T03:04:05Z)",
+    "In(warc_date, [2026-01-02T03:04:05Z,none])",
+    "StringStartsWith(warc_date,2026)",
+    "StringEndsWith(warc_date,05Z)",
+    "StringContains(warc_date,T03)",
+    "EqualTo(record_id,<urn:uuid:0000-http://a.com/>)",
+    "In(record_id, [<urn:uuid:0000-http://a.com/>,none])",
+    "StringStartsWith(record_id,<urn:uuid:0000-http://b)",
+    "StringEndsWith(record_id,miss>)",
+    "StringContains(record_id,null)",
+    "EqualTo(ip,10.0.0.1); IsNotNull(ip)",
+    "In(ip, [10.0.0.1,none])",
+    "IsNotNull(ip); StringStartsWith(ip,10.)",
+    "IsNotNull(ip); StringEndsWith(ip,.2)",
+    "IsNotNull(ip); StringContains(ip,0.0)",
+    "EqualTo(content_type,text/plain); IsNotNull(content_type)",
+    "In(content_type, [none,text/plain])",
+    "IsNotNull(content_type); StringStartsWith(content_type,application/)",
+    "IsNotNull(content_type); StringEndsWith(content_type,=request)",
+    "IsNotNull(content_type); StringContains(content_type,warc)",
+    "EqualTo(length,20)",
+    "GreaterThan(length,20)",
+    "GreaterThanOrEqual(length,20)",
+    "LessThan(length,100)",
+    "LessThanOrEqual(length,100)",
+    "IsNull(url)",
+    "IsNull(ip)",
+    "IsNotNull(url)",
+    "IsNotNull(ip)",
+    "",
+    "EqualTo(warc_type,response); GreaterThan(length,10)",
+    "Or(StringStartsWith(url,http://a),EqualTo(ip,10.0.0.2))",
+    "Or(IsNull(url),EqualTo(ip,10.0.0.2))",
+    "IsNotNull(url); Not(EqualTo(url,http://a.com/))",
+    "IsNotNull(ip); Not(EqualTo(ip,10.0.0.1))",
+    "IsNotNull(url); LessThanOrEqual(length,100); Not(StringStartsWith(url,http://a))",
+    "Or(IsNotNull(ip),Not(EqualTo(warc_type,warcinfo)))",
+    "Not(In(url, [http://a.com/,http://b.org/big]))",
+    "Not(In(ip, [10.0.0.1,10.0.0.2]))",
+    "LessThanOrEqual(length,100000); Not(In(url, [http://a.com/,x]))",
+  )
 }

@@ -4,7 +4,10 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
+import graft.queries.QueryServerHttp.renderJson
 import graft.sources.v2.{ArcFormat, WarcFormat}
 
 /** Thin HTTP front end over [[QueryServer]] — the serving shape of the
@@ -25,11 +28,13 @@ import graft.sources.v2.{ArcFormat, WarcFormat}
   *       cached positional index without re-running the query
   *   GET /cancel/<id>       → cooperative cancellation via cancelJobGroup
   *
-  * JSON rendering rides DataFrame.toJSON (schema-aware, correct escaping)
-  * rather than hand-rolled string building. Built on the JDK's HttpServer
-  * so the library adds no dependency; production fronting (TLS, auth)
-  * belongs on a reverse proxy, exactly like the reference's Jetty FE sat
-  * behind the ops stack. */
+  * JSON rendering is one `to_json(struct(*))` projection over the page
+  * (schema-aware, correct escaping, byte-identical to DataFrame.toJSON)
+  * rather than hand-rolled string building; the page is a local
+  * DataFrame, so Spark folds the projection and rendering runs no job.
+  * Built on the JDK's HttpServer so the library adds no dependency;
+  * production fronting (TLS, auth) belongs on a reverse proxy, exactly
+  * like the reference's Jetty FE sat behind the ops stack. */
 final class QueryServerHttp(server: QueryServer, port: Int = 0,
     maxJobs: Int = QueryServerHttp.DefaultMaxJobs,
     archiveRoot: Option[String] = None) {
@@ -113,7 +118,7 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
   http.createContext("/query/", (ex: HttpExchange) => handle(ex) {
     val name = ex.getRequestURI.getPath.stripPrefix("/query/")
     val p = params(ex)
-    server.page(name, reqOf(p)).toJSON.collect().mkString("[", ",", "]")
+    renderJson(server.page(name, reqOf(p)))
   })
 
   http.createContext("/count/", (ex: HttpExchange) => handle(ex) {
@@ -193,7 +198,7 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
         val sc = server.spark.sparkContext
         sc.setJobGroup(id, s"graft async $name", interruptOnCancel = true)
         try {
-          val page = server.page(name, req).toJSON.collect().mkString("[", ",", "]")
+          val page = renderJson(server.page(name, req))
           // CAS: a cancel that won the race keeps its terminal state
           if (job.status.compareAndSet("running", "done")) job.result = page
         } catch {
@@ -226,7 +231,7 @@ final class QueryServerHttp(server: QueryServer, port: Int = 0,
         offset = p.get("offset").map(_.toLong).getOrElse(j.req.offset),
         pageSize = p.get("pageSize").map(_.toInt).getOrElse(j.req.pageSize))
       checkPage(req.offset, req.pageSize)
-      server.page(j.name, req).toJSON.collect().mkString("[", ",", "]")
+      renderJson(server.page(j.name, req))
     } else j.result
   })
 
@@ -305,6 +310,15 @@ object QueryServerHttp {
 
   /** Default in-flight job cap (ledger + worker-queue bound). */
   val DefaultMaxJobs: Int = 256
+
+  /** `df` as a JSON array of row objects, one `to_json(struct(*))`
+    * projection per row: the same bytes as `df.toJSON`, without the
+    * extra deserialize/mapPartitions stage toJSON plans. Over a local
+    * relation (a [[QueryServer.page]]) the optimizer evaluates the
+    * projection itself, so no Spark job runs. */
+  private[graft] def renderJson(df: DataFrame): String =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0))
+      .mkString("[", ",", "]")
 
   /** Submit refused because maxJobs jobs are still non-terminal → 429. */
   private[queries] final class TooManyJobsException(msg: String)

@@ -4,7 +4,6 @@ import java.security.MessageDigest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Query-server result cache (SURVEY §3.1 steps 2-3): results are keyed
   * by a canonical query id — query name plus its parameters in sorted
@@ -55,15 +54,19 @@ object ResultCache {
   private def lockFor(path: String): Object =
     buildLocks(math.floorMod(path.hashCode, NStripes))
 
-  /** The schema of each published entry, by path, recorded on its first
-    * read. An entry is renamed into place and never overwritten, so its
-    * schema never changes; a hit read with it skips parquet schema
-    * inference, which runs a Spark job of its own on every read. The
+  /** The relation of each published entry, by path, with the mtime of
+    * the `_SUCCESS` marker it was read under. A hit served from the
+    * record skips parquet schema inference (a Spark job of its own) and
+    * the file listing, and its analyzed plan is already resolved. The
     * record is dropped whenever the `_SUCCESS` probe finds its entry
-    * missing, so a rebuilt entry is read afresh. One small entry per
-    * cache path, as the cache dir itself holds one directory per path. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    * missing, and not served when the marker's mtime moved (the entry was
+    * rebuilt, by this process or another), so a rebuilt entry is read
+    * afresh. A record of one SparkSession is never served to another:
+    * that session re-reads the entry with the recorded schema and becomes
+    * the record's owner. One small entry per cache path, as the cache dir
+    * itself holds one directory per path. */
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
 
   /** Serve from cache when present, else compute + materialize. The
     * _SUCCESS marker gates readiness, so a killed write never serves a
@@ -83,10 +86,13 @@ object ResultCache {
     val path = s"$cacheDir/${canonicalId(queryName, params)}"
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def ready = fs.exists(new Path(p, "_SUCCESS"))
+    // the _SUCCESS marker's mtime; None while no entry is published
+    def published: Option[Long] =
+      try Some(fs.getFileStatus(new Path(p, "_SUCCESS")).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
     lockFor(path).synchronized {
-      if (!ready) {
-        schemas.remove(path)
+      val stamp = published.getOrElse {
+        relations.remove(path)
         val tmp = new Path(s"$path.build-${java.util.UUID.randomUUID}")
         compute.write.mode("overwrite").parquet(tmp.toString)
         // Publish via FileContext.rename, whose no-OVERWRITE contract is
@@ -112,19 +118,18 @@ object ResultCache {
         // error, or a legacy/partial destination without _SUCCESS that no
         // rename can ever replace — must surface here, not as a detached
         // read error (or worse, a silently-served stale partial entry).
-        renameFailure.foreach { e =>
-          if (!ready) throw new java.io.IOException(
-            s"result-cache publish failed and no complete entry exists at $path" +
-              " (destination present without _SUCCESS? remove it manually)", e)
-        }
+        published.getOrElse(throw new java.io.IOException(
+          s"result-cache publish failed and no complete entry exists at $path" +
+            " (destination present without _SUCCESS? remove it manually)",
+          renameFailure.orNull))
       }
-    }
-    Option(schemas.get(path)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        schemas.put(path, df.schema)
-        df
+      val df = Option(relations.get(path)) match {
+        case Some((`stamp`, r)) if r.sparkSession eq spark => r
+        case Some((`stamp`, r)) => spark.read.schema(r.schema).parquet(path)
+        case _ => spark.read.parquet(path)
+      }
+      relations.put(path, (stamp, df))
+      df
     }
   }
 }

@@ -266,4 +266,92 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
         .startsWith("text/plain"))
     } finally fe.stop()
   }
+
+  private def toJsonArray(df: org.apache.spark.sql.DataFrame): String =
+    df.toJSON.collect().mkString("[", ",", "]")
+
+  test("page JSON renders byte-identical to Dataset.toJSON on edge values") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("s", StringType),
+      StructField("d", DoubleType),
+      StructField("f", FloatType),
+      StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType),
+      StructField("dt", DateType),
+      StructField("dec", DecimalType(38, 18)),
+      StructField("money", DecimalType(18, 2)),
+      StructField("arr", ArrayType(DoubleType)),
+      StructField("m", MapType(StringType, IntegerType)),
+      StructField("st", StructType(Seq(
+        StructField("a", LongType),
+        StructField("b", StructType(Seq(StructField("c", StringType))))))),
+      StructField("bin", BinaryType),
+      StructField("flag", BooleanType)))
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    val rows = Seq(
+      Row(1, "quote \" backslash \\ slash / tab\t nl\n cr\r bell\u0007 nul\u0000",
+        Double.NaN, Float.PositiveInfinity, ts("2026-03-04T05:06:07.123456Z"),
+        java.time.LocalDateTime.parse("1999-12-31T23:59:59.000001"),
+        java.sql.Date.valueOf("2024-02-29"),
+        new java.math.BigDecimal("-12345678901234567890.123456789012345678"),
+        new java.math.BigDecimal("0.10"),
+        Seq(1.5, null, Double.NegativeInfinity), Map("k\"ey" -> 1, "n" -> null),
+        Row(Long.MinValue, Row("n\u00e9sted \u2028 \ud83d\ude00")),
+        Array[Byte](0, -1, 127, 10), true),
+      Row(2, "non-BMP \ud834\udd1e \ud83d\ude00 and \u00ff", Double.PositiveInfinity,
+        Float.NaN, ts("1900-01-01T00:00:00Z"),
+        java.time.LocalDateTime.parse("2026-01-01T00:00:00"),
+        java.sql.Date.valueOf("1582-10-15"), new java.math.BigDecimal("0E-18"),
+        new java.math.BigDecimal("-99.99"), Seq.empty[Double], Map.empty[String, Integer],
+        Row(null, null), Array.empty[Byte], false),
+      Row(3, null, null, null, null, null, null, null, null, null, null, null, null, null),
+      Row(4, "", -0.0, Float.NegativeInfinity, ts("1970-01-01T00:00:00Z"), null,
+        java.sql.Date.valueOf("1970-01-01"), new java.math.BigDecimal("1E+2"), null,
+        Seq[Any](null), Map("" -> 0), Row(0L, Row(null)), null, null))
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    assert(QueryServerHttp.renderJson(local) == toJsonArray(local))
+    // and where the projection runs in a task rather than folding
+    val dir = java.nio.file.Files.createTempDirectory("qhttp_json").toString
+    local.write.mode("overwrite").parquet(dir)
+    val read = spark.read.parquet(dir).orderBy("id")
+    assert(QueryServerHttp.renderJson(read) == toJsonArray(read))
+  }
+
+  test("the first and last page of each serving entry render as toJSON, with no job") {
+    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_pages").toString
+    val server = new QueryServer(spark, cacheDir, sfDir)
+    // the serve_read benchmark's entries
+    val entries = Seq(
+      ("i5_url_detail", "l_linenumber", true),
+      ("w3_dual_sort", "n_cust", false),
+      ("i2_domain_url_list", "o_totalprice", false),
+      ("i20_cluster_members", "probe_id", true),
+      ("lg1_topk_per_host", "rank_value", false),
+      ("c1_crawldb_merge", "url_key", true))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    for ((name, sortBy, asc) <- entries) {
+      val req = server.PageRequest(sortBy, ascending = asc, pageSize = 25)
+      val n = server.resultCount(name, req)
+      for (off <- Seq(0L, math.max(0L, n - 10))) {
+        val page = server.page(name, req.copy(offset = off))
+        spark.sparkContext.addSparkListener(listener)
+        val body =
+          try {
+            val out = QueryServerHttp.renderJson(page)
+            org.apache.spark.ListenerDrain(spark.sparkContext)
+            out
+          } finally spark.sparkContext.removeSparkListener(listener)
+        assert(body == toJsonArray(page), s"$name offset $off")
+        assert(body.startsWith(if (n == 0) "[]" else "[{"), s"$name offset $off")
+      }
+    }
+    assert(jobs.get == 0, s"rendering ran ${jobs.get} Spark jobs")
+  }
 }

@@ -3,10 +3,15 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskStart}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{DedupeQueries, QueryServer, Registry}
@@ -51,6 +56,45 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** `f`'s result with the executed plans of the parquet reads it ran
+    * and the records their tasks read, counted on a job group of its
+    * own. */
+  private def readsOf[A](f: => A): (A, Seq[SparkPlan], Long) = {
+    val sc = spark.sparkContext
+    val group = s"reads-${java.util.UUID.randomUUID}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (AQE.find(qe.executedPlan)(_.isInstanceOf[FileSourceScanExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(queries)
+    sc.setJobGroup(group, group)
+    try {
+      val out = f
+      ListenerDrain(sc)
+      (out, plans.asScala.toSeq, records.get)
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private object AQE extends AdaptiveSparkPlanHelper
 
   /** The page a direct orderBy/offset/limit returns for `req`, under the
     * index's total order (the sort field, then every other column). */
@@ -303,15 +347,67 @@ class QueryServerSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("page read prunes to the row groups containing the page") {
+    // w2's index spans several files (one per range partition), so a
+    // read that reaches the pos predicate reads fewer rows than it holds
     val (server, _) = newServer()
-    val name = "w3_dual_sort"
+    val name = "w2_pagination"
     val base = Registry.queries(name)(spark, sfDir)
     val req = server.PageRequest(base.columns.head, ascending = true, offset = 2, pageSize = 3)
-    server.index(name, req).count() // build the index
-    val plan = server.page(name, req).queryExecution.executedPlan.toString
-    // the pos range predicate must reach the parquet reader
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThan(pos"),
-      s"pos range not pushed to the scan:\n$plan")
+    val idx = server.index(name, req)
+    val n = idx.count()
+    assert(idx.select(input_file_name()).distinct().count() > 1, "a single-file index")
+    val (page, plans, recordsRead) = readsOf(server.page(name, req).collect())
+    assert(page.length == 3)
+    assert(plans.size == 1, s"${plans.size} parquet reads")
+    val scans = AQE.collect(plans.head) { case s: FileSourceScanExec => s }
+    // the pos predicate must reach the parquet reader...
+    assert(scans.nonEmpty && scans.forall(_.metadata("PushedFilters").contains("(pos,")),
+      s"pos predicate not pushed to the scan:\n${plans.head}")
+    // ...whose row-group stats then skip the files that hold none of the page
+    assert(recordsRead > 0 && recordsRead < n,
+      s"the page read $recordsRead of the index's $n rows")
+  }
+
+  test("a cached page at a new offset compiles no new class") {
+    // Long literals are inlined into generated Java, so a pos range
+    // would compile new classes at every offset; the page's positions
+    // are a set the generated code references
+    val (server, _) = newServer()
+    val name = "c1_crawldb_merge"
+    val req0 = server.PageRequest("url_key", ascending = true)
+    val n = server.resultCount(name, req0)
+    assert(n >= 200, s"$name holds $n rows")
+    // a size below the In-to-InSet conversion threshold, and the default
+    for (size <- Seq(7, 25)) {
+      server.page(name, req0.copy(pageSize = size)).collect() // the first page compiles
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val offsets = Seq(size.toLong, 60L, 101L, n / 2, n - size / 2)
+      val (pages, plans, _) = readsOf(offsets.map(off =>
+        server.page(name, req0.copy(offset = off, pageSize = size)).collect()))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        s"pageSize $size: new offsets compiled " +
+          s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles} classes")
+      offsets.zip(pages).foreach { case (off, rows) =>
+        assert(rows.map(r => r.getLong(r.fieldIndex("pos"))).toSeq ==
+          (off + 1 to math.min(n, off + size)), s"offset $off: pos range")
+      }
+      assert(plans.size == offsets.size)
+      plans.foreach(p => assert(AQE.find(p)(_.isInstanceOf[SortExec]).isEmpty,
+        s"the page read sorts:\n$p"))
+    }
+  }
+
+  test("a bulk page reads the rows of the set-matched pages it spans") {
+    // above PositionSetMax rows a page is read by a pos range instead
+    val (server, _) = newServer()
+    val req = server.PageRequest("url_key", ascending = false, offset = 30,
+      pageSize = QueryServer.PositionSetMax + 50)
+    val bulk = server.page("c1_crawldb_merge", req).collect().map(_.toString).toSeq
+    val pages = (0 until req.pageSize by 25).flatMap(d =>
+      server.page("c1_crawldb_merge", req.copy(offset = req.offset + d, pageSize = 25))
+        .collect().map(_.toString))
+    assert(bulk.size == req.pageSize)
+    assert(bulk == pages)
   }
 
   test("concurrent first requests for one entry serialize on its build") {

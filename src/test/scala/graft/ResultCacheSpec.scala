@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{Registry, ResultCache}
+import graft.queries.{QueryServer, Registry, ResultCache}
 
 class ResultCacheSpec extends AnyFunSuite with SparkSuite {
 
@@ -150,5 +150,52 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     val after = entry.listFiles().map(_.getName).toSet
     assert(before == after)
     assert(!new java.io.File(dir).listFiles().exists(_.getName.contains(".build-")))
+  }
+
+  test("a recorded relation is served to its own session only") {
+    // a hit reuses the entry's resolved DataFrame, which belongs to the
+    // session that read it: another session's server must read its own
+    val dir = Files.createTempDirectory("result_cache_sessions").toString
+    val server = new QueryServer(spark, dir, sfDir)
+    val name = "w3_dual_sort"
+    val req = server.PageRequest(Registry.queries(name)(spark, sfDir).columns.head,
+      offset = 1, pageSize = 3)
+    val page = server.page(name, req).collect().map(_.toString).toSeq
+    val idx = server.index(name, req)
+    assert(server.index(name, req) eq idx, "a hit re-read the entry")
+
+    val other = spark.newSession()
+    val otherServer = new QueryServer(other, dir, sfDir)
+    val otherReq = otherServer.PageRequest(req.sortBy, offset = 1, pageSize = 3)
+    val otherIdx = otherServer.index(name, otherReq)
+    assert(!(otherIdx eq idx) && (otherIdx.sparkSession eq other))
+    val otherPage = otherServer.page(name, otherReq)
+    assert(otherPage.sparkSession eq other)
+    assert(otherPage.collect().map(_.toString).toSeq == page)
+    // served from the one entry, and the first session still gets its own
+    assert(new java.io.File(dir).listFiles().count(_.isDirectory) == 1)
+    assert(server.index(name, req).sparkSession eq spark)
+  }
+
+  test("an entry rebuilt by another process is read afresh") {
+    // the recorded relation lists the entry's files; a rebuild published
+    // in place by another process (new files, new _SUCCESS) between two
+    // probes must not be served through that stale listing
+    val dir = Files.createTempDirectory("result_cache_rebuilt").toString
+    def run(n: Int) = ResultCache.getOrCompute(spark, dir, "q", Map("p" -> "1")) {
+      Registry.table(spark, sfDir, "region").limit(n)
+    }
+    assert(run(2).count() == 2)
+    val entry = new java.io.File(dir).listFiles().filter(_.isDirectory).head
+    val marker = new java.io.File(entry, "_SUCCESS")
+    val built = marker.lastModified
+    val other = s"$dir/other"
+    Registry.table(spark, sfDir, "region").limit(3).write.parquet(other)
+    val files = Files.walk(entry.toPath)
+    try files.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally files.close()
+    Files.move(java.nio.file.Paths.get(other), entry.toPath)
+    assert(marker.setLastModified(built + 5000))
+    assert(run(4).count() == 3) // the other process's entry, not a rebuild
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.graftbridge.PersistBridge
+
 object Bench {
   /** Resolve where the full-precision dump goes. An explicit override
     * always wins; otherwise default to `BENCH_FULL.json` in cwd UNLESS cwd
@@ -107,7 +109,7 @@ object Bench {
       // independent, and accumulated blocks from earlier queries otherwise
       // squeeze the block manager and GC-tax later ones (d2 measured 11.9 s
       // mid-suite vs 5.4 s standalone before this)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      PersistBridge.releaseAll(spark.sparkContext)
       // a crashed query must not masquerade as a fast one: negative sentinel
       if (ok) sec else -sec
     }
@@ -207,7 +209,7 @@ object Bench {
           catch { case NonFatal(e) =>
             System.err.println(s"[bench] $name failed: $e"); false }
         val sec = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        PersistBridge.releaseAll(spark.sparkContext)
         name -> (if (ok) sec else -sec)
       }
     // deterministic name order so per-query numbers are comparable

@@ -3,6 +3,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.graftbridge.PersistBridge
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Every query
   * runs even when another fails; the exit status is 1 when any failed,
@@ -31,7 +33,7 @@ object Verify {
       }
       // queries are independent — release this query's checkpoint blocks
       // (same block-manager hygiene as Bench)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      PersistBridge.releaseAll(spark.sparkContext)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

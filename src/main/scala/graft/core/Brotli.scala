@@ -1,5 +1,7 @@
 package graft.core
 
+import graft.core.Bits.{LsbReader, PrefixCode}
+
 /** x23: Brotli decoder (RFC 7932) — `Content-Encoding: br` is the
   * second most common encoding on the 2026 web after gzip, and the one
   * encoding the HTTP envelope could not decode until now. Clean-room
@@ -132,116 +134,14 @@ object Brotli {
   }
 
   // ------------------------------------------------------------------
-  // bit reader (LSB-first stream; prefix codewords arrive MSB-first)
+  // prefix codes: LSB-first stream, codewords arrive MSB-first
   // ------------------------------------------------------------------
-
-  private final class Reader(val in: Array[Byte]) {
-    private var bytePos = 0
-    private var bitBuf = 0L
-    private var bitCnt = 0
-
-    def readBits(n: Int): Int = {
-      while (bitCnt < n) {
-        if (bytePos >= in.length) bad()
-        bitBuf |= (in(bytePos) & 0xffL) << bitCnt
-        bytePos += 1
-        bitCnt += 8
-      }
-      val v = (bitBuf & ((1L << n) - 1)).toInt
-      bitBuf >>>= n
-      bitCnt -= n
-      v
-    }
-
-    def readBit(): Int = readBits(1)
-
-    def align(): Unit = {
-      val drop = bitCnt & 7
-      bitBuf >>>= drop
-      bitCnt -= drop
-    }
-
-    /** Byte-aligned raw copy (uncompressed meta-blocks). */
-    def copyRaw(dst: Array[Byte], off: Int, len: Int): Unit = {
-      var o = off
-      var left = len
-      while (left > 0 && bitCnt > 0) { // drain buffered whole bytes first
-        dst(o) = (bitBuf & 0xff).toByte
-        bitBuf >>>= 8; bitCnt -= 8
-        o += 1; left -= 1
-      }
-      if (bytePos + left > in.length) bad()
-      System.arraycopy(in, bytePos, dst, o, left)
-      bytePos += left
-    }
-
-    /** Byte-aligned skip (metadata meta-blocks). */
-    def skipRaw(len: Int): Unit = {
-      var left = len
-      while (left > 0 && bitCnt > 0) {
-        bitBuf >>>= 8; bitCnt -= 8; left -= 1
-      }
-      if (bytePos + left > in.length) bad()
-      bytePos += left
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // prefix codes: canonical, decoded bit-by-bit (max length 15)
-  // ------------------------------------------------------------------
-
-  private final class Code(val counts: Array[Int], val syms: Array[Int],
-                           val zeroBits: Boolean) {
-    def read(r: Reader): Int = {
-      if (zeroBits) return syms(0)
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= 15) {
-        code = (code << 1) | r.readBit()
-        val cnt = counts(len)
-        if (code - first < cnt) return syms(index + code - first)
-        index += cnt
-        first = (first + cnt) << 1
-        len += 1
-      }
-      bad()
-    }
-  }
-
-  /** Canonical code from per-symbol lengths (0 = unused): symbols
-    * ordered by (length, symbol). */
-  private def buildCode(lengths: Array[Int]): Code = {
-    val counts = new Array[Int](16)
-    var n = 0
-    var i = 0
-    while (i < lengths.length) {
-      val l = lengths(i)
-      if (l < 0 || l > 15) bad()
-      if (l > 0) { counts(l) += 1; n += 1 }
-      i += 1
-    }
-    if (n == 0) bad()
-    val syms = new Array[Int](n)
-    var k = 0
-    var len = 1
-    while (len <= 15) {
-      var s = 0
-      while (s < lengths.length) {
-        if (lengths(s) == len) { syms(k) = s; k += 1 }
-        s += 1
-      }
-      len += 1
-    }
-    new Code(counts, syms, n == 1)
-  }
 
   private def log2ceil(n: Int): Int =
     if (n <= 1) 0 else 32 - Integer.numberOfLeadingZeros(n - 1)
 
   /** §3.4/§3.5: one prefix code over `alphabet` symbols. */
-  private def readPrefixCode(r: Reader, alphabet: Int): Code = {
+  private def readPrefixCode(r: LsbReader, alphabet: Int): PrefixCode = {
     val hskip = r.readBits(2)
     if (hskip == 1) {
       // simple code: 1-4 explicit symbols
@@ -265,12 +165,12 @@ object Brotli {
           if (r.readBit() == 1) Array(1, 2, 3, 3) else Array(2, 2, 2, 2)
       }
       if (nsym == 1) {
-        new Code(new Array[Int](16), Array(syms(0)), true)
+        PrefixCode.single(syms(0))
       } else {
         val lengths = new Array[Int](alphabet)
         i = 0
         while (i < nsym) { lengths(syms(i)) = lens(i); i += 1 }
-        buildCode(lengths)
+        PrefixCode(lengths)
       }
     } else {
       // complex code: code-length code lengths via the fixed code
@@ -295,7 +195,7 @@ object Brotli {
         i += 1
       }
       if (!(numCodes == 1 || space == 0)) bad()
-      val clCode = buildCode(clLengths)
+      val clCode = PrefixCode(clLengths)
 
       // symbol code lengths with accumulating 16/17 repeats
       val lengths = new Array[Int](alphabet)
@@ -332,7 +232,7 @@ object Brotli {
         }
       }
       if (space2 != 0) bad()
-      buildCode(lengths)
+      PrefixCode(lengths)
     }
   }
 
@@ -356,7 +256,7 @@ object Brotli {
     }
   }
 
-  private def readContextMap(r: Reader, size: Int, ntrees: Int): Array[Byte] = {
+  private def readContextMap(r: LsbReader, size: Int, ntrees: Int): Array[Byte] = {
     val map = new Array[Byte](size)
     if (ntrees == 1) return map
     val rlemax = if (r.readBit() == 1) r.readBits(4) + 1 else 0
@@ -384,22 +284,22 @@ object Brotli {
   // block-category state (§6)
   // ------------------------------------------------------------------
 
-  private final class BlockState(r: Reader, val ntypes: Int) {
+  private final class BlockState(r: LsbReader, val ntypes: Int) {
     var btype = 0
     private var prev = 1
     var blen: Int = 1 << 28
-    private var typeCode: Code = null
-    private var lenCode: Code = null
+    private var typeCode: PrefixCode = null
+    private var lenCode: PrefixCode = null
     if (ntypes >= 2) {
       typeCode = readPrefixCode(r, ntypes + 2)
       lenCode = readPrefixCode(r, 26)
       blen = readBlockLen(r)
     }
-    private def readBlockLen(r: Reader): Int = {
+    private def readBlockLen(r: LsbReader): Int = {
       val s = lenCode.read(r)
       BlockLenBase(s) + r.readBits(BlockLenExtra(s))
     }
-    def switchType(r: Reader): Unit = {
+    def switchType(r: LsbReader): Unit = {
       if (ntypes < 2) bad() // blen can only expire with a real type code
       val s = typeCode.read(r)
       val next = s match {
@@ -476,7 +376,7 @@ object Brotli {
 
   private def decodeImpl(in: Array[Byte], maxOut: Int): Array[Byte] = {
     if (in == null || in.length == 0) bad()
-    val r = new Reader(in)
+    val r = new LsbReader(in)
 
     // WBITS (§9.1)
     val wbits =
@@ -528,8 +428,7 @@ object Brotli {
             }
             skip += 1
           }
-          r.align()
-          r.skipRaw(skip)
+          r.skipBytes(skip)
         } else {
           var mlen = 0
           var i = 0
@@ -542,9 +441,8 @@ object Brotli {
           mlen += 1
           val isUncompressed = !isLast && r.readBit() == 1
           if (isUncompressed) {
-            r.align()
             ensure(outLen + mlen)
-            r.copyRaw(out, outLen, mlen)
+            r.readBytes(out, outLen, mlen)
             outLen += mlen
             if (outLen >= 2) { p1 = out(outLen - 1) & 0xff; p2 = out(outLen - 2) & 0xff }
             else if (outLen == 1) { p1 = out(0) & 0xff; p2 = 0 }

@@ -1,5 +1,7 @@
 package graft.core
 
+import graft.core.Bits.LsbWriter
+
 /** Analytic brotli stream assembler for the x23 gate — the VP8
   * "hand-assembled golden" pattern: a constrained RFC 7932 encoder
   * whose every choice is pinned, so the decoded output is an analytic
@@ -21,33 +23,6 @@ package graft.core
   * (brotli_asm_*.ok) pin a libbrotlidec decode of the same bytes, so
   * the ASSEMBLER is format-correct, not merely self-consistent. */
 object BrotliFixture {
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var cnt = 0
-    /** LSB-first, like the brotli stream. */
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        cur |= ((v >> i) & 1) << cnt
-        cnt += 1
-        if (cnt == 8) { out.write(cur); cur = 0; cnt = 0 }
-        i += 1
-      }
-    }
-    /** Prefix codewords are emitted MSB of the codeword first. */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBits((code >> i) & 1, 1); i -= 1 }
-    }
-    def align(): Unit = if (cnt > 0) { out.write(cur); cur = 0; cnt = 0 }
-    def writeBytes(b: Array[Byte]): Unit = {
-      require(cnt == 0, "raw bytes need byte alignment")
-      out.write(b)
-    }
-    def result(): Array[Byte] = { align(); out.toByteArray }
-  }
 
   private val InsBase = Array(0, 1, 2, 3, 4, 5, 6, 8, 10, 14, 18, 26, 34,
     50, 66, 98, 130, 194, 322, 578, 1090, 2114, 6210, 22594)
@@ -107,7 +82,7 @@ object BrotliFixture {
 
   /** The all-256-at-length-8 complex literal code, emitted through the
     * accumulating repeat-16 chain (1 + [5→17→64→251] + 4 = 256). */
-  private def writeLiteralCode(w: BitWriter): Unit = {
+  private def writeLiteralCode(w: LsbWriter): Unit = {
     w.writeBits(0, 2) // HSKIP = 0
     // code-length code lengths in ClOrder = [1,2,3,4,0,5,17,6,16,7,8,…]:
     // zeros for 1,2,3,4,0,5,17,6 then len1 for 16, zero for 7, len1 for 8
@@ -140,7 +115,7 @@ object BrotliFixture {
     * Used by fixtures whose payload is a brotli slot (WOFF2's table
     * blob, metadata) without needing a real entropy encoder. */
   def encodeRaw(data: Array[Byte]): Array[Byte] = {
-    val w = new BitWriter
+    val w = new LsbWriter
     w.writeBits(0, 1) // WBITS = 16
     var pos = 0
     while (pos < data.length) {
@@ -149,13 +124,13 @@ object BrotliFixture {
       w.writeBits(0, 2) // MNIBBLES = 4
       w.writeBits(n - 1, 16)
       w.writeBits(1, 1) // ISUNCOMPRESSED
-      w.align()
+      w.alignZero()
       w.writeBytes(java.util.Arrays.copyOfRange(data, pos, pos + n))
       pos += n
     }
     w.writeBits(1, 1) // ISLAST
     w.writeBits(1, 1) // ISLASTEMPTY
-    w.result()
+    w.toBytes
   }
 
   /** One complete brotli stream whose decode equals
@@ -169,7 +144,7 @@ object BrotliFixture {
     val copyLen = base.length * (reps - 1)
     val mlen = base.length + copyLen + (if (withTail) 4 else 0)
 
-    val w = new BitWriter
+    val w = new LsbWriter
     w.writeBits(0, 1) // WBITS = 16
 
     if (withRaw) {
@@ -178,7 +153,7 @@ object BrotliFixture {
       w.writeBits(0, 2) // MNIBBLES = 4
       w.writeBits(raw.length - 1, 16)
       w.writeBits(1, 1) // ISUNCOMPRESSED
-      w.align()
+      w.alignZero()
       w.writeBytes(raw)
     }
 
@@ -233,6 +208,6 @@ object BrotliFixture {
       // insCode 4 and cpyCode 0 carry no extra bits
       " END".getBytes("UTF-8").foreach(b => w.writeCode(b & 0xff, 8))
     }
-    w.result()
+    w.toBytes
   }
 }

@@ -11,7 +11,8 @@ import java.io.ByteArrayOutputStream
   * sentinel. Signedness is in the name: `u32*` return the unsigned value
   * as a `Long`, `i32*` the two's-complement `Int`. Nothing here allocates
   * except [[fourCC]], and nothing boxes: several walkers call these per
-  * pixel or per byte. */
+  * pixel or per byte. Fields narrower than a byte, or not aligned to
+  * one, are read and written through [[Bits]]. */
 object Bytes {
   @inline def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
 

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.core.Bits.{MsbReader, MsbWriter}
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -30,26 +32,6 @@ object Av1 {
       width: Long, height: Long, bitDepth: Long, monochrome: Boolean,
       use128Superblock: Boolean, enableCdef: Boolean,
       enableRestoration: Boolean, filmGrain: Boolean)
-
-  // ------------------------------------------------------------------
-  // MSB-first bit reader (AV1 f(n) semantics)
-  // ------------------------------------------------------------------
-
-  private final class Bits(b: Array[Byte], var pos: Int) {
-    private var bit = 0
-    def f(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        if (pos >= b.length) throw new IllegalStateException("eof")
-        v = (v << 1) | ((b(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        i += 1
-      }
-      v
-    }
-  }
 
   // ------------------------------------------------------------------
   // parse
@@ -87,57 +69,57 @@ object Av1 {
       }
       if (size < 0 || p + size > b.length) return null
     }
-    val r = new Bits(b, p)
-    val profile = r.f(3)
+    val r = new MsbReader(b, p)
+    val profile = r.readBits(3)
     if (profile > 2) return null
-    val still = r.f(1) == 1
-    val reduced = r.f(1) == 1
+    val still = r.readBits(1) == 1
+    val reduced = r.readBits(1) == 1
     if (!reduced) return null // only the AVIF shape in scope
-    val level = r.f(5)
-    val fwBits = r.f(4) + 1
-    val fhBits = r.f(4) + 1
-    val width = r.f(fwBits) + 1L
-    val height = r.f(fhBits) + 1L
-    val use128 = r.f(1) == 1
-    r.f(1) // enable_filter_intra
-    r.f(1) // enable_intra_edge_filter
-    val superres = r.f(1) == 1
-    val cdef = r.f(1) == 1
-    val restoration = r.f(1) == 1
+    val level = r.readBits(5)
+    val fwBits = r.readBits(4) + 1
+    val fhBits = r.readBits(4) + 1
+    val width = r.readBits(fwBits) + 1L
+    val height = r.readBits(fhBits) + 1L
+    val use128 = r.readBits(1) == 1
+    r.readBits(1) // enable_filter_intra
+    r.readBits(1) // enable_intra_edge_filter
+    val superres = r.readBits(1) == 1
+    val cdef = r.readBits(1) == 1
+    val restoration = r.readBits(1) == 1
     val _ = superres
     // color_config
-    val highBd = r.f(1)
+    val highBd = r.readBits(1)
     val bitDepth =
-      if (profile == 2 && highBd == 1) { if (r.f(1) == 1) 12L else 10L }
+      if (profile == 2 && highBd == 1) { if (r.readBits(1) == 1) 12L else 10L }
       else if (highBd == 1) 10L
       else 8L
-    val mono = if (profile == 1) false else r.f(1) == 1
-    val described = r.f(1) == 1
+    val mono = if (profile == 1) false else r.readBits(1) == 1
+    val described = r.readBits(1) == 1
     var cp = 2; var tc = 2; var mc = 2 // UNSPECIFIED when absent
-    if (described) { cp = r.f(8); tc = r.f(8); mc = r.f(8) }
+    if (described) { cp = r.readBits(8); tc = r.readBits(8); mc = r.readBits(8) }
     if (mono) {
       // spec 5.5.2: mono reads color_range then returns — subsampling
       // implied 1,1, NO separate_uv_delta_q bit
-      r.f(1) // color_range
+      r.readBits(1) // color_range
     } else if (described && cp == 1 && tc == 13 && mc == 0) {
       // BT.709 + sRGB + identity: full range and 4:4:4 are IMPLIED —
       // no color_range bit, no subsampling/chroma-position bits
-      r.f(1) // separate_uv_delta_q
+      r.readBits(1) // separate_uv_delta_q
     } else {
-      r.f(1) // color_range
+      r.readBits(1) // color_range
       var subX = 1; var subY = 1
       if (profile == 0) { subX = 1; subY = 1 }
       else if (profile == 1) { subX = 0; subY = 0 }
       else { // profile 2: 12-bit carries explicit subsampling bits
         if (bitDepth == 12L) {
-          subX = r.f(1)
-          subY = if (subX == 1) r.f(1) else 0
+          subX = r.readBits(1)
+          subY = if (subX == 1) r.readBits(1) else 0
         } else { subX = 1; subY = 0 } // 4:2:2
       }
-      if (subX == 1 && subY == 1) r.f(2) // chroma_sample_position
-      r.f(1) // separate_uv_delta_q
+      if (subX == 1 && subY == 1) r.readBits(2) // chroma_sample_position
+      r.readBits(1) // separate_uv_delta_q
     }
-    val filmGrain = r.f(1) == 1
+    val filmGrain = r.readBits(1) == 1
     SeqHeader(profile.toLong, still, level.toLong, width, height, bitDepth,
       mono, use128, cdef, restoration, filmGrain)
   }
@@ -146,58 +128,39 @@ object Av1 {
   // fixture encoder (the OBU the [[Avif]] fixture plants in its mdat)
   // ------------------------------------------------------------------
 
-  private final class BitsW {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def f(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        n += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def result(): Array[Byte] = {
-      if (n > 0) { out.write(cur << (8 - n)); cur = 0; n = 0 }
-      out.toByteArray
-    }
-  }
-
   private def nbits(v: Long): Int =
     math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, v)))
 
   /** Reduced-still-picture sequence-header OBU for the given geometry,
     * flags varied by the seed. */
   private[graft] def encodeSeqHeader(w: Long, h: Long, k: Long): Array[Byte] = {
-    val bw = new BitsW
-    bw.f(0, 3) // seq_profile 0
-    bw.f(1, 1) // still_picture
-    bw.f(1, 1) // reduced_still_picture_header
-    bw.f((k % 14).toInt, 5) // seq_level_idx
+    val bw = new MsbWriter
+    bw.writeBits(0, 3) // seq_profile 0
+    bw.writeBits(1, 1) // still_picture
+    bw.writeBits(1, 1) // reduced_still_picture_header
+    bw.writeBits((k % 14).toInt, 5) // seq_level_idx
     val fwBits = nbits(w - 1)
     val fhBits = nbits(h - 1)
-    bw.f(fwBits - 1, 4)
-    bw.f(fhBits - 1, 4)
-    bw.f((w - 1).toInt, fwBits)
-    bw.f((h - 1).toInt, fhBits)
-    bw.f((k % 2).toInt, 1) // use_128x128_superblock
-    bw.f(if (k % 3 == 0) 1 else 0, 1) // enable_filter_intra
-    bw.f(if (k % 3 != 1) 1 else 0, 1) // enable_intra_edge_filter
-    bw.f(if (k % 5 == 0) 1 else 0, 1) // enable_superres
-    bw.f(((k + 1) % 2).toInt, 1) // enable_cdef
-    bw.f(if (k % 7 == 0) 1 else 0, 1) // enable_restoration
+    bw.writeBits(fwBits - 1, 4)
+    bw.writeBits(fhBits - 1, 4)
+    bw.writeBits((w - 1).toInt, fwBits)
+    bw.writeBits((h - 1).toInt, fhBits)
+    bw.writeBits((k % 2).toInt, 1) // use_128x128_superblock
+    bw.writeBits(if (k % 3 == 0) 1 else 0, 1) // enable_filter_intra
+    bw.writeBits(if (k % 3 != 1) 1 else 0, 1) // enable_intra_edge_filter
+    bw.writeBits(if (k % 5 == 0) 1 else 0, 1) // enable_superres
+    bw.writeBits(((k + 1) % 2).toInt, 1) // enable_cdef
+    bw.writeBits(if (k % 7 == 0) 1 else 0, 1) // enable_restoration
     // color_config: 8-bit, not monochrome, undesc., full-range off,
     // chroma position varies, no separate uv delta q
-    bw.f(0, 1) // high_bitdepth
-    bw.f(0, 1) // mono_chrome
-    bw.f(0, 1) // color_description_present_flag
-    bw.f(0, 1) // color_range
-    bw.f((k % 3).toInt, 2) // chroma_sample_position
-    bw.f(0, 1) // separate_uv_delta_q
-    bw.f(if (k % 4 == 0) 1 else 0, 1) // film_grain_params_present
-    val payload = bw.result()
+    bw.writeBits(0, 1) // high_bitdepth
+    bw.writeBits(0, 1) // mono_chrome
+    bw.writeBits(0, 1) // color_description_present_flag
+    bw.writeBits(0, 1) // color_range
+    bw.writeBits((k % 3).toInt, 2) // chroma_sample_position
+    bw.writeBits(0, 1) // separate_uv_delta_q
+    bw.writeBits(if (k % 4 == 0) 1 else 0, 1) // film_grain_params_present
+    val payload = bw.toBytes
     val out = new java.io.ByteArrayOutputStream(payload.length + 2)
     out.write(0x0a) // type 1, has_size, no ext
     // leb128 size (payload is tiny; single byte)

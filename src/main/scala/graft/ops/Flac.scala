@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Bits.{MsbReader, MsbWriter}
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -45,74 +46,20 @@ object Flac {
   private val MaxBlock = 65535
   private val MaxTotalSamples = 1 << 22
 
-  // ------------------------------------------------------------------
-  // bit I/O (MSB-first, unlike VP8L's LSB-first)
-  // ------------------------------------------------------------------
-
-  private final class BitReader(val b: Array[Byte]) {
-    var bytePos = 0
-    private var bitPos = 0 // next bit, 0 = MSB
-    def alignByte(): Unit = if (bitPos != 0) { bitPos = 0; bytePos += 1 }
-    def atByteBoundary: Boolean = bitPos == 0
-    def readBit(): Int = {
-      if (bytePos >= b.length) throw Bad
-      val v = (b(bytePos) >> (7 - bitPos)) & 1
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-      v
+  /** Unary: count of 0 bits before the terminating 1. */
+  private def readUnary(br: MsbReader): Int = {
+    var q = 0
+    while (br.readBit() == 0) {
+      q += 1
+      if (q > (1 << 20)) throw Bad // quotient budget
     }
-    def readBits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-    def readBitsLong(n: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-    /** Signed two's-complement value of n bits (n in 1..32). */
-    def readSigned(n: Int): Int = {
-      val v = readBits(n)
-      if (n == 32) v else (v << (32 - n)) >> (32 - n)
-    }
-    /** Unary: count of 0 bits before the terminating 1. */
-    def readUnary(): Int = {
-      var q = 0
-      while (readBit() == 0) {
-        q += 1
-        if (q > (1 << 20)) throw Bad // quotient budget
-      }
-      q
-    }
+    q
   }
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nb = 0
-    def writeBit(v: Int): Unit = {
-      cur = (cur << 1) | (v & 1)
-      nb += 1
-      if (nb == 8) { out.write(cur); cur = 0; nb = 0 }
-    }
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { writeBit(((v >> i) & 1L).toInt); i -= 1 }
-    }
-    def writeUnary(q: Int): Unit = {
-      var i = 0
-      while (i < q) { writeBit(0); i += 1 }
-      writeBit(1)
-    }
-    def alignZero(): Unit = while (nb != 0) writeBit(0)
-    /** Bytes emitted so far — only meaningful at a byte boundary
-      * (frame CRCs are computed over aligned prefixes). */
-    def bytesSoFar: Array[Byte] = {
-      require(nb == 0, "bytesSoFar needs byte alignment")
-      out.toByteArray
-    }
-    def toBytes: Array[Byte] = { alignZero(); out.toByteArray }
+  private def writeUnary(bw: MsbWriter, q: Int): Unit = {
+    var i = 0
+    while (i < q) { bw.writeBit(0); i += 1 }
+    bw.writeBit(1)
   }
 
   // ------------------------------------------------------------------
@@ -171,7 +118,7 @@ object Flac {
   }
 
   /** UTF-8-style coded number (frame or sample ordinal). */
-  private def readCodedNumber(br: BitReader, maxBytes: Int): Long = {
+  private def readCodedNumber(br: MsbReader, maxBytes: Int): Long = {
     if (!br.atByteBoundary) throw Bad
     val first = br.readBits(8)
     if ((first & 0x80) == 0) return first.toLong
@@ -192,7 +139,7 @@ object Flac {
 
   /** Partitioned rice/rice2 residual (RFC 9639 §7.2.3). */
   private def readResidual(
-      br: BitReader, blocksize: Int, order: Int): Array[Int] = {
+      br: MsbReader, blocksize: Int, order: Int): Array[Int] = {
     val method = br.readBits(2)
     if (method > 1) throw Bad
     val pbits = if (method == 0) 4 else 5
@@ -216,7 +163,7 @@ object Flac {
       } else {
         var i = 0
         while (i < count) {
-          val q = br.readUnary().toLong
+          val q = readUnary(br).toLong
           val lo = if (param == 0) 0L else br.readBits(param).toLong
           val u = (q << param) | lo
           res(idx) = ((u >>> 1) ^ -(u & 1L)).toInt
@@ -250,11 +197,11 @@ object Flac {
   }
 
   private def decodeSubframe(
-      br: BitReader, blocksize: Int, bps: Int): Array[Int] = {
+      br: MsbReader, blocksize: Int, bps: Int): Array[Int] = {
     if (br.readBit() != 0) throw Bad // reserved pad
     val typ = br.readBits(6)
     var wasted = 0
-    if (br.readBit() == 1) wasted = 1 + br.readUnary()
+    if (br.readBit() == 1) wasted = 1 + readUnary(br)
     val bpsE = bps - wasted
     if (bpsE < 1 || bpsE > 32) throw Bad
     val out: Array[Int] =
@@ -310,7 +257,8 @@ object Flac {
   }
 
   /** Decodes the full stream into per-channel PCM. Throws [[Bad]] on
-    * any structural lie — public wrappers map that to the -1 row. */
+    * any structural lie (`Bits.Malformed` on a read past the end) —
+    * public wrappers map either to the -1 row. */
   private def decodePcm(b: Array[Byte]): (StreamInfo, Array[Array[Int]]) = {
     if (b.length < 42) throw Bad
     if (b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') throw Bad
@@ -339,8 +287,7 @@ object Flac {
     if (si.totalSamples < 0 || si.totalSamples > MaxTotalSamples) throw Bad
     val chans = Array.fill(si.channels)(
       new scala.collection.mutable.ArrayBuilder.ofInt)
-    val br = new BitReader(b)
-    br.bytePos = pos
+    val br = new MsbReader(b, pos)
     var total = 0L
     while (
       if (si.totalSamples > 0) total < si.totalSamples
@@ -489,7 +436,7 @@ object Flac {
   private[graft] def flacChannels(k: Long): Int =
     if (k % 6 == 1 || k % 6 == 3) 1 else 2
 
-  private def utf8Coded(bw: BitWriter, v: Long): Unit = {
+  private def utf8Coded(bw: MsbWriter, v: Long): Unit = {
     if (v < 0x80) { bw.writeBits(v, 8); return }
     var cont = 1
     while (v >= (1L << (6 * cont + (6 - cont))) && cont < 6) cont += 1
@@ -519,7 +466,7 @@ object Flac {
   }
 
   private def writeRicePartition(
-      bw: BitWriter, vals: Array[Int], from: Int, until: Int,
+      bw: MsbWriter, vals: Array[Int], from: Int, until: Int,
       pbits: Int, forceEscape: Boolean): Unit = {
     val escape = (1 << pbits) - 1
     var maxAbsBits = 1
@@ -554,7 +501,7 @@ object Flac {
       while (i < until) {
         val v = vals(i)
         val u = (v.toLong << 1) ^ (v.toLong >> 63)
-        bw.writeUnary((u >>> bestK).toInt)
+        writeUnary(bw, (u >>> bestK).toInt)
         if (bestK > 0) bw.writeBits(u & ((1L << bestK) - 1), bestK)
         i += 1
       }
@@ -562,7 +509,7 @@ object Flac {
   }
 
   private def writeResidual(
-      bw: BitWriter, res: Array[Int], blocksize: Int, order: Int,
+      bw: MsbWriter, res: Array[Int], blocksize: Int, order: Int,
       method: Int, partOrder: Int, forceEscape: Boolean): Unit = {
     bw.writeBits(method.toLong, 2)
     bw.writeBits(partOrder.toLong, 4)
@@ -596,7 +543,7 @@ object Flac {
   }
 
   private def writeSubframe(
-      bw: BitWriter, s: Array[Int], bps: Int, kind: String,
+      bw: MsbWriter, s: Array[Int], bps: Int, kind: String,
       order: Int, method: Int, partOrder: Int, wasted: Int,
       forceEscape: Boolean): Unit = {
     bw.writeBit(0)
@@ -657,7 +604,7 @@ object Flac {
   private def encodeFrame(
       frameIdx: Int, firstSample: Long, blocksize: Int,
       chans: Array[Array[Int]], bps: Int, regime: Int): Array[Byte] = {
-    val bw = new BitWriter()
+    val bw = new MsbWriter()
     val variable = regime == 2
     bw.writeBits(0x3ffeL, 14)
     bw.writeBit(0)

@@ -31,6 +31,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object JpegProgressive {
 
+  import JpegEntropy.{extend, extendBits, size}
   import Multimodal.{DcLumBits, DcLumVals, IdctK, MaxInflateBytes, ZigZag,
     huffCodes, ycbcrToRgb}
 
@@ -47,12 +48,7 @@ object JpegProgressive {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
         return bad
       var pos = 2
-      val qt = Array.ofDim[Int](4, 64)
-      val qtSeen = new Array[Boolean](4)
-      val huffFirstCode = Array.ofDim[Int](2, 4, 17)
-      val huffFirstIdx = Array.ofDim[Int](2, 4, 17)
-      val huffCount = Array.ofDim[Int](2, 4, 17)
-      val huffVals = Array.ofDim[Array[Int]](2, 4)
+      val t = new JpegEntropy.Tables
       var w = -1; var h = -1
       var nComp = 0
       val compSampH = new Array[Int](4); val compSampV = new Array[Int](4)
@@ -66,54 +62,12 @@ object JpegProgressive {
       var mcusX = 0; var mcusY = 0
       var sawEoi = false
 
-      // ---- per-scan entropy reader state --------------------------
-      var p = 0
-      var bitBuf = 0L; var bitCnt = 0
-      var feedDone = false
-      var fail = false
-      def fill(): Unit = {
-        while (bitCnt <= 56 && !feedDone) {
-          if (p >= bytes.length) feedDone = true
-          else {
-            val v = u8(bytes, p)
-            if (v == 0xff) {
-              if (p + 1 < bytes.length && u8(bytes, p + 1) == 0x00) {
-                bitBuf = (bitBuf << 8) | 0xff; bitCnt += 8; p += 2
-              } else feedDone = true
-            } else { bitBuf = (bitBuf << 8) | v; bitCnt += 8; p += 1 }
-          }
-        }
-      }
-      def getBits(n: Int): Int = {
-        if (n == 0) return 0
-        fill()
-        if (bitCnt < n) { fail = true; return 0 }
-        val v = ((bitBuf >> (bitCnt - n)) & ((1L << n) - 1)).toInt
-        bitCnt -= n
-        v
-      }
-      def huffDecode(tc: Int, th: Int): Int = {
-        if (huffVals(tc)(th) == null) { fail = true; return -1 }
-        var code = 0
-        var l = 1
-        while (l <= 16) {
-          code = (code << 1) | getBits(1)
-          if (fail) return -1
-          val cnt = huffCount(tc)(th)(l)
-          if (cnt > 0 && code >= huffFirstCode(tc)(th)(l) &&
-              code - huffFirstCode(tc)(th)(l) < cnt)
-            return huffVals(tc)(th)(huffFirstIdx(tc)(th)(l) + code - huffFirstCode(tc)(th)(l))
-          l += 1
-        }
-        fail = true; -1
-      }
-      def extend(v: Int, s: Int): Int =
-        if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
+      val ent = new JpegEntropy.Reader(bytes, t)
 
       // ---- one scan ------------------------------------------------
       def runScan(scanComps: Array[Int], dcTab: Array[Int], acTab: Array[Int],
           ss: Int, se: Int, ah: Int, al: Int, dataAt: Int): Boolean = {
-        p = dataAt; bitBuf = 0; bitCnt = 0; feedDone = false; fail = false
+        ent.start(dataAt)
         var eobrun = 0
         val pred = new Array[Int](4)
         val ns = scanComps.length
@@ -121,17 +75,17 @@ object JpegProgressive {
         val m1 = -1 << al
 
         def dcFirstBlock(ci: Int, bi: Int): Boolean = {
-          val s = huffDecode(0, dcTab(ci))
+          val s = ent.huffDecode(0, dcTab(ci))
           if (s < 0 || s > 11) return false
-          val diff = extend(getBits(s), s)
-          if (fail) return false
+          val diff = extend(ent.getBits(s), s)
+          if (ent.failed) return false
           pred(ci) += diff
           coefs(ci)(bi * 64) = pred(ci) << al
           true
         }
         def dcRefineBlock(ci: Int, bi: Int): Boolean = {
-          val b = getBits(1)
-          if (fail) return false
+          val b = ent.getBits(1)
+          if (ent.failed) return false
           if (b == 1) coefs(ci)(bi * 64) |= p1
           true
         }
@@ -140,21 +94,21 @@ object JpegProgressive {
           val buf = coefs(ci)
           var k = ss
           while (k <= se) {
-            val rs = huffDecode(1, acTab(ci))
+            val rs = ent.huffDecode(1, acTab(ci))
             if (rs < 0) return false
             val r = rs >> 4; val s = rs & 15
             if (s == 0) {
               if (r == 15) { k += 16 }
               else {
-                eobrun = (1 << r) - 1 + (if (r > 0) getBits(r) else 0)
-                if (fail) return false
+                eobrun = (1 << r) - 1 + (if (r > 0) ent.getBits(r) else 0)
+                if (ent.failed) return false
                 return true
               }
             } else {
               k += r
               if (k > se) return false
-              buf(bi * 64 + ZigZag(k)) = extend(getBits(s), s) << al
-              if (fail) return false
+              buf(bi * 64 + ZigZag(k)) = extend(ent.getBits(s), s) << al
+              if (ent.failed) return false
               k += 1
             }
           }
@@ -166,7 +120,7 @@ object JpegProgressive {
           if (eobrun == 0) {
             var done = false
             while (!done && k <= se) {
-              val rs = huffDecode(1, acTab(ci))
+              val rs = ent.huffDecode(1, acTab(ci))
               if (rs < 0) return false
               val r0 = rs >> 4; val s0 = rs & 15
               var r = r0
@@ -176,15 +130,15 @@ object JpegProgressive {
                   // EOBRUN counts this block too — the post-loop handler
                   // refines the band's remaining nonzero coefficients
                   // (reading their correction bits) and decrements
-                  eobrun = (1 << r0) + (if (r0 > 0) getBits(r0) else 0)
-                  if (fail) return false
+                  eobrun = (1 << r0) + (if (r0 > 0) ent.getBits(r0) else 0)
+                  if (ent.failed) return false
                   done = true
                 }
                 // r0 == 15: ZRL — skip 16 zero-history coefficients below
               } else {
                 if (s0 != 1) return false
-                newVal = if (getBits(1) == 1) p1 else m1
-                if (fail) return false
+                newVal = if (ent.getBits(1) == 1) p1 else m1
+                if (ent.failed) return false
               }
               if (!done) {
                 // advance over r zero-history slots, reading a correction
@@ -193,9 +147,9 @@ object JpegProgressive {
                 while (!placed && k <= se) {
                   val c = buf(bi * 64 + ZigZag(k))
                   if (c != 0) {
-                    if (getBits(1) == 1 && (c & p1) == 0)
+                    if (ent.getBits(1) == 1 && (c & p1) == 0)
                       buf(bi * 64 + ZigZag(k)) = c + (if (c >= 0) p1 else m1)
-                    if (fail) return false
+                    if (ent.failed) return false
                   } else {
                     if (r == 0) placed = true
                     else r -= 1
@@ -216,9 +170,9 @@ object JpegProgressive {
             while (k <= se) {
               val c = buf(bi * 64 + ZigZag(k))
               if (c != 0) {
-                if (getBits(1) == 1 && (c & p1) == 0)
+                if (ent.getBits(1) == 1 && (c & p1) == 0)
                   buf(bi * 64 + ZigZag(k)) = c + (if (c >= 0) p1 else m1)
-                if (fail) return false
+                if (ent.failed) return false
               }
               k += 1
             }
@@ -232,15 +186,9 @@ object JpegProgressive {
 
         def restart(unitIdx: Int): Boolean = {
           if (restartInterval > 0 && unitIdx > 0 && unitIdx % restartInterval == 0) {
-            bitCnt -= bitCnt % 8
-            fail = false; feedDone = false
-            if (p + 1 < bytes.length && u8(bytes, p) == 0xff &&
-                u8(bytes, p + 1) >= 0xd0 && u8(bytes, p + 1) <= 0xd7) {
-              p += 2
-              java.util.Arrays.fill(pred, 0)
-              eobrun = 0
-              bitBuf = 0; bitCnt = 0
-            } else return false
+            if (!ent.restart()) return false
+            java.util.Arrays.fill(pred, 0)
+            eobrun = 0
           }
           true
         }
@@ -294,8 +242,8 @@ object JpegProgressive {
             by += 1
           }
         }
-        // leave p at the first unconsumed byte (fill() stopped AT any
-        // marker, so the outer walk can resume from there)
+        // the reader stopped AT the next marker, so the outer walk can
+        // resume from ent.pos
         true
       }
 
@@ -314,15 +262,7 @@ object JpegProgressive {
           val body = pos + 4
           m match {
             case 0xdb =>
-              var q = body
-              while (q < pos + 2 + len) {
-                val pq = u8(bytes, q) >> 4; val tq = u8(bytes, q) & 15
-                if (pq != 0 || tq > 3 || q + 65 > pos + 2 + len) return bad
-                var i = 0
-                while (i < 64) { qt(tq)(i) = u8(bytes, q + 1 + i); i += 1 }
-                qtSeen(tq) = true
-                q += 65
-              }
+              if (!t.readDqt(bytes, body, pos + 2 + len)) return bad
               pos += 2 + len
             case 0xc2 =>
               if (coefs != null) return bad // one frame only
@@ -359,26 +299,7 @@ object JpegProgressive {
                 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
               return bad // not progressive-Huffman
             case 0xc4 =>
-              var q = body
-              while (q < pos + 2 + len) {
-                val tc = u8(bytes, q) >> 4; val th = u8(bytes, q) & 15
-                if (tc > 1 || th > 3 || q + 17 > pos + 2 + len) return bad
-                var total = 0
-                var l = 1
-                while (l <= 16) { huffCount(tc)(th)(l) = u8(bytes, q + l); total += u8(bytes, q + l); l += 1 }
-                if (total > 256 || q + 17 + total > pos + 2 + len) return bad
-                huffVals(tc)(th) = Array.tabulate(total)(i => u8(bytes, q + 17 + i))
-                var code = 0; var vi = 0
-                l = 1
-                while (l <= 16) {
-                  huffFirstCode(tc)(th)(l) = code
-                  huffFirstIdx(tc)(th)(l) = vi
-                  code += huffCount(tc)(th)(l); vi += huffCount(tc)(th)(l)
-                  code <<= 1
-                  l += 1
-                }
-                q += 17 + total
-              }
+              if (!t.readDht(bytes, body, pos + 2 + len)) return bad
               pos += 2 + len
             case 0xdd =>
               if (len != 4) return bad
@@ -411,7 +332,7 @@ object JpegProgressive {
               if (al0 > 13 || (ah0 != 0 && ah0 != al0 + 1)) return bad
               if (!runScan(scanComps, scanDc, scanAc, ss0, se0, ah0, al0,
                   pos + 2 + len)) return bad
-              pos = p // entropy reader stopped at the next marker
+              pos = ent.pos // entropy reader stopped at the next marker
               // tolerate a byte-aligned stop mid-stuffing: resync to FF
               while (pos < bytes.length && u8(bytes, pos) != 0xff) pos += 1
             case _ =>
@@ -421,7 +342,7 @@ object JpegProgressive {
       }
       if (coefs == null) return bad
       var c = 0
-      while (c < nComp) { if (!qtSeen(compQ(c))) return bad; c += 1 }
+      while (c < nComp) { if (!t.qtSeen(compQ(c))) return bad; c += 1 }
 
       // ---- render: dequant + pinned IDCT + stats fold --------------
       val planeW = new Array[Int](nComp); val planeH = new Array[Int](nComp)
@@ -437,7 +358,7 @@ object JpegProgressive {
       val deq = new Array[Int](64)
       c = 0
       while (c < nComp) {
-        val q = qt(compQ(c))
+        val q = t.qt(compQ(c))
         val buf = coefs(c)
         var by = 0
         while (by < blocksH(c)) {
@@ -549,24 +470,7 @@ object JpegProgressive {
     val acTab = huffCodes(AcProgBits, AcProgVals)
 
     // per-scan bit writer with FF stuffing; 1-fill flush at scan end
-    var bitBuf = 0L; var bitCnt = 0
-    def putBits(code: Int, len: Int): Unit = {
-      if (len > 0) {
-        bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
-        bitCnt += len
-        while (bitCnt >= 8) {
-          val b = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
-          out.write(b)
-          if (b == 0xff) out.write(0x00)
-          bitCnt -= 8
-        }
-      }
-    }
-    def flushScan(): Unit =
-      if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
-    def size(v: Int): Int =
-      if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def extendBits(v: Int): Int = if (v < 0) v - 1 else v
+    val ew = new JpegEntropy.Writer(out)
     def sos(ss: Int, se: Int, ah: Int, al: Int): Unit =
       Multimodal.jpegMarker(out, 0xda, Array(1, 1, 0x00, ss, se, (ah << 4) | al))
 
@@ -587,18 +491,18 @@ object JpegProgressive {
       val diff = v - pred; pred = v
       val ds = size(diff)
       val (c, l) = dcLum(ds)
-      putBits(c, l)
-      if (ds > 0) putBits(extendBits(diff), ds)
+      ew.putBits(c, l)
+      if (ds > 0) ew.putBits(extendBits(diff), ds)
     }
-    flushScan()
+    ew.flush()
 
     // ---- scans 2-3: AC first per band, Al=1 (magnitude shift) -------
     var eobrun = 0
     def emitEobrunFirst(): Unit = if (eobrun > 0) {
       val nb = 31 - Integer.numberOfLeadingZeros(eobrun)
       val (c, l) = acTab(nb << 4)
-      putBits(c, l)
-      if (nb > 0) putBits(eobrun & ((1 << nb) - 1), nb)
+      ew.putBits(c, l)
+      if (nb > 0) ew.putBits(eobrun & ((1 << nb) - 1), nb)
       eobrun = 0
     }
     def acFirstScan(ss: Int, se: Int): Unit = {
@@ -613,11 +517,11 @@ object JpegProgressive {
           if (temp == 0) r += 1
           else {
             emitEobrunFirst()
-            while (r > 15) { val (zc, zl) = acTab(0xf0); putBits(zc, zl); r -= 16 }
+            while (r > 15) { val (zc, zl) = acTab(0xf0); ew.putBits(zc, zl); r -= 16 }
             val s = size(temp)
             val (c, l) = acTab((r << 4) | s)
-            putBits(c, l)
-            putBits(extendBits(if (t < 0) -temp else temp), s)
+            ew.putBits(c, l)
+            ew.putBits(extendBits(if (t < 0) -temp else temp), s)
             r = 0
           }
           kk += 1
@@ -625,7 +529,7 @@ object JpegProgressive {
         if (r > 0) { eobrun += 1; if (eobrun == 0x7fff) emitEobrunFirst() }
       }
       emitEobrunFirst()
-      flushScan()
+      ew.flush()
     }
     acFirstScan(1, 5)
     acFirstScan(6, 63)
@@ -633,8 +537,8 @@ object JpegProgressive {
     // ---- scan 4: DC refine (one raw bit per block) -------------------
     sos(0, 0, 1, 0)
     for (by <- 0 until nby; bx <- 0 until nbx)
-      putBits(coefAt(bx, by, 0) & 1, 1)
-    flushScan()
+      ew.putBits(coefAt(bx, by, 0) & 1, 1)
+    ew.flush()
 
     // ---- scan 5: AC refine 1..63, Ah=1 Al=0 --------------------------
     sos(1, 63, 1, 0)
@@ -646,9 +550,9 @@ object JpegProgressive {
       if (eobrun > 0) {
         val nb = 31 - Integer.numberOfLeadingZeros(eobrun)
         val (c, l) = acTab(nb << 4)
-        putBits(c, l)
-        if (nb > 0) putBits(eobrun & ((1 << nb) - 1), nb)
-        pendingBE.foreach(b => putBits(b, 1))
+        ew.putBits(c, l)
+        if (nb > 0) ew.putBits(eobrun & ((1 << nb) - 1), nb)
+        pendingBE.foreach(b => ew.putBits(b, 1))
         pendingBE.clear()
         eobrun = 0
       }
@@ -678,17 +582,17 @@ object JpegProgressive {
           while (r > 15 && kk <= eobPos) {
             emitEobrunRefine()
             val (zc, zl) = acTab(0xf0)
-            putBits(zc, zl); r -= 16
-            br.foreach(b => putBits(b, 1)); br.clear()
+            ew.putBits(zc, zl); r -= 16
+            br.foreach(b => ew.putBits(b, 1)); br.clear()
           }
           if (temp > 1) br += (temp & 1) // history-nonzero: correction bit
           else {
             // newly significant ±1: flush any pending EOB run first
             emitEobrunRefine()
             val (c, l) = acTab((r << 4) | 1)
-            putBits(c, l)
-            putBits(if (t > 0) 1 else 0, 1)
-            br.foreach(b => putBits(b, 1)); br.clear()
+            ew.putBits(c, l)
+            ew.putBits(if (t > 0) 1 else 0, 1)
+            br.foreach(b => ew.putBits(b, 1)); br.clear()
             r = 0
           }
         }
@@ -701,7 +605,7 @@ object JpegProgressive {
       }
     }
     emitEobrunRefine()
-    flushScan()
+    ew.flush()
 
     out.write(0xff); out.write(0xd9)
     out.toByteArray

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Bits.{LsbReader, LsbWriter}
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -1232,17 +1233,9 @@ object Multimodal {
     val minCode = 8
     val clear = 1 << minCode
     val eoi = clear + 1
-    var bitBuf = 0L
-    var bitCnt = 0
-    val data = new java.io.ByteArrayOutputStream()
+    val data = new LsbWriter
     var codeSize = minCode + 1
-    def emit(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt
-      bitCnt += codeSize
-      while (bitCnt >= 8) {
-        data.write((bitBuf & 0xff).toInt); bitBuf >>>= 8; bitCnt -= 8
-      }
-    }
+    def emit(code: Int): Unit = data.writeBits(code, codeSize)
     var dict = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
     var nextCode = eoi + 1
     emit(clear)
@@ -1275,10 +1268,9 @@ object Multimodal {
     }
     if (cur >= 0) emit(cur)
     emit(eoi)
-    if (bitCnt > 0) data.write((bitBuf & 0xff).toInt)
     // wrap in ≤255-byte sub-blocks
     out.write(minCode)
-    val bytes = data.toByteArray
+    val bytes = data.toBytes
     var off = 0
     while (off < bytes.length) {
       val n = math.min(255, bytes.length - off)
@@ -1414,8 +1406,8 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => bad }
   }
 
-  /** GIF variable-width LZW decode to exactly `n` indices (null on any
-    * malformation: bad code, early exhaustion, overflow). */
+  /** GIF variable-width LZW decode to exactly `n` indices: null on a
+    * bad code or overflow, `Bits.Malformed` when the codes run out. */
   private def lzwDecode(data: Array[Byte], minCode: Int, n: Int): Array[Int] = {
     val clear = 1 << minCode
     val eoi = clear + 1
@@ -1426,9 +1418,7 @@ object Multimodal {
     var codeSize = minCode + 1
     val out = new Array[Int](n)
     var outLen = 0
-    var bitBuf = 0L
-    var bitCnt = 0
-    var pos = 0
+    val r = new LsbReader(data)
     var prev = -1
     val stack = new Array[Int](4096)
     def expand(code0: Int, extra: Int): Boolean = {
@@ -1452,13 +1442,7 @@ object Multimodal {
       c
     }
     while (outLen < n) {
-      while (bitCnt < codeSize) {
-        if (pos >= data.length) return null
-        bitBuf |= (data(pos) & 0xffL) << bitCnt
-        bitCnt += 8; pos += 1
-      }
-      val code = (bitBuf & ((1 << codeSize) - 1)).toInt
-      bitBuf >>>= codeSize; bitCnt -= codeSize
+      val code = r.readBits(codeSize)
       if (code == clear) {
         nextCode = eoi + 1; codeSize = minCode + 1; prev = -1
       } else if (code == eoi) {
@@ -1891,29 +1875,17 @@ object Multimodal {
     val dcLum = huffCodes(DcLumBits, DcLumVals)
     val dcChr = huffCodes(DcChrBits, DcChrVals)
     val acMin = huffCodes(AcMinBits, AcMinVals)
-    var bitBuf = 0L; var bitCnt = 0
-    def putBits(code: Int, len: Int): Unit = {
-      if (len > 0) {
-        bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
-        bitCnt += len
-        while (bitCnt >= 8) {
-          val byte = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
-          out.write(byte)
-          if (byte == 0xff) out.write(0x00) // byte stuffing
-          bitCnt -= 8
-        }
-      }
-    }
+    val ew = new JpegEntropy.Writer(out) // FF-stuffed
     val pred = Array(0, 0, 0)
     def block(ci: Int, value: Int): Unit = {
       val level = value - 128 // quantized DC at q=8: 8(v-128)/8
       val diff = level - pred(ci); pred(ci) = level
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
+      val s = JpegEntropy.size(diff)
       val (c, l) = (if (ci == 0) dcLum else dcChr)(s)
-      putBits(c, l)
-      if (s > 0) putBits(if (diff < 0) diff - 1 else diff, s)
+      ew.putBits(c, l)
+      if (s > 0) ew.putBits(JpegEntropy.extendBits(diff), s)
       val (ec, el) = acMin(0x00) // EOB: no AC coefficients
-      putBits(ec, el)
+      ew.putBits(ec, el)
     }
     if (gray) {
       // single-component non-interleaved scan (T.81 §A.2.2): the MCU is
@@ -1932,7 +1904,7 @@ object Multimodal {
         block(2, jpegCr(k, mx, my))
       }
     }
-    if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt) // pad with 1s
+    ew.flush() // pad with 1s
     out.write(0xff); out.write(0xd9) // EOI
     out.toByteArray
   }
@@ -1973,47 +1945,33 @@ object Multimodal {
     jpegMarker(out, 0xda, Array(1, 1, 0x00, 0, 63, 0))
     val dcLum = huffCodes(DcLumBits, DcLumVals)
     val acTab = huffCodes(AcM22Bits, AcM22Vals)
-    var bitBuf = 0L; var bitCnt = 0
-    def putBits(code: Int, len: Int): Unit = {
-      if (len > 0) {
-        bitBuf = (bitBuf << len) | (code & ((1L << len) - 1))
-        bitCnt += len
-        while (bitCnt >= 8) {
-          val byte = ((bitBuf >> (bitCnt - 8)) & 0xff).toInt
-          out.write(byte)
-          if (byte == 0xff) out.write(0x00)
-          bitCnt -= 8
-        }
-      }
-    }
-    def size(v: Int): Int =
-      if (v == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def extendBits(v: Int, s: Int): Int = if (v < 0) v - 1 else v
+    val ew = new JpegEntropy.Writer(out)
+    import JpegEntropy.{extendBits, size}
     var pred = 0
     for (by <- 0 until nby; bx <- 0 until nbx) {
       val dc = jpegAcDc(k, bx, by)
       val diff = dc - pred; pred = dc
       val ds = size(diff)
       val (c, l) = dcLum(ds)
-      putBits(c, l)
-      if (ds > 0) putBits(extendBits(diff, ds), ds)
+      ew.putBits(c, l)
+      if (ds > 0) ew.putBits(extendBits(diff), ds)
       val a1 = jpegAc1(k, bx, by)
       val a2 = jpegAc2(k, bx, by)
       if (a1 != 0) {
         val s1 = size(a1)
         val (c1, l1) = acTab(s1) // run 0
-        putBits(c1, l1); putBits(extendBits(a1, s1), s1)
+        ew.putBits(c1, l1); ew.putBits(extendBits(a1), s1)
       }
       if (a2 != 0) {
         val run = if (a1 != 0) 6 else 7 // zigzag 1(+1) → 8, or 0(+1) → 8
         val s2 = size(a2)
         val (c2, l2) = acTab((run << 4) | s2)
-        putBits(c2, l2); putBits(extendBits(a2, s2), s2)
+        ew.putBits(c2, l2); ew.putBits(extendBits(a2), s2)
       }
       val (ec, el) = acTab(0x00) // EOB (position 8 < 63)
-      putBits(ec, el)
+      ew.putBits(ec, el)
     }
-    if (bitCnt > 0) putBits((1 << (8 - bitCnt)) - 1, 8 - bitCnt)
+    ew.flush()
     out.write(0xff); out.write(0xd9)
     out.toByteArray
   }
@@ -2038,13 +1996,7 @@ object Multimodal {
       if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
         return bad
       var pos = 2
-      val qt = Array.ofDim[Int](4, 64)
-      val qtSeen = new Array[Boolean](4)
-      // huffman tables: [class][id] → (firstCode, firstIdx per len, vals)
-      val huffFirstCode = Array.ofDim[Int](2, 4, 17)
-      val huffFirstIdx = Array.ofDim[Int](2, 4, 17)
-      val huffCount = Array.ofDim[Int](2, 4, 17)
-      val huffVals = Array.ofDim[Array[Int]](2, 4)
+      val t = new JpegEntropy.Tables
       var w = -1; var h = -1
       var nComp = 0
       val compSampH = new Array[Int](4); val compSampV = new Array[Int](4)
@@ -2063,15 +2015,7 @@ object Multimodal {
           val body = pos + 4
           m match {
             case 0xdb => // DQT (possibly several tables)
-              var p = body
-              while (p < pos + 2 + len) {
-                val pq = u8(bytes, p) >> 4; val tq = u8(bytes, p) & 15
-                if (pq != 0 || tq > 3 || p + 65 > pos + 2 + len) return bad
-                var i = 0
-                while (i < 64) { qt(tq)(i) = u8(bytes, p + 1 + i); i += 1 }
-                qtSeen(tq) = true
-                p += 65
-              }
+              if (!t.readDqt(bytes, body, pos + 2 + len)) return bad
             case 0xc0 => // SOF0 baseline
               if (len < 8) return bad
               if (u8(bytes, body) != 8) return bad
@@ -2093,26 +2037,7 @@ object Multimodal {
                 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
               return bad // progressive/extended: out of scope
             case 0xc4 => // DHT (possibly several)
-              var p = body
-              while (p < pos + 2 + len) {
-                val tc = u8(bytes, p) >> 4; val th = u8(bytes, p) & 15
-                if (tc > 1 || th > 3 || p + 17 > pos + 2 + len) return bad
-                var total = 0
-                var l = 1
-                while (l <= 16) { huffCount(tc)(th)(l) = u8(bytes, p + l); total += u8(bytes, p + l); l += 1 }
-                if (total > 256 || p + 17 + total > pos + 2 + len) return bad
-                huffVals(tc)(th) = Array.tabulate(total)(i => u8(bytes, p + 17 + i))
-                var code = 0; var vi = 0
-                l = 1
-                while (l <= 16) {
-                  huffFirstCode(tc)(th)(l) = code
-                  huffFirstIdx(tc)(th)(l) = vi
-                  code += huffCount(tc)(th)(l); vi += huffCount(tc)(th)(l)
-                  code <<= 1
-                  l += 1
-                }
-                p += 17 + total
-              }
+              if (!t.readDht(bytes, body, pos + 2 + len)) return bad
             case 0xdd => // DRI
               if (len != 4) return bad
               restartInterval = u16be(bytes, body)
@@ -2137,7 +2062,7 @@ object Multimodal {
       }
       if (w < 0 || nComp == 0) return bad
       var c = 0
-      while (c < nComp) { if (!qtSeen(compQ(c))) return bad; c += 1 }
+      while (c < nComp) { if (!t.qtSeen(compQ(c))) return bad; c += 1 }
       val maxH = (0 until nComp).map(compSampH).max
       val maxV = (0 until nComp).map(compSampV).max
       val mcuW = 8 * maxH; val mcuH = 8 * maxV
@@ -2153,52 +2078,8 @@ object Multimodal {
         planes(c) = new Array[Byte](planeW(c) * planeH(c))
         c += 1
       }
-      // entropy reader
-      var p = sosAt
-      var bitBuf = 0L; var bitCnt = 0
-      var feedDone = false // scan bytes exhausted (marker / end reached)
-      var fail = false     // a read actually ran dry or hit a bad code
-      def fill(): Unit = {
-        while (bitCnt <= 56 && !feedDone) {
-          if (p >= bytes.length) { feedDone = true }
-          else {
-            val v = u8(bytes, p)
-            if (v == 0xff) {
-              if (p + 1 < bytes.length && u8(bytes, p + 1) == 0x00) {
-                bitBuf = (bitBuf << 8) | 0xff; bitCnt += 8; p += 2
-              } else feedDone = true // a real marker: stop feeding, but
-              // already-buffered bits stay valid (the final MCU's codes
-              // typically sit in the buffer when EOI is reached)
-            } else { bitBuf = (bitBuf << 8) | v; bitCnt += 8; p += 1 }
-          }
-        }
-      }
-      def getBits(n: Int): Int = {
-        if (n == 0) return 0
-        fill()
-        if (bitCnt < n) { fail = true; return 0 }
-        val v = ((bitBuf >> (bitCnt - n)) & ((1L << n) - 1)).toInt
-        bitCnt -= n
-        v
-      }
-      def huffDecode(tc: Int, th: Int): Int = {
-        if (huffVals(tc)(th) == null) { fail = true; return -1 }
-        var code = 0
-        var l = 1
-        while (l <= 16) {
-          code = (code << 1) | getBits(1)
-          if (fail) return -1
-          val cnt = huffCount(tc)(th)(l)
-          if (cnt > 0 && code >= huffFirstCode(tc)(th)(l) &&
-              code - huffFirstCode(tc)(th)(l) < cnt) {
-            return huffVals(tc)(th)(huffFirstIdx(tc)(th)(l) + code - huffFirstCode(tc)(th)(l))
-          }
-          l += 1
-        }
-        fail = true; -1
-      }
-      def extend(v: Int, s: Int): Int =
-        if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
+      val ent = new JpegEntropy.Reader(bytes, t)
+      ent.start(sosAt)
       val coef = new Array[Int](64)
       val pix = new Array[Int](64)
       val pred = new Array[Int](4)
@@ -2233,17 +2114,17 @@ object Multimodal {
       }
       def decodeBlock(ci: Int): Boolean = {
         java.util.Arrays.fill(coef, 0)
-        val q = qt(compQ(ci))
-        val s = huffDecode(0, compDc(ci))
+        val q = t.qt(compQ(ci))
+        val s = ent.huffDecode(0, compDc(ci))
         if (s < 0 || s > 11) return false
-        val diff = extend(getBits(s), s)
-        if (fail) return false
+        val diff = JpegEntropy.extend(ent.getBits(s), s)
+        if (ent.failed) return false
         pred(ci) += diff
         coef(0) = pred(ci) * q(0)
         var kk = 1
         var run = true
         while (run && kk < 64) {
-          val rs = huffDecode(1, compAc(ci))
+          val rs = ent.huffDecode(1, compAc(ci))
           if (rs < 0) return false
           val r = rs >> 4; val ss = rs & 15
           if (rs == 0) run = false // EOB
@@ -2253,8 +2134,8 @@ object Multimodal {
           } else {
             kk += r
             if (kk > 63) return false
-            coef(ZigZag(kk)) = extend(getBits(ss), ss) * q(kk)
-            if (fail) return false
+            coef(ZigZag(kk)) = JpegEntropy.extend(ent.getBits(ss), ss) * q(kk)
+            if (ent.failed) return false
             kk += 1
           }
         }
@@ -2267,14 +2148,8 @@ object Multimodal {
         var mx = 0
         while (mx < mcusX) {
           if (restartInterval > 0 && mcuCount > 0 && mcuCount % restartInterval == 0) {
-            // align to byte and consume the RSTn marker
-            bitCnt -= bitCnt % 8
-            fail = false; feedDone = false
-            if (p + 1 < bytes.length && u8(bytes, p) == 0xff && u8(bytes, p + 1) >= 0xd0 && u8(bytes, p + 1) <= 0xd7) {
-              p += 2
-              java.util.Arrays.fill(pred, 0)
-              bitBuf = 0; bitCnt = 0
-            } else return bad
+            if (!ent.restart()) return bad
+            java.util.Arrays.fill(pred, 0)
           }
           var ci = 0
           while (ci < nComp) {

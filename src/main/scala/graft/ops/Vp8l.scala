@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Bits.{LsbReader, LsbWriter, PrefixCode}
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -43,119 +44,23 @@ object Vp8l {
     extends RuntimeException("malformed vp8l", null, false, false)
 
   // ------------------------------------------------------------------
-  // bit I/O — VP8L packs bits LSB-first within bytes
+  // canonical prefix codes (bits LSB-first, codewords from the root)
   // ------------------------------------------------------------------
 
-  private final class BitReader(b: Array[Byte], private var pos: Int) {
-    private var bit = 0
-    def readBit(): Int = {
-      if (pos >= b.length) throw Bad
-      val v = (b(pos) >> bit) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      v
-    }
-    def readBits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
+  /** The canonical code for per-symbol lengths; over- or
+    * under-subscribed trees are malformed per spec (Kraft equality). */
+  private[graft] def buildCode(lengths: Array[Int]): PrefixCode = {
+    val code = PrefixCode(lengths)
+    if (!code.complete) throw Bad
+    code
   }
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nb = 0
-    def writeBit(v: Int): Unit = {
-      cur |= (v & 1) << nb
-      nb += 1
-      if (nb == 8) { out.write(cur); cur = 0; nb = 0 }
-    }
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) { writeBit((v >> i) & 1); i += 1 }
-    }
-    /** Prefix-code bits go MSB-of-code first (the decoder walks from
-      * the root), unlike value fields which are LSB-first. */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBit((code >> i) & 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (nb > 0) { out.write(cur); cur = 0; nb = 0 }
-      out.toByteArray
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // canonical prefix codes
-  // ------------------------------------------------------------------
-
-  /** Decode-side canonical prefix code. `single >= 0` marks the
-    * degenerate one-symbol code that consumes zero bits (VP8L's simple
-    * codes and single-length normal codes both produce it). */
-  private final class PrefixCode(
-      count: Array[Int], symbols: Array[Int], single: Int) {
-    def read(br: BitReader): Int = {
-      if (single >= 0) return single
-      var code = 0; var first = 0; var offset = 0; var len = 1
-      while (len <= 15) {
-        code = (code << 1) | br.readBit()
-        val c = count(len)
-        if (code - first < c) return symbols(offset + code - first)
-        offset += c
-        first = (first + c) << 1
-        len += 1
-      }
-      throw Bad
-    }
-  }
-
-  /** Builds the canonical code from per-symbol lengths; `ordered` keeps
-    * the given symbol order for equal lengths (simple two-symbol codes
-    * assign code 0 to the first-read symbol, not the smaller one). */
-  private def buildCode(lengths: Array[Int]): PrefixCode = {
-    var nz = 0; var last = -1
-    var i = 0
-    while (i < lengths.length) {
-      val l = lengths(i)
-      if (l < 0 || l > 15) throw Bad
-      if (l > 0) { nz += 1; last = i }
-      i += 1
-    }
-    if (nz == 0) throw Bad
-    if (nz == 1) return new PrefixCode(null, null, last)
-    val count = new Array[Int](16)
-    i = 0
-    while (i < lengths.length) { if (lengths(i) > 0) count(lengths(i)) += 1; i += 1 }
-    // completeness (Kraft equality) — over- or under-subscribed trees
-    // are malformed per spec
-    var space = 1L << 15
-    var len = 1
-    while (len <= 15) {
-      space -= count(len).toLong << (15 - len)
-      if (space < 0) throw Bad
-      len += 1
-    }
-    if (space != 0) throw Bad
-    val offsets = new Array[Int](16)
-    var acc = 0
-    len = 1
-    while (len <= 15) { offsets(len) = acc; acc += count(len); len += 1 }
-    val symbols = new Array[Int](nz)
-    i = 0
-    while (i < lengths.length) {
-      val l = lengths(i)
-      if (l > 0) { symbols(offsets(l)) = i; offsets(l) += 1 }
-      i += 1
-    }
-    new PrefixCode(count, symbols, -1)
-  }
-
+  /** The simple two-symbol code: code 0 goes to the first-read symbol,
+    * not the smaller one. */
   private def twoSymbolCode(s0: Int, s1: Int): PrefixCode = {
     val count = new Array[Int](16)
     count(1) = 2
-    new PrefixCode(count, Array(s0, s1), -1)
+    new PrefixCode(count, Array(s0, s1))
   }
 
   /** Order in which the code-length code's own lengths are stored. */
@@ -163,13 +68,13 @@ object Vp8l {
     Array(17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
 
   /** Reads one prefix code (simple or normal form) for `alphabet`. */
-  private def readPrefixCode(br: BitReader, alphabet: Int): PrefixCode = {
+  private def readPrefixCode(br: LsbReader, alphabet: Int): PrefixCode = {
     if (br.readBit() == 1) { // simple
       val numSymbols = br.readBit() + 1
       val s0 =
         if (br.readBit() == 1) br.readBits(8) else br.readBit()
       if (s0 >= alphabet) throw Bad
-      if (numSymbols == 1) return new PrefixCode(null, null, s0)
+      if (numSymbols == 1) return PrefixCode.single(s0)
       val s1 = br.readBits(8)
       if (s1 >= alphabet || s1 == s0) throw Bad
       twoSymbolCode(s0, s1)
@@ -216,7 +121,7 @@ object Vp8l {
 
   /** Length/distance prefix value: codes 0-3 are the values 1-4; above
     * that, (code-2)>>1 extra bits on an offset of (2+(code&1))<<eb. */
-  private def lz77Value(prefix: Int, br: BitReader): Int =
+  private def lz77Value(prefix: Int, br: LsbReader): Int =
     if (prefix < 4) prefix + 1
     else {
       val eb = (prefix - 2) >> 1
@@ -376,7 +281,7 @@ object Vp8l {
     * meta-prefix (level 0 only), prefix-code groups, then the
     * literal/backref/cache-ref pixel stream. */
   private def readSpatialImage(
-      br: BitReader, w: Int, h: Int, level0: Boolean): Array[Int] = {
+      br: LsbReader, w: Int, h: Int, level0: Boolean): Array[Int] = {
     if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) throw Bad
     val cacheBits = if (br.readBit() == 1) br.readBits(4) else 0
     if (cacheBits < 0 || cacheBits > 11) throw Bad
@@ -449,14 +354,14 @@ object Vp8l {
   }
 
   /** Entropy-coded sub-image (transform tiles, palette, meta image). */
-  private def readEntropyImage(br: BitReader, w: Int, h: Int): Array[Int] =
+  private def readEntropyImage(br: LsbReader, w: Int, h: Int): Array[Int] =
     readSpatialImage(br, w, h, level0 = false)
 
   /** Full VP8L payload decode (after the 0x2f signature byte) →
     * (width, height, ARGB scan-order buffer). */
   private[graft] def decodeVp8lPayload(
       b: Array[Byte], off: Int): (Int, Int, Array[Int]) = {
-    val br = new BitReader(b, off)
+    val br = new LsbReader(b, off)
     val w = br.readBits(14) + 1
     val h = br.readBits(14) + 1
     br.readBit() // alpha-is-used hint (advisory)
@@ -646,7 +551,7 @@ object Vp8l {
     * emitted symbol, mirroring the decoder's 0-bit read). */
   private final class WCode(
       val lens: Array[Int], val codes: Array[Int], val zeroBit: Boolean) {
-    def emit(bw: BitWriter, sym: Int): Unit =
+    def emit(bw: LsbWriter, sym: Int): Unit =
       if (!zeroBit) bw.writeCode(codes(sym), lens(sym))
   }
 
@@ -708,7 +613,7 @@ object Vp8l {
     * its 8-bit fields, else normal with literal code lengths) and
     * returns the write-side code. */
   private def writePrefixCode(
-      bw: BitWriter, freq: Array[Int], alphabet: Int): WCode = {
+      bw: LsbWriter, freq: Array[Int], alphabet: Int): WCode = {
     val used = freq.indices.filter(freq(_) > 0)
     if (used.isEmpty || (used.size == 1 && used.head <= 255)) {
       val s = if (used.isEmpty) 0 else used.head
@@ -745,7 +650,8 @@ object Vp8l {
     } // single-length alphabets write zero bits per symbol (0-bit code)
     // A single used symbol > 255 can't take the simple form above, so it
     // lands here with lens(s) = 1 — but the decoder maps ANY one-nonzero-
-    // length header to the zero-bit single-symbol code (buildCode nz==1),
+    // length header to the zero-bit single-symbol code (PrefixCode of one
+    // used length),
     // so the write side must also emit zero bits per symbol or the
     // bitstream desynchronizes.
     if (used.size == 1) new WCode(null, null, zeroBit = true)
@@ -761,11 +667,11 @@ object Vp8l {
     * or a broken sentinel, never a silent pass. */
   private[graft] def prefixCodeRoundtripForTest(
       freq: Array[Int], syms: Seq[Int]): Seq[Int] = {
-    val bw = new BitWriter()
+    val bw = new LsbWriter()
     val wc = writePrefixCode(bw, freq, freq.length)
     syms.foreach(s => wc.emit(bw, s))
     bw.writeBits(0x2a, 7)
-    val br = new BitReader(bw.toBytes, 0)
+    val br = new LsbReader(bw.toBytes, 0)
     val pc = readPrefixCode(br, freq.length)
     val out = syms.map(_ => pc.read(br))
     require(br.readBits(7) == 0x2a, "prefix-code bitstream desynchronized")
@@ -784,7 +690,7 @@ object Vp8l {
 
   /** Writes a spatially-coded image from tokens (no meta prefix). */
   private def writeImage(
-      bw: BitWriter, toks: Seq[Tok], cacheBits: Int, level0: Boolean): Unit = {
+      bw: LsbWriter, toks: Seq[Tok], cacheBits: Int, level0: Boolean): Unit = {
     if (cacheBits > 0) { bw.writeBit(1); bw.writeBits(cacheBits, 4) }
     else bw.writeBit(0)
     if (level0) bw.writeBit(0) // no meta prefix
@@ -828,7 +734,7 @@ object Vp8l {
     * elements). Pixel content is analytic per regime, so the DuckDB
     * oracle recomputes the channel sums without decoding. */
   private[graft] def encodeWebp(k: Long, w: Int, h: Int): Array[Byte] = {
-    val bw = new BitWriter()
+    val bw = new LsbWriter()
     bw.writeBits(w - 1, 14)
     bw.writeBits(h - 1, 14)
     bw.writeBit(0)     // alpha hint
@@ -962,7 +868,7 @@ object Vp8l {
   }
 
   /** Wraps a finished VP8L bitstream in the RIFF/WEBP container. */
-  private def vp8lContainer(bw: BitWriter): Array[Byte] = {
+  private def vp8lContainer(bw: LsbWriter): Array[Byte] = {
     val payload = Array[Byte](0x2f) ++ bw.toBytes
     val out = new java.io.ByteArrayOutputStream()
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"))
@@ -981,7 +887,7 @@ object Vp8l {
   private[graft] def encodeWebpArgb(
       px: Array[Int], w: Int, h: Int): Array[Byte] = {
     require(px.length == w * h)
-    val bw = new BitWriter()
+    val bw = new LsbWriter()
     bw.writeBits(w - 1, 14)
     bw.writeBits(h - 1, 14)
     bw.writeBit(0); bw.writeBits(0, 3)

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
+import graft.core.Bits.{MsbReader, MsbWriter}
+
 /** S6: Rice (Golomb, power-of-two) coding and the delta-coded sorted-id
   * list codec built on it — the reference stores per-URL link-fingerprint
   * posting lists this way (util/RiceCoding.java:25,
@@ -15,41 +17,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   */
 object RiceCoding {
 
-  final class BitWriter {
-    private val out = new ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def writeBit(b: Int): Unit = {
-      cur = (cur << 1) | (b & 1)
-      nbits += 1
-      if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-    }
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { writeBit(((v >>> i) & 1L).toInt); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      val res = if (nbits == 0) out.toByteArray
-      else { val o2 = new ByteArrayOutputStream(); o2.write(out.toByteArray); o2.write(cur << (8 - nbits)); o2.toByteArray }
-      res
-    }
-  }
-
-  final class BitReader(bytes: Array[Byte]) {
-    private var pos = 0
-    def readBit(): Int = {
-      val b = (bytes(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      b
-    }
-    def readBits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 1) | readBit(); i += 1 }
-      v
-    }
-  }
-
   /** Unary-quotient cap: a quotient of `MaxQuotient` or more is written as
     * an escape (`MaxQuotient` ones, a zero, then the full value in 64 raw
     * bits) — the standard Rice/Golomb guard against outlier gaps, without
@@ -60,7 +27,7 @@ object RiceCoding {
 
   /** Encode non-negative values with Rice parameter k. */
   def encode(values: Seq[Long], k: Int): Array[Byte] = {
-    val w = new BitWriter
+    val w = new MsbWriter
     values.foreach { v =>
       require(v >= 0, s"rice coding requires non-negative values, got $v")
       val q = v >>> k
@@ -80,12 +47,12 @@ object RiceCoding {
   }
 
   def decode(bytes: Array[Byte], k: Int, n: Int): Seq[Long] = {
-    val r = new BitReader(bytes)
+    val r = new MsbReader(bytes)
     (0 until n).map { _ =>
       var q = 0L
       while (r.readBit() == 1) q += 1
-      if (q == MaxQuotient) r.readBits(64)
-      else (q << k) | r.readBits(k)
+      if (q == MaxQuotient) r.readLong(64)
+      else (q << k) | r.readLong(k)
     }
   }
 

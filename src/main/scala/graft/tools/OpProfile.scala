@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.graftbridge.PersistBridge
 
 /** Scratch profiler (r20 optimization round; not part of the library
   * surface): run registry queries through the noop sink and report
@@ -91,7 +92,7 @@ object OpProfile {
         case Some(fn) =>
           val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt
           (1 to reps).foreach { i =>
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+            PersistBridge.releaseAll(spark.sparkContext)
             jobRows.clear()
             shuffleWrite.set(0); shuffleRead.set(0)
             val t0 = System.nanoTime()
@@ -112,7 +113,7 @@ object OpProfile {
             // the noop write above runs its own QueryExecution, so the
             // captured df plan never executed and its metrics are zero;
             // run the captured plan itself once and read ITS metrics
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+            PersistBridge.releaseAll(spark.sparkContext)
             val df = fn(spark, sfDir)
             val ep = df.queryExecution.executedPlan
             val t0 = System.nanoTime()

@@ -36,3 +36,21 @@ object TypeCheckBridge {
     }
   }
 }
+
+/** The per-query release of cached blocks. `RDD.unpersist` warns that a
+  * locally checkpointed RDD "was locally checkpointed, its lineage has
+  * been truncated" before it frees the blocks; the engine releases such
+  * RDDs only once their query is done, so for them this frees the same
+  * blocks through the context (`private[spark]`) without the warning. */
+object PersistBridge {
+  import org.apache.spark.SparkContext
+
+  /** Frees the blocks of every persisted RDD, without blocking. A
+    * materialized checkpoint with no checkpoint file is a local one. */
+  def releaseAll(sc: SparkContext): Unit =
+    sc.getPersistentRDDs.values.foreach { rdd =>
+      if (rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty)
+        sc.unpersistRDD(rdd.id, blocking = false)
+      else rdd.unpersist(blocking = false)
+    }
+}

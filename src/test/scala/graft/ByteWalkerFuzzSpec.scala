@@ -16,13 +16,15 @@ import graft.sources.v2.WarcHttp
   * declared sizes, negative-looking big-endian values). Four fixed-seed
   * corpora splice real fixture heads onto random tails (and, for the
   * backward scans, random heads onto magics) so the walkers get past
-  * their cheap checks and into length arithmetic; every walker runs
-  * over all four, and each walker is its own test case. */
+  * their cheap checks and into length arithmetic; a fifth cuts and
+  * bit-flips whole FLAC streams. Every walker runs over all five, and
+  * each walker is its own test case. */
 class ByteWalkerFuzzSpec extends AnyFunSuite {
   import ByteWalkerFuzzSpec._
 
   private lazy val corpus: Seq[Array[Byte]] =
-    headerCorpus ++ containerCorpus ++ documentCorpus ++ animationCorpus ++ Pinned
+    headerCorpus ++ containerCorpus ++ documentCorpus ++ animationCorpus ++ flacCorpus ++
+      Pinned
 
   /** (walker, check): each check calls the walker and asserts its
     * result is a sentinel or a possible shape. */
@@ -189,6 +191,16 @@ class ByteWalkerFuzzSpec extends AnyFunSuite {
     "PdfText.extract" -> { b =>
       val pt = PdfText.extract(b)
       if (pt != null) assert(pt.nPages >= 1 && pt.text != null)
+    },
+    // FLAC decode: frame walk + subframes + rice residuals on cut and
+    // bit-flipped streams (the CRC-16 is checked only after the decode)
+    "Flac.decodeFlacPcm" -> { b =>
+      val pcm = Flac.decodeFlacPcm(b)
+      if (pcm != null) assert(pcm.nonEmpty && pcm.forall(_.length == pcm(0).length))
+    },
+    "Flac.flacTags" -> { b =>
+      val tags = Flac.flacTags(b)
+      if (tags != null) assert(tags._1 != null && tags._2 != null)
     },
     "Brotli.decode" -> { b =>
       val br = Brotli.decode(b, maxOut = 1 << 20) // tight bomb budget
@@ -409,6 +421,28 @@ object ByteWalkerFuzzSpec {
     val gen = Gen.listOfN(700,
       Gen.frequency(1 -> raw, 2 -> prefixed(magics), 1 -> suffixed(magics)))
     gen(Gen.Parameters.default, Seed(17L)).get
+  }
+
+  /** FLAC streams, plain and tagged, cut short or with one to three
+    * bits flipped (seed 19), so the decoder meets lies past its cheap
+    * checks: in frame headers, subframe headers and residuals. */
+  def flacCorpus: Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(19)
+    val streams = (0 until 12).map(k => Flac.encodeFlac(k, 24 + 13 * k)) ++
+      (0 until 2).map(k => Flac.encodeFlacTagged(
+        Multimodal.audioScenePcm(k, k, 80), "vendor", Seq("TITLE" -> s"t$k")))
+    streams.flatMap { s =>
+      val cuts = Seq.fill(8)(s.take(rnd.nextInt(s.length)))
+      val flips = Seq.fill(12) {
+        val c = s.clone()
+        for (_ <- 0 to rnd.nextInt(3)) {
+          val i = rnd.nextInt(c.length)
+          c(i) = (c(i) ^ (1 << rnd.nextInt(8))).toByte
+        }
+        c
+      }
+      cuts ++ flips
+    }
   }
 
   /** The APNG chunk walk and the warc-zstd dictionary head scan (seed

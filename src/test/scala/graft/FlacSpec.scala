@@ -41,7 +41,7 @@ class FlacSpec extends AnyFunSuite {
 
   test("golden vector 1: constant subframe, mono, 2 samples of 1000") {
     // Hand-assembled from RFC 9639, independently of the production
-    // BitWriter (python bit assembly; CRCs computed by an independent
+    // bit writer (python bit assembly; CRCs computed by an independent
     // implementation): fLaC magic; last-flag STREAMINFO (block sizes
     // 2/2, 8 kHz, mono, 16-bit, 2 total samples); one frame — sync
     // 0xFFF8, uncommon-8-bit blocksize + 8 kHz code (0x64), mono

@@ -78,4 +78,22 @@ class IterativeLifecycleSpec extends AnyFunSuite with SparkSuite {
     assertReleased(Seq.fill(2)(
       () => Components.starContract(pairs).collect().length))
   }
+
+  test("the per-query release frees persisted and locally checkpointed blocks") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pinned = (1 to 100).toDF("v").localCheckpoint(eager = true)
+    val cached = sc.parallelize(1 to 100, 2).persist()
+    assert(cached.count() == 100 && pinned.count() == 100)
+    val ids = sc.getPersistentRDDs.keySet -- before
+    assert(ids.size == 2 && ids.forall(org.apache.spark.RddBlocks(sc, _) > 0))
+    org.apache.spark.sql.graftbridge.PersistBridge.releaseAll(sc)
+    assert(sc.getPersistentRDDs.isEmpty)
+    var tries = 0
+    while (ids.exists(org.apache.spark.RddBlocks(sc, _) > 0) && tries < 100) {
+      Thread.sleep(50); tries += 1
+    }
+    ids.foreach(id => assert(org.apache.spark.RddBlocks(sc, id) == 0, s"rdd $id"))
+  }
 }

@@ -157,6 +157,17 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("Rice coding: a truncated list fails with the shared bit-stream failure") {
+    val vals = Seq(3L, 17L, 1L << 40, 0L, 99L)
+    for (k <- Seq(0, 2, 7)) {
+      val enc = RiceCoding.encode(vals, k)
+      for (cut <- 0 until enc.length) {
+        val e = intercept[RuntimeException](RiceCoding.decode(enc.take(cut), k, vals.length))
+        assert(e eq graft.core.Bits.Malformed, s"k=$k cut=$cut")
+      }
+    }
+  }
+
   test("Rice sorted-list codec: delta round trip, compression on dense lists") {
     val rnd = new Random(7)
     for (_ <- 1 to 40) {

@@ -7,7 +7,7 @@ import graft.ops.{Multimodal, Vp8l}
 /** VP8L WebP-lossless codec: roundtrip parity against the analytic
   * fixture formulas for every encoding regime, a hand-assembled golden
   * bitstream (authored bit-by-bit from the spec in the comments below,
-  * independently of the production BitWriter), structural-malformation
+  * independently of the production bit writer), structural-malformation
   * rejects, and the house single-byte corruption loop. */
 class Vp8lSpec extends AnyFunSuite {
 

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 /** Parquet footer walk over RAW bytes — `PAR1` magic, 4-byte LE footer
   * length, then the Thrift COMPACT-protocol `FileMetaData` struct
   * (format spec: apache/parquet-format parquet.thrift + the compact
@@ -282,5 +284,25 @@ object ParquetFooter {
       if (r.failed || numRows < 0) null
       else FooterInfo(version, numRows, createdBy, leaves.toSeq, groups.toSeq)
     } catch { case scala.util.control.NonFatal(_) => null }
+  }
+
+  /** The footer of the parquet file at `path`, from two positioned reads
+    * of its tail (the footer length, then the footer); null on
+    * malformation, as [[parse]]. */
+  def read(fs: FileSystem, path: Path): FooterInfo = {
+    val len = fs.getFileStatus(path).getLen
+    if (len < 12) return null
+    val in = fs.open(path)
+    try {
+      val tail = new Array[Byte](8)
+      in.readFully(len - 8, tail)
+      val n = graft.core.Bytes.i32le(tail, 0)
+      if (n <= 0 || n > len - 12) null
+      else {
+        val footer = new Array[Byte](n + 8)
+        in.readFully(len - 8 - n, footer)
+        parse(footer)
+      }
+    } finally in.close()
   }
 }

@@ -10,7 +10,7 @@ import graft.queries.{QueryServer, QueryServerHttp, Registry}
 /** The reference's serving shape (QueryServerFE servlets) over real HTTP:
   * a page request returns the same rows the library page() call does, the
   * count endpoint reads the cached index, and client errors are 400s. */
-class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
+class QueryServerHttpSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   private lazy val client = HttpClient.newHttpClient()
 
@@ -23,7 +23,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("paged query, count, and error handling over HTTP") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp").toString
+    val cacheDir = tempDir("qhttp")
     val server = new QueryServer(spark, cacheDir, sfDir)
     val fe = new QueryServerHttp(server)
     val port = fe.start()
@@ -51,6 +51,11 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       assert(get(port, s"/query/$name?sortBy=nope")._1 == 400)
       assert(get(port, s"/query/no_such_query?sortBy=x")._1 == 400)
       assert(get(port, s"/query/$name")._1 == 400) // missing sortBy
+      // a direction is asc or desc, nothing else
+      for (dir <- Seq("DESC", "descending")) {
+        val (dCode, dBody) = get(port, s"/query/$name?sortBy=$sortBy&dir=$dir")
+        assert(dCode == 400 && dBody.contains("dir"), s"dir=$dir: $dCode $dBody")
+      }
       // ...refused before the build wrote an entry or a staging dir
       assert(new java.io.File(cacheDir).list().toSet == entries)
 
@@ -66,8 +71,42 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
     } finally fe.stop()
   }
 
+  test("a response that runs no Spark job is not held by a delayed ACK") {
+    // each request on a fresh connection, as bench/harness/Serve.scala
+    // sends them: with Nagle's algorithm on, every response waited ~44 ms
+    // for the client's delayed ACK of its header segment
+    val cacheDir = tempDir("qhttp_latency")
+    val fe = new QueryServerHttp(new QueryServer(spark, cacheDir, sfDir))
+    val port = fe.start()
+    def medianMs(path: String, code: Int): Double = {
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime
+        val c = URI.create(s"http://127.0.0.1:$port$path").toURL.openConnection()
+          .asInstanceOf[java.net.HttpURLConnection]
+        try {
+          assert(c.getResponseCode == code, path)
+          val in = if (code >= 400) c.getErrorStream else c.getInputStream
+          try in.readAllBytes() finally in.close()
+        } finally c.disconnect()
+        (System.nanoTime - t0) / 1e6
+      }.sorted
+      ms(ms.size / 2)
+    }
+    try {
+      val name = "w3_dual_sort"
+      val sortBy = Registry.queries(name)(spark, sfDir).columns.head
+      val count = s"/count/$name?sortBy=$sortBy"
+      assert(get(port, count)._1 == 200) // builds the entry
+      val medians = Seq(("/status/nope", 400), (count, 200))
+        .map { case (path, code) => path -> medianMs(path, code) }
+      val report = medians.map { case (p, ms) => f"$p: median $ms%.1f ms" }.mkString("; ")
+      info(report)
+      assert(medians.forall(_._2 < 15), report)
+    } finally fe.stop()
+  }
+
   test("async submit → poll → result matches the synchronous page; cancel reaches a terminal state") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_async").toString
+    val cacheDir = tempDir("qhttp_async")
     val server = new QueryServer(spark, cacheDir, sfDir)
     val fe = new QueryServerHttp(server)
     val port = fe.start()
@@ -137,7 +176,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("submit refuses new work at the in-flight cap with 429; sync paths unaffected") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_cap").toString
+    val cacheDir = tempDir("qhttp_cap")
     val server = new QueryServer(spark, cacheDir, sfDir)
     // cap 0: the refusal path itself, with no timing dependence on how
     // fast the worker drains (a real cap rejects identically once
@@ -156,7 +195,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
 
   test("stop() ends the request handler threads") {
     // they are non-daemon: left running, they keep the JVM alive
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_stop").toString
+    val cacheDir = tempDir("qhttp_stop")
     val fe = new QueryServerHttp(new QueryServer(spark, cacheDir, sfDir))
     val port = fe.start()
     try {
@@ -170,7 +209,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
   test("content fetch: seek an archive member offset, serve payload bytes") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("qhttp_arch").toString
+    val root = tempDir("qhttp_arch")
     val httpHead = "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n"
     Seq(("http://f.example/1", "response", "2026-01-01T00:00:00Z",
         "application/http; msgtype=response",
@@ -194,7 +233,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
       .map(r => (r.getString(0), r.getLong(1))).head
     val arcRel = new java.io.File(new java.net.URI(arcFile).getPath).getName
 
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_f").toString
+    val cacheDir = tempDir("qhttp_f")
     val server = new QueryServer(spark, cacheDir, sfDir)
     val fe = new QueryServerHttp(server, archiveRoot = Some(root))
     val port = fe.start()
@@ -228,7 +267,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
 
   test("content fetch serves .warc.zst with a shared dictionary (r17 advice)") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("qhttp_zst").toString
+    val root = tempDir("qhttp_zst")
     spark.range(0, 40).selectExpr(
         "concat('http://z.example/p', id) AS url",
         "'response' AS warc_type",
@@ -247,7 +286,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
     val rel = new java.io.File(new java.net.URI(file).getPath).getName
     assert(rel.endsWith(".warc.zst"))
 
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_z").toString
+    val cacheDir = tempDir("qhttp_z")
     val server = new QueryServer(spark, cacheDir, sfDir)
     val fe = new QueryServerHttp(server, archiveRoot = Some(root))
     val port = fe.start()
@@ -314,14 +353,14 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
     val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     assert(QueryServerHttp.renderJson(local) == toJsonArray(local))
     // and where the projection runs in a task rather than folding
-    val dir = java.nio.file.Files.createTempDirectory("qhttp_json").toString
+    val dir = tempDir("qhttp_json")
     local.write.mode("overwrite").parquet(dir)
     val read = spark.read.parquet(dir).orderBy("id")
     assert(QueryServerHttp.renderJson(read) == toJsonArray(read))
   }
 
   test("the first and last page of each serving entry render as toJSON, with no job") {
-    val cacheDir = java.nio.file.Files.createTempDirectory("qhttp_pages").toString
+    val cacheDir = tempDir("qhttp_pages")
     val server = new QueryServer(spark, cacheDir, sfDir)
     // the serve_read benchmark's entries
     val entries = Seq(
@@ -339,6 +378,7 @@ class QueryServerHttpSpec extends AnyFunSuite with SparkSuite {
     for ((name, sortBy, asc) <- entries) {
       val req = server.PageRequest(sortBy, ascending = asc, pageSize = 25)
       val n = server.resultCount(name, req)
+      assert(n == server.index(name, req).count(), s"$name: resultCount")
       for (off <- Seq(0L, math.max(0L, n - 10))) {
         val page = server.page(name, req.copy(offset = off))
         spark.sparkContext.addSparkListener(listener)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{QueryServer, Registry, ResultCache}
 
-class ResultCacheSpec extends AnyFunSuite with SparkSuite {
+class ResultCacheSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("canonical id is stable under parameter reordering, distinct otherwise") {
     val a = ResultCache.canonicalId("domain_list", Map("re" -> "x$", "page" -> "2"))
@@ -17,7 +17,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("second identical query serves the cached result without recompute") {
-    val dir = Files.createTempDirectory("result_cache").toString
+    val dir = tempDir("result_cache")
     var computes = 0
     def run() = ResultCache.getOrCompute(spark, dir, "topk",
       Map("seg" -> "BUILDING", "k" -> "3")) {
@@ -41,7 +41,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     // carry unique job UUIDs) — which is exactly why getOrCompute
     // publishes through FileContext.rename instead. Pin both halves.
     import org.apache.hadoop.fs.{FileContext, Path}
-    val base = Files.createTempDirectory("rename_sem").toString
+    val base = tempDir("rename_sem")
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(base).getFileSystem(conf)
     val src = new Path(base, "staging")
@@ -64,7 +64,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     // listing into the cache id, so an in-place data refresh invalidates
     // every cached index built over it (the reference keys results by
     // query + db epoch the same way)
-    val dir = Files.createTempDirectory("fp_data").toString
+    val dir = tempDir("fp_data")
     Registry.table(spark, sfDir, "region").write.mode("overwrite").parquet(s"$dir/t")
     val fp1 = ResultCache.inputFingerprint(spark, dir)
     val fp1Again = ResultCache.inputFingerprint(spark, dir)
@@ -84,7 +84,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     // the SURVEY §8 deployment puts the cache on HDFS/S3; a file:-scheme
     // URI exercises the same code path (probe resolved via the Hadoop
     // FileSystem for the dir's scheme, not the driver's local disk API)
-    val dir = "file:" + Files.createTempDirectory("result_cache_fs").toString
+    val dir = "file:" + tempDir("result_cache_fs")
     var computes = 0
     def run() = ResultCache.getOrCompute(spark, dir, "nations",
       Map("region" -> "1")) {
@@ -97,7 +97,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("concurrent requests for one uncached entry build it exactly once") {
-    val dir = Files.createTempDirectory("result_cache_conc").toString
+    val dir = tempDir("result_cache_conc")
     val computes = new java.util.concurrent.atomic.AtomicInteger(0)
     def run() = ResultCache.getOrCompute(spark, dir, "orders_sample",
       Map("k" -> "5")) {
@@ -118,7 +118,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     // be replaced by the no-OVERWRITE rename; getOrCompute must surface
     // that as a descriptive publish error, not a detached read failure
     // or a silently-served partial entry
-    val dir = Files.createTempDirectory("result_cache_partial").toString
+    val dir = tempDir("result_cache_partial")
     val id = ResultCache.canonicalId("q", Map("p" -> "1"))
     val partial = new java.io.File(dir, id)
     assert(partial.mkdirs())
@@ -133,7 +133,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a lost publish race discards the staged build and serves the winner") {
-    val dir = Files.createTempDirectory("result_cache_race").toString
+    val dir = tempDir("result_cache_race")
     // winner publishes first
     ResultCache.getOrCompute(spark, dir, "q", Map("p" -> "1")) {
       Registry.table(spark, sfDir, "region").limit(2)
@@ -155,7 +155,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
   test("a recorded relation is served to its own session only") {
     // a hit reuses the entry's resolved DataFrame, which belongs to the
     // session that read it: another session's server must read its own
-    val dir = Files.createTempDirectory("result_cache_sessions").toString
+    val dir = tempDir("result_cache_sessions")
     val server = new QueryServer(spark, dir, sfDir)
     val name = "w3_dual_sort"
     val req = server.PageRequest(Registry.queries(name)(spark, sfDir).columns.head,
@@ -181,7 +181,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     // the recorded relation lists the entry's files; a rebuild published
     // in place by another process (new files, new _SUCCESS) between two
     // probes must not be served through that stale listing
-    val dir = Files.createTempDirectory("result_cache_rebuilt").toString
+    val dir = tempDir("result_cache_rebuilt")
     def run(n: Int) = ResultCache.getOrCompute(spark, dir, "q", Map("p" -> "1")) {
       Registry.table(spark, sfDir, "region").limit(n)
     }
@@ -191,9 +191,7 @@ class ResultCacheSpec extends AnyFunSuite with SparkSuite {
     val built = marker.lastModified
     val other = s"$dir/other"
     Registry.table(spark, sfDir, "region").limit(3).write.parquet(other)
-    val files = Files.walk(entry.toPath)
-    try files.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-    finally files.close()
+    TempDirs.deleteTree(entry.toPath)
     Files.move(java.nio.file.Paths.get(other), entry.toPath)
     assert(marker.setLastModified(built + 5000))
     assert(run(4).count() == 3) // the other process's entry, not a rebuild

@@ -32,16 +32,22 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** The engine's runtime SQL settings, for `shufflePartitions`
+    * post-shuffle partitions; [[builder]] applies them, and a session
+    * sharing an existing context takes them through its conf. */
+  def sqlConf(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.files.maxPartitionBytes" -> "256m",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "256m")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    sqlConf(shufflePartitions).foldLeft(SparkSession.builder().master(master)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
       .config("spark.sql.ui.retainedExecutions", "100")

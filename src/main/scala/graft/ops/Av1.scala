@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.core.Bits.{MsbReader, MsbWriter}
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** m44: AV1 sequence-header OBU parse — the bitstream tier under m40's
@@ -174,7 +173,6 @@ object Av1 {
   // ------------------------------------------------------------------
 
   private val OutSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("profile", LongType, nullable = false),
     StructField("still_picture", LongType, nullable = false),
     StructField("level", LongType, nullable = false),
@@ -190,23 +188,18 @@ object Av1 {
   /** Parse the sequence header of each AVIF's primary item (first
     * extent bytes via [[Avif.primaryItemData]]); null/-1 sentinel row
     * on malformed input. */
-  def decodeAv1Seq(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val payload = Avif.primaryItemData(r.getAs[Array[Byte]](1))
-        val s = if (payload == null) null else seqHeader(payload)
-        if (s == null)
-          Row(r.getLong(0), -1L, 0L, -1L, -1L, -1L, -1L, 0L, 0L, 0L, 0L, 0L)
-        else
-          Row(r.getLong(0), s.profile, if (s.stillPicture) 1L else 0L,
-            s.level, s.width, s.height, s.bitDepth,
-            if (s.monochrome) 1L else 0L, if (s.use128Superblock) 1L else 0L,
-            if (s.enableCdef) 1L else 0L,
-            if (s.enableRestoration) 1L else 0L,
-            if (s.filmGrain) 1L else 0L)
-      }
+  def decodeAv1Seq(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, OutSchema) { b =>
+      val payload = Avif.primaryItemData(b)
+      val s = if (payload == null) null else seqHeader(payload)
+      if (s == null)
+        Row(-1L, 0L, -1L, -1L, -1L, -1L, 0L, 0L, 0L, 0L, 0L)
+      else
+        Row(s.profile, if (s.stillPicture) 1L else 0L,
+          s.level, s.width, s.height, s.bitDepth,
+          if (s.monochrome) 1L else 0L, if (s.use128Superblock) 1L else 0L,
+          if (s.enableCdef) 1L else 0L,
+          if (s.enableRestoration) 1L else 0L,
+          if (s.filmGrain) 1L else 0L)
     }
-    spark.createDataFrame(rdd, OutSchema)
-  }
 }

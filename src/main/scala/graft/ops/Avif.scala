@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** m40: AVIF/HEIF metadata walk — the fastest-growing image mime on the
@@ -463,7 +463,6 @@ object Avif {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = true),
     StructField("primary_item", LongType, nullable = false),
     StructField("n_items", LongType, nullable = false),
@@ -476,22 +475,17 @@ object Avif {
     StructField("n_extents", LongType, nullable = false),
     StructField("bounds_ok", LongType, nullable = false)))
 
-  /** AVIF/HEIF census over the house per-partition seam; null/-1
+  /** AVIF/HEIF census over [[Seam.rows]]; null/-1
     * sentinel row on malformed input. */
-  def decodeAvifMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = avifMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), null, -1L, -1L, -1L, -1L, -1L, 0L, 0L, -1L, -1L, 0L)
-        else
-          Row(r.getLong(0), m.kind, m.primaryItem, m.nItems, m.width, m.height,
-            m.nChannels, if (m.hasAlpha) 1L else 0L,
-            if (m.hasExif) 1L else 0L, m.primaryBytes, m.nExtents,
-            if (m.boundsOk) 1L else 0L)
-      }
+  def decodeAvifMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = avifMeta(b)
+      if (m == null)
+        Row(null, -1L, -1L, -1L, -1L, -1L, 0L, 0L, -1L, -1L, 0L)
+      else
+        Row(m.kind, m.primaryItem, m.nItems, m.width, m.height,
+          m.nChannels, if (m.hasAlpha) 1L else 0L,
+          if (m.hasExif) 1L else 0L, m.primaryBytes, m.nExtents,
+          if (m.boundsOk) 1L else 0L)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

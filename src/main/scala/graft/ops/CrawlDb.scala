@@ -229,4 +229,36 @@ object CrawlDb {
       (coalesce(a("sum_qty"), lit(0.0)) + coalesce(b("sum_qty"), lit(0.0))).as("sum_qty"),
     )
   }
+
+  /** Resolves every redirect `src → dst` (one edge per `src`, `hops` its
+    * length) to the end of its chain by pointer jumping: each round joins
+    * the pointers with themselves, so an L-hop chain resolves in about
+    * log₂ L rounds. A pointer is open, and moves in the next round, while
+    * its target is itself a redirect source. Each round closes at least
+    * one open pointer whose chain has an end, so the rounds run until no
+    * pointer moves or the open count stops falling; the pointers still
+    * open then lead into a cycle. Returns (src, dst, hops, open): `open`
+    * marks those loops, whose `dst` and `hops` mean nothing. */
+  def resolveRedirects(edges: DataFrame): DataFrame = {
+    val sources = edges.select(col("src").as("s"))
+    var ptr = Iterative.materialize(edges
+      .join(sources, col("dst") === col("s"), "left")
+      .select(col("src"), col("dst"), col("hops"), col("s").isNotNull.as("open")))
+    var open = ptr.where(col("open")).count()
+    var before = Long.MaxValue
+    while (open > 0 && open < before) {
+      val jumped = ptr.as("a")
+        .join(ptr.select(col("src").as("jsrc"), col("dst").as("jdst"),
+          col("hops").as("jhops"), col("open").as("jopen")),
+          col("a.dst") === col("jsrc"), "left")
+        .select(col("a.src").as("src"),
+          coalesce(col("jdst"), col("a.dst")).as("dst"),
+          (col("a.hops") + coalesce(col("jhops"), lit(0L))).as("hops"),
+          coalesce(col("jopen"), lit(false)).as("open"))
+      ptr = Iterative.materialize(jumped)
+      before = open
+      open = ptr.where(col("open")).count()
+    }
+    ptr
+  }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** m39: text extraction from ZIP-packaged document formats — OOXML
@@ -436,23 +436,17 @@ object DocText {
   }
 
   private val OutSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = true),
     StructField("src_name", StringType, nullable = true),
     StructField("n_parts", LongType, nullable = false),
     StructField("text", StringType, nullable = true)))
 
-  /** Document-text extraction over the house per-partition seam;
-    * null/-1 sentinel row on malformed or non-document input. */
-  def extractDocText(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val e = extract(r.getAs[Array[Byte]](1))
-        if (e == null) Row(r.getLong(0), null, null, -1L, null)
-        else Row(r.getLong(0), e.kind, e.srcName, e.nParts, e.text)
-      }
+  /** Document-text extraction over [[Seam.rows]]; null/-1 sentinel row
+    * on malformed or non-document input. */
+  def extractDocText(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, OutSchema) { b =>
+      val e = extract(b)
+      if (e == null) Row(null, null, -1L, null)
+      else Row(e.kind, e.srcName, e.nParts, e.text)
     }
-    spark.createDataFrame(rdd, OutSchema)
-  }
 }

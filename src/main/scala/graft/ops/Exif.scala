@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** EXIF/TIFF metadata walk over JPEG APP1 segments — orientation,
@@ -340,7 +340,6 @@ object Exif {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("byte_order", StringType, nullable = true),
     StructField("orientation", LongType, nullable = false),
     StructField("make", StringType, nullable = true),
@@ -353,22 +352,17 @@ object Exif {
     StructField("gps_lat_ppm", LongType, nullable = false),
     StructField("gps_lon_ppm", LongType, nullable = false)))
 
-  /** EXIF census over the house per-partition seam; null/-1 sentinel row
+  /** EXIF census over [[Seam.rows]]; null/-1 sentinel row
     * on absent or malformed EXIF. */
-  def decodeExifMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = exifMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), null, -1L, null, null, null, null, -1L, -1L,
-            0L, -1L, -1L)
-        else
-          Row(r.getLong(0), m.byteOrder, m.orientation, m.make, m.model,
-            m.dateTime, m.dateTimeOriginal, m.pixelX, m.pixelY,
-            if (m.hasGps) 1L else 0L, m.gpsLatPpm, m.gpsLonPpm)
-      }
+  def decodeExifMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = exifMeta(b)
+      if (m == null)
+        Row(null, -1L, null, null, null, null, -1L, -1L,
+          0L, -1L, -1L)
+      else
+        Row(m.byteOrder, m.orientation, m.make, m.model,
+          m.dateTime, m.dateTimeOriginal, m.pixelX, m.pixelY,
+          if (m.hasGps) 1L else 0L, m.gpsLatPpm, m.gpsLonPpm)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

@@ -4,7 +4,7 @@ import graft.core.Bits.{MsbReader, MsbWriter}
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 
 /** FLAC (Free Lossless Audio Codec, RFC 9639) — REAL bit-exact PCM
@@ -32,8 +32,8 @@ import org.apache.spark.sql.types._
   * policy, same as [[Multimodal.decodeWavStats]]).
   *
   * Scale shape: decode is a per-row kernel over the binary column —
-  * corpus-linear, shuffle-free, executed inside `mapPartitions` so a
-  * 1000-executor cluster decodes partitions independently.
+  * corpus-linear, shuffle-free, run once per row through [[Seam.rows]]
+  * so a 1000-executor cluster decodes partitions independently.
   */
 object Flac {
 
@@ -898,26 +898,21 @@ object Flac {
   /** Per-row tag extraction → (id, vendor, title, language, nchars);
     * metadata-only reads, corpus-linear, shuffle-free. */
   def decodeFlacTagStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("vendor", StringType, nullable = true),
       StructField("title", StringType, nullable = true),
       StructField("language", StringType, nullable = true),
       StructField("nchars_tag", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val parsed = flacTags(r.getAs[Array[Byte]](1))
-        if (parsed == null) Row(r.getLong(0), null, null, null, -1L)
-        else {
-          val m = parsed._2.toMap
-          Row(r.getLong(0), parsed._1, m.getOrElse("TITLE", null),
-            m.getOrElse("LANGUAGE", null),
-            m.get("NCHARS").flatMap(_.toLongOption).getOrElse(-1L))
-        }
+    Seam.rows(df, id, media, schema) { b =>
+      val parsed = flacTags(b)
+      if (parsed == null) Row(null, null, null, -1L)
+      else {
+        val m = parsed._2.toMap
+        Row(parsed._1, m.getOrElse("TITLE", null),
+          m.getOrElse("LANGUAGE", null),
+          m.get("NCHARS").flatMap(_.toLongOption).getOrElse(-1L))
       }
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** Fixture-synthesis column for m26: the [[Multimodal.testSample]]
@@ -931,7 +926,6 @@ object Flac {
   }
 
   private val statsSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("channels", IntegerType, nullable = false),
     StructField("n_samples", LongType, nullable = false),
     StructField("sum_ch0", LongType, nullable = false),
@@ -941,14 +935,9 @@ object Flac {
   ))
 
   /** Per-row FLAC decode → PCM stats; corpus-linear, shuffle-free. */
-  def decodeFlacPcmStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (ch, n, s0, s1, sa, ws) = decodeFlacStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), ch, n, s0, s1, sa, ws)
-      }
+  def decodeFlacPcmStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, statsSchema) { b =>
+      val (ch, n, s0, s1, sa, ws) = decodeFlacStats(b)
+      Row(ch, n, s0, s1, sa, ws)
     }
-    spark.createDataFrame(rdd, statsSchema)
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** ICO (favicon) pixel decode — the one image container nearly every
@@ -192,7 +192,6 @@ object Ico {
   }
 
   private val StatsSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("n_images", LongType, nullable = false),
     StructField("width0", LongType, nullable = false),
     StructField("height0", LongType, nullable = false),
@@ -201,18 +200,13 @@ object Ico {
     StructField("sum_b", LongType, nullable = false),
     StructField("n_transparent", LongType, nullable = false)))
 
-  /** ICO pixel census over the house per-partition seam; all-(-1)
+  /** ICO pixel census over [[Seam.rows]]; all-(-1)
     * sentinel on malformed input. */
-  def decodeIcoStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val s = icoStats(r.getAs[Array[Byte]](1))
-        if (s == null) Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L, -1L)
-        else Row(r.getLong(0), s.nImages, s.width0, s.height0,
-          s.sumR, s.sumG, s.sumB, s.nTransparent)
-      }
+  def decodeIcoStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, StatsSchema) { b =>
+      val s = icoStats(b)
+      if (s == null) Row(-1L, -1L, -1L, -1L, -1L, -1L, -1L)
+      else Row(s.nImages, s.width0, s.height0,
+        s.sumR, s.sumG, s.sumB, s.nTransparent)
     }
-    spark.createDataFrame(rdd, StatsSchema)
-  }
 }

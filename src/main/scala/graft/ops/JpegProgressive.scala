@@ -3,8 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.functions.udf
 
 /** Progressive JPEG (SOF2) decode — the other half of real-crawl JPEG
   * traffic next to [[Multimodal.decodeJpegStats]]'s baseline path (the
@@ -622,21 +621,11 @@ object JpegProgressive {
     enc(id.cast("long"), nbx.cast("int"), nby.cast("int"))
   }
 
-  private val StatsSchema = StructType(
-    StructField("id", LongType, nullable = false) +:
-      Multimodal.PixelStatsSchema.fields.toSeq)
-
-  /** Real progressive-JPEG pixel decode over the house per-partition
-    * seam: (id, media) → (id, width, height, sum_r, sum_g, sum_b,
-    * even_sum). */
-  def decodeJpegProgPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodeJpegProgStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real progressive-JPEG pixel decode over [[Seam.rows]]:
+    * (id, media) → (id, width, height, sum_r, sum_g, sum_b, even_sum). */
+  def decodeJpegProgPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, Multimodal.PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodeJpegProgStats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, StatsSchema)
-  }
 }

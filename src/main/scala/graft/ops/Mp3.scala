@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType,
   StructField, StructType}
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType,
   * every field a corpus pipeline actually filters on (duration, sample
   * rate, bitrate, channel mode, tags) is header material and fully
   * deterministic. This is the m27/m12 shape: a sub-linear metadata-only
-  * kernel behind the mapPartitions seam.
+  * kernel behind [[Seam.rows]].
   *
   * Untrusted-input discipline matches the sibling decoders: explicit
   * budgets on every length field (an ID3 size or bitrate index is
@@ -317,7 +317,6 @@ object Mp3 {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("sample_rate", LongType, nullable = false),
     StructField("mode", StringType, nullable = true),
     StructField("n_frames", LongType, nullable = false),
@@ -332,22 +331,17 @@ object Mp3 {
     StructField("nchars_tag", LongType, nullable = false),
     StructField("has_id3v1", BooleanType, nullable = false)))
 
-  /** Metadata census over the house per-partition seam; all-sentinel row
+  /** Metadata census over [[Seam.rows]]; all-sentinel row
     * (nulls / -1 / false) on malformed input. */
-  def decodeMp3Meta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = mp3Meta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), -1L, null, -1L, -1L, -1L, -1L, null, -1L,
-            null, null, -1L, -1L, false)
-        else
-          Row(r.getLong(0), m.sampleRate.toLong, m.mode, m.nFrames,
-            m.durationMs, m.audioBytes, m.avgKbps, m.vbrHeader, m.vbrFrames,
-            m.title, m.artist, m.track, m.ncharsTag, m.hasId3v1)
-      }
+  def decodeMp3Meta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = mp3Meta(b)
+      if (m == null)
+        Row(-1L, null, -1L, -1L, -1L, -1L, null, -1L,
+          null, null, -1L, -1L, false)
+      else
+        Row(m.sampleRate.toLong, m.mode, m.nFrames,
+          m.durationMs, m.audioBytes, m.avgKbps, m.vbrHeader, m.vbrFrames,
+          m.title, m.artist, m.track, m.ncharsTag, m.hasId3v1)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

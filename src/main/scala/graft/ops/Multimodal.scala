@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * The actual codec step is a DETERMINISTIC STUB (`decodeHeaderStub`):
   * this container has no image/audio libraries, so "decode" parses our
   * synthetic GRFT container header instead. Everything around it — the
-  * binary column handling, metadata schema, per-partition batching shape,
+  * binary column handling, metadata schema, per-row decode seam,
   * and partition-preserving plan — is real and is what a production
   * decoder would plug into.
   */
@@ -45,27 +45,19 @@ object Multimodal {
 
   private val formats = Map('0' -> "img", '1' -> "audio", '2' -> "video")
 
-  /** The decode stub: parse the GRFT header out of the binary column in
-    * per-partition batches. Runs as `mapPartitions` over (id, media)
-    * rows — the exact seam where a real decoder (libjpeg/ffmpeg/…) would
-    * process each batch. Output: (id, format, n_frames, payload_len). */
-  def decodeHeaderStub(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: MetaSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val header = new String(bytes, 0, HeaderLen, "UTF-8")
-        require(header.startsWith("GRFT") && header.endsWith(":"),
-          "not a GRFT container")
-        val fmt = formats.getOrElse(header.charAt(4), "unknown")
-        val frames = header.substring(5, 9).toInt
-        Row(r.getLong(0), fmt, frames, bytes.length - HeaderLen)
-      }
+  /** The decode stub: parse the GRFT header out of the binary column,
+    * one row at a time through [[Seam.rows]] — the exact seam where a
+    * real decoder (libjpeg/ffmpeg/…) would process each record. Output:
+    * (id, format, n_frames, payload_len). */
+  def decodeHeaderStub(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { bytes =>
+      val header = new String(bytes, 0, HeaderLen, "UTF-8")
+      require(header.startsWith("GRFT") && header.endsWith(":"),
+        "not a GRFT container")
+      val fmt = formats.getOrElse(header.charAt(4), "unknown")
+      val frames = header.substring(5, 9).toInt
+      Row(fmt, frames, bytes.length - HeaderLen)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --- real public-format image headers -----------------------------
   // The codec gap the stub above documents is narrower than "no media
@@ -125,20 +117,12 @@ object Multimodal {
     } else ("unknown", -1, -1)
   }
 
-  /** Real-format decode over the SAME per-partition batch seam as
-    * [[decodeHeaderStub]]: (id, media) → (id, format, width, height). */
-  def decodeImageHeaders(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: ImageMetaSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (fmt, w, h) = parseImageHeader(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), fmt, w, h)
-      }
+  /** Real-format decode over [[Seam.rows]]: (id, media) → (id, format, width, height). */
+  def decodeImageHeaders(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, ImageMetaSchema) { b =>
+      val (fmt, w, h) = parseImageHeader(b)
+      Row(fmt, w, h)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Synthesize real image container bytes (PNG through IHDR, JPEG
     * SOI‖APP0‖SOF0‖EOI, GIF89a screen descriptor) from computed
@@ -260,20 +244,12 @@ object Multimodal {
     } else none
   }
 
-  /** Real AV-format decode over the SAME per-partition batch seam as
-    * [[decodeHeaderStub]]: (id, media) → AvMetaSchema row per record. */
-  def decodeAvHeaders(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: AvMetaSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (fmt, ch, rate, bits, durMs) = parseAvHeader(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), fmt, ch, rate, bits, durMs)
-      }
+  /** Real AV-format decode over [[Seam.rows]]: (id, media) → AvMetaSchema row per record. */
+  def decodeAvHeaders(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, AvMetaSchema) { b =>
+      val (fmt, ch, rate, bits, durMs) = parseAvHeader(b)
+      Row(fmt, ch, rate, bits, durMs)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   private def le16hex(x: Column): Column = {
     val h = lpad(hex(x.cast("long")), 4, "0")
@@ -346,7 +322,7 @@ object Multimodal {
   /** "Resize" stub: stride-k nearest-neighbor downsample of the payload
     * bytes — the 1-D analog of image resizing, as pure column expressions
     * (a real resampler would replace the kernel inside the same
-    * batch-per-partition seam as `decodeHeaderStub`). Returns
+    * per-row seam as `decodeHeaderStub`). Returns
     * (out_len, checksum) of the resampled payload: the checksum is an
     * exact integer fold over the sampled bytes, so a downstream oracle
     * can verify which bytes were kept without shipping the payload. */
@@ -597,25 +573,20 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** [[decodeBmpBoxResize2]] over the standard batch seam:
+  /** [[decodeBmpBoxResize2]] over [[Seam.rows]]:
     * (id, media) → (id, out_w, out_h, sum_r2, sum_g2, sum_b2, mix). */
   def decodeBmpBoxResize(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("out_w", IntegerType, nullable = false),
       StructField("out_h", IntegerType, nullable = false),
       StructField("sum_r2", LongType, nullable = false),
       StructField("sum_g2", LongType, nullable = false),
       StructField("sum_b2", LongType, nullable = false),
       StructField("mix", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (ow, oh, sr, sg, sb, mx) = decodeBmpBoxResize2(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), ow, oh, sr, sg, sb, mx)
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (ow, oh, sr, sg, sb, mx) = decodeBmpBoxResize2(b)
+      Row(ow, oh, sr, sg, sb, mx)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   // --- perceptual hash over the real BMP decode -----------------------
@@ -1187,20 +1158,12 @@ object Multimodal {
     enc(id.cast("long"), width.cast("int"), height.cast("int"))
   }
 
-  /** Real-pixel PNG decode over the same per-partition batch seam as
-    * [[decodeBmpPixelStats]]: (id, media) → (id, PixelStatsSchema...). */
-  def decodePngPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: PixelStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodePngStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real-pixel PNG decode over [[Seam.rows]]: (id, media) → (id, PixelStatsSchema...). */
+  def decodePngPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodePngStats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --- real PIXEL decode: GIF (87a/89a, LZW, interlace) ---------------
   // GIF needs no codec library either: the pixel stream is LZW with
@@ -1746,19 +1709,12 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Real-pixel GIF decode over the standard batch seam. */
-  def decodeGifPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: PixelStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodeGifStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real-pixel GIF decode over [[Seam.rows]]. */
+  def decodeGifPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodeGifStats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --- real PIXEL decode: baseline JPEG (SOF0, 4:2:0 / grayscale) -----
   // The entropy layer — the hard part of JPEG — is pure spec arithmetic:
@@ -2214,19 +2170,12 @@ object Multimodal {
     enc(id.cast("long"), wMcu.cast("int"), hMcu.cast("int"))
   }
 
-  /** Real-pixel JPEG decode over the standard batch seam. */
-  def decodeJpegPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: PixelStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodeJpegStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real-pixel JPEG decode over [[Seam.rows]]. */
+  def decodeJpegPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodeJpegStats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --- real SAMPLE decode: WAV 16-bit PCM -----------------------------
   // m6 walks the RIFF/fmt headers; this decodes the data chunk's actual
@@ -2425,26 +2374,20 @@ object Multimodal {
     * definition across formats (the decoder-interop contract m23 pins
     * for images). Per-row, corpus-linear, shuffle-free. */
   def decodeAudioFps(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("format", StringType, nullable = false),
       StructField("fp", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val b = r.getAs[Array[Byte]](1)
-        val (fmt, pcm) =
-          if (b.length >= 4 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F')
-            ("wav", decodeWavPcm16(b))
-          else if (b.length >= 4 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C') {
-            val chans = graft.ops.Flac.decodeFlacPcm(b)
-            ("flac", if (chans == null || chans.length != 1) null else chans(0))
-          } else ("bad", null)
-        if (pcm == null) Row(r.getLong(0), "bad", -1L)
-        else Row(r.getLong(0), fmt, audioLatticeFp(pcm))
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (fmt, pcm) =
+        if (b.length >= 4 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F')
+          ("wav", decodeWavPcm16(b))
+        else if (b.length >= 4 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C') {
+          val chans = graft.ops.Flac.decodeFlacPcm(b)
+          ("flac", if (chans == null || chans.length != 1) null else chans(0))
+        } else ("bad", null)
+      if (pcm == null) Row("bad", -1L)
+      else Row(fmt, audioLatticeFp(pcm))
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Format-dispatching audio QUALITY gates over the decoded PCM —
@@ -2455,43 +2398,37 @@ object Multimodal {
     * definition across containers, same dispatch as
     * [[decodeAudioFps]]. Integer-exact, per-row, shuffle-free. */
   def decodeAudioQuality(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("format", StringType, nullable = false),
       StructField("n_samples", LongType, nullable = false),
       StructField("peak", LongType, nullable = false),
       StructField("n_clip", LongType, nullable = false),
       StructField("zero_cross", LongType, nullable = false),
       StructField("sum_abs", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val b = r.getAs[Array[Byte]](1)
-        val (fmt, pcm) =
-          if (b.length >= 4 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F')
-            ("wav", decodeWavPcm16(b))
-          else if (b.length >= 4 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C') {
-            val chans = graft.ops.Flac.decodeFlacPcm(b)
-            ("flac", if (chans == null || chans.length != 1) null else chans(0))
-          } else ("bad", null)
-        if (pcm == null) Row(r.getLong(0), "bad", -1L, -1L, -1L, -1L, -1L)
-        else {
-          var peak = 0L; var clip = 0L; var zc = 0L; var sa = 0L
-          var i = 0
-          while (i < pcm.length) {
-            val v = pcm(i)
-            val a = math.abs(v.toLong)
-            if (a > peak) peak = a
-            if (a >= 32000) clip += 1
-            if (i > 0 && v.toLong * pcm(i - 1) < 0) zc += 1
-            sa += a
-            i += 1
-          }
-          Row(r.getLong(0), fmt, pcm.length.toLong, peak, clip, zc, sa)
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (fmt, pcm) =
+        if (b.length >= 4 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F')
+          ("wav", decodeWavPcm16(b))
+        else if (b.length >= 4 && b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C') {
+          val chans = graft.ops.Flac.decodeFlacPcm(b)
+          ("flac", if (chans == null || chans.length != 1) null else chans(0))
+        } else ("bad", null)
+      if (pcm == null) Row("bad", -1L, -1L, -1L, -1L, -1L)
+      else {
+        var peak = 0L; var clip = 0L; var zc = 0L; var sa = 0L
+        var i = 0
+        while (i < pcm.length) {
+          val v = pcm(i)
+          val a = math.abs(v.toLong)
+          if (a > peak) peak = a
+          if (a >= 32000) clip += 1
+          if (i > 0 && v.toLong * pcm(i - 1) < 0) zc += 1
+          sa += a
+          i += 1
         }
+        Row(fmt, pcm.length.toLong, peak, clip, zc, sa)
       }
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** REAL autocorrelation over the decoded PCM stream: for each lag L,
@@ -2548,23 +2485,18 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => bad }
   }
 
-  /** Autocorrelation decode over the standard batch seam:
+  /** Autocorrelation decode over [[Seam.rows]]:
     * (id, media) → (id, n_samples, energy, ac<lag>...). */
   def decodeWavAutocorrStats(df: DataFrame, id: String, media: String,
       lags: Seq[Int]): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(
-      Seq(StructField("id", LongType, nullable = false),
-        StructField("n_samples", LongType, nullable = false),
+      Seq(StructField("n_samples", LongType, nullable = false),
         StructField("energy", LongType, nullable = false)) ++
         lags.map(l => StructField(s"ac$l", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (n, energy, acs) = decodeWavAutocorr(r.getAs[Array[Byte]](1), lags)
-        Row.fromSeq(r.getLong(0) +: n +: energy +: acs)
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (n, energy, acs) = decodeWavAutocorr(b, lags)
+      Row.fromSeq(n +: energy +: acs)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Fixture-synthesis column: WAV bytes for (seed, n_samples). */
@@ -2627,39 +2559,27 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => bad }
   }
 
-  /** Windowed-loudness decode over the standard batch seam:
+  /** Windowed-loudness decode over [[Seam.rows]]:
     * (id, media) → (id, n_samples, win_abs array). */
   def decodeWavWindowStats(df: DataFrame, id: String, media: String,
       w: Int): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("n_samples", LongType, nullable = false),
       StructField("win_abs", ArrayType(LongType, containsNull = false),
         nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (n, wins) = decodeWavWindowAbs(r.getAs[Array[Byte]](1), w)
-        Row(r.getLong(0), n, wins.toSeq)
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (n, wins) = decodeWavWindowAbs(b, w)
+      Row(n, wins.toSeq)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Real-sample WAV decode over the standard batch seam:
+  /** Real-sample WAV decode over [[Seam.rows]]:
     * (id, media) → (id, SampleStatsSchema...). */
-  def decodeWavSampleStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: SampleStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (ch, n, s, sa, ma) = decodeWavStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), ch, n, s, sa, ma)
-      }
+  def decodeWavSampleStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, SampleStatsSchema) { b =>
+      val (ch, n, s, sa, ma) = decodeWavStats(b)
+      Row(ch, n, s, sa, ma)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   /** Fixture-synthesis column: BMP bytes for (seed, width, height).
     * A UDF by design — per-pixel imperative encode is fixture
@@ -2696,55 +2616,35 @@ object Multimodal {
     StructField("h_lo", LongType, nullable = false),
   ))
 
-  /** Real perceptual-hash decode over the standard batch seam:
-    * (id, media) → (id, width, height, h_hi, h_lo). */
-  /** Cross-format dHash over the standard batch seam:
+  /** Cross-format dHash over [[Seam.rows]]:
     * (id, media) → (id, format, width, height, h_hi, h_lo). */
   def decodeImageDHashes(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("format", StringType, nullable = false),
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
       StructField("h_hi", LongType, nullable = false),
       StructField("h_lo", LongType, nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (f, w, h, hi, lo) = decodeImageDHash(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), f, w, h, hi, lo)
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      val (f, w, h, hi, lo) = decodeImageDHash(b)
+      Row(f, w, h, hi, lo)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
-  def decodeBmpDHashes(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: DHashSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, hi, lo) = decodeBmpDHash(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, hi, lo)
-      }
+  /** Real perceptual-hash decode over [[Seam.rows]]:
+    * (id, media) → (id, width, height, h_hi, h_lo). */
+  def decodeBmpDHashes(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, DHashSchema) { b =>
+      val (w, h, hi, lo) = decodeBmpDHash(b)
+      Row(w, h, hi, lo)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
-  /** Real-pixel decode over the SAME per-partition batch seam as
-    * [[decodeHeaderStub]]: (id, media) → (id, PixelStatsSchema...). */
-  def decodeBmpPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: PixelStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodeBmp24Stats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real-pixel decode over [[Seam.rows]]: (id, media) → (id, PixelStatsSchema...). */
+  def decodeBmpPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodeBmp24Stats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 
   // --- MP4 sample tables: the frame-level metadata layer ---------------
   // parseAvHeader stops at moov/mvhd (whole-presentation timing). The
@@ -2891,20 +2791,15 @@ object Multimodal {
     sizes.getOrElse(Array.empty)
   }
 
-  /** Per-sample stsz decode over the standard batch seam:
+  /** Per-sample stsz decode over [[Seam.rows]]:
     * (id, media) → (id, sizes: array<int>). */
   def decodeMp4SampleSizes(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
     val outSchema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
       StructField("sizes", ArrayType(IntegerType, containsNull = false),
         nullable = false)))
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        Row(r.getLong(0), parseMp4SampleSizes(r.getAs[Array[Byte]](1)).toSeq)
-      }
+    Seam.rows(df, id, media, outSchema) { b =>
+      Row(parseMp4SampleSizes(b).toSeq)
     }
-    spark.createDataFrame(rdd, outSchema)
   }
 
   /** Synthesize a one-track MP4 whose sample tables are real: ftyp, then
@@ -2930,18 +2825,10 @@ object Multimodal {
     unhex(concat(lit("00000010" + "66747970" + "69736F6D" + "00000000"), moov))
   }
 
-  /** MP4 sample-table decode over the SAME per-partition batch seam as
-    * [[decodeHeaderStub]]: (id, media) → (id, Mp4SampleStatsSchema...). */
-  def decodeMp4SampleStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +: Mp4SampleStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (n, durMs, total, mx) = parseMp4SampleStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), n, durMs, total, mx)
-      }
+  /** MP4 sample-table decode over [[Seam.rows]]: (id, media) → (id, Mp4SampleStatsSchema...). */
+  def decodeMp4SampleStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, Mp4SampleStatsSchema) { b =>
+      val (n, durMs, total, mx) = parseMp4SampleStats(b)
+      Row(n, durMs, total, mx)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Ogg/Opus metadata walk — page census with bit-exact CRC
@@ -255,7 +255,6 @@ object Ogg {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("serial", LongType, nullable = false),
     StructField("channels", LongType, nullable = false),
     StructField("pre_skip", LongType, nullable = false),
@@ -267,21 +266,16 @@ object Ogg {
     StructField("artist", StringType, nullable = true),
     StructField("crc_ok", LongType, nullable = false)))
 
-  /** Ogg/Opus census over the house per-partition seam; null/-1
+  /** Ogg/Opus census over [[Seam.rows]]; null/-1
     * sentinel on malformed input. */
-  def decodeOggMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = oggMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, -1L, null, null, null, 0L)
-        else
-          Row(r.getLong(0), m.serial, m.channels, m.preSkip, m.inputRate,
-            m.nPages, m.durationMs, m.vendor, m.title, m.artist,
-            if (m.crcOk) 1L else 0L)
-      }
+  def decodeOggMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = oggMeta(b)
+      if (m == null)
+        Row(-1L, -1L, -1L, -1L, -1L, -1L, null, null, null, 0L)
+      else
+        Row(m.serial, m.channels, m.preSkip, m.inputRate,
+          m.nPages, m.durationMs, m.vendor, m.title, m.artist,
+          if (m.crcOk) 1L else 0L)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

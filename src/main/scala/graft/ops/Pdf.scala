@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** PDF metadata census — version, object count, page count, Info-dict
@@ -238,7 +238,6 @@ object Pdf {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("version", StringType, nullable = true),
     StructField("n_objects", LongType, nullable = false),
     StructField("page_count", LongType, nullable = false),
@@ -247,18 +246,13 @@ object Pdf {
     StructField("creation_date", StringType, nullable = true),
     StructField("encrypted", LongType, nullable = false)))
 
-  /** PDF census over the house per-partition seam; null/-1 sentinel on
+  /** PDF census over [[Seam.rows]]; null/-1 sentinel on
     * malformed input. */
-  def decodePdfMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = pdfMeta(r.getAs[Array[Byte]](1))
-        if (m == null) Row(r.getLong(0), null, -1L, -1L, null, null, null, 0L)
-        else Row(r.getLong(0), m.version, m.nObjects, m.pageCount,
-          m.title, m.author, m.creationDate, if (m.encrypted) 1L else 0L)
-      }
+  def decodePdfMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = pdfMeta(b)
+      if (m == null) Row(null, -1L, -1L, null, null, null, 0L)
+      else Row(m.version, m.nObjects, m.pageCount,
+        m.title, m.author, m.creationDate, if (m.encrypted) 1L else 0L)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

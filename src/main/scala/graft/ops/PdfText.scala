@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** m42: PDF text extraction — the pdftotext tier of the reference
@@ -426,21 +426,15 @@ object PdfText {
   }
 
   private val OutSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("n_pages", LongType, nullable = false),
     StructField("text", StringType, nullable = true)))
 
-  /** PDF text extraction over the house per-partition seam; null/-1
+  /** PDF text extraction over [[Seam.rows]]; null/-1
     * sentinel row on malformed input. */
-  def extractPdfText(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val e = extract(r.getAs[Array[Byte]](1))
-        if (e == null) Row(r.getLong(0), -1L, null)
-        else Row(r.getLong(0), e.nPages, e.text)
-      }
+  def extractPdfText(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, OutSchema) { b =>
+      val e = extract(b)
+      if (e == null) Row(-1L, null)
+      else Row(e.nPages, e.text)
     }
-    spark.createDataFrame(rdd, OutSchema)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** TAR archive census — entry walk with header-checksum verification.
@@ -190,7 +190,6 @@ object Tar {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("n_entries", LongType, nullable = false),
     StructField("n_files", LongType, nullable = false),
     StructField("n_dirs", LongType, nullable = false),
@@ -200,21 +199,16 @@ object Tar {
     StructField("unsafe_paths", LongType, nullable = false),
     StructField("checksum_ok", LongType, nullable = false)))
 
-  /** TAR census over the house per-partition seam; null/-1 sentinel on
+  /** TAR census over [[Seam.rows]]; null/-1 sentinel on
     * malformed input. */
-  def decodeTarMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = tarMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), -1L, -1L, -1L, -1L, -1L, null, -1L, 0L)
-        else
-          Row(r.getLong(0), m.nEntries, m.nFiles, m.nDirs, m.sumBytes,
-            m.maxEntryBytes, m.firstName, m.unsafePaths,
-            if (m.checksumOk) 1L else 0L)
-      }
+  def decodeTarMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = tarMeta(b)
+      if (m == null)
+        Row(-1L, -1L, -1L, -1L, -1L, null, -1L, 0L)
+      else
+        Row(m.nEntries, m.nFiles, m.nDirs, m.sumBytes,
+          m.maxEntryBytes, m.firstName, m.unsafePaths,
+          if (m.checksumOk) 1L else 0L)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

@@ -5,7 +5,7 @@ import graft.core.Bytes._
 import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 
 /** Lossy WebP (VP8 intra / key-frame) decode — RFC 6386, the web's
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
   * int16 — the envelope real encoders guarantee and SIMD decoders
   * assume; outside it implementations legitimately diverge.
   *
-  * Corpus-linear, shuffle-free per-row kernel behind the house
-  * mapPartitions seam — the same scale shape as the BMP/PNG/GIF/JPEG/
+  * Corpus-linear, shuffle-free per-row kernel behind
+  * [[Seam.rows]] — the same scale shape as the BMP/PNG/GIF/JPEG/
   * VP8L/FLAC tier. Malformed input → all -1, never a throw.
   */
 object Vp8 {
@@ -1359,7 +1359,6 @@ object Vp8 {
   }
 
   private val StatsSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("sum_y", LongType, nullable = false),
@@ -1367,16 +1366,11 @@ object Vp8 {
     StructField("sum_v", LongType, nullable = false),
     StructField("even_sum", LongType, nullable = false)))
 
-  /** Real-pixel lossy-WebP decode over the house per-partition seam:
+  /** Real-pixel lossy-WebP decode over [[Seam.rows]]:
     * (id, media) → (id, width, height, sum_y, sum_u, sum_v, even_sum). */
-  def decodeWebpVp8Stats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sy, su, sv, es) = decodeWebpVp8Stats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sy, su, sv, es)
-      }
+  def decodeWebpVp8Stats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, StatsSchema) { b =>
+      val (w, h, sy, su, sv, es) = decodeWebpVp8Stats(b)
+      Row(w, h, sy, su, sv, es)
     }
-    spark.createDataFrame(rdd, StatsSchema)
-  }
 }

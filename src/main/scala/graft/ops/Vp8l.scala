@@ -941,19 +941,10 @@ object Vp8l {
     enc(id.cast("long"), width.cast("int"), height.cast("int"))
   }
 
-  /** Real-pixel VP8L decode over the same per-partition batch seam as
-    * [[Multimodal.decodePngPixelStats]]: (id, media) → (id, stats). */
-  def decodeWebpPixelStats(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val outSchema = StructType(
-      StructField("id", LongType, nullable = false) +:
-        Multimodal.PixelStatsSchema.fields.toSeq)
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, sr, sg, sb, es) = decodeWebpStats(r.getAs[Array[Byte]](1))
-        Row(r.getLong(0), w, h, sr, sg, sb, es)
-      }
+  /** Real-pixel VP8L decode over [[Seam.rows]]: (id, media) → (id, stats). */
+  def decodeWebpPixelStats(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, Multimodal.PixelStatsSchema) { b =>
+      val (w, h, sr, sg, sb, es) = decodeWebpStats(b)
+      Row(w, h, sr, sg, sb, es)
     }
-    spark.createDataFrame(rdd, outSchema)
-  }
 }

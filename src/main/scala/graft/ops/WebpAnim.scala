@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** WebP CONTAINER walk — still vs extended/animated dispatch, the
@@ -192,7 +192,6 @@ object WebpAnim {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = true),
     StructField("canvas_w", LongType, nullable = false),
     StructField("canvas_h", LongType, nullable = false),
@@ -201,20 +200,13 @@ object WebpAnim {
     StructField("loop_count", LongType, nullable = false),
     StructField("sum_frame_area", LongType, nullable = false)))
 
-  /** WebP container census over the house per-partition seam; null/-1
-    * sentinel on malformed input. */
-  def decodeWebpAnimMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = webpMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), null, -1L, -1L, -1L, -1L, -1L, -1L)
-        else
-          Row(r.getLong(0), m.kind, m.canvasW, m.canvasH, m.nFrames,
-            m.totalDurationMs, m.loopCount, m.sumFrameArea)
-      }
+  /** WebP container census over [[Seam.rows]]; null/-1 sentinel on
+    * malformed input. */
+  def decodeWebpAnimMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = webpMeta(b)
+      if (m == null) Row(null, -1L, -1L, -1L, -1L, -1L, -1L)
+      else Row(m.kind, m.canvasW, m.canvasH, m.nFrames,
+        m.totalDurationMs, m.loopCount, m.sumFrameArea)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

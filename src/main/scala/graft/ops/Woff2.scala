@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.core.Brotli
@@ -238,7 +238,6 @@ object Woff2 {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("flavor", StringType, nullable = true),
     StructField("n_tables", LongType, nullable = false),
     StructField("n_known", LongType, nullable = false),
@@ -251,22 +250,17 @@ object Woff2 {
     StructField("has_meta", LongType, nullable = false),
     StructField("meta_orig", LongType, nullable = false)))
 
-  /** WOFF2 census over the house per-partition seam; null/-1 sentinel
+  /** WOFF2 census over [[Seam.rows]]; null/-1 sentinel
     * row on malformed input. */
-  def decodeWoff2Meta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = woff2Meta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), null, -1L, -1L, -1L, -1L, -1L, -1L, 0L, -1L, 0L, -1L)
-        else
-          Row(r.getLong(0), m.flavor, m.nTables, m.nKnown, m.nCustom,
-            m.nTransformed, m.sumOrig, m.totalSfntSize,
-            if (m.blobOk) 1L else 0L, m.decompLen,
-            if (m.hasMeta) 1L else 0L, m.metaOrig)
-      }
+  def decodeWoff2Meta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = woff2Meta(b)
+      if (m == null)
+        Row(null, -1L, -1L, -1L, -1L, -1L, -1L, 0L, -1L, 0L, -1L)
+      else
+        Row(m.flavor, m.nTables, m.nKnown, m.nCustom,
+          m.nTransformed, m.sumOrig, m.totalSfntSize,
+          if (m.blobOk) 1L else 0L, m.decompLen,
+          if (m.hasMeta) 1L else 0L, m.metaOrig)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Bytes._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** ZIP container census — entry count, size totals, compression-ratio
@@ -229,7 +229,6 @@ object Zip {
   }
 
   private val MetaSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
     StructField("kind", StringType, nullable = true),
     StructField("n_entries", LongType, nullable = false),
     StructField("sum_comp", LongType, nullable = false),
@@ -240,21 +239,16 @@ object Zip {
     StructField("first_name", StringType, nullable = true),
     StructField("crc_ok", LongType, nullable = false)))
 
-  /** ZIP census over the house per-partition seam; null/-1 sentinel on
+  /** ZIP census over [[Seam.rows]]; null/-1 sentinel on
     * malformed input. */
-  def decodeZipMeta(df: DataFrame, id: String, media: String): DataFrame = {
-    val spark = df.sparkSession
-    val rdd = df.select(col(id).cast("long"), col(media)).rdd.mapPartitions { it =>
-      it.map { r =>
-        val m = zipMeta(r.getAs[Array[Byte]](1))
-        if (m == null)
-          Row(r.getLong(0), null, -1L, -1L, -1L, -1L, -1L, -1L, null, 0L)
-        else
-          Row(r.getLong(0), m.kind, m.nEntries, m.sumComp, m.sumUncomp,
-            m.maxRatioPpm, m.nStored, m.nDeflate, m.firstName,
-            if (m.crcOk) 1L else 0L)
-      }
+  def decodeZipMeta(df: DataFrame, id: String, media: String): DataFrame =
+    Seam.rows(df, id, media, MetaSchema) { b =>
+      val m = zipMeta(b)
+      if (m == null)
+        Row(null, -1L, -1L, -1L, -1L, -1L, -1L, null, 0L)
+      else
+        Row(m.kind, m.nEntries, m.sumComp, m.sumUncomp,
+          m.maxRatioPpm, m.nStored, m.nDeflate, m.firstName,
+          if (m.crcOk) 1L else 0L)
     }
-    spark.createDataFrame(rdd, MetaSchema)
-  }
 }

@@ -295,13 +295,14 @@ object CrawlDbQueries {
     // halving) — each round joins the pointer table with itself, so an
     // L-hop chain resolves in ⌈log₂L⌉ rounds of hash-distributed
     // equi-joins (a chain-walk would need L rounds; a per-chain groupBy
-    // would put a viral redirect fan-in on one task). Classification
-    // falls out of the resolved pointer: target still a redirect source
-    // after the rounds ⇒ loop (emitted with final_dst = self, hops −1);
-    // target absent from the corpus ⇒ dead; else ok. The fixture's
-    // chain/loop/dangling structure is doc_id arithmetic, so the oracle
-    // states the closed-form ground truth — the jumping must reach it
-    // mechanically.
+    // would put a viral redirect fan-in on one task). The rounds run
+    // until no pointer moves (CrawlDb.resolveRedirects), so no chain is
+    // cut short. Classification falls out of the resolved pointer: still
+    // open once the open count stops falling ⇒ loop (emitted with
+    // final_dst = self, hops −1); target absent from the corpus ⇒ dead;
+    // else ok. The fixture's chain/loop/dangling structure is doc_id
+    // arithmetic, so the oracle states the closed-form ground truth — the
+    // jumping must reach it mechanically.
     Q(
       "c5_redirect_resolution",
       (s, dir) => {
@@ -325,27 +326,13 @@ object CrawlDbQueries {
               .when(m === 5, col("doc_id") + 1)
               .otherwise(col("doc_id") - 1).as("dst"),
             lit(1L).as("hops"))
-        var ptr = graft.ops.Iterative.materialize(edges)
-        for (_ <- 1 to 3) { // 2³ = 8 ≥ any fixture chain length
-          val jumped = ptr.as("a")
-            .join(ptr.select(col("src").as("jsrc"), col("dst").as("jdst"),
-              col("hops").as("jhops")), col("a.dst") === col("jsrc"), "left")
-            .select(col("a.src").as("src"),
-              coalesce(col("jdst"), col("a.dst")).as("dst"),
-              (col("a.hops") + coalesce(col("jhops"), lit(0L))).as("hops"))
-          ptr = graft.ops.Iterative.materialize(jumped)
-        }
-        val srcs = edges.select(col("src").as("dst")).distinct()
         val exists = docs.select(col("doc_id").as("dst"))
-        ptr
-          .join(srcs.withColumn("is_src", lit(1)), Seq("dst"), "left")
+        graft.ops.CrawlDb.resolveRedirects(edges)
           .join(exists.withColumn("in_corpus", lit(1)), Seq("dst"), "left")
           .select(col("src").as("doc_id"),
-            when(col("is_src") === 1, col("src")).otherwise(col("dst"))
-              .as("final_dst"),
-            when(col("is_src") === 1, lit(-1L)).otherwise(col("hops"))
-              .as("hops"),
-            when(col("is_src") === 1, "loop")
+            when(col("open"), col("src")).otherwise(col("dst")).as("final_dst"),
+            when(col("open"), lit(-1L)).otherwise(col("hops")).as("hops"),
+            when(col("open"), "loop")
               .when(col("in_corpus").isNull, "dead")
               .otherwise("ok").as("status"))
           .orderBy("doc_id")

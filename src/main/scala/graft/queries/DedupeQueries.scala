@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedupe
+import graft.ops.{Dedupe, Seam}
 
 /** Dedupe query surface over the `documents` table (SURVEY.md §2.9 +
   * LLM-pipeline dedupe). The md5-based MinHash pipeline is intentionally
@@ -107,8 +107,9 @@ object DedupeQueries {
 
   private val d5SharedStage = new Staging.Memo("d5shared")
   private val d5SharedLock = new Object
-  private val d5SharedBuilt =
-    scala.collection.mutable.Set.empty[(String, String)]
+  /** Per sf dir, the stage base its catalog tables were last written
+    * under: the table names carry the dir only. */
+  private val d5SharedBuilt = scala.collection.mutable.Map.empty[String, String]
 
   /** Build-once full-corpus near-dup artifacts shared by every query on
     * the standard banding (threshold 0.8, k=72, bands=6 over
@@ -137,7 +138,7 @@ object DedupeQueries {
     // instead of rebuilding per call (see Staging.dirKey).
     val dig = Staging.dirKey(dir)
     val labelsTable = s"d5_labels_$dig"
-    if (!d5SharedBuilt((base, dir))) {
+    if (!d5SharedBuilt.get(dir).contains(base)) {
       val docs = Registry.table(s, dir, "documents")
       Dedupe.minhashNearDupPairs(docs, "doc_id", "text",
           threshold = 0.8, k = 72, bands = 6)
@@ -155,7 +156,7 @@ object DedupeQueries {
         s.table(labelsTable)
           .select(col("cluster_id"), col("doc_id").as("member_id")),
         membersTable(dir), "cluster_id", 8, s"$base/members-$dig")
-      d5SharedBuilt += ((base, dir))
+      d5SharedBuilt(dir) = base
     }
     (s.read.parquet(s"$base/pairs-$dig"), s.table(labelsTable))
   }
@@ -664,7 +665,7 @@ object DedupeQueries {
     Q(
       "d13_image_hamming_clusters",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val scene = col("doc_id") % 53
         val w = (scene % 8 + 9).cast("int")
         val h = (scene % 5 + 8).cast("int")

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{LinkGraph, PageRank, Ppr}
+import graft.ops.{LinkGraph, PageRank, Ppr, Seam}
 
 /** Link-graph queries (SURVEY §2.8 G1/G3, §2.4 A2/A3, §2.11 Q3/Q4) over
   * the FIXTURES.md §B graph role mapping: customers are source domains,
@@ -554,7 +554,7 @@ object GraphQueries {
           hub, lit(".example.com/x\">hub</a><a href='http://site"), site,
           lit(".example.org/p/"), id,
           lit("'>site</a><a href=rel/a.html>self</a></body></html>"))
-        Registry.table(s, dir, "documents")
+        Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
           .select(col("doc_id"), html.as("html"))
           .select(col("doc_id"), F.baseHref(col("html")).as("base"),
             explode(F.extractLinks(col("html"))).as("l"))

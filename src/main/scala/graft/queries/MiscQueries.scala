@@ -455,7 +455,7 @@ object MiscQueries {
           lit(".png alt=\"i\">" +
             "<iframe src=\"//cdn.example.net/f"), id,
           lit(".html\"></iframe><area href=\"#frag\"></body></html>"))
-        Registry.table(s, dir, "documents")
+        graft.ops.Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
           .select(col("doc_id"), html.as("html"))
           .select(col("doc_id"), F.baseHref(col("html")).as("base"),
             explode(F.extractLinks(col("html"))).as("l"))

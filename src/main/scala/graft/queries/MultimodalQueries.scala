@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Exif, Flac, Ico, JpegProgressive, Mp3, Multimodal, Ogg, Pdf, Tar, Vp8, Vp8l, WebpAnim, Zip}
+import graft.ops.{Exif, Flac, Ico, JpegProgressive, Mp3, Multimodal, Ogg, Pdf, Seam, Tar, Vp8,
+  Vp8l, WebpAnim, Zip}
 
 /** Multimodal column queries: binary media containers synthesized from
   * document text (this container has no media codecs — see
@@ -50,7 +51,7 @@ object MultimodalQueries {
     Q(
       "m2_media_decode",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val frames = (col("n_chars") % 50 + 1).cast("int")
         val media = Multimodal.packMedia(col("text"), col("doc_id") % 3, frames)
         val packed = docs.select(col("doc_id"), media.as("media"))
@@ -148,7 +149,7 @@ object MultimodalQueries {
     Q(
       "m5_real_media_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 1897 + 16).cast("int")
         val h = (col("doc_id") % 1061 + 9).cast("int")
         val img = Multimodal.packImage(col("doc_id") % 4, w, h)
@@ -182,7 +183,7 @@ object MultimodalQueries {
     Q(
       "m6_av_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val channels = ((col("doc_id") % 4) / 2 + 1).cast("int")
         val bits = ((((col("doc_id") % 8) / 4).cast("int") + 1) * 8).cast("int")
         val rate = (((col("doc_id") % 10) / 2 + 1) * 8000).cast("int")
@@ -237,7 +238,7 @@ object MultimodalQueries {
     Q(
       "m7_bmp_pixels",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 9 + 2).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -285,7 +286,7 @@ object MultimodalQueries {
     Q(
       "m8_png_pixels",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 9 + 2).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -332,7 +333,7 @@ object MultimodalQueries {
     Q(
       "m9_gif_pixels",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 11 + 2).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -380,7 +381,7 @@ object MultimodalQueries {
     Q(
       "m11_jpeg_pixels",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val wm = (col("doc_id") % 2 + 1).cast("int")
         val hm = (col("doc_id") % 3 + 1).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -434,7 +435,7 @@ object MultimodalQueries {
     Q(
       "m10_wav_samples",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 400 + 50).cast("int")
         val packed = docs.select(col("doc_id"),
           Multimodal.packWavPcm16(col("doc_id"), n).as("media"))
@@ -472,7 +473,7 @@ object MultimodalQueries {
     Q(
       "m13_audio_autocorr",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 400 + 50).cast("int")
         val packed = docs.select(col("doc_id"),
           Multimodal.packWavPcm16(col("doc_id"), n).as("media"))
@@ -518,7 +519,7 @@ object MultimodalQueries {
     Q(
       "m12_mp4_samples",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Multimodal.packMp4Track(
             (col("doc_id") % 5 * 600 + 600).cast("int"),
@@ -566,7 +567,7 @@ object MultimodalQueries {
     Q(
       "m14_image_neardup",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val scene = col("doc_id") % 53
         val w = (scene % 14 + 3).cast("int")
         val h = (scene % 9 + 2).cast("int")
@@ -634,7 +635,7 @@ object MultimodalQueries {
     Q(
       "m15_keyframe_select",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Multimodal.packMp4Track(
             (col("doc_id") % 5 * 600 + 600).cast("int"),
@@ -687,7 +688,7 @@ object MultimodalQueries {
     Q(
       "m16_shot_boundaries",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Multimodal.packMp4Track(
             (col("doc_id") % 5 * 600 + 600).cast("int"),
@@ -755,7 +756,7 @@ object MultimodalQueries {
     Q(
       "m17_silence_runs",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 400 + 50).cast("int")
         val packed = docs.select(col("doc_id"),
           Multimodal.packWavPcm16Gated(col("doc_id"), n).as("media"))
@@ -816,7 +817,7 @@ object MultimodalQueries {
     Q(
       "m18_png_palette_gray",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 9 + 2).cast("int")
         val depth = when(col("doc_id") % 4 === 0, 1)
@@ -881,7 +882,7 @@ object MultimodalQueries {
     Q(
       "m19_png_deep16",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 9 + 2).cast("int")
         val rgb = col("doc_id") % 2 === 1
@@ -998,7 +999,7 @@ object MultimodalQueries {
     Q(
       "m21_webp_lossless",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 14 + 3).cast("int")
         val h = (col("doc_id") % 9 + 2).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -1063,7 +1064,7 @@ object MultimodalQueries {
     Q(
       "m22_jpeg_ac",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val nbx = (col("doc_id") % 5 + 1).cast("int")
         val nby = (col("doc_id") % 4 + 1).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -1131,7 +1132,7 @@ object MultimodalQueries {
     Q(
       "m23_cross_format_neardup",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val scene = col("doc_id") % 53
         val w = (scene % 8 + 9).cast("int")
         val h = (scene % 5 + 8).cast("int")
@@ -1171,7 +1172,7 @@ object MultimodalQueries {
     Q(
       "m24_flac_pcm",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 160 + 17).cast("int")
         val packed = docs.select(col("doc_id"),
           Flac.packFlac(col("doc_id"), n).as("media"))
@@ -1229,7 +1230,7 @@ object MultimodalQueries {
     Q(
       "m25_cross_format_audio_neardup",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val scene = col("doc_id") % 47
         val n = (scene % 40 + 80).cast("int")
         val media = when(col("doc_id") % 2 === 0,
@@ -1266,7 +1267,7 @@ object MultimodalQueries {
     Q(
       "m26_audio_quality",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 120 + 50).cast("int")
         val media = when(col("doc_id") % 2 === 0,
             Multimodal.packWavPcm16(col("doc_id"), n))
@@ -1313,7 +1314,7 @@ object MultimodalQueries {
     Q(
       "m27_flac_tags",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val n = (col("doc_id") % 60 + 30).cast("int")
         val packed = docs.select(col("doc_id"),
           Flac.packFlacTagged(col("doc_id"), n, col("lang"),
@@ -1356,7 +1357,7 @@ object MultimodalQueries {
     Q(
       "m28_webp_lossy",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Vp8.packWebpVp8(col("doc_id")).as("media"))
         Vp8.decodeWebpVp8Stats(packed, "doc_id", "media")
@@ -1535,7 +1536,7 @@ object MultimodalQueries {
     Q(
       "m29_jpeg_progressive",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val nbx = (col("doc_id") % 5 + 1).cast("int")
         val nby = (col("doc_id") % 3 + 1).cast("int")
         val packed = docs.select(col("doc_id"),
@@ -1606,7 +1607,7 @@ object MultimodalQueries {
     Q(
       "m30_mp3_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Mp3.packMp3(col("doc_id"), col("lang"),
             col("n_chars").cast("long")).as("media"))
@@ -1670,7 +1671,7 @@ object MultimodalQueries {
     Q(
       "m31_exif_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Exif.packExifJpeg(col("doc_id")).as("media"))
         Exif.decodeExifMeta(packed, "doc_id", "media")
@@ -1725,7 +1726,7 @@ object MultimodalQueries {
     Q(
       "m32_pdf_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Pdf.packPdf(col("doc_id"), col("lang")).as("media"))
         Pdf.decodePdfMeta(packed, "doc_id", "media")
@@ -1770,7 +1771,7 @@ object MultimodalQueries {
     Q(
       "m33_zip_census",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Zip.packZip(col("doc_id"), col("lang")).as("media"))
         Zip.decodeZipMeta(packed, "doc_id", "media")
@@ -1825,7 +1826,7 @@ object MultimodalQueries {
     Q(
       "m34_ogg_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Ogg.packOggOpus(col("doc_id"), col("lang")).as("media"))
         Ogg.decodeOggMeta(packed, "doc_id", "media")
@@ -1869,7 +1870,7 @@ object MultimodalQueries {
     Q(
       "m35_ico_pixels",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Ico.packIco(col("doc_id")).as("media"))
         Ico.decodeIcoStats(packed, "doc_id", "media")
@@ -1923,7 +1924,7 @@ object MultimodalQueries {
     Q(
       "m36_tar_census",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           Tar.packTar(col("doc_id"), col("lang")).as("media"))
         Tar.decodeTarMeta(packed, "doc_id", "media")
@@ -2083,7 +2084,7 @@ object MultimodalQueries {
     Q(
       "m38_webp_container",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           WebpAnim.packWebpAnim(col("doc_id")).as("media"))
         WebpAnim.decodeWebpAnimMeta(packed, "doc_id", "media")
@@ -2150,7 +2151,7 @@ object MultimodalQueries {
     Q(
       "m39_doc_text",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.DocText.packDoc(col("doc_id"), col("lang")).as("media"))
         graft.ops.DocText.extractDocText(packed, "doc_id", "media")
@@ -2207,7 +2208,7 @@ object MultimodalQueries {
     Q(
       "m40_avif_meta",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.Avif.packAvif(col("doc_id")).as("media"))
         graft.ops.Avif.decodeAvifMeta(packed, "doc_id", "media")
@@ -2254,7 +2255,7 @@ object MultimodalQueries {
     Q(
       "m41_sheet_deck_text",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.DocText.packSheetDeck(col("doc_id"), col("lang")).as("media"))
         graft.ops.DocText.extractDocText(packed, "doc_id", "media")
@@ -2308,7 +2309,7 @@ object MultimodalQueries {
     Q(
       "m42_pdf_text",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.PdfText.packPdfText(col("doc_id"), col("lang")).as("media"))
         graft.ops.PdfText.extractPdfText(packed, "doc_id", "media")
@@ -2353,7 +2354,7 @@ object MultimodalQueries {
     Q(
       "m43_woff2_census",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.Woff2.packWoff2(col("doc_id")).as("media"))
         graft.ops.Woff2.decodeWoff2Meta(packed, "doc_id", "media")
@@ -2412,7 +2413,7 @@ object MultimodalQueries {
     Q(
       "m44_av1_seqheader",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val packed = docs.select(col("doc_id"),
           graft.ops.Avif.packAvif(col("doc_id")).as("media"))
         graft.ops.Av1.decodeAv1Seq(packed, "doc_id", "media")
@@ -2679,7 +2680,7 @@ object MultimodalQueries {
     Q(
       "m47_box_resize",
       (s, dir) => {
-        val docs = Registry.table(s, dir, "documents")
+        val docs = Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
         val w = (col("doc_id") % 13 + 4).cast("int")
         val h = (col("doc_id") % 9 + 3).cast("int")
         val packed = docs.select(col("doc_id"),

@@ -1461,7 +1461,7 @@ object SourceQueries {
           head.append("\r\n")
           head.toString.getBytes("ISO-8859-1") ++ body
         })
-        Registry.table(s, dir, "documents")
+        graft.ops.Seam.spread(Registry.table(s, dir, "documents"), "doc_id")
           .select(
             concat(lit("http://"), col("source"), lit("/ce/"),
               col("doc_id").cast("string")).as("url"),

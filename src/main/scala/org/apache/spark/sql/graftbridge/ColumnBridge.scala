@@ -54,3 +54,19 @@ object PersistBridge {
       else rdd.unpersist(blocking = false)
     }
 }
+
+/** A Scala function over one column, returning a struct. The typed `udf`
+  * builders cannot return a `Row`, and the untyped one is disabled in
+  * Spark 4, so the expression is built here. */
+object UdfBridge {
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+  import org.apache.spark.sql.types.StructType
+
+  /** `f(input)` as a non-null struct of `schema`. Nondeterministic, so no
+    * optimizer rule copies the call: CollapseProject does not inline it
+    * into each field read, and no filter is pushed below it. */
+  def struct[A](name: String, schema: StructType, input: Column)(f: A => Row): Column =
+    ColumnBridge.column(ScalaUDF(f, schema, Seq(ColumnBridge.expression(input)),
+      udfName = Some(name), nullable = false, udfDeterministic = false))
+}

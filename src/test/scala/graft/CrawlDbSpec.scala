@@ -208,4 +208,22 @@ class CrawlDbSpec extends AnyFunSuite with SparkSuite {
     }
     assert(run(shuffle = true) == run(shuffle = false))
   }
+
+  test("redirect resolution follows a 12-hop chain to its end and marks cycles open") {
+    import spark.implicits._
+    // 100 → 101 → … → 112 (12 hops; three fixed rounds stopped at 8),
+    // a 2-cycle 200 ↔ 201, a 3-cycle 300 → 301 → 302 → 300 (pointer
+    // doubling never lands a 3-cycle back on itself), a tail 400 → 200
+    // into the 2-cycle, and a one-hop 500 → 7
+    val edges = ((100L until 112L).map(s => (s, s + 1)) ++
+      Seq((200L, 201L), (201L, 200L), (300L, 301L), (301L, 302L),
+        (302L, 300L), (400L, 200L), (500L, 7L)))
+      .map { case (s, d) => (s, d, 1L) }.toDF("src", "dst", "hops")
+    val got = CrawlDb.resolveRedirects(edges).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
+    assert(got.size == 19)
+    for (s <- 100L until 112L) assert(got(s) == ((112L, 112L - s, false)), s"src $s")
+    for (s <- Seq(200L, 201L, 300L, 301L, 302L, 400L)) assert(got(s)._3, s"src $s not a loop")
+    assert(got(500L) == ((7L, 1L, false)))
+  }
 }

@@ -10,7 +10,7 @@ import graft.queries.{QueryServer, QueryServerHttp, Registry}
 /** The reference's serving shape (QueryServerFE servlets) over real HTTP:
   * a page request returns the same rows the library page() call does, the
   * count endpoint reads the cached index, and client errors are 400s. */
-class QueryServerHttpSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class QueryServerHttpSpec extends AnyFunSuite with SparkSuite with TempStageDir {
 
   private lazy val client = HttpClient.newHttpClient()
 

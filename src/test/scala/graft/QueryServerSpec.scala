@@ -20,7 +20,7 @@ import graft.queries.{DedupeQueries, QueryServer, Registry}
   * return exactly the rows a direct orderBy/offset/limit would, serve
   * repeat pages from the cache without recomputation, and keep asc/desc
   * indexes independent (the reference's per-sort-order index dirs). */
-class QueryServerSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class QueryServerSpec extends AnyFunSuite with SparkSuite with TempStageDir {
 
   private def newServer(): (QueryServer, String) = {
     val dir = tempDir("qserver")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{QueryServer, Registry, ResultCache}
 
-class ResultCacheSpec extends AnyFunSuite with SparkSuite with TempDirs {
+class ResultCacheSpec extends AnyFunSuite with SparkSuite with TempStageDir {
 
   test("canonical id is stable under parameter reordering, distinct otherwise") {
     val a = ResultCache.canonicalId("domain_list", Map("re" -> "x$", "page" -> "2"))

@@ -29,3 +29,22 @@ object TempDirs {
     finally files.close()
   }
 }
+
+/** [[TempDirs]] with the session's `spark.graft.stageDir` pointed at one
+  * of them while the suite runs, and restored after it, so the tables
+  * and indexes the suite stages are deleted with it. */
+trait TempStageDir extends TempDirs { self: org.scalatest.funsuite.AnyFunSuite with SparkSuite =>
+  private var savedStageDir: Option[String] = None
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    savedStageDir = spark.conf.getOption(graft.queries.Staging.ConfKey)
+    spark.conf.set(graft.queries.Staging.ConfKey, tempDir("graft-stage"))
+  }
+
+  override protected def afterAll(): Unit =
+    try savedStageDir match {
+      case Some(d) => spark.conf.set(graft.queries.Staging.ConfKey, d)
+      case None => spark.conf.unset(graft.queries.Staging.ConfKey)
+    } finally super.afterAll()
+}

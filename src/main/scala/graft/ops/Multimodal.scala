@@ -48,15 +48,17 @@ object Multimodal {
   /** The decode stub: parse the GRFT header out of the binary column,
     * one row at a time through [[Seam.rows]] — the exact seam where a
     * real decoder (libjpeg/ffmpeg/…) would process each record. Output:
-    * (id, format, n_frames, payload_len). */
+    * (id, format, n_frames, payload_len); ("bad", -1, -1) on bytes that
+    * are not a GRFT container. */
   def decodeHeaderStub(df: DataFrame, id: String, media: String): DataFrame =
     Seam.rows(df, id, media, MetaSchema) { bytes =>
-      val header = new String(bytes, 0, HeaderLen, "UTF-8")
-      require(header.startsWith("GRFT") && header.endsWith(":"),
-        "not a GRFT container")
-      val fmt = formats.getOrElse(header.charAt(4), "unknown")
-      val frames = header.substring(5, 9).toInt
-      Row(fmt, frames, bytes.length - HeaderLen)
+      val header = new String(bytes.take(HeaderLen), "UTF-8")
+      val frames =
+        if (header.length == HeaderLen && header.startsWith("GRFT") && header.endsWith(":"))
+          header.substring(5, 9).toIntOption
+        else None
+      frames.fold(Row("bad", -1, -1))(n =>
+        Row(formats.getOrElse(header.charAt(4), "unknown"), n, bytes.length - HeaderLen))
     }
 
   // --- real public-format image headers -----------------------------

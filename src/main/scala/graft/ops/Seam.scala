@@ -33,11 +33,12 @@ object Seam {
   val UdfName = "graft_seam"
 
   /** `(id: long, schema…)`, one row per input row: `f(media)`'s fields
-    * after `id`. `f` sees a null `media` as null and must return a row of
-    * `schema` (its sentinel) for every input; it runs once per row. */
+    * after `id`. `f` sees a null `media` as no bytes and must return a row
+    * of `schema` (its sentinel) for every input; it runs once per row. */
   def rows(df: DataFrame, id: String, media: String, schema: StructType)(
       f: Array[Byte] => Row): DataFrame = {
-    val decoded = UdfBridge.struct(UdfName, schema, col(media))(f)
+    val decoded = UdfBridge.struct(UdfName, schema, col(media))(
+      (b: Array[Byte]) => f(if (b == null) Array.emptyByteArray else b))
     df.select(col(id).cast("long").as("id"), decoded.as(UdfName))
       .select(col("id") +:
         schema.fieldNames.map(n => col(UdfName).getField(n).as(n)).toSeq: _*)

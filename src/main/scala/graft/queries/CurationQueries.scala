@@ -31,12 +31,6 @@ object CurationQueries {
   private def md5BucketSql(salt: String, key: String) =
     s"substr(md5('$salt:' || CAST($key AS VARCHAR)), 1, 2)"
 
-  /** One frozen-split staging dir per (JVM, stageDir base), d9 discipline:
-    * saveAsTable(overwrite) to the same external location replaces the
-    * assignment table in place, so reruns don't accumulate copies. */
-  private val cu24Stage = new Staging.Memo("cu24")
-  private def cu24StagePath: String = cu24Stage.path
-
   /** Oracle fragment: normalized whitespace tokens (the t2 tokenizer). */
   private val TokensSql =
     raw"string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ' ')"
@@ -1312,7 +1306,7 @@ object CurationQueries {
           .select(col("doc_id"),
             bucketOf(coalesce(col("cluster_id"), col("doc_id"))).as("split"))
         graft.sources.Sinks.writeBucketedAt(assigned, "cu24_frozen",
-          "doc_id", 8, s"$cu24StagePath/frozen")
+          "doc_id", 8, s"${Staging.path(s, "cu24")}/frozen")
         val frozen = s.table("cu24_frozen")
         // ROUND 2: the grown corpus's clustering is the shared label
         // table (already persisted, already singleton-completed) — probe

@@ -101,64 +101,47 @@ object DedupeQueries {
        |  FROM walk GROUP BY id
        |)""".stripMargin
 
-  /** One index staging dir per (JVM, stageDir base) — see the d9 comment. */
-  private val d9Stage = new Staging.Memo("d9")
-  private def d9StagePath: String = d9Stage.path
-
-  private val d5SharedStage = new Staging.Memo("d5shared")
-  private val d5SharedLock = new Object
-  /** Per sf dir, the stage base its catalog tables were last written
-    * under: the table names carry the dir only. */
-  private val d5SharedBuilt = scala.collection.mutable.Map.empty[String, String]
-
   /** Build-once full-corpus near-dup artifacts shared by every query on
     * the standard banding (threshold 0.8, k=72, bands=6 over
     * `documents`): d2/d3 (pairs; d3 refilters the exact jaccard at 0.9),
     * d5/d11 (labels), d6/d12 (pairs), cu17/cu21/cu24 (labels or both),
     * i20 (labels) — the c7 incremental-view discipline; each was paying
     * for the SAME banding + clustering independently, their dominant
-    * cost. One build per (stage base, sf dir) persists the verified
-    * pair set as parquet, the complete (doc_id → cluster_id) label
-    * table — singletons labeled by their own id — as a doc_id-bucketed
-    * table, and the same labels as a (cluster_id → member_id) table
-    * bucketed by cluster_id ([[membersTable]]), so both of
-    * i20's probe hops join shuffle-free and cu24's round-2 clustering is
-    * a read. Returns (pairs, labels). Correct in any run order: the
-    * first caller builds, later callers (and later RUNS in the same JVM)
-    * reuse; a dir or stage-base change rebuilds. Every table is written
-    * here, under one lock, so concurrent readers never race a rewrite. */
+    * cost. One artifact-store entry per sf dir holds the verified pair
+    * set as parquet, the complete (doc_id → cluster_id) label table —
+    * singletons labeled by their own id — bucketed by doc_id, and the
+    * same labels as (cluster_id → member_id) bucketed by cluster_id
+    * ([[membersTable]]), so both of i20's probe hops join shuffle-free
+    * and cu24's round-2 clustering is a read. The build writes the two
+    * bucketed catalog tables into the entry; once it is published, they
+    * are pointed at it, and pointed again whenever the entry of the dir
+    * changes (a rewritten sf dir). Returns (pairs, labels). */
   def sharedNearDup(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = d5SharedLock.synchronized {
-    val base = d5SharedStage.path
-    // Artifact paths (and the labels table name) are namespaced by a
-    // digest of the sf dir: each dir gets its own immutable location,
-    // so a lazy DataFrame handed out before a dir switch still reads
-    // ITS dir's artifacts, and alternating dirs reuses both builds
-    // instead of rebuilding per call (see Staging.dirKey).
-    val dig = Staging.dirKey(dir)
-    val labelsTable = s"d5_labels_$dig"
-    if (!d5SharedBuilt.get(dir).contains(base)) {
+      org.apache.spark.sql.DataFrame) = {
+    val labelsTable = s"d5_labels_${Staging.dirKey(dir)}"
+    val entry = ResultCache.getOrBuild(s, "d5shared", Map.empty, dir) { out =>
       val docs = Registry.table(s, dir, "documents")
       Dedupe.minhashNearDupPairs(docs, "doc_id", "text",
           threshold = 0.8, k = 72, bands = 6)
-        .write.mode("overwrite").parquet(s"$base/pairs-$dig")
+        .write.parquet(s"$out/pairs")
       val clus = graft.ops.Components
-        .starContract(s.read.parquet(s"$base/pairs-$dig"), "doc_a", "doc_b")
+        .starContract(s.read.parquet(s"$out/pairs"), "doc_a", "doc_b")
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
       val labels = docs.select(col("doc_id"))
         .join(clus, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       graft.sources.Sinks.writeBucketedAt(labels, labelsTable,
-        "doc_id", 8, s"$base/labels-$dig")
+        "doc_id", 8, s"$out/labels")
       graft.sources.Sinks.writeBucketedAt(
         s.table(labelsTable)
           .select(col("cluster_id"), col("doc_id").as("member_id")),
-        membersTable(dir), "cluster_id", 8, s"$base/members-$dig")
-      d5SharedBuilt(dir) = base
+        membersTable(dir), "cluster_id", 8, s"$out/members")
     }
-    (s.read.parquet(s"$base/pairs-$dig"), s.table(labelsTable))
+    ResultCache.locate(s, labelsTable, s"$entry/labels")
+    ResultCache.locate(s, membersTable(dir), s"$entry/members")
+    (s.read.parquet(s"$entry/pairs"), s.table(labelsTable))
   }
 
   /** Name of the shared (cluster_id → member_id) table for `dir`,
@@ -416,12 +399,12 @@ object DedupeQueries {
     Q(
       "d9_indexed_incremental",
       (s, dir) => {
-        // ONE staging dir per process: saveAsTable(overwrite) to the same
-        // external location replaces the data in place, so reruns don't
-        // accumulate index copies under /tmp
+        // one staging path per application: saveAsTable(overwrite) to the
+        // same external location replaces the data in place, so reruns
+        // don't accumulate index copies
         val docs = Registry.table(s, dir, "documents")
         Dedupe.writeBandedIndex(docs.filter(col("source") =!= "src0"),
-          "doc_id", "text", "d9_idx", d9StagePath)
+          "doc_id", "text", "d9_idx", Staging.path(s, "d9"))
         Dedupe.probeBandedIndex(s, "d9_idx",
             docs.filter(col("source") === "src0"), "doc_id", "text", 0.8)
           .orderBy("new_id", "corpus_id")

@@ -37,29 +37,18 @@ object GraphQueries {
     LinkGraph.distinctEdges(raw)
   }
 
-  private val edgesStage = new Staging.Memo("g-edges")
-  private val edgesLock = new Object
-  private val edgesBuilt =
-    scala.collection.mutable.Set.empty[(String, String)]
-
-  /** The materialized link DB: [[rawEdges]] persisted once per (stage
-    * base, sf dir) and read by every graph query — the production shape
+  /** The materialized link DB: [[rawEdges]] built once per sf dir in the
+    * artifact store and read by every graph query — the production shape
     * (a link DB is built once per crawl snapshot and queried many
     * times; the reference materializes its linkgraph/inverse DB the
-    * same way), and the d5-shared-build discipline applied to the
-    * second family that was re-deriving one artifact per query. The
-    * path is namespaced by a digest of the sf dir (Staging.dirKey) so
-    * each dir's artifact is immutable — a dir switch cannot repoint a
-    * lazy DataFrame handed out for the previous dir. */
-  def edges(s: SparkSession, dir: String): DataFrame = edgesLock.synchronized {
-    val base = edgesStage.path
-    val dig = Staging.dirKey(dir)
-    if (!edgesBuilt((base, dir))) {
-      rawEdges(s, dir).write.mode("overwrite").parquet(s"$base/edges-$dig")
-      edgesBuilt += ((base, dir))
+    * same way). */
+  def edges(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(edgesEntry(s, dir))
+
+  private def edgesEntry(s: SparkSession, dir: String): String =
+    ResultCache.getOrBuild(s, "g-edges", Map.empty, dir) { out =>
+      rawEdges(s, dir).write.parquet(out)
     }
-    s.read.parquet(s"$base/edges-$dig")
-  }
 
   private val PrIters = 5
   private val SuppBase = 1000000L // supplier domain-id namespace offset
@@ -74,8 +63,10 @@ object GraphQueries {
   /** Bidirectional distinct edge set for PageRank: customer→supplier plus
     * the reverse direction (so the graph has cycles and real rank flow);
     * supplier ids are offset into their own namespace. */
-  def prEdges(s: SparkSession, dir: String): DataFrame = {
-    val base = edges(s, dir).select("src_domain", "src_root", "dst_domain", "dst_root")
+  def prEdges(s: SparkSession, dir: String): DataFrame = bidirectional(edges(s, dir))
+
+  private def bidirectional(edges: DataFrame): DataFrame = {
+    val base = edges.select("src_domain", "src_root", "dst_domain", "dst_root")
     val fwd = base.select(
       col("src_domain"), col("src_root"),
       (col("dst_domain") + SuppBase).as("dst_domain"), col("dst_root"))
@@ -97,83 +88,72 @@ object GraphQueries {
       |  GROUP BY 1, 2, 3, 4
       |)""".stripMargin
 
-  private val cocitBuilt =
-    scala.collection.mutable.Set.empty[(String, String)]
-
   /** Shared g13/g15/g25/g26 substrate: the top-500 strongest
     * co-citation edges (common desc, ids asc) over the heap-capped
     * supplier pair graph — fixed-size at any corpus factor (see g13's
     * comment for why an absolute support threshold densifies instead).
-    * PERSISTED once per (stage base, sf dir) like [[edges]]: the
+    * Built once per sf dir in the artifact store like [[edges]]: the
     * expensive leg is the corpus-scale edge scan + per-cust top-k, and
     * four consumers were re-running it per query (the r16 g25 soak's
     * dominant cost). */
   private[graft] def cocitationTopEdges(s: SparkSession, dir: String): DataFrame =
-    edgesLock.synchronized {
-      val base = edgesStage.path
-      val dig = Staging.dirKey(dir)
-      if (!cocitBuilt((base, dir))) {
-        val cap = 20
-        val topM = 500
-        val e = edges(s, dir)
-          .select(col("src_domain").as("cust"), col("dst_domain").as("supp"))
-        val capped = graft.ops.Iterative.materialize(
-          e.groupBy("cust")
-            .agg(graft.ops.TopK.topScored(cap)(
-              -col("supp").cast("double"), col("supp")).as("top"))
-            .select(col("cust"), explode(col("top.key")).as("supp")))
-        val a = capped.select(col("cust"), col("supp").as("sa"))
-        val b = capped.select(col("cust"), col("supp").as("sb"))
-        a.join(b, "cust").filter(col("sa") < col("sb"))
-          .groupBy("sa", "sb").agg(count(lit(1)).as("common"))
-          .orderBy(col("common").desc, col("sa"), col("sb"))
-          .limit(topM)
-          .select("sa", "sb")
-          .write.mode("overwrite").parquet(s"$base/cocit-$dig")
-        cocitBuilt += ((base, dir))
-      }
-      s.read.parquet(s"$base/cocit-$dig")
-    }
+    s.read.parquet(cocitEntry(s, dir))
 
-  private val triBuilt =
-    scala.collection.mutable.Set.empty[(String, String)]
+  private def cocitEntry(s: SparkSession, dir: String): String = {
+    val edges = edgesEntry(s, dir)
+    ResultCache.getOrBuild(s, "g-cocit", Map.empty, dir) { out =>
+      val cap = 20
+      val topM = 500
+      val e = s.read.parquet(edges)
+        .select(col("src_domain").as("cust"), col("dst_domain").as("supp"))
+      val capped = graft.ops.Iterative.materialize(
+        e.groupBy("cust")
+          .agg(graft.ops.TopK.topScored(cap)(
+            -col("supp").cast("double"), col("supp")).as("top"))
+          .select(col("cust"), explode(col("top.key")).as("supp")))
+      val a = capped.select(col("cust"), col("supp").as("sa"))
+      val b = capped.select(col("cust"), col("supp").as("sb"))
+      a.join(b, "cust").filter(col("sa") < col("sb"))
+        .groupBy("sa", "sb").agg(count(lit(1)).as("common"))
+        .orderBy(col("common").desc, col("sa"), col("sb"))
+        .limit(topM)
+        .select("sa", "sb")
+        .write.parquet(out)
+    }
+  }
 
   /** Degree-oriented triangle relation over the co-citation substrate:
     * one row per triangle (a, x, y) where a is the wedge apex under the
     * lowest-degree orientation (the node-iterator bound that keeps hub
-    * wedges from exploding) and x < y close the triangle. Persisted
-    * once per (stage base, sf dir) like [[edges]] — g13 (per-node
+    * wedges from exploding) and x < y close the triangle. Built once
+    * per sf dir in the artifact store like [[edges]] — g13 (per-node
     * counts), g25 (clustering coefficient), and g26 (per-edge truss
     * support) all consume the SAME artifact instead of re-deriving the
     * oriented-wedge join per query. */
-  private[graft] def triangleRows(s: SparkSession, dir: String): DataFrame =
-    edgesLock.synchronized {
-      val base = edgesStage.path
-      val dig = Staging.dirKey(dir)
-      if (!triBuilt((base, dir))) {
-        val pairs = cocitationTopEdges(s, dir)
-        val deg = pairs.select(col("sa").as("n"))
-          .unionByName(pairs.select(col("sb").as("n")))
-          .groupBy("n").agg(count(lit(1)).as("deg"))
-        val flip = col("da") > col("db") // sa<sb already breaks deg ties
-        val oriented = pairs
-          .join(deg.select(col("n").as("sa"), col("deg").as("da")), Seq("sa"))
-          .join(deg.select(col("n").as("sb"), col("deg").as("db")), Seq("sb"))
-          .select(
-            when(flip, col("sb")).otherwise(col("sa")).as("u"),
-            when(flip, col("sa")).otherwise(col("sb")).as("v"))
-        val wedges = oriented.as("e1")
-          .join(oriented.as("e2"),
-            col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-          .select(col("e1.u").as("a"), col("e1.v").as("x"), col("e2.v").as("y"))
-        wedges.join(
-            pairs.select(col("sa").as("x"), col("sb").as("y")), Seq("x", "y"))
-          .select("a", "x", "y")
-          .write.mode("overwrite").parquet(s"$base/tri-$dig")
-        triBuilt += ((base, dir))
-      }
-      s.read.parquet(s"$base/tri-$dig")
-    }
+  private[graft] def triangleRows(s: SparkSession, dir: String): DataFrame = {
+    val cocit = cocitEntry(s, dir)
+    s.read.parquet(ResultCache.getOrBuild(s, "g-tri", Map.empty, dir) { out =>
+      val pairs = s.read.parquet(cocit)
+      val deg = pairs.select(col("sa").as("n"))
+        .unionByName(pairs.select(col("sb").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("deg"))
+      val flip = col("da") > col("db") // sa<sb already breaks deg ties
+      val oriented = pairs
+        .join(deg.select(col("n").as("sa"), col("deg").as("da")), Seq("sa"))
+        .join(deg.select(col("n").as("sb"), col("deg").as("db")), Seq("sb"))
+        .select(
+          when(flip, col("sb")).otherwise(col("sa")).as("u"),
+          when(flip, col("sa")).otherwise(col("sb")).as("v"))
+      val wedges = oriented.as("e1")
+        .join(oriented.as("e2"),
+          col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
+        .select(col("e1.u").as("a"), col("e1.v").as("x"), col("e2.v").as("y"))
+      wedges.join(
+          pairs.select(col("sa").as("x"), col("sb").as("y")), Seq("x", "y"))
+        .select("a", "x", "y")
+        .write.parquet(out)
+    })
+  }
 
   /** The same substrate as SQL CTEs (appended after [[EdgesCte]]). */
   private val TopEdgesCtes =
@@ -1607,17 +1587,11 @@ object GraphQueries {
        |ORDER BY node""".stripMargin
   }
 
-  private val hbStage = new Staging.Memo("g-hyperball")
-  private val hbLock = new Object
-  private val hbBuilt =
-    scala.collection.mutable.Set.empty[(String, String, Int)]
-
-  /** ONE HyperBall register-merge loop per (stage base, sf dir) serves
-    * both g21 (final per-node registers) and g22 (per-round distance-
-    * distribution readouts) — the sharedNearDup/edges build-once
-    * discipline: the loop is the dominant cost, and g22's snapshots
-    * fall out of the same rounds g21 already pays for. Artifacts are
-    * dir-digest-namespaced (immutable per dir, see Staging.dirKey).
+  /** ONE HyperBall register-merge loop per (sf dir, t), built in the
+    * artifact store, serves both g21 (final per-node registers) and g22
+    * (per-round distance-distribution readouts) — the sharedNearDup/
+    * edges build-once discipline: the loop is the dominant cost, and
+    * g22's snapshots fall out of the same rounds g21 already pays for.
     *
     * Registers travel PACKED as 16 fixed-width int COLUMNS per node
     * (r0..r15), merged with sixteen plain per-column `max` aggregates
@@ -1646,105 +1620,102 @@ object GraphQueries {
     * width with the measured edge count (≈250k rows/partition, capped)
     * so per-task state stays roof-independent — more, smaller reduce
     * tasks instead of 32 spilling ones; AQE coalesces the tail when the
-    * substrate is small. On a real cluster this is the same knob
-    * spark.sql.shuffle.partitions turns fleet-wide. */
+    * substrate is small. The loop runs on a clone of the caller's session
+    * with that width, so queries planned on the caller's session keep
+    * theirs (a repartition before each groupBy would lose its map-side
+    * partial aggregate). */
   private[graft] def hyperball(
-      s: SparkSession, dir: String, t: Int = 3): (DataFrame, DataFrame, DataFrame) =
-    hbLock.synchronized {
-      val base = hbStage.path
-      val dig = s"${Staging.dirKey(dir)}-t$t"
+      s: SparkSession, dir: String, t: Int = 3): (DataFrame, DataFrame, DataFrame) = {
+    val edges = edgesEntry(s, dir)
+    val entry = ResultCache.getOrBuild(s, "g-hyperball", Map("t" -> t.toString), dir) { out =>
       val m = 16
-      if (!hbBuilt((base, dir, t))) {
-        val ed = graft.ops.Iterative.materializeSer(
-          prEdges(s, dir).select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")).distinct())
-        val edgeCount = ed.count() // materialized — a cheap second action
-        val parts = math.min(2048L, math.max(32L, edgeCount / 250000L + 1L)).toInt
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        try {
-        val nodes = ed.select(col("src").as("node"))
-          .union(ed.select(col("dst").as("node"))).distinct()
-        val md = md5(col("node").cast("string"))
-        val v = conv(substring(md, 2, 10), 16, 10).cast("long")
-        val bucket = conv(substring(md, 1, 1), 16, 10).cast("int")
-        val rho = when(v === 0L, 41).otherwise(lit(41) - length(bin(v)))
-          .cast("int")
-        var state = graft.ops.Iterative.materializeSer(nodes
-          .select(col("node"), bucket.as("b"), rho.as("r"))
-          .select(col("node") +: (0 until m).map(j =>
-            when(col("b") === j, col("r")).otherwise(lit(0))
-              .cast("int").as(s"r$j")): _*))
-        // Σ 2^(41-reg) over ALL m registers — an untouched register
-        // (reg = 0) contributes 2^41 naturally, so no hit-count split
-        val sScaled = expr((0 until m)
-          .map(j => s"shiftleft(cast(1 as bigint), 41 - r$j)")
-          .mkString(" + "))
-        // LAZY (r20): readout and estDf read the round's CHECKPOINTED
-        // state, so deferring them costs no recomputation — the final
-        // dist/ests parquet writes evaluate all rounds' snapshots from
-        // the retained checkpoints in ONE job each, instead of paying a
-        // materialization job per round: 2(t+1) driver barrier jobs and
-        // the per-round ests checkpoint blocks removed. Cold-JVM sf0.1
-        // build time is NEUTRAL within box noise (min 14.6 vs 15.3 s
-        // over 6/3 runs) — the removed jobs are sub-second here.
-        // Retention trade, stated precisely: the deferred plans hold
-        // ALL t+1 per-round state checkpoints (V-row, 80-byte register
-        // frames, serialized) until the final writes, where the old
-        // code let superseded states become cleaner-collectible but
-        // retained the per-round ests checkpoints (V-row frames of
-        // growing width) instead — the t=3 peak is ~4 V-sized frames
-        // either way; the x10 cold-JVM solo build completed in 30.6 s
-        // under the default test heap after the change (the pre-change
-        // committed solo x10 row was 34.9 s, r15), no memory incident.
-        // Per-round
-        // materialization stays ONLY on `state` (the loop-carried frame
-        // whose lineage would otherwise grow per round).
-        // The round's frame is passed EXPLICITLY (ADVICE r20): binding
-        // the snapshot to the argument value rather than a closure over
-        // the mutable `state` var means a reorder of the loop's
-        // reassignment and readout lines cannot silently record the
-        // previous round's snapshot twice.
-        def readout(st: org.apache.spark.sql.DataFrame, round: Int) =
-          st.select(sScaled.as("s_scaled"))
-            .withColumn("est",
-              expr("(562949953421312L div s_scaled) * 673L div 1000L"))
-            .agg(count(lit(1)).as("n_nodes"),
-              sum(col("est")).as("sum_ball_est"))
-            .select(lit(round.toLong).as("t"), col("n_nodes"),
-              col("sum_ball_est"))
-        // per-node ball estimate snapshot — g23's input; node-keyed
-        // V-sized joins assemble the wide (node, est0..est3) table
-        def estDf(st: org.apache.spark.sql.DataFrame, round: Int) = st
-          .select(col("node"), sScaled.as("s_scaled"))
-          .select(col("node"),
-            expr("(562949953421312L div s_scaled) * 673L div 1000L")
-              .as(s"est$round"))
-        var outs = readout(state, 0)
-        var ests = estDf(state, 0)
-        for (i <- 1 to t) {
-          val st = state.toDF(
-            "sn" +: (0 until m).map(j => s"r$j"): _*)
-          val contrib = ed.join(st, col("sn") === col("dst"))
-            .select(col("src").as("node") +: (0 until m).map(j =>
-              col(s"r$j")): _*)
-          state = graft.ops.Iterative.materializeSer(
-            state.unionByName(contrib)
-              .groupBy("node")
-              .agg(max(col("r0")).as("r0"), (1 until m).map(j =>
-                max(col(s"r$j")).as(s"r$j")): _*))
-          outs = outs.unionByName(readout(state, i))
-          ests = ests.join(estDf(state, i), "node")
-        }
-        state.write.mode("overwrite").parquet(s"$base/state-$dig")
-        outs.write.mode("overwrite").parquet(s"$base/dist-$dig")
-        ests.write.mode("overwrite").parquet(s"$base/ests-$dig")
-        hbBuilt += ((base, dir, t))
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val hs = org.apache.spark.sql.graftbridge.SessionBridge.cloneSession(s)
+      val ed = graft.ops.Iterative.materializeSer(
+        bidirectional(hs.read.parquet(edges)).select(col("src_domain").as("src"),
+          col("dst_domain").as("dst")).distinct())
+      val edgeCount = ed.count() // materialized — a cheap second action
+      val parts = math.min(2048L, math.max(32L, edgeCount / 250000L + 1L))
+      hs.conf.set(org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key, parts)
+      val nodes = ed.select(col("src").as("node"))
+        .union(ed.select(col("dst").as("node"))).distinct()
+      val md = md5(col("node").cast("string"))
+      val v = conv(substring(md, 2, 10), 16, 10).cast("long")
+      val bucket = conv(substring(md, 1, 1), 16, 10).cast("int")
+      val rho = when(v === 0L, 41).otherwise(lit(41) - length(bin(v)))
+        .cast("int")
+      var state = graft.ops.Iterative.materializeSer(nodes
+        .select(col("node"), bucket.as("b"), rho.as("r"))
+        .select(col("node") +: (0 until m).map(j =>
+          when(col("b") === j, col("r")).otherwise(lit(0))
+            .cast("int").as(s"r$j")): _*))
+      // Σ 2^(41-reg) over ALL m registers — an untouched register
+      // (reg = 0) contributes 2^41 naturally, so no hit-count split
+      val sScaled = expr((0 until m)
+        .map(j => s"shiftleft(cast(1 as bigint), 41 - r$j)")
+        .mkString(" + "))
+      // LAZY (r20): readout and estDf read the round's CHECKPOINTED
+      // state, so deferring them costs no recomputation — the final
+      // dist/ests parquet writes evaluate all rounds' snapshots from
+      // the retained checkpoints in ONE job each, instead of paying a
+      // materialization job per round: 2(t+1) driver barrier jobs and
+      // the per-round ests checkpoint blocks removed. Cold-JVM sf0.1
+      // build time is NEUTRAL within box noise (min 14.6 vs 15.3 s
+      // over 6/3 runs) — the removed jobs are sub-second here.
+      // Retention trade, stated precisely: the deferred plans hold
+      // ALL t+1 per-round state checkpoints (V-row, 80-byte register
+      // frames, serialized) until the final writes, where the old
+      // code let superseded states become cleaner-collectible but
+      // retained the per-round ests checkpoints (V-row frames of
+      // growing width) instead — the t=3 peak is ~4 V-sized frames
+      // either way; the x10 cold-JVM solo build completed in 30.6 s
+      // under the default test heap after the change (the pre-change
+      // committed solo x10 row was 34.9 s, r15), no memory incident.
+      // Per-round
+      // materialization stays ONLY on `state` (the loop-carried frame
+      // whose lineage would otherwise grow per round).
+      // The round's frame is passed EXPLICITLY (ADVICE r20): binding
+      // the snapshot to the argument value rather than a closure over
+      // the mutable `state` var means a reorder of the loop's
+      // reassignment and readout lines cannot silently record the
+      // previous round's snapshot twice.
+      def readout(st: org.apache.spark.sql.DataFrame, round: Int) =
+        st.select(sScaled.as("s_scaled"))
+          .withColumn("est",
+            expr("(562949953421312L div s_scaled) * 673L div 1000L"))
+          .agg(count(lit(1)).as("n_nodes"),
+            sum(col("est")).as("sum_ball_est"))
+          .select(lit(round.toLong).as("t"), col("n_nodes"),
+            col("sum_ball_est"))
+      // per-node ball estimate snapshot — g23's input; node-keyed
+      // V-sized joins assemble the wide (node, est0..est3) table
+      def estDf(st: org.apache.spark.sql.DataFrame, round: Int) = st
+        .select(col("node"), sScaled.as("s_scaled"))
+        .select(col("node"),
+          expr("(562949953421312L div s_scaled) * 673L div 1000L")
+            .as(s"est$round"))
+      var outs = readout(state, 0)
+      var ests = estDf(state, 0)
+      for (i <- 1 to t) {
+        val st = state.toDF(
+          "sn" +: (0 until m).map(j => s"r$j"): _*)
+        val contrib = ed.join(st, col("sn") === col("dst"))
+          .select(col("src").as("node") +: (0 until m).map(j =>
+            col(s"r$j")): _*)
+        state = graft.ops.Iterative.materializeSer(
+          state.unionByName(contrib)
+            .groupBy("node")
+            .agg(max(col("r0")).as("r0"), (1 until m).map(j =>
+              max(col(s"r$j")).as(s"r$j")): _*))
+        outs = outs.unionByName(readout(state, i))
+        ests = ests.join(estDf(state, i), "node")
       }
-      (s.read.parquet(s"$base/state-$dig"), s.read.parquet(s"$base/dist-$dig"),
-        s.read.parquet(s"$base/ests-$dig"))
+      state.write.parquet(s"$out/state")
+      outs.write.parquet(s"$out/dist")
+      ests.write.parquet(s"$out/ests")
     }
+    (s.read.parquet(s"$entry/state"), s.read.parquet(s"$entry/dist"),
+      s.read.parquet(s"$entry/ests"))
+  }
 
   /** g21 oracle machinery: exact radius-t ball membership, one
     * expansion round per CTE (b_i = b_{i-1} ∪ out-neighbors of its

@@ -18,10 +18,6 @@ object InteractiveQueries {
 
   private val dec2 = (c: String) => col(c).cast("decimal(18,2)")
 
-  /** One page-server cache dir per (JVM, stageDir base) — see i9 below. */
-  private val i9Cache = new Staging.Memo("i9-cache")
-  private def i9CachePath: String = i9Cache.path
-
   def defs: Seq[Q] = Seq(
     // Q1 DomainListQuery: regex scan over domain names → per-domain
     // aggregate → sort by url count desc → page 2 (offset 20, size 10)
@@ -168,12 +164,10 @@ object InteractiveQueries {
     Q(
       "i9_cached_page",
       (s, dir) => {
-        // one cache dir PER JVM, reused across invocations in the process:
-        // reruns exercise the cache-HIT path without leaking an index copy
-        // per run, while separate processes never race on a shared /tmp
-        // path (concurrent overwrite under a world-shared dir could yank
-        // part files out from under another process's scan)
-        val server = new QueryServer(s, i9CachePath, dir)
+        // one cache dir per application, reused across invocations in
+        // it: reruns exercise the cache-HIT path without leaking an index
+        // copy per run, while separate applications never share a path
+        val server = new QueryServer(s, Staging.path(s, "i9-cache"), dir)
         server.page("g2_inlink_counts",
           server.PageRequest("n_inlinks", ascending = false,
             offset = 10, pageSize = 10))

@@ -5,12 +5,12 @@ import java.security.MessageDigest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Query-server result cache (SURVEY §3.1 steps 2-3): results are keyed
-  * by a canonical query id — query name plus its parameters in sorted
-  * order — and materialized as parquet; a repeat of the same canonical
-  * query serves the cached result without re-execution
-  * (reference: Query.getCanonicalId / cachedResultsAvailable,
-  * Query.java:596, MasterServer.java:308).
+/** The build-once artifact store (SURVEY §3.1 steps 2-3): an entry is
+  * keyed by a canonical id — a name plus its parameters in sorted order
+  * — built once and served many times (reference: Query.getCanonicalId
+  * / cachedResultsAvailable, Query.java:596, MasterServer.java:308).
+  * [[getOrBuild]] holds the engine's shared artifacts; [[getOrCompute]],
+  * its one-DataFrame case, the query server's indexes.
   */
 object ResultCache {
 
@@ -68,22 +68,22 @@ object ResultCache {
   private val relations =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, DataFrame)]()
 
-  /** Serve from cache when present, else compute + materialize. The
-    * _SUCCESS marker gates readiness, so a killed write never serves a
-    * partial result. The probe goes through the Hadoop FileSystem for the
-    * cacheDir's scheme, so an HDFS/S3 cache dir (the deployment SURVEY §8
-    * prescribes) is probed where the parquet was actually written, not on
-    * the driver's local disk.
+  /** The store's one publish protocol, under the entry's stripe: on a
+    * miss, `build` writes the entry into a private `<path>.build-<uuid>`
+    * dir, which is marked `_SUCCESS` and RENAMED into place; then `use`
+    * gets the marker's mtime. The marker gates readiness, so a killed
+    * build never serves a partial entry, and a hit costs one stat. The
+    * probe goes through the Hadoop FileSystem for the path's scheme, so
+    * an HDFS/S3 entry (the deployment SURVEY §8 prescribes) is probed
+    * where it was actually written.
     *
-    * Cross-process safety: the entry is built in a private staging dir
-    * and RENAMED into place, so on filesystems with atomic directory
-    * rename (HDFS, local) another process either sees the complete entry
-    * or none — two servers sharing a cacheDir race only on who publishes,
-    * never on partial reads. On object stores without atomic rename
-    * (raw S3), keep one writer per cacheDir. */
-  def getOrCompute(spark: SparkSession, cacheDir: String, queryName: String,
-      params: Map[String, String])(compute: => DataFrame): DataFrame = {
-    val path = s"$cacheDir/${canonicalId(queryName, params)}"
+    * Cross-process safety: on filesystems with atomic directory rename
+    * (HDFS, local) another process either sees the complete entry or none
+    * — two servers sharing a dir race only on who publishes, never on
+    * partial reads. On object stores without atomic rename (raw S3), keep
+    * one writer per dir. */
+  private def publish[A](spark: SparkSession, path: String)(
+      build: String => Unit)(use: Long => A): A = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // the _SUCCESS marker's mtime; None while no entry is published
@@ -92,9 +92,7 @@ object ResultCache {
       catch { case _: java.io.FileNotFoundException => None }
     lockFor(path).synchronized {
       val stamp = published.getOrElse {
-        relations.remove(path)
         val tmp = new Path(s"$path.build-${java.util.UUID.randomUUID}")
-        compute.write.mode("overwrite").parquet(tmp.toString)
         // Publish via FileContext.rename, whose no-OVERWRITE contract is
         // DEFINED to fail when the destination exists — atomic
         // server-side on HDFS, plain rename(2) on local disks. The
@@ -106,6 +104,8 @@ object ResultCache {
         // the winner's entry is complete or its _SUCCESS probe fails.
         val renameFailure =
           try {
+            build(tmp.toString)
+            fs.createNewFile(new Path(tmp, "_SUCCESS"))
             org.apache.hadoop.fs.FileContext
               .getFileContext(p.toUri, spark.sessionState.newHadoopConf())
               .rename(tmp, p)
@@ -123,6 +123,48 @@ object ResultCache {
             " (destination present without _SUCCESS? remove it manually)",
           renameFailure.orNull))
       }
+      use(stamp)
+    }
+  }
+
+  /** The path of the published entry of `name` over `inputDir`, built
+    * once by `build(dir)`, which may write several outputs under `dir`,
+    * under the per-application [[Staging.path]] "store". The id folds in
+    * the params, the dir and its [[inputFingerprint]], so an input
+    * rewritten in place resolves a new entry; a published entry is never
+    * rewritten.
+    *
+    * Lock-ordering rule: a builder resolves every entry it reads BEFORE
+    * it calls getOrBuild, never inside `build`, so stripes never nest and
+    * two builders whose stripes collide cannot deadlock (tri → cocit →
+    * edges and hyperball → edges are such chains). */
+  def getOrBuild(spark: SparkSession, name: String, params: Map[String, String],
+      inputDir: String)(build: String => Unit): String = {
+    val id = canonicalId(name, params ++ Map(
+      "input" -> inputDir, "data" -> inputFingerprint(spark, inputDir)))
+    val path = s"${Staging.path(spark, "store")}/$name-$id"
+    publish(spark, path)(build)(_ => path)
+  }
+
+  /** Points the catalog table `table`, which a build wrote into its
+    * build dir, at `path` in the published entry, unless it is there. */
+  def locate(spark: SparkSession, table: String, path: String): Unit = {
+    val p = new Path(path)
+    val at = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    if (new Path(spark.sessionState.catalog.getTableMetadata(id).location) != at)
+      spark.sql(s"ALTER TABLE $table SET LOCATION '$at'")
+  }
+
+  /** The store's one-DataFrame case, for the query server: the entry of
+    * (query, params) under `cacheDir`; a hit serves its recorded relation. */
+  def getOrCompute(spark: SparkSession, cacheDir: String, queryName: String,
+      params: Map[String, String])(compute: => DataFrame): DataFrame = {
+    val path = s"$cacheDir/${canonicalId(queryName, params)}"
+    publish(spark, path) { tmp =>
+      relations.remove(path)
+      compute.write.mode("overwrite").parquet(tmp)
+    } { stamp =>
       val df = Option(relations.get(path)) match {
         case Some((`stamp`, r)) if r.sparkSession eq spark => r
         case Some((`stamp`, r)) => spark.read.schema(r.schema).parquet(path)

@@ -109,10 +109,6 @@ object SimilarityQueries {
 
   private def sigSqlDyn: String = sigSqlDynOver("v", Dims)
 
-  /** One index staging dir per (JVM, stageDir base) — see [[Staging.Memo]]. */
-  private val ss9Stage = new Staging.Memo("ss9")
-  private def ss9StagePath: String = ss9Stage.path
-
   /** Shared by ss4 (in-memory IVF) and ss9 (persistent-index probe):
     * identical semantics, one oracle gates both plans; ss11 reuses the
     * CTE block to score IVF candidates against the brute-force truth. */
@@ -265,10 +261,10 @@ object SimilarityQueries {
       (s, dir) => {
         val emb = Registry.table(s, dir, "embeddings")
         val n = emb.count()
-        // one staging dir per JVM — overwrite replaces in place, reruns
-        // don't accumulate index copies
+        // one staging path per application — overwrite replaces in
+        // place, reruns don't accumulate index copies
         Similarity.writeIvfIndex(emb, "vec_id", "embedding",
-          "ss9_idx", ss9StagePath, nSeeds = ivfSeedsFor(n))
+          "ss9_idx", Staging.path(s, "ss9"), nSeeds = ivfSeedsFor(n))
         Similarity.probeIvfIndex(s, "ss9_idx",
             Similarity.vectors(emb, "vec_id", "embedding")
               .filter(col("vec_id") < ProbeMax),

@@ -1,68 +1,72 @@
 package graft.queries
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Staging-directory resolution for persisted indexes and round-trip
-  * scratch tables (d9/i20/ss9/ss13/cu24/x13/t11 and the SourceQueries
-  * round trips).
+/** Staging-directory resolution for persisted indexes, the artifact
+  * store ([[ResultCache.getOrBuild]]) and round-trip scratch tables.
   *
   * `java.nio.file.Files.createTempDirectory` is only correct in
   * `local[*]`, where driver and executors share one filesystem; on a
   * real cluster a bucketed table staged under the driver's /tmp is
   * unreadable by executors. The fix is the `checkpointDir` pattern:
   * one session conf, `spark.graft.stageDir`, names a shared-filesystem
-  * base (HDFS, s3a, NFS) and every staging site lands in a unique
-  * subdirectory under it — resolved through the session's Hadoop conf
-  * (see [[graft.sources.HadoopConfs]]) so s3a credentials/endpoints
-  * supplied via `spark.hadoop.*` apply. Unset, falls back to a local
-  * temp dir, which keeps the local[*] test/bench path dependency-free.
+  * base (HDFS, s3a, NFS) and every staging site lands under it —
+  * resolved through the session's Hadoop conf (see
+  * [[graft.sources.HadoopConfs]]) so s3a credentials/endpoints supplied
+  * via `spark.hadoop.*` apply.
+  *
+  * Unset, the base is one local temp root per SparkContext, which this
+  * object owns: it is created on first use and deleted, with everything
+  * staged under it, when that context stops.
   */
 object Staging {
 
   val ConfKey = "spark.graft.stageDir"
 
-  /** A fresh, unique directory for one staging use. Caller owns the
-    * lifecycle (these are by design per-JVM `lazy val`s or per-run
-    * scratch — reruns overwrite via saveAsTable/mode(overwrite)). */
+  // the unconfigured root of the one live SparkContext
+  private var owned: Option[(SparkContext, String)] = None
+
+  private def tempRoot(sc: SparkContext): String = synchronized {
+    owned.collect { case (`sc`, root) => root }.getOrElse {
+      val root = java.nio.file.Files.createTempDirectory("graft-stage-").toFile
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          FileUtil.fullyDelete(root)
+      })
+      owned = Some((sc, root.toString))
+      root.toString
+    }
+  }
+
+  // `name` under the configured base, else under the context's temp root
+  private def under(spark: SparkSession, name: String): Path = {
+    val p = new Path(spark.conf.getOption(ConfKey).filter(_.nonEmpty)
+      .getOrElse(tempRoot(spark.sparkContext)), name)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+  }
+
+  /** A fresh, unique directory for one staging use (the round trips'
+    * per-run scratch). */
   def dir(name: String): String = {
     val spark = SparkSession.active
-    spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(base) =>
-        val p = new Path(base,
-          s"graft-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        if (!fs.mkdirs(p))
-          throw new java.io.IOException(s"Staging.dir: mkdirs failed for $p")
-        fs.makeQualified(p).toString
-      case None =>
-        java.nio.file.Files.createTempDirectory(s"graft-$name-").toString
-    }
+    val p = under(spark, s"graft-$name-${java.util.UUID.randomUUID().toString.take(8)}")
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p))
+      throw new java.io.IOException(s"Staging.dir: mkdirs failed for $p")
+    p.toString
   }
 
-  /** One staging dir per (JVM, configured base) for the persisted-index
-    * queries (d9/i20/ss9/cu24/i9): within a base the same dir is reused
-    * so reruns replace the index in place (saveAsTable overwrite)
-    * instead of accumulating copies, but a `spark.graft.stageDir`
-    * change resolves a fresh dir — a plain per-JVM `lazy val` would pin
-    * whatever base happened to be set at first evaluation. */
-  final class Memo(name: String) {
-    private val cache =
-      scala.collection.concurrent.TrieMap.empty[String, String]
-    def path: String = {
-      val base = SparkSession.active.conf
-        .getOption(ConfKey).filter(_.nonEmpty).getOrElse("")
-      cache.getOrElseUpdate(base, dir(name))
-    }
-  }
+  /** One path per (application, base) for `name`: reruns in one
+    * application replace what is staged there in place (the d9/ss9/cu24
+    * indexes, i9's page cache, the artifact store), and a base change
+    * resolves a fresh path. The writer creates it. */
+  def path(spark: SparkSession, name: String): String =
+    under(spark, s"graft-$name-${spark.sparkContext.applicationId}").toString
 
-  /** Stable short digest of an input-dir path, for namespacing shared
-    * artifacts (and derived table names) per source dir. A single-slot
-    * `(base, dir)` cache is NOT enough: switching dirs within one JVM
-    * would overwrite the artifact in place, and a still-lazy DataFrame
-    * handed out for the old dir would silently read the new dir's rows
-    * when finally evaluated. Digest-keyed paths make each dir's
-    * artifact immutable and let every built dir stay cached. */
+  /** Stable short digest of an input-dir path, for the names of the
+    * catalog tables registered over an artifact of that dir. */
   def dirKey(dir: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString

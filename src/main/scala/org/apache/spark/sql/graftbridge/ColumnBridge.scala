@@ -70,3 +70,12 @@ object UdfBridge {
     ColumnBridge.column(ScalaUDF(f, schema, Seq(ColumnBridge.expression(input)),
       udfName = Some(name), nullable = false, udfDeterministic = false))
 }
+
+/** A copy of a session (`private[sql]`): it starts with the caller's
+  * conf, views and UDFs, and a conf set on it stays on it. */
+object SessionBridge {
+  import org.apache.spark.sql.SparkSession
+
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+}

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{Registry, Staging}
@@ -11,17 +10,17 @@ import graft.queries.{Registry, Staging}
   * by executors on a real deployment), and the index-backed queries run
   * green against a non-default dir. Unset, the local-temp fallback holds.
   */
-class StagingSpec extends AnyFunSuite with SparkSuite {
+class StagingSpec extends AnyFunSuite with SparkSuite with TempDirs {
 
   test("Staging.dir falls back to local temp when the conf is unset") {
     spark.conf.unset(Staging.ConfKey)
-    val d = Staging.dir("spec-unset")
+    val d = Staging.dir("spec-unset").stripPrefix("file:")
     assert(new java.io.File(d).isDirectory)
     assert(d.contains("graft-spec-unset-"))
   }
 
   test("Staging.dir resolves under the configured base and creates it") {
-    val base = Files.createTempDirectory("graft-stage-base-").toString
+    val base = tempDir("graft-stage-base-")
     spark.conf.set(Staging.ConfKey, base)
     try {
       val d = Staging.dir("spec-conf")
@@ -33,23 +32,34 @@ class StagingSpec extends AnyFunSuite with SparkSuite {
     } finally spark.conf.unset(Staging.ConfKey)
   }
 
-  test("Staging.Memo reuses per base but re-resolves on a base change") {
-    val memo = new Staging.Memo("spec-memo")
+  test("Staging.path is stable within a base and fresh on a base change") {
     spark.conf.unset(Staging.ConfKey)
-    val p1 = memo.path
-    assert(memo.path == p1) // stable within a base
-    val base = Files.createTempDirectory("graft-stage-memo-").toString
+    val p1 = Staging.path(spark, "spec-path")
+    assert(Staging.path(spark, "spec-path") == p1) // stable within a base
+    val base = tempDir("graft-stage-path-")
     spark.conf.set(Staging.ConfKey, base)
     try {
-      val p2 = memo.path
+      val p2 = Staging.path(spark, "spec-path")
       assert(p2 != p1)
       assert(p2.stripPrefix("file:").startsWith(base))
-      assert(memo.path == p2)
+      assert(Staging.path(spark, "spec-path") == p2)
     } finally spark.conf.unset(Staging.ConfKey)
   }
 
+  test("unconfigured staging lands under the context's one temp root") {
+    spark.conf.unset(Staging.ConfKey)
+    def parent(name: String) =
+      new java.io.File(Staging.dir(name).stripPrefix("file:")).getParentFile
+    val a = parent("spec-root-a")
+    val b = parent("spec-root-b")
+    assert(a == b)
+    assert(a.getName.startsWith("graft-stage-"))
+    assert(Staging.path(spark, "spec-root").stripPrefix("file:")
+      .startsWith(a.toString))
+  }
+
   test("index-backed queries run green pointing at a non-default stageDir") {
-    val base = Files.createTempDirectory("graft-stage-e2e-").toString
+    val base = tempDir("graft-stage-e2e-")
     spark.conf.set(Staging.ConfKey, base)
     try {
       for (name <- Seq("d9_indexed_incremental", "i20_cluster_members",
@@ -60,12 +70,18 @@ class StagingSpec extends AnyFunSuite with SparkSuite {
         assert(n > 0, s"$name returned no rows under stageDir=$base")
       }
       // the staged indexes physically landed under the configured base
-      // (i20's two label tables are the shared near-dup build's)
+      // (i20's two label tables are the shared near-dup build's, an entry
+      // of the artifact store)
       val staged = new java.io.File(base).listFiles()
         .map(_.getName).toSeq
-      for (tag <- Seq("graft-d9-", "graft-d5shared-", "graft-ss9-", "graft-cu24-"))
+      for (tag <- Seq("graft-d9-", "graft-store-", "graft-ss9-", "graft-cu24-"))
         assert(staged.exists(_.startsWith(tag)),
           s"no $tag* dir under $base (got: ${staged.mkString(", ")})")
+      val store = new java.io.File(base).listFiles()
+        .filter(_.getName.startsWith("graft-store-"))
+        .flatMap(_.list()).toSeq
+      assert(store.exists(_.startsWith("d5shared-")),
+        s"no d5shared-* entry in the store (got: ${store.mkString(", ")})")
     } finally spark.conf.unset(Staging.ConfKey)
   }
 

@@ -107,18 +107,6 @@ object Dedupe {
     transform(shingles, s =>
       conv(substring(md5(s.cast("binary")), 1, 15), 16, 10).cast("long"))
 
-  /** 60-bit SimHash over the per-shingle hashes: bit b is set iff the
-    * majority of shingle hashes have bit b set (ties → set), the standard
-    * Charikar vote (reference SimHash.java:49-106 does the same with
-    * Rabin-hashed shingles). Pure built-in expressions → codegen. */
-  def portableSimhash(hashes: Column): Column =
-    (0 until PortableSimhashBits).map { b =>
-      when(
-        aggregate(hashes, lit(0L),
-          (acc, h) => acc + shiftright(h, b).bitwiseAND(lit(1L))) * 2 >= size(hashes),
-        lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** The C(6,3)=20 combination band keys of a 60-bit simhash: chunks of
     * 10 bits, every 3-chunk combination packed into one 30-bit key.
     * Hamming ≤ 3 leaves ≥ 3 chunks untouched, so some combination matches

@@ -594,25 +594,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }
 
-  /** ANN via LSH bucketing: exact cosine within each signature bucket.
-    * Recall is tunable by `bits` (fewer bits → bigger buckets). */
-  def lshTopK(df: DataFrame, id: String, emb: String, dims: Int,
-      bits: Int, k: Int): DataFrame = {
-    val v = vectors(df, id, emb)
-      .withColumn("sig", hyperplaneSignature(col("v"), dims, bits))
-    val a = v.as("a")
-    val b = v.as("b")
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    a.join(b, col("a.sig") === col("b.sig") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("probe_id"),
-        col("b.vec_id").as("neighbor_id"),
-        cosine(col("a.v"), col("b.v")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
   /** Multi-probe ANN: each vector probes its own bucket plus every
     * 1-bit-flip neighbor bucket (bits+1 probes). Multi-probe decouples
     * recall from bucket sparsity, so `bits` can grow with log2(corpus) to

@@ -99,11 +99,6 @@ object TextAnalysis {
   def tokenCountIn(toks: Column, w: String): Column =
     size(filter(toks, t => t === lit(w)))
 
-  /** Exact count of a token w in the text. Prefer [[tokenCountIn]] over a
-    * shared tokens column when counting many words — this re-tokenizes. */
-  def tokenCount(text: Column, w: String): Column =
-    tokenCountIn(tokens(text), w)
-
   /** Per-language marker tokens for the n-gram/stopword language heuristic.
     * (The reference has no langid — this is the LLM-pipeline extension;
     * marker sets are the classic top-stopwords per language.) */
@@ -157,11 +152,6 @@ object TextAnalysis {
     }
     (scores, langPrediction(scores))
   }
-
-  /** Language scores over raw text (re-tokenizes per marker — prefer
-    * materializing [[tokens]] into a column and [[langIdFromTokens]]). */
-  def langId(text: Column): (Seq[(String, Column)], Column) =
-    langIdFromTokens(tokens(text))
 
   /** Quality features + a deterministic [0,1] score: length in range,
     * mean token length sane, low repetition (type/token ratio). */

@@ -112,14 +112,21 @@ object DedupeQueries {
     * singletons labeled by their own id — bucketed by doc_id, and the
     * same labels as (cluster_id → member_id) bucketed by cluster_id
     * ([[membersTable]]), so both of i20's probe hops join shuffle-free
-    * and cu24's round-2 clustering is a read. The build writes the two
-    * bucketed catalog tables into the entry; once it is published, they
-    * are pointed at it, and pointed again whenever the entry of the dir
-    * changes (a rewritten sf dir). Returns (pairs, labels). */
+    * and cu24's round-2 clustering is a read. The build writes the
+    * bucketed files; once the entry is published, its two catalog tables
+    * are registered over it under names taken from the entry, so a table
+    * never moves and a rewritten sf dir gets tables of its own. Returns
+    * (pairs, labels). */
   def sharedNearDup(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame) = {
-    val labelsTable = s"d5_labels_${Staging.dirKey(dir)}"
+    val (entry, labelsTable, _) = nearDup(s, dir)
+    (s.read.parquet(s"$entry/pairs"), s.table(labelsTable))
+  }
+
+  /** The near-dup entry of `dir` and its (labels, members) table names. */
+  private[graft] def nearDup(s: org.apache.spark.sql.SparkSession,
+      dir: String): (String, String, String) = {
     val entry = ResultCache.getOrBuild(s, "d5shared", Map.empty, dir) { out =>
       val docs = Registry.table(s, dir, "documents")
       Dedupe.minhashNearDupPairs(docs, "doc_id", "text",
@@ -132,22 +139,22 @@ object DedupeQueries {
         .join(clus, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      graft.sources.Sinks.writeBucketedAt(labels, labelsTable,
-        "doc_id", 8, s"$out/labels")
-      graft.sources.Sinks.writeBucketedAt(
-        s.table(labelsTable)
+      graft.sources.Sinks.writeBucketedFiles(labels, "doc_id", 8, s"$out/labels")
+      graft.sources.Sinks.writeBucketedFiles(
+        s.read.parquet(s"$out/labels")
           .select(col("cluster_id"), col("doc_id").as("member_id")),
-        membersTable(dir), "cluster_id", 8, s"$out/members")
+        "cluster_id", 8, s"$out/members")
     }
-    ResultCache.locate(s, labelsTable, s"$entry/labels")
-    ResultCache.locate(s, membersTable(dir), s"$entry/members")
-    (s.read.parquet(s"$entry/pairs"), s.table(labelsTable))
+    val key = s"d5shared_${ResultCache.canonicalId(entry, Map.empty)}" // the entry path's digest
+    graft.sources.Sinks.registerBucketed(s, s"${key}_labels", "doc_id", 8, s"$entry/labels")
+    graft.sources.Sinks.registerBucketed(s, s"${key}_members", "cluster_id", 8, s"$entry/members")
+    (entry, s"${key}_labels", s"${key}_members")
   }
 
-  /** Name of the shared (cluster_id → member_id) table for `dir`,
-    * bucketed by cluster_id; [[sharedNearDup]] builds it. */
+  /** Name of the shared (cluster_id → member_id) table, bucketed by
+    * cluster_id, over the active session's near-dup entry of `dir`. */
   private[graft] def membersTable(dir: String): String =
-    s"d5_members_${Staging.dirKey(dir)}"
+    nearDup(org.apache.spark.sql.SparkSession.active, dir)._3
 
   /** d12 ground truth: probe(P) × corpus broadcast loop with the whole
     * pair test IN the join condition — length band first

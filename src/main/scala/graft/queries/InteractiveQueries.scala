@@ -797,11 +797,11 @@ object InteractiveQueries {
         // were independently paying for the same banding + clustering
         // (their dominant cost), and the builder writes nothing itself,
         // so concurrent builds of two sort orders cannot race
-        val (_, labels) = DedupeQueries.sharedNearDup(s, dir)
+        val (_, labels, members) = DedupeQueries.nearDup(s, dir)
         docs.select(col("doc_id")).filter(col("doc_id") % 100 === 7)
-          .join(labels, "doc_id")
+          .join(s.table(labels), "doc_id")
           .select(col("doc_id").as("probe_id"), col("cluster_id"))
-          .join(s.table(DedupeQueries.membersTable(dir)), "cluster_id")
+          .join(s.table(members), "cluster_id")
           .select(col("probe_id"), col("cluster_id"), col("member_id"))
           .orderBy("probe_id", "member_id")
       },

@@ -43,16 +43,23 @@ object ResultCache {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** In-JVM build locks, striped by path hash: concurrent page requests
-    * for the SAME uncached entry serialize on its build instead of both
+  /** In-JVM build locks, striped by path hash: concurrent requests for
+    * the SAME unbuilt entry serialize on its build instead of both
     * computing it; distinct entries almost always build in parallel (a
     * stripe collision only serializes, never corrupts). A fixed stripe
     * array replaces the earlier per-path lock map, which grew without
-    * bound across distinct cache paths in a long-lived server. */
+    * bound across distinct cache paths in a long-lived server.
+    *
+    * Lock-ordering rule: [[getOrCompute]] and [[getOrBuild]] stripe
+    * arrays of their own, taken in that order only (an index build may
+    * resolve store entries, a store build never pages), and a store
+    * builder resolves every entry it reads BEFORE it calls getOrBuild,
+    * so store stripes never nest (tri → cocit → edges, hyperball →
+    * edges). Colliding stripes thus never deadlock. */
   private val NStripes = 64
-  private val buildLocks = Array.fill(NStripes)(new Object)
-  private def lockFor(path: String): Object =
-    buildLocks(math.floorMod(path.hashCode, NStripes))
+  private val cacheLocks = Array.fill(NStripes)(new Object)
+  private val storeLocks = Array.fill(NStripes)(new Object)
+  private[graft] def stripe(path: String): Int = math.floorMod(path.hashCode, NStripes)
 
   /** The relation of each published entry, by path, with the mtime of
     * the `_SUCCESS` marker it was read under. A hit served from the
@@ -82,7 +89,7 @@ object ResultCache {
     * — two servers sharing a dir race only on who publishes, never on
     * partial reads. On object stores without atomic rename (raw S3), keep
     * one writer per dir. */
-  private def publish[A](spark: SparkSession, path: String)(
+  private def publish[A](spark: SparkSession, path: String, locks: Array[Object])(
       build: String => Unit)(use: Long => A): A = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -90,7 +97,7 @@ object ResultCache {
     def published: Option[Long] =
       try Some(fs.getFileStatus(new Path(p, "_SUCCESS")).getModificationTime)
       catch { case _: java.io.FileNotFoundException => None }
-    lockFor(path).synchronized {
+    locks(stripe(path)).synchronized {
       val stamp = published.getOrElse {
         val tmp = new Path(s"$path.build-${java.util.UUID.randomUUID}")
         // Publish via FileContext.rename, whose no-OVERWRITE contract is
@@ -132,28 +139,16 @@ object ResultCache {
     * under the per-application [[Staging.path]] "store". The id folds in
     * the params, the dir and its [[inputFingerprint]], so an input
     * rewritten in place resolves a new entry; a published entry is never
-    * rewritten.
-    *
-    * Lock-ordering rule: a builder resolves every entry it reads BEFORE
-    * it calls getOrBuild, never inside `build`, so stripes never nest and
-    * two builders whose stripes collide cannot deadlock (tri → cocit →
-    * edges and hyperball → edges are such chains). */
+    * rewritten. Retention: nothing deletes an entry before its
+    * application's store goes (with the SparkContext when
+    * `spark.graft.stageDir` is unset), so each in-place rewrite of an
+    * input keeps the superseded entries on disk until then. */
   def getOrBuild(spark: SparkSession, name: String, params: Map[String, String],
       inputDir: String)(build: String => Unit): String = {
     val id = canonicalId(name, params ++ Map(
       "input" -> inputDir, "data" -> inputFingerprint(spark, inputDir)))
     val path = s"${Staging.path(spark, "store")}/$name-$id"
-    publish(spark, path)(build)(_ => path)
-  }
-
-  /** Points the catalog table `table`, which a build wrote into its
-    * build dir, at `path` in the published entry, unless it is there. */
-  def locate(spark: SparkSession, table: String, path: String): Unit = {
-    val p = new Path(path)
-    val at = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
-    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    if (new Path(spark.sessionState.catalog.getTableMetadata(id).location) != at)
-      spark.sql(s"ALTER TABLE $table SET LOCATION '$at'")
+    publish(spark, path, storeLocks)(build)(_ => path)
   }
 
   /** The store's one-DataFrame case, for the query server: the entry of
@@ -161,7 +156,7 @@ object ResultCache {
   def getOrCompute(spark: SparkSession, cacheDir: String, queryName: String,
       params: Map[String, String])(compute: => DataFrame): DataFrame = {
     val path = s"$cacheDir/${canonicalId(queryName, params)}"
-    publish(spark, path) { tmp =>
+    publish(spark, path, cacheLocks) { tmp =>
       relations.remove(path)
       compute.write.mode("overwrite").parquet(tmp)
     } { stamp =>

@@ -1485,11 +1485,9 @@ object SourceQueries {
             } else payload
           val d = graft.core.Http.decodeContentEncoding(ce, body)
           if (d == null) null else new String(d, "UTF-8")
-        }).withName("s32_dec")
-        // spread before the decode: the range sampler reads the scan only
-        // and the final sort reuses the exchange, so each body decodes once
-        graft.ops.Seam.spread(s.read.format("graft-warc").load(out)
-            .filter(col("warc_type") === "response"), "url")
+        })
+        s.read.format("graft-warc").load(out)
+          .filter(col("warc_type") === "response")
           .select(col("url"),
             dec(col("http_headers"), col("payload")).as("text"))
           .select(col("url"),

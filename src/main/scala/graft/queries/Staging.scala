@@ -64,11 +64,4 @@ object Staging {
     * resolves a fresh path. The writer creates it. */
   def path(spark: SparkSession, name: String): String =
     under(spark, s"graft-$name-${spark.sparkContext.applicationId}").toString
-
-  /** Stable short digest of an input-dir path, for the names of the
-    * catalog tables registered over an artifact of that dir. */
-  def dirKey(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-  }
 }

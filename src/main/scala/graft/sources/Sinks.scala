@@ -57,6 +57,24 @@ object Sinks {
       buckets: Int, path: String): Unit =
     bucketedWriter(df, Seq(key), buckets, Some(path)).saveAsTable(table)
 
+  /** The files of [[writeBucketedAt]] at `path`, for a later
+    * [[registerBucketed]]: dropping the external scratch table keeps them. */
+  def writeBucketedFiles(df: DataFrame, key: String, buckets: Int,
+      path: String): Unit = {
+    val scratch = s"graft_bucketed_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+    try writeBucketedAt(df, scratch, key, buckets, path)
+    finally df.sparkSession.sql(s"DROP TABLE IF EXISTS $scratch")
+  }
+
+  /** Registers the bucketed files at `path` as `table` unless it exists,
+    * so the name must identify the files (a concurrent caller's wins). */
+  def registerBucketed(spark: SparkSession, table: String, key: String,
+      buckets: Int, path: String): Unit =
+    if (!spark.catalog.tableExists(table))
+      try spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${spark.read.parquet(path).schema.toDDL})" +
+        s" USING parquet CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS LOCATION '$path'")
+      catch { case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException => }
+
   /** Append into an EXISTING bucketed table (the bucket spec must match
     * what the table was created with — Spark validates); new files land
     * per bucket, so readers keep their shuffle-free guarantees. */

@@ -42,6 +42,38 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkSuite with TempStageDir {
     assert(Files.exists(Paths.get(entry.stripPrefix("file:"), "_SUCCESS")))
   }
 
+  test("page builds that reach the store on crossed stripes do not deadlock") {
+    // One page holds the cache stripe numbered like entry kb and asks
+    // for entry 1; the other holds the one numbered like entry 1 and asks
+    // for entry kb. A hit takes its stripe too, so the entries may exist.
+    // With one stripe array for both levels each would wait forever.
+    val cacheDir = tempDir("graft-cache-cross")
+    def entry(k: Int) = ResultCache.getOrBuild(spark, "spec-cross", Map("k" -> k.toString), sfDir) {
+      out => spark.range(k).write.parquet(out)
+    }
+    val s1 = ResultCache.stripe(entry(1))
+    val kb = Iterator.from(2).find(k => ResultCache.stripe(entry(k)) != s1).get
+    def pageLike(k: Int) = {
+      val target = ResultCache.stripe(entry(k))
+      Iterator.from(0).map(i => Map("i" -> i.toString)).find(p =>
+        ResultCache.stripe(s"$cacheDir/${ResultCache.canonicalId("spec-page", p)}") == target).get
+    }
+    val bothHeld = new java.util.concurrent.CountDownLatch(2)
+    // the page whose stripe is numbered like entry `like` reads entry `k`
+    def page(like: Int, k: Int) = {
+      val params = pageLike(like)
+      Future {
+        ResultCache.getOrCompute(spark, cacheDir, "spec-page", params) {
+          bothHeld.countDown()
+          bothHeld.await(60, SECONDS)
+          spark.read.parquet(entry(k))
+        }.count()
+      }
+    }
+    val counts = Await.result(Future.sequence(Seq(page(kb, 1), page(1, kb))), 120.seconds)
+    assert(counts == Seq(1L, kb.toLong))
+  }
+
   test("a failed build publishes nothing and leaves no build dir") {
     def get(fail: Boolean) =
       ResultCache.getOrBuild(spark, "spec-fail", Map.empty, sfDir) { out =>
@@ -90,6 +122,10 @@ class ArtifactStoreSpec extends AnyFunSuite with SparkSuite with TempStageDir {
     assert(labelled == docs, "stale near-dup labels")
     val probes1 = probes
     assert(probes1 == probes0.filter(_ % 3 != 1), s"stale cluster members: $probes1")
+    // the new entry has tables of its own; the old one's never moved
+    assert(registered.identifier != before.identifier)
+    assert(spark.sessionState.catalog.getTableMetadata(before.identifier).location ==
+      before.location)
   }
 
   test("the HyperBall build keeps the caller's shuffle width") {

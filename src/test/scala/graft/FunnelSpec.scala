@@ -65,24 +65,4 @@ class FunnelSpec extends AnyFunSuite with SparkSuite {
     assert(calls.value == (if (name.startsWith("m")) docs else 0L))
     assert(rows > 0)
   }
-
-  test("s32: one range exchange on url, each body decoded once") {
-    val calls = spark.sparkContext.longAccumulator
-    val df = SeamCalls.counted(
-      Registry.queries("s32_content_encoding")(engine, sfDir), "s32_dec", calls)
-    val (rows, tasks) = postShuffleTasks(df)
-    assert(tasks == Seq(4))
-    val exchanges = AQE.collect(df.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec => e
-    }
-    assert(exchanges.size == 1, df.queryExecution.executedPlan)
-    exchanges.head.outputPartitioning match {
-      case RangePartitioning(Seq(o), 4) =>
-        assert(o.child.asInstanceOf[Attribute].name == "url")
-      case p => fail(s"not a 4-way range on url: $p")
-    }
-    // one response record per document, and one decode per record
-    assert(rows == Registry.table(spark, sfDir, "documents").count())
-    assert(calls.value == rows)
-  }
 }
